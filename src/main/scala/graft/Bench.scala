@@ -72,9 +72,12 @@ object Bench {
     // adjacent stretch twice. With a full sweep (~90 s) between a query's
     // two timings, a burst can contaminate at most one of them, so the
     // min stays the plan cost. Methodology is otherwise unchanged
-    // (same queries, same count() action, same min-of-2-warm-passes);
-    // session warm-state (codegen cache, page cache, memoized frames) is
-    // session-scoped, so sweep order does not change what pass 2 sees.
+    // (same queries, same count() action, same min-of-2-warm-passes),
+    // with one caveat for cross-round comparison: a query's pass 2 now
+    // runs after every other query's pass 1, so it sees more JIT warmup,
+    // other queries' memoized frames and a page cache they have churned.
+    // Each query's own dependencies are warmed by its pass 1 either way,
+    // so the effect on the min is small but not zero.
     def time(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }

@@ -352,28 +352,13 @@ object Dedup {
        |  SELECT DISTINCT x.vec_id AS id1, y.vec_id AS id2
        |  FROM assigned x JOIN assigned y ON x.cell = y.cell AND x.vec_id < y.vec_id)""".stripMargin
 
-  /** Spark twin of [[twoLevelRankedSql]]: rank every vector of `e`
-    * (vec_id, v, nrm) against the two-level index defined by `fine`
-    * (aid, av, an) and `coarse` (cid, cv, cn), returning (vec_id,
-    * cell, r) with r ≤ probes — (cos DESC, id ASC) order throughout
-    * (TopKAgg = the oracle's row_number).
-    *
-    * Scale shape (the reason this is THE designated quantizer for
-    * every IVF surface): only the √K-sized coarse set is ever
-    * broadcast; a2c runs once at K·K1 cosines; the per-vector cost is
-    * K1 + Dd7CoarseProbes·K/K1 ≈ √K cosines; the fine side joins by
-    * cid, so beyond broadcast reach it degrades to a linear-in-n
-    * shuffle, never a linear broadcast. */
-  private[graft] def twoLevelRanked(
-      e: DataFrame, fine: DataFrame, coarse: DataFrame, probes: Int,
-      fineAnchors: Long = -1L, fineDim: Int = -1): DataFrame =
-    twoLevelRankedTagged(e, tagFine(fine, coarse), coarse, probes, fineAnchors, fineDim)
-
-  /** Level 1 of [[twoLevelRanked]], split out so callers ranking TWO
-    * vector sets against one index (corpus at Dd7Probes depth, the
-    * NumQueries query rows at √K depth — sim2/sim3) tag the fine set
-    * once: each FINE anchor's single nearest coarse cell (K·K1
-    * cosines, broadcast of the √K-sized coarse set — runs once). */
+  /** Level 1 of the two-level quantizer as DataFrames: each FINE anchor
+    * of `fine` (aid, av, an) tagged with its single nearest coarse cell
+    * of `coarse` (cid, cv, cn) — K·K1 cosines, broadcast of the
+    * √K-sized coarse set. The k-means quantizer (sim3,
+    * [[Similarity.kmAssignFrame]]) ranks through it; the prefix
+    * quantizer tags on the driver ([[QuantizerKernel]]) and specs hold
+    * it to this reference. */
   private[graft] def tagFine(fine: DataFrame, coarse: DataFrame): DataFrame = {
     val a2c = fine.crossJoin(broadcast(coarse))
       .withColumn("ccos", VectorExprs.dot(col("av"), col("cv")) / (col("an") * col("cn")))
@@ -383,22 +368,19 @@ object Dedup {
     fine.join(a2c, Seq("aid"))
   }
 
-  /** Largest fine-anchor set the level-1 join BROADCASTS (the FAISS
+  /** Largest fine-anchor set shipped as ONE broadcast (the FAISS
     * posture — the quantizer lives with every worker), as a BYTE
     * budget: ~640 MB ≈ 2^20 anchors on the reference 64-dim corpus
-    * (~608 B/row), covering corpora to ~67M vectors at K = n/64. The
-    * bound is bytes, not rows, because broadcast size scales with the
-    * embedding dimension — a row-count cap alone would force a 4-8+ GB
-    * broadcast on a 512-1024-dim corpus, past Spark's 8 GB broadcast
-    * hard limit where the job FAILS outright instead of degrading.
-    * The default 10 MB auto-broadcast threshold abandoned the
-    * broadcast at K ≈ 18k anchors (~1.2M vectors), silently flipping
-    * the level-1 join to a sort-merge whose SORT externally sorted the
-    * P₁-exploded VECTOR-carrying side — measured 82 GB of transient at
-    * a 5M-vector landing (r15; the r14 "landing footprint" wall was
-    * mostly THIS, not the bucketed write). Past the bound the join
-    * stays shuffle-hash: linear shuffle, hash build on the K-row
-    * anchor side, never a wide-row sort. */
+    * (~608 B/row), covering corpora to ~67M vectors at K = n/64 — every
+    * landing ever run, up to 40M vectors. It bounds the prefix
+    * [[QuantizerKernel]] broadcast (landing, maintenance, rankedPrefix).
+    * The bound is bytes, not rows, because broadcast size scales with
+    * the embedding dimension — a row-count cap alone would force a
+    * 4-8+ GB broadcast on a 512-1024-dim corpus, past Spark's 8 GB
+    * broadcast hard limit where the job FAILS outright instead of
+    * degrading. Past the bound
+    * the prefix placement routes vectors to their coarse cells by a cid
+    * join instead ([[Similarity.prefixCells]]). */
   private[graft] val BroadcastFineMaxBytes: Long = 640L << 20
 
   /** Estimated broadcast bytes per (aid, av, an, cid) fine-anchor row:
@@ -407,21 +389,17 @@ object Dedup {
     * the r15 row-count bound assumed. */
   private[graft] def fineAnchorRowBytes(dim: Int): Long = 8L * dim + 96L
 
-  /** Levels 2–3 of [[twoLevelRanked]] over a pre-tagged fine set.
-    * `fineAnchors` (the fine set's row count, when the caller knows
-    * it) picks the level-1 join strategy explicitly — see
-    * [[BroadcastFineMaxBytes]]; -1 leaves the optimizer's choice
-    * (correct for the ≤ TrainSample trained sets and the graded SFs,
-    * where auto-broadcast already fires). `fineDim` (the embedding
-    * dimension, required alongside a non-negative `fineAnchors`) sizes
-    * the byte bound — passed in by the caller because probing the fine
-    * frame with a one-row job silently recomputes corpus-scale
-    * upstream work when the frame is not materialized (ADVICE r16);
-    * every caller knows the dimension driver-side
-    * ([[Similarity.corpusDim]]). */
+  /** Levels 2–3 of the two-level quantizer as DataFrames: rank every
+    * vector of `e` (vec_id, v, nrm) against `coarse` (cid, cv, cn) and
+    * the pre-tagged `fineTagged` set (aid, av, an, cid), returning
+    * (vec_id, cell, r) with r ≤ probes — (cos DESC, id ASC) order
+    * throughout (TopKAgg = the oracle's row_number). The Spark twin of
+    * [[twoLevelRankedSql]]: the k-means quantizer ranks through it, and
+    * it is the reference the prefix [[QuantizerKernel]] is held to
+    * bit-for-bit. The fine join is left to the optimizer: the trained
+    * sets are ≤ TrainSample rows, where auto-broadcast fires. */
   private[graft] def twoLevelRankedTagged(
-      e: DataFrame, fineTagged: DataFrame, coarse: DataFrame, probes: Int,
-      fineAnchors: Long = -1L, fineDim: Int = -1): DataFrame = {
+      e: DataFrame, fineTagged: DataFrame, coarse: DataFrame, probes: Int): DataFrame = {
     // level 2: each VECTOR's Dd7CoarseProbes nearest coarse cells —
     // n·K1 cosines against a √K broadcast; first(v) rides the same
     // map-side partial agg so the corpus is never re-joined
@@ -431,22 +409,9 @@ object Dedup {
       .agg(graft.functions.SketchAggs.topk(col("ccos"), col("cid"), Dd7CoarseProbes).as("ct"),
         first(col("v")).as("v"), first(col("nrm")).as("nrm"))
       .select(col("vec_id"), col("v"), col("nrm"), explode(col("ct.id")).as("cid"))
-    // refine: rank ONLY the probed coarse cells' fine anchors. The
-    // per-vector work is K1 + P₁·K/K1 ≈ √K cosines; the join strategy
-    // decides the TRANSIENT: broadcast keeps the P₁-exploded vector
-    // side partition-local, shuffle-hash moves it once but never
-    // sorts it — a sort-merge here external-sorts n·P₁ wide rows
-    // (the r14/r15 landing wall).
-    val fineSide =
-      if (fineAnchors < 0) fineTagged
-      else {
-        require(fineDim >= 0,
-          "twoLevelRankedTagged: fineDim must accompany fineAnchors (no frame probe)")
-        if (fineAnchors * fineAnchorRowBytes(fineDim) <= BroadcastFineMaxBytes)
-          broadcast(fineTagged)
-        else fineTagged.hint("shuffle_hash")
-      }
-    vc.join(fineSide, Seq("cid"))
+    // refine: rank ONLY the probed coarse cells' fine anchors — the
+    // per-vector work is K1 + P₁·K/K1 ≈ √K cosines
+    vc.join(fineTagged, Seq("cid"))
       .withColumn("acos", VectorExprs.dot(col("v"), col("av")) / (col("nrm") * col("an")))
       .groupBy(col("vec_id"))
       .agg(graft.functions.SketchAggs.topk(col("acos"), col("aid"), probes).as("top"))
@@ -454,13 +419,7 @@ object Dedup {
       .select(col("vec_id"), col("col").as("cell"), (col("pos") + 1).cast("int").as("r"))
   }
 
-  /** [[twoLevelRanked]] with the dd7 prefix index: fine/coarse anchors
-    * = the first K/K1 vec_ids of `e` itself. */
-  private[graft] def twoLevelRankedPrefix(
-      e: DataFrame, k: Long, k1: Long, probes: Int, fineDim: Int): DataFrame =
-    twoLevelRanked(e, prefixFine(e, k), prefixCoarse(e, k1), probes,
-      fineAnchors = k, fineDim = fineDim)
-
+  /** The prefix index's fine anchors (aid, av, an): the first K vec_ids. */
   private[graft] def prefixFine(e: DataFrame, k: Long): DataFrame =
     e.filter(col("vec_id") < k)
       .select(col("vec_id").as("aid"), col("v").as("av"), col("nrm").as("an"))
@@ -469,44 +428,20 @@ object Dedup {
     e.filter(col("vec_id") < k1)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
 
-  /** The prefix index's coarse-tagged fine anchors, memoized per
-    * (session, dir): level 1 of the quantizer (K·K1 cosines) runs once
-    * and serves BOTH the corpus assignment ([[rankedPrefix]]) and
-    * sim2's deep query ranking. */
-  private val fineTaggedCache = Memo.newCache[DataFrame]()
-  private[graft] def fineTaggedPrefix(s: SparkSession, d: String): DataFrame =
-    Memo.get(fineTaggedCache, s, d) {
-      val e = Similarity.normed(s, d)
-      val k = dd7AnchorCount(Similarity.corpusN(s, d))
-      // matCut, not mat: this K-row frame's upstream is the K·K1
-      // level-1 ranking — tiny output, corpus-scale-adjacent shuffles
-      Memo.matCut(tagFine(prefixFine(e, k), prefixCoarse(e, dd7CoarseCount(k))))
-    }
-
-  /** The corpus's ranked prefix-index assignment, memoized per
-    * (session, dir) at depth Dd7Probes — dd7/dd9's multi-assignment
-    * depth, and the depth sim2's CORPUS side needs; the three
-    * pipelines plan ONE assignment job instead of each paying the
-    * n·√K·d quantization pass. sim2's queries DO need √K-deep
-    * ranking, but only for its NumQueries vectors — ranking the whole
-    * corpus at max(NProbe, K1) depth (the round-9 form) made the
-    * memoized frame ~K1·n rows (354M at the 100× probe — a √n-factor
-    * blowup over the n·Dd7Probes rows actually consumed; sim2 58 s vs
-    * dd7's 17 s on identical data); the deep ranking now runs
-    * separately over just the query rows
-    * ([[graft.operators.Similarity]] sim2). */
+  /** The corpus's ranked prefix-index assignment (vec_id, cell, r),
+    * memoized per (session, dir) at depth Dd7Probes — dd7/dd9's
+    * multi-assignment depth, and the depth sim2's CORPUS side needs; the
+    * pipelines share ONE pass of the n·√K·d quantization. It is the
+    * quantizer kernel's narrow map over the cached corpus
+    * ([[Similarity.prefixCells]]): no join and no shuffle, so the
+    * cached output keeps its lineage. sim2's queries DO need √K-deep
+    * ranking, but only for its NumQueries vectors — they rank on the
+    * driver with the same kernel ([[graft.operators.Similarity]] sim2). */
   private val rankedCache = Memo.newCache[DataFrame]()
   private[graft] def rankedPrefix(s: SparkSession, d: String): DataFrame =
     Memo.get(rankedCache, s, d) {
-      val e = Similarity.normed(s, d)
-      val k = dd7AnchorCount(Similarity.corpusN(s, d))
-      // matCut, not mat: the (cell, vec_id, r) output is ~24 B/row but
-      // its lineage holds the corpus-wide ranking aggregates' shuffles
-      // (~35 GB at 20M) — cutting it is what lets a landing's disk
-      // budget scale with the data it writes (PRELAND_r16_20M)
-      Memo.matCut(twoLevelRankedTagged(e, fineTaggedPrefix(s, d),
-        prefixCoarse(e, dd7CoarseCount(k)), Dd7Probes,
-        fineAnchors = k, fineDim = Similarity.corpusDim(s, d)))
+      Memo.mat(Similarity.prefixCells(s, d, Similarity.normed(s, d))
+        .select(col("vec_id"), col("cell"), col("r")))
     }
 
   /** dd7 — embedding near-dup via TWO-LEVEL IVF-cell blocking: the
@@ -546,11 +481,8 @@ object Dedup {
     * clustering consumes it the way dd6 consumes verifiedPairs. */
   def ivfPairs(s: SparkSession, d: String): DataFrame =
     Memo.get(ivfPairCache, s, d) {
-      val e = Similarity.normed(s, d) // memoized; dd7 references it three times
-      val assigned = rankedPrefix(s, d).filter(col("r") <= Dd7Probes)
-        .select(col("vec_id"), col("cell"))
-      // CELL-LOCAL verification: attach each member's vector once per
-      // cell (n·P rows, ~3 GB of shuffle at 2M vectors) and compute the
+      // CELL-LOCAL verification: each member carries its vector once per
+      // cell (n·P rows, ~3 GB of shuffle at 2M vectors) and computes the
       // pairwise cosines inside the cell group. The previous form
       // materialized the candidate self-join and then joined BOTH
       // vectors per candidate pair — n·P²·CellDiv/2 pairs × ~1 KB
@@ -564,13 +496,9 @@ object Dedup {
       // is cell size × (d+2) doubles — bounded in expectation by the
       // K = n/CellDiv sizing at ~CellDiv·P members.
       import s.implicits._
-      // shuffle-hash on the narrow assignment explicitly: rankedPrefix
-      // is lineage-cut (no size stats), and the planner's fallback for
-      // a stats-less side is a sort-merge that would sort the
-      // vector-carrying corpus side — the landing-path join posture
-      // applies here verbatim
-      val members = assigned.hint("shuffle_hash")
-        .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
+      // the quantizer kernel emits each (cell, member) row with its
+      // vector already attached — no join back to the corpus
+      val members = Similarity.prefixCells(s, d, Similarity.normed(s, d))
         .select(col("cell"), col("vec_id"), col("v"), col("nrm"))
         .as[(Long, Long, Array[Double], Double)]
       Memo.mat(members.groupByKey(_._1)

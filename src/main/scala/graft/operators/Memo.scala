@@ -27,22 +27,9 @@ private[graft] object Memo {
 
   private val hooked = scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
 
-  /** The localCheckpoint'd RDD behind every [[matCut]] frame, by
-    * session: checkpointed Datasets are NOT registered in the
-    * CacheManager, so `df.unpersist` is a no-op for them and their
-    * DISK_ONLY blocks otherwise live until a driver GC lets the
-    * ContextCleaner collect the RDD (default periodic GC: 30 min —
-    * ADVICE r16: a JVM cycling sessions, or ScaleProbe's isolate mode,
-    * pinned corpus-scale disk well past session end). Tracking the RDD
-    * lets [[clearCaches]] drop the blocks eagerly. */
-  private val cutRdds =
-    scala.collection.mutable.ListBuffer
-      .empty[(SparkSession, org.apache.spark.rdd.RDD[_])]
-
   /** Evict every memoized frame belonging to `s` (registered to fire on
     * application end; callable directly for explicit invalidation).
-    * Unpersists the cached blocks as it drops the entries, including
-    * the checkpoint blocks of [[matCut]] frames. */
+    * Unpersists the cached blocks as it drops the entries. */
   def clearCaches(s: SparkSession): Unit = {
     caches.synchronized(caches.toList).foreach(_.filterInPlace { case ((ss, _), v) =>
       val keep = ss ne s
@@ -53,13 +40,6 @@ private[graft] object Memo {
       }
       keep
     })
-    cutRdds.synchronized {
-      cutRdds.filterInPlace { case (ss, rdd) =>
-        val keep = ss ne s
-        if (!keep && !s.sparkContext.isStopped) rdd.unpersist(false)
-        keep
-      }
-    }
   }
 
   /** Cache + eagerly materialize: columnar, compressed, lineage kept. */
@@ -67,36 +47,6 @@ private[graft] object Memo {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count()
     df
-  }
-
-  /** Cache + materialize + CUT lineage (eager localCheckpoint): for
-    * frames whose OUTPUT is small but whose upstream shuffles are
-    * corpus-scale. [[mat]] keeps the plan alive, which pins every
-    * upstream shuffle file on disk until the frame itself dies —
-    * measured at the 20M-vector landing: ~35 GB of finished-stage
-    * shuffle (the assignment aggs + fine join) held under the live
-    * transient, the difference between landing and ENOSPC. Truncating
-    * the plan makes those dependencies collectable (the landing JVMs
-    * run a periodic cleaner GC). The trade is executor-loss
-    * replayability — the same trade the staged landing write already
-    * makes, and at production scale these frames ARE written tables.
-    * DISK_ONLY, deliberately: the default localCheckpoint level
-    * (MEMORY_AND_DISK, deserialized rows) pins gigabytes of protected
-    * storage memory that the landing's aggregation tasks need as
-    * execution memory — measured as the difference between the 20M
-    * ivfpq landing OOMing a 64 GB heap and finishing; these frames
-    * are each read back a handful of times, a disk round-trip is
-    * noise next to the quantization pass. */
-  def matCut(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // register the checkpointed RDD (the LogicalRDD the truncated plan
-    // wraps) so clearCaches can reclaim its DISK_ONLY blocks eagerly
-    out.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        cutRdds.synchronized { cutRdds += ((df.sparkSession, l.rdd)) }
-      case _ =>
-    }
-    out
   }
 
   def get[V](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],

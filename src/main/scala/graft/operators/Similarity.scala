@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *    top-k via partial aggregation in TakeOrdered).
   *  - sim2: IVF ANN over the shared two-level n-scaled quantizer
   *    (dd7's: K = max(256, ⌈n/64⌉) fine cells under K1 = ⌈√K⌉ coarse,
-  *    `Dedup.twoLevelRanked`), queries probe max(4, K1) fine cells →
+  *    [[QuantizerKernel]]), queries probe max(4, K1) fine cells →
   *    per-query scored rows ~ √K · cell-size, SUBLINEAR in n. Fully
   *    deterministic; the oracle replays the identical algorithm.
   */
@@ -87,17 +87,22 @@ object Similarity {
   private def normedLazy(s: SparkSession, d: String): DataFrame =
     normCache.getOrElse((s, d), withNorm(Tables.embeddings(s, d)))
 
+  /** Whether this session materialized [[normed]] for `d`. */
+  private[graft] def corpusCached(s: SparkSession, d: String): Boolean =
+    normCache.contains((s, d))
+
   /** Corpus size, memoized per (session, dir): sizes the shared
     * two-level quantizer for sim2/sim3 and dd7/dd9. Loaded from the
     * quantizer sidecar when one matches the corpus signature — a cold
     * serving session then never scans the corpus for a count; computed
-    * (one count action — `normed` is already cached when this runs)
-    * and persisted otherwise. */
+    * (one count of the embeddings scan — parquet answers it from
+    * footers, so a cold landing does not materialize [[normed]] just to
+    * size K) and persisted otherwise. */
   private val nCache = Memo.newCache[Long]()
   private[graft] def corpusN(s: SparkSession, d: String): Long =
     Memo.get(nCache, s, d) {
       QuantizerStore.load(s, d).map(_.n).getOrElse {
-        val n = normed(s, d).count()
+        val n = Tables.embeddings(s, d).count()
         QuantizerStore.update(s, d, n)(identity)
         n
       }
@@ -146,7 +151,7 @@ object Similarity {
   )
 
   /** sim2 — IVF ANN on the SHARED two-level n-scaled quantizer
-    * (`Dedup.twoLevelRanked`, the dd7 index): K = max(256, ⌈n/64⌉)
+    * ([[QuantizerKernel]], the dd7 index): K = max(256, ⌈n/64⌉)
     * fine cells under K1 = ⌈√K⌉ coarse anchors. The corpus is
     * replicated into its Dd7Probes best fine cells (multi-assignment —
     * dd7's recall trick, here covering cell-boundary neighbors);
@@ -177,26 +182,17 @@ object Similarity {
       val e = normed(s, d)
       // corpus multi-assignment at Dd7Probes depth — memoized, shared
       // with dd7/dd9
-      val assigned = Dedup.rankedPrefix(s, d).filter(col("r") <= Dedup.Dd7Probes)
-        .select(col("vec_id"), col("cell"))
+      val assigned = Dedup.rankedPrefix(s, d).select(col("vec_id"), col("cell"))
       // query probing at max(NProbe, K1) depth — ranked separately over
-      // ONLY the NumQueries query rows (√K cosines × NumQueries), so
-      // the corpus never pays √K-deep ranking; the shared level-1
-      // fine→coarse tagging is memoized. Per-vector ranking is
-      // independent, so this is bit-identical to slicing the query rows
-      // out of a full-corpus deep ranking (what the oracle computes).
-      val k = Dedup.dd7AnchorCount(corpusN(s, d))
-      val k1 = Dedup.dd7CoarseCount(k)
-      // fineAnchors = k, explicitly: fineTaggedPrefix is lineage-cut
-      // (Memo.matCut) so the optimizer sees no size stats for it —
-      // auto-broadcast no longer fires and the level-1 join would fall
-      // into a sort-merge; the explicit byte-based bound decides
-      // broadcast vs shuffle-hash exactly as on the landing path
-      val probes = Dedup.twoLevelRankedTagged(
-          e.filter(col("vec_id") < NumQueries),
-          Dedup.fineTaggedPrefix(s, d), Dedup.prefixCoarse(e, k1),
-          math.max(NProbe.toLong, k1).toInt, fineAnchors = k, fineDim = corpusDim(s, d))
-        .select(col("vec_id").as("qid"), col("cell"))
+      // ONLY the NumQueries query rows (√K cosines × NumQueries) by the
+      // same kernel on the driver, so the corpus never pays √K-deep
+      // ranking. Per-vector ranking is independent, so this is
+      // bit-identical to slicing the query rows out of a full-corpus
+      // deep ranking (what the oracle computes).
+      val k1 = Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
+      import s.implicits._
+      val probes = prefixProbes(s, d, math.max(NProbe.toLong, k1).toInt, queryVecs(s, d))
+        .toSeq.toDF("qid", "cell")
       // candidates = corpus rows sharing ≥ 1 probed cell with a query,
       // deduped before scoring (a pair can share several cells).
       // probes is NumQueries × nprobe rows → broadcast; cand is the
@@ -267,90 +263,73 @@ object Similarity {
     * micro-batch appended (observed: refreshTable did not un-pin the
     * held plan). Re-resolving per serve costs one marker read + catalog
     * lookup (~ms) and is what a serving node must do anyway against a
-    * maintained index. */
+    * maintained index.
+    *
+    * The landing is one narrow pass: the corpus scan, the quantizer
+    * kernel's per-partition map ([[prefixCells]]) and the staged
+    * bucketed write, whose pass-1 partition count follows the bytes it
+    * stages (n · Dd7Probes rows of ~8d + 32 B). */
   private def servedIndex(s: SparkSession, d: String): DataFrame =
     {
       val n = corpusN(s, d)
       val t = s"graft_ann_index_${dirSuffix(d)}"
       // landBucketed: a later JVM finding the fingerprint-stamped
       // landing registers it instead of re-quantizing the corpus — the
-      // by-name body (and the rankedPrefix job behind it) never runs.
+      // by-name body (and the kernel map behind it) never runs.
       // `seq` = 0 marks corpus rows; maintenance appends carry their
       // batch seq (IndexIngest), and tombstoned versions (deleted or
       // upserted ids since the last compaction) are masked at read.
       val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
+      val staged = n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
       val waves = graft.sources.Lakehouse.landWaves
       // SAME fingerprint either way: the wave mode changes how the
       // bytes are produced, not what they are (SimilaritySpec pins
       // wave-union == single-frame rows)
       val df =
         if (waves <= 1)
-          graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), indexBuckets, fp)(
+          graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), indexBuckets, fp, staged)(
             prefixIndexLandingFrame(s, d))
         else
-          graft.sources.Lakehouse.landBucketedWaves(s, t, Seq("cell"), indexBuckets, fp)(
+          graft.sources.Lakehouse.landBucketedWaves(s, t, Seq("cell"), indexBuckets, fp, staged)(
             prefixIndexLandingWaves(s, d, waves))
       graft.sources.Lakehouse.maskTombstones(s, t, df, "vec_id")
     }
 
   /** The corpus-only landing frame of the prefix serving index —
-    * extracted from [[servedIndex]]'s landBucketed body so the
-    * MatCutPlanAuditSpec can audit the landing PLAN without landing.
-    * SHUFFLE_HASH on the narrow assignment side: the default SMJ
-    * would externally SORT the corpus-vector side by vec_id — the
-    * wide-row spill that dominated the landing transient (VERDICT
-    * r14 #1a); building the hash map on the ~24 B/row assignment
-    * streams the vectors through unsorted (per-partition build ∝
-    * n/shuffle-partitions, which scales out with the cluster). The
-    * hint is load-bearing: rankedPrefix is lineage-cut (no stats), so
-    * without it the planner's stats-less fallback is exactly that SMJ. */
+    * (cell, vec_id, v, nrm, seq = 0) straight from the corpus scan
+    * through [[prefixCells]]: no join, no exchange before the staged
+    * write (MatCutPlanAuditSpec pins the plan). Extracted from
+    * [[servedIndex]]'s landBucketed body so specs can audit the landing
+    * plan and rows without landing. */
   private[graft] def prefixIndexLandingFrame(s: SparkSession, d: String): DataFrame =
-    Dedup.rankedPrefix(s, d).filter(col("r") <= Dedup.Dd7Probes)
-      .select(col("cell"), col("vec_id")).hint("shuffle_hash")
-      .join(normed(s, d), Seq("vec_id"))
-      .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(0L).as("seq"))
+    landingRows(prefixCells(s, d, normedLazy(s, d)), 0L)
 
-  /** Drop the memoized normalized-corpus cache for (s, d): at a 40M
-    * landing the MEMORY_AND_DISK cache is ~18 GB of DISK (the landing
-    * JVMs squeeze storageFraction), and once the assignment is
-    * checkpointed nothing on the landing path needs it — the r17 40M
-    * ENOSPC budget counted it as a full live term. */
+  /** Index rows (cell, vec_id, v, nrm, seq) of a [[prefixCells]] frame. */
+  private[graft] def landingRows(cells: DataFrame, seq: Long): DataFrame =
+    cells.select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq"))
+
+  /** Drop the memoized normalized-corpus cache for (s, d): a 40M
+    * corpus's MEMORY_AND_DISK cache is ~18 GB of DISK that a
+    * disk-constrained landing ([[prefixIndexLandingWaves]]) does not
+    * need — it reads the corpus scan. */
   private[graft] def dropCorpusCache(s: SparkSession, d: String): Unit =
     normCache.remove((s, d)).foreach(_.unpersist(false))
 
   /** The prefix landing as PASS-1 WAVES for disk-constrained boxes
     * ([[graft.sources.Lakehouse.writeBucketedStagedWaves]]; activated
-    * by SPARK_GRAFT_LAND_WAVES > 1). The r17 40M single-pass attempt
-    * ENOSPC'd at 93 GB: the corpus-side join shuffle (~22 GB), the
-    * bucket repartition shuffle (~28 GB), the corpus disk-cache
-    * (~18 GB) and the growing staging (~38 GB) all coexist in pass 1.
-    * Wave w instead joins the corpus SCAN against the BROADCAST slice
-    * `vec_id % waves == w` of the checkpointed assignment: the corpus
-    * never shuffles, each wave's repartition moves 1/waves of the
-    * index rows and is GC-reclaimed before the next wave, and the
-    * corpus cache is dropped up front (the assignment checkpoint
-    * supersedes it) — pass-1 transient ≈ staging + one wave's slice.
-    * Each slice is a BOUNDED broadcast by construction (caller picks
-    * `waves` so a slice fits comfortably; guarded here against the
-    * 8 GB broadcast hard limit). The default single-pass shuffle-hash
-    * form remains the cluster-shaped path: on a real cluster transient
-    * disk is distributed and one corpus shuffle beats `waves` corpus
-    * scans. */
+    * by SPARK_GRAFT_LAND_WAVES > 1): wave w is the corpus slice
+    * `vec_id % waves == w` through the same kernel map, so each wave's
+    * bucket repartition moves 1/waves of the index rows and is
+    * reclaimed before the next wave starts; pass-1 transient ≈ staging
+    * + one wave's shuffle. The corpus cache is dropped up front. The
+    * single-pass form remains the cluster-shaped path: one corpus scan
+    * beats `waves` of them where transient disk is distributed. */
   private[graft] def prefixIndexLandingWaves(
       s: SparkSession, d: String, waves: Int): Seq[DataFrame] = {
-    val n = corpusN(s, d)
-    val sliceBytes = n * Dedup.Dd7Probes * 32L / waves
-    require(sliceBytes < (4L << 30),
-      s"assignment slice ~$sliceBytes B too large to broadcast; raise SPARK_GRAFT_LAND_WAVES")
-    Dedup.rankedPrefix(s, d) // materialize the assignment checkpoint first…
-    dropCorpusCache(s, d) //    …then retire the corpus cache it consumed
+    dropCorpusCache(s, d)
     val corpus = normedLazy(s, d)
     (0 until waves).map { w =>
-      val slice = Dedup.rankedPrefix(s, d).filter(col("r") <= Dedup.Dd7Probes)
-        .filter(pmod(col("vec_id"), lit(waves)) === w)
-        .select(col("cell"), col("vec_id"))
-      corpus.join(broadcast(slice), Seq("vec_id"))
-        .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(0L).as("seq"))
+      landingRows(prefixCells(s, d, corpus.filter(pmod(col("vec_id"), lit(waves)) === w)), 0L)
     }
   }
 
@@ -449,16 +428,6 @@ object Similarity {
     * the same ∝√n bound EmbedDedupStream.collectCoarse holds to).
     * Sidecar-persisted: a cold session loads the collected anchors
     * instead of scanning the corpus prefix (VERDICT r12 #3). */
-  /** The frozen prefix quantizer's driver-resident coarse level, for
-    * [[graft.streaming.IndexIngest]]'s maintenance stream: (corpus n,
-    * √K anchors) off the memo/sidecar — the maintenance stream must
-    * assign under exactly the anchors the landing froze, and both
-    * values are already resident after any landing, so this is a
-    * zero-job read there (r18; was a corpus count + prefix collect per
-    * stream start). */
-  private[graft] def frozenCoarse(s: SparkSession, d: String): (Long, Array[Anchor]) =
-    (corpusN(s, d), coarsePrefixLocal(s, d))
-
   private val coarseLocalCache = Memo.newCache[Array[Anchor]]()
   private def coarsePrefixLocal(s: SparkSession, d: String): Array[Anchor] =
     Memo.get(coarseLocalCache, s, d) {
@@ -471,44 +440,93 @@ object Similarity {
       }
     }
 
-  /** Top-`take` anchors for one query by (cos DESC, id ASC) — the
-    * TopKBuf comparator as plain driver arithmetic. dotA iterates
-    * ascending exactly like VectorExprs.dot's loop, so local and
-    * distributed cosines are the same IEEE doubles. */
-  private def topAnchors(qv: Array[Double], qn: Double,
-      anchors: Iterable[Anchor], take: Int): Seq[Anchor] =
-    anchors.toSeq
-      .map(a => (dotA(qv, a.v) / (qn * a.nrm), a))
-      .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2.id < y._2.id))
-      .take(take).map(_._2)
-
-  /** Driver-local query-probe ranking — the serving-node path (FAISS
-    * keeps its coarse quantizer resident; so do we, within the √K
-    * collect bound). Level 2 ranks each query against the resident
-    * coarse anchors; `fineFetch` returns the probed coarse cells' fine
-    * anchors (≤ NumQueries·Dd7CoarseProbes·K/K1 rows — ∝√K, one
-    * bounded job for the prefix index, free for the driver-trained
-    * k-means set); level 1 ranks those locally. Replicates
-    * Dedup.twoLevelRankedTagged bit-for-bit (same dot order, same
-    * (cos DESC, id ASC) tie-break), with ZERO distributed jobs where
-    * the round-10 form ran two exchanges and two broadcast builds per
-    * serve call — measured as most of sim2b's 0.88 s at sf0.1. */
-  private def localProbes(
-      s: SparkSession, d: String,
-      coarse: Array[Anchor],
-      fineFetch: Seq[Long] => Array[(Long, Anchor)],
-      nprobe: Int,
-      qs: Array[Anchor]): Array[(Long, Long)] = {
-    val probedCids = qs.map(q =>
-      q.id -> topAnchors(q.v, q.nrm, coarse, Dedup.Dd7CoarseProbes).map(_.id))
-    val fineByCid = fineFetch(probedCids.flatMap(_._2).distinct.toSeq)
-      .groupBy(_._1).map { case (c, as) => c -> as.map(_._2) }
-    qs.flatMap { q =>
-      val cids = probedCids.find(_._1 == q.id).get._2
-      val cand = cids.flatMap(c => fineByCid.getOrElse(c, Array.empty[Anchor]))
-      topAnchors(q.v, q.nrm, cand, nprobe).map(a => (q.id, a.id))
+  /** The prefix quantizer as one driver-resident [[QuantizerKernel]]
+    * (memoized): the √K coarse anchors plus the K = first-vec_id fine
+    * anchors, read with the `vec_id < K` filter pushed into the corpus
+    * scan (no corpus cache) and tagged on the driver (K·K1 cosines).
+    * FROZEN at first use — maintenance assigns appended vectors under
+    * exactly the anchors the landing used. */
+  private val kernelCache = Memo.newCache[QuantizerKernel]()
+  private[graft] def prefixKernel(s: SparkSession, d: String): QuantizerKernel =
+    Memo.get(kernelCache, s, d) {
+      val k = Dedup.dd7AnchorCount(corpusN(s, d))
+      QuantizerKernel(coarsePrefixLocal(s, d),
+        Dedup.prefixFine(normedLazy(s, d), k)
+          .select(col("aid"), col("av"), col("an")).collect().map(anchorOf))
     }
+
+  private val kernelBcCache =
+    Memo.newCache[org.apache.spark.broadcast.Broadcast[QuantizerKernel]]()
+
+  /** Whether the whole prefix quantizer fits one broadcast
+    * ([[Dedup.BroadcastFineMaxBytes]] over K fine-anchor rows). */
+  private def kernelBroadcastable(s: SparkSession, d: String): Boolean =
+    Dedup.dd7AnchorCount(corpusN(s, d)) * Dedup.fineAnchorRowBytes(corpusDim(s, d)) <=
+      Dedup.BroadcastFineMaxBytes
+
+  /** The prefix assignment of `e` (vec_id, v, nrm): (cell, vec_id, v,
+    * nrm, r) at Dd7Probes depth — the one placement primitive behind the
+    * landing, maintenance batches and [[Dedup.rankedPrefix]]. While the
+    * kernel fits a broadcast it is ONE narrow per-partition map (no
+    * join, no exchange). Past the bound (K beyond ~2^20 anchors at
+    * d = 64) no node holds the fine set: the vectors route to their
+    * probed coarse cells through [[graft.streaming.EmbedDedupStream]]'s
+    * cid join (the dd7 stream twin's placement, same ranking) and the
+    * vectors join back on the narrow (vec_id, cell, r) side. */
+  private[graft] def prefixCells(s: SparkSession, d: String, e: DataFrame): DataFrame =
+    if (kernelBroadcastable(s, d)) {
+      val bc = Memo.get(kernelBcCache, s, d)(s.sparkContext.broadcast(prefixKernel(s, d)))
+      QuantizerKernel.cells(e, bc, Dedup.Dd7Probes)
+    } else {
+      graft.streaming.EmbedDedupStream.routedCells(
+          e.select(col("vec_id"), col("v").as("embedding")), routedIndex(s, d), routedFine(s, d))
+        .hint("shuffle_hash")
+        .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
+        .select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("r"))
+    }
+
+  /** The routed placement's coarse level, off the memo/sidecar. */
+  private def routedIndex(s: SparkSession, d: String): graft.streaming.EmbedDedupStream.CoarseIndex = {
+    val k = Dedup.dd7AnchorCount(corpusN(s, d))
+    graft.streaming.EmbedDedupStream.CoarseIndex(k, Dedup.dd7CoarseCount(k),
+      coarsePrefixLocal(s, d).map(a => (a.id, a.v, a.nrm)))
   }
+
+  /** The routed placement's cid-grouped fine table
+    * ([[graft.streaming.EmbedDedupStream.fineCells]]), cached once per
+    * (session, dir). */
+  private val routedFineCache = Memo.newCache[DataFrame]()
+  private def routedFine(s: SparkSession, d: String): DataFrame =
+    Memo.get(routedFineCache, s, d) {
+      Memo.mat(graft.streaming.EmbedDedupStream.fineCells(normedLazy(s, d), routedIndex(s, d)))
+    }
+
+  /** (qid, cell) probe pairs: each query's `nprobe` best cells under
+    * `kernel`, best first. */
+  private def probesOf(kernel: QuantizerKernel, nprobe: Int, qs: Array[Anchor]): Array[(Long, Long)] =
+    qs.flatMap(q => kernel.rank(q.v, q.nrm, nprobe).map(c => (q.id, c)))
+
+  /** Driver-local probe ranking against the prefix quantizer — the
+    * serving-node path (FAISS keeps its quantizer resident; so do we)
+    * and sim2's query ranking: ZERO distributed jobs. While K ≤
+    * [[FineResidentMax]] the whole kernel is resident. Past it, the
+    * queries rank the resident coarse level, one pruned read of the
+    * landed fine table fetches only the probed cells' anchors
+    * (≤ |qs|·Dd7CoarseProbes·K/K1 rows), and a kernel over those cells
+    * ranks them — exact, since every probed cell is present. */
+  private def prefixProbes(
+      s: SparkSession, d: String, nprobe: Int, qs: Array[Anchor]): Array[(Long, Long)] =
+    if (Dedup.dd7AnchorCount(corpusN(s, d)) <= FineResidentMax)
+      probesOf(prefixKernel(s, d), nprobe, qs)
+    else {
+      val coarse = coarsePrefixLocal(s, d)
+      val level2 = QuantizerKernel.tagged(coarse, Array.empty)
+      val cids = qs.flatMap(q => level2.coarseCells(q.v, q.nrm)).distinct.toSeq
+      val fine = fineServedTable(s, d).filter(col("cid").isin(cids: _*))
+        .select(col("cid"), col("aid"), col("av"), col("an")).collect()
+        .map(r => (r.getLong(0), Anchor(r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3))))
+      probesOf(QuantizerKernel.tagged(coarse, fine), nprobe, qs)
+    }
 
   /** Serve a top-k ANN query batch from a landed cell-bucketed index,
     * given the locally-ranked probe list. The probe pairs — NumQueries
@@ -547,78 +565,45 @@ object Similarity {
     topkPerQid(scored, distinctIds = true)
   }
 
-  /** sim2b — sim2 SERVED from the persisted index: identical result
-    * (same DuckDB oracle), but the corpus assignment is read from the
-    * one-time [[servedIndex]] landing instead of being recomputed, and
-    * the scan touches ONLY the probed cells. The probed cell-id list is
-    * bounded (NumQueries · nprobe ≈ 10·√K ids — 160 at the graded SFs,
-    * ~1.8k at 2M vectors, ~40k at 10⁹) and is collected to the driver
-    * and pushed into the scan as an In filter, where bucket pruning +
-    * parquet row-group stats (the table is sorted on cell) skip every
-    * unprobed cell — per-query I/O ∝ probed cells, not corpus size.
-    * The driver-side collect is the same bounded-by-construction
-    * pattern as the k-means TrainSample. */
-  /** The coarse-tagged fine anchors LANDED as a cid-bucketed table
-    * (K rows — ~160 MB at 20M vectors, distributed, never driver-
-    * resident): a cold session re-registers the landing (marker read
-    * only) instead of re-running tagFine's K·K1-cosine job over a
-    * freshly materialized corpus (VERDICT r12 #3). The body evaluates
-    * only on the first landing, where the warm session has
-    * fineTaggedPrefix memoized anyway. */
+  /** The coarse-tagged fine anchors LANDED as a cid-bucketed table —
+    * read only past [[FineResidentMax]], where serving fetches the
+    * probed cells' anchors per call instead of holding all K. Landed
+    * from the routed placement's cid-grouped fine table, so no node ever
+    * holds the whole fine set; a cold session re-registers it (marker
+    * read only). */
   private def fineServedTable(s: SparkSession, d: String): DataFrame = {
     val n = corpusN(s, d)
     val k = Dedup.dd7AnchorCount(n)
     graft.sources.Lakehouse.landBucketed(
       s, s"graft_ann_fine_${dirSuffix(d)}", Seq("cid"), 16,
       s"annfine|v1|$d|n=$n|k=$k")(
-      Dedup.fineTaggedPrefix(s, d).select(col("cid"), col("aid"), col("av"), col("an")))
+      routedFine(s, d).select(col("cid"), explode(col("anchors")).as("a"))
+        .select(col("cid"), col("a.aid").as("aid"), col("a.av").as("av"), col("a.an").as("an")))
   }
 
-  /** Largest fine-anchor count kept driver-resident: 128Ki anchors ×
-    * 64 dims × 8 B ≈ 64 MB — comfortably inside any driver, covering
-    * corpora to ~8M vectors (K = n/64). Past that, serves fall back to
-    * the per-call pruned fetch. */
-  private val FineResidentMax = 131072L
+  /** Largest fine-anchor count serving keeps driver-resident: 128Ki
+    * anchors × 64 dims × 8 B ≈ 64 MB — comfortably inside any driver,
+    * covering corpora to ~8M vectors (K = n/64). Up to it the prefix
+    * kernel itself is the serving quantizer and no fine table is
+    * landed; past it, serves fetch the probed cells per call
+    * ([[prefixProbes]]). */
+  private[graft] val FineResidentMax = 131072L
 
-  /** One bounded fine-anchor fetch for the probed coarse cells —
-    * ≤ nprobe·K/K1 rows ∝ √K, shared by sim2b and the recall probe.
-    *
-    * While K ≤ [[FineResidentMax]] the WHOLE fine set is collected once
-    * per session from the landed table and served from driver memory —
-    * the FAISS shape (the quantizer lives with the server), and what
-    * keeps repeated warm serves free of a per-call Spark job. Beyond
-    * that bound the closure reads the landed fine table per call with
-    * the cid In-filter pushed down (bucket pruning + row-group skip):
-    * cost ∝ probed cells, never ∝ K. Cold sessions pay one K-row table
-    * read (resident path) or nothing up front (pruned path) instead of
-    * the corpus-wide tagFine job they paid before the landing existed. */
-  private val fineLocalCache = Memo.newCache[Array[(Long, Anchor)]]()
-  private def prefixFineFetch(s: SparkSession, d: String): Seq[Long] => Array[(Long, Anchor)] = {
-    val k = Dedup.dd7AnchorCount(corpusN(s, d))
-    if (k <= FineResidentMax) {
-      val all = Memo.get(fineLocalCache, s, d) {
-        fineServedTable(s, d)
-          .select(col("cid"), col("aid"), col("av"), col("an")).collect()
-          .map(r => (r.getLong(0),
-            Anchor(r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3))))
-      }
-      cids => { val want = cids.toSet; all.filter(t => want(t._1)) }
-    } else
-      cids => fineServedTable(s, d)
-        .filter(col("cid").isin(cids: _*))
-        .select(col("cid"), col("aid"), col("av"), col("an")).collect()
-        .map(r => (r.getLong(0),
-          Anchor(r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3))))
-  }
-
+  /** sim2b — sim2 SERVED from the persisted index: identical result
+    * (same DuckDB oracle), but the corpus assignment is read from the
+    * one-time [[servedIndex]] landing instead of being recomputed, and
+    * the scan touches ONLY the probed cells. The probed cell-id list is
+    * bounded (NumQueries · nprobe ≈ 10·√K ids — 160 at the graded SFs,
+    * ~1.8k at 2M vectors, ~40k at 10⁹) and is pushed into the scan as
+    * an In filter, where bucket pruning + parquet row-group stats (the
+    * table is sorted on cell) skip every unprobed cell — per-query I/O
+    * ∝ probed cells, not corpus size. */
   val sim2b = QueryDef(
     "sim2b_ann_ivf_served",
     (s, d) => {
       val k1 = Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
-      // probes rank driver-locally (resident √K coarse; one bounded
-      // fine-anchor fetch); identical ranking to the distributed form
-      val probes = localProbes(s, d, coarsePrefixLocal(s, d), prefixFineFetch(s, d),
-        math.max(NProbe.toLong, k1).toInt, queryVecs(s, d))
+      // probes rank on the driver with the same kernel as sim2's
+      val probes = prefixProbes(s, d, math.max(NProbe.toLong, k1).toInt, queryVecs(s, d))
       serveTopk(s, d, servedIndex(s, d), probes, queryVecs(s, d))
     },
     sim2.oracle, // identical assignment + scoring by construction
@@ -841,28 +826,24 @@ object Similarity {
     * (same serving plan as sim2b — In-filter → bucket pruning +
     * row-group skip). Recall-gated like sim3: the landed cells ARE
     * sim3's cells by deterministic-training construction. */
-  /** The trained quantizer as driver-resident anchors (coarse subset +
-    * coarse-tagged fine set) — everything is ≤ TrainSample rows, so the
-    * whole serving quantizer lives on the driver. Tagging replicates
-    * [[Dedup.tagFine]]'s (ccos DESC, cid ASC) argmax locally; norms and
-    * cosines use the same ascending-loop arithmetic, so the cells match
-    * the landed index bit-for-bit. */
-  private def kmLocal(s: SparkSession, d: String): (Array[Anchor], Array[(Long, Anchor)], Int) = {
+  /** The trained quantizer as a driver-resident [[QuantizerKernel]]
+    * (coarse subset + coarse-tagged fine set) — everything is ≤
+    * TrainSample rows, so the whole serving quantizer lives on the
+    * driver. The kernel's tagging is [[Dedup.tagFine]]'s (ccos DESC,
+    * cid ASC) argmax with the same ascending-loop arithmetic, so the
+    * cells match the landed index bit-for-bit. */
+  private def kmLocal(s: SparkSession, d: String): (QuantizerKernel, Int) = {
     val trained = kmCentroids(s, d)
     val k1 = Dedup.dd7CoarseCount(trained.length.toLong).toInt
     val all = trained.map { case (i, v) => Anchor(i.toLong, v, math.sqrt(dotA(v, v))) }
-    val coarse = all.take(k1)
-    val fineTagged = all.map(a => (topAnchors(a.v, a.nrm, coarse, 1).head.id, a))
-    (coarse, fineTagged, k1)
+    (QuantizerKernel(all.take(k1), all), k1)
   }
 
   val sim3b = QueryDef(
     "sim3b_ann_kmeans_served",
     (s, d) => {
-      val (coarse, fineTagged, k1) = kmLocal(s, d)
-      val probes = localProbes(s, d, coarse,
-        cids => { val want = cids.toSet; fineTagged.filter(t => want(t._1)) },
-        math.max(NProbe, k1), queryVecs(s, d))
+      val (kernel, k1) = kmLocal(s, d)
+      val probes = probesOf(kernel, math.max(NProbe, k1), queryVecs(s, d))
       recallGate(s, d, serveTopk(s, d, kmServedIndex(s, d), probes, queryVecs(s, d)))
     },
     sim3.oracle,
@@ -1150,7 +1131,7 @@ object Similarity {
     * ADC reads M positions per candidate instead of joining M rows.
     *
     * ASSIGNMENT REUSE (round 17): when the prefix index is landed, its
-    * live seq-0 rows ARE `rankedPrefix.filter(r <= Dd7Probes)` — the
+    * live seq-0 rows ARE `rankedPrefix`'s (cell, vec_id) — the
     * landing reads `(cell, vec_id)` back from the bucketed table
     * (column-pruned: two skinny columns of a 19 GB-at-20M table) and
     * skips the corpus-wide n·√K quantization job entirely. With the
@@ -1159,17 +1140,16 @@ object Similarity {
     * one skinny shuffle-hash join (measured at 20M: 1656 s re-ranking
     * form → the cost of the join + write). Cold-start landings (no
     * prefix index) keep the self-contained quantization form.
-    * Shuffle-hash on the narrow assignment — see
-    * [[prefixIndexLandingFrame]] (the codes side is narrow too, but
-    * the stats-less SMJ fallback would still sort both). */
+    * Shuffle-hash on the narrow assignment: with neither side's size
+    * known to the planner, the stats-less fallback is a sort-merge that
+    * sorts both sides. */
   private[graft] def ivfPqLandingBase(s: SparkSession, d: String): DataFrame = {
     val assigned =
       if (graft.sources.Lakehouse.isLanded(s, s"graft_ann_index_${dirSuffix(d)}"))
         servedIndex(s, d).filter(col("seq") === 0)
           .select(col("cell"), col("vec_id"))
       else
-        Dedup.rankedPrefix(s, d).filter(col("r") <= Dedup.Dd7Probes)
-          .select(col("cell"), col("vec_id"))
+        Dedup.rankedPrefix(s, d).select(col("cell"), col("vec_id"))
     assigned.hint("shuffle_hash")
       .join(pqCodeArrays(s, d, normed(s, d)), Seq("vec_id"))
       .select(col("cell"), col("vec_id"), col("codes"), lit(0L).as("seq"))
@@ -1216,7 +1196,7 @@ object Similarity {
   private def ivfPqCands(
       s: SparkSession, d: String, nprobe: Int, qs: Array[Anchor],
       rerankPerProbe: Int = DefaultRerankPerProbe): (DataFrame, Seq[Long]) = {
-    val probes = localProbes(s, d, coarsePrefixLocal(s, d), prefixFineFetch(s, d), nprobe, qs)
+    val probes = prefixProbes(s, d, nprobe, qs)
     val cellIds = probes.map(_._2).distinct.toSeq
     import s.implicits._
     val probesDf = probes.toSeq.toDF("qid", "cell")
@@ -1295,13 +1275,9 @@ object Similarity {
       qs: Array[Anchor],
       rerankPerProbe: Int = DefaultRerankPerProbe): DataFrame = kind match {
     case "prefix" =>
-      val probes = localProbes(s, d, coarsePrefixLocal(s, d), prefixFineFetch(s, d), nprobe, qs)
-      serveTopk(s, d, servedIndex(s, d), probes, qs)
+      serveTopk(s, d, servedIndex(s, d), prefixProbes(s, d, nprobe, qs), qs)
     case "kmeans" =>
-      val (coarse, fineTagged, _) = kmLocal(s, d)
-      val probes = localProbes(s, d, coarse,
-        cids => { val want = cids.toSet; fineTagged.filter(t => want(t._1)) }, nprobe, qs)
-      serveTopk(s, d, kmServedIndex(s, d), probes, qs)
+      serveTopk(s, d, kmServedIndex(s, d), probesOf(kmLocal(s, d)._1, nprobe, qs), qs)
     case "ivfpq" =>
       val (cands, cells) = ivfPqCands(s, d, nprobe, qs, rerankPerProbe)
       pqRerank(s, d, cands, qs, Some(cells))
@@ -1366,7 +1342,7 @@ object Similarity {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
     val (probes, probeSec) =
-      t(localProbes(s, d, coarsePrefixLocal(s, d), prefixFineFetch(s, d), np, qs))
+      t(prefixProbes(s, d, np, qs))
     val (tabs, adcSec) = t(adcTables(s, d, qs))
     val (_, resolveSec) = t { ivfPqIndex(s, d); servedIndex(s, d) }
     val ((cands, cells), planSec) = t(ivfPqCands(s, d, np, qs, rerankPerProbe))

@@ -170,13 +170,29 @@ object Lakehouse {
     else w).saveAsTable(table)
   }
 
-  /** Splits per bucket for [[writeBucketedStaged]]'s pass-1 shuffle —
-    * bounds the pass-2 per-task sort at roughly (table bytes) /
-    * (buckets × splits). 8 keeps a 5M-vector index landing's sorts in
-    * the low hundreds of MB per task; tune with SPARK_GRAFT_LAND_SPLITS. */
+  /** The CAP on splits per bucket for [[writeBucketedStaged]]'s pass-1
+    * shuffle — bounds the pass-2 per-task sort at roughly (table bytes)
+    * / (buckets × splits). 8 keeps a 5M-vector index landing's sorts in
+    * the low hundreds of MB per task; tune with SPARK_GRAFT_LAND_SPLITS.
+    * A write uses fewer when it stages less ([[stagedSplits]]). */
   private[graft] def landSplitsPerBucket: Int =
     sys.env.get("SPARK_GRAFT_LAND_SPLITS").flatMap(_.toIntOption)
       .filter(_ > 0).getOrElse(8)
+
+  /** Pass-1 split of one bucket: at most this many staged bytes. */
+  private val SplitBytes: Long = 64L << 20
+
+  /** Splits per bucket for a write staging `stagedBytes`:
+    * ⌈bytes / (numBuckets · 64 MB)⌉, at least 1 and at most
+    * [[landSplitsPerBucket]]. A 5M-vector prefix landing (~8 GB) keeps
+    * the full 8 per bucket; a 20k-vector landing or a small compaction
+    * stages one split per bucket, instead of 8× as many tiny tasks and
+    * files. An unknown size (Long.MaxValue) takes the cap. */
+  private[graft] def stagedSplits(stagedBytes: Long, numBuckets: Int): Int = {
+    val perBucket = numBuckets.toLong * SplitBytes
+    val splits = stagedBytes / perBucket + (if (stagedBytes % perBucket == 0) 0 else 1)
+    math.max(1L, math.min(landSplitsPerBucket.toLong, splits)).toInt
+  }
 
   /** Bucket groups for [[writeBucketedStaged]]'s pass 2 (round 17 —
     * the 40M-decade disk law): at 1 (default) pass 2 is one job and
@@ -232,8 +248,9 @@ object Lakehouse {
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
-      numBuckets: Int): Unit =
-    writeBucketedStagedWaves(Seq(df), table, bucketCols, numBuckets)
+      numBuckets: Int,
+      stagedBytes: Long = Long.MaxValue): Unit =
+    writeBucketedStagedWaves(Seq(df), table, bucketCols, numBuckets, stagedBytes)
 
   /** [[writeBucketedStaged]] over a SEQUENCE of pass-1 frames (round 17
     * — the 40M landing's pass-1 disk law): the r17 40M attempt showed
@@ -249,18 +266,24 @@ object Lakehouse {
     * subdirs; pass 2 (one-shot or bucket-group chunked) reads across
     * them — a staged file's `part-NNNNN` index still identifies its
     * bucket (NNNNN mod numBuckets) because every wave uses the same
-    * bucket-aligned partition count. */
+    * bucket-aligned partition count.
+    *
+    * `stagedBytes` is the caller's size of what pass 1 stages (a
+    * landing: rows × row bytes; a compaction: the table's data bytes):
+    * the pass-1 partition count is numBuckets × [[stagedSplits]], so
+    * small writes stage one split per bucket. */
   def writeBucketedStagedWaves(
       dfs: Seq[DataFrame],
       table: String,
       bucketCols: Seq[String],
-      numBuckets: Int): Unit = {
+      numBuckets: Int,
+      stagedBytes: Long = Long.MaxValue): Unit = {
     require(dfs.nonEmpty, "writeBucketedStagedWaves needs at least one frame")
     val s = dfs.head.sparkSession
     val schema = dfs.head.schema
     val stagingLoc = warehouseLoc(s, table + "__landstage")
     if (stagingLoc.exists()) rmTree(stagingLoc)
-    val parts = numBuckets * landSplitsPerBucket
+    val parts = numBuckets * stagedSplits(stagedBytes, numBuckets)
     try {
       dfs.zipWithIndex.foreach { case (df, i) =>
         df.repartition(parts, bucketCols.map(col): _*)
@@ -342,8 +365,8 @@ object Lakehouse {
   def landBucketed(
       s: SparkSession, table: String,
       bucketCols: Seq[String], numBuckets: Int,
-      fingerprint: String)(df: => DataFrame): DataFrame =
-    landBucketedWaves(s, table, bucketCols, numBuckets, fingerprint)(Seq(df))
+      fingerprint: String, stagedBytes: Long = Long.MaxValue)(df: => DataFrame): DataFrame =
+    landBucketedWaves(s, table, bucketCols, numBuckets, fingerprint, stagedBytes)(Seq(df))
 
   /** [[landBucketed]] whose landing computation arrives as pass-1
     * WAVES ([[writeBucketedStagedWaves]]); the reuse path is identical
@@ -351,7 +374,7 @@ object Lakehouse {
   def landBucketedWaves(
       s: SparkSession, table: String,
       bucketCols: Seq[String], numBuckets: Int,
-      fingerprint: String)(dfs: => Seq[DataFrame]): DataFrame = {
+      fingerprint: String, stagedBytes: Long = Long.MaxValue)(dfs: => Seq[DataFrame]): DataFrame = {
     require(!fingerprint.contains('\n'), "fingerprint must be single-line")
     lockFor(table).synchronized {
       adoptOrphanStage(s, table) // recover a crashed compaction swap first
@@ -374,7 +397,7 @@ object Lakehouse {
           s.table(table)
         case _ =>
           val data = dfs
-          writeBucketedStagedWaves(data, table, bucketCols, numBuckets)
+          writeBucketedStagedWaves(data, table, bucketCols, numBuckets, stagedBytes)
           // a clean re-land invalidates any maintenance sidecar from the
           // previous landing: the commit log died with the location rm in
           // writeBucketed; the tombstone dir lives beside it — clear too
@@ -471,7 +494,8 @@ object Lakehouse {
     val stage = stageName(table)
     val snapshot = s.table(table).count() // raw-row snapshot for the drift guard
     writeBucketedStaged(
-      liveRowsOf(s.table(table)), stage, spec.bucketColumnNames, spec.numBuckets)
+      liveRowsOf(s.table(table)), stage, spec.bucketColumnNames, spec.numBuckets,
+      dataBytes(warehouseLoc(s, table)))
     // Metadata half of the swap under the table's monitor: a concurrent
     // reader resolving the table mid-swap would otherwise adopt the
     // stage itself (killing this RENAME) or re-land over the maintained

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *  2. LEVEL 1 per-row: rank the K1 = ⌈√K⌉ coarse cells against the
   *     broadcast [[CoarseIndex]] and keep Dd7CoarseProbes of them;
   *  3. LEVEL 2 via a cid-keyed STREAM-STATIC JOIN against
-  *     [[fineCells]] (the batch topology, Dedup.ivfPairs's
-  *     fineTagged-by-cid join): each joined row carries ONE probed
+  *     [[fineCells]] (the topology of the DataFrame reference,
+  *     Dedup.twoLevelRankedTagged's cid join): each joined row carries ONE probed
   *     coarse cell's fine anchors, scores them locally, and keeps that
   *     cell's Dd7Probes best — the global best-Dd7Probes fine cells
   *     are a subset of the per-cell bests, merged per vector by a
@@ -107,7 +107,17 @@ object EmbedDedupStream {
     * bucket state machine serves both modalities. `cells` is
     * [[fineCells]] for the same corpus the coarse index was built
     * from. */
-  def assignments(vecs: DataFrame, ci: CoarseIndex, cells: DataFrame): DataFrame = {
+  def assignments(vecs: DataFrame, ci: CoarseIndex, cells: DataFrame): DataFrame =
+    routedCells(vecs, ci, cells)
+      .select(lit(0).as("band"), col("cell").as("bv"), col("vec_id").as("doc_id"))
+
+  /** The routed two-level placement: (vec_id, cell, r) — each vector's
+    * Dd7Probes best fine cells, r = 1 for the best. Vectors travel to
+    * their probed coarse cells' anchors, so no node holds the whole fine
+    * index: the placement [[assignments]] runs for the dd7 stream twin,
+    * and the prefix index's placement past its broadcast bound
+    * (`Similarity.prefixCells`). */
+  def routedCells(vecs: DataFrame, ci: CoarseIndex, cells: DataFrame): DataFrame = {
     val s = vecs.sparkSession
     import s.implicits._
     val probes = graft.operators.Dedup.Dd7Probes
@@ -175,10 +185,10 @@ object EmbedDedupStream {
           cands.toArray
             .sortBy { case (cos, aid) => (-cos, aid) }
             .take(probes)
-            .map { case (_, aid) => BandDoc(0, aid, id) }
+            .zipWithIndex.map { case ((_, aid), i) => (id, aid, i + 1) }
         }
       }
-      .toDF()
+      .toDF("vec_id", "cell", "r")
   }
 
   /** Verified near-dup pairs stream — the full dd7 twin. `normedStore`

@@ -40,10 +40,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `upserts = false`.
   *
   * Scale shape:
-  *  - per arriving vector: (K1 + probes·K/K1)·d ≈ √K·d multiply-adds —
-  *    the same two-level assignment [[EmbedDedupStream]] runs for
-  *    dedup-at-ingest (level 1 against the broadcast √K coarse array,
-  *    level 2 via the distributed cid-keyed fine-cell join);
+  *  - per arriving vector: (K1 + probes·K/K1)·d ≈ √K·d multiply-adds in
+  *    the prefix quantizer kernel ([[graft.operators.QuantizerKernel]])
+  *    — the SAME narrow per-partition map the corpus landing ran, with
+  *    the frozen kernel broadcast once per stream while K fits
+  *    [[graft.operators.Dedup.BroadcastFineMaxBytes]] (~67M-vector
+  *    corpora at d = 64): the batch's assignment adds no exchange, no
+  *    join and no cached fine table. Past that bound the batch routes
+  *    to its coarse cells through [[EmbedDedupStream]]'s cid join;
   *  - per micro-batch: ONE bucketed append — files land hashed and
   *    named by bucket id, so bucket pruning and Exchange-free joins
   *    keep working across old and new rows — plus (when the batch
@@ -55,26 +59,22 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object IndexIngest {
 
   /** Assign one batch of raw vectors (vec_id, embedding: float array)
-    * to the frozen quantizer's cells and return serving-index rows
-    * (cell, vec_id, v, nrm, seq) — [[EmbedDedupStream.assignments]]'s
-    * multi-assignment (bv = fine cell) joined back to the vector
-    * payload, with the norm computed by the batch pipeline's exact
-    * expressions so served cosines are bit-identical for old and new
-    * rows. `seq` is the batch's maintenance sequence number (0 for the
-    * corpus landing). */
-  private[graft] def assignBatch(
-      batch: DataFrame,
-      ci: EmbedDedupStream.CoarseIndex,
-      cells: DataFrame,
-      seq: Long = 0L): DataFrame = {
-    val normed = batch
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    * to the frozen prefix quantizer's cells and return serving-index
+    * rows (cell, vec_id, v, nrm, seq) — the landing's placement
+    * ([[graft.operators.Similarity.prefixCells]]) applied to the batch,
+    * with the norm computed by the batch pipeline's exact expressions
+    * so served cosines are bit-identical for old and new rows. `seq` is
+    * the batch's maintenance sequence number (0 for the corpus
+    * landing). */
+  private[graft] def assignBatch(batch: DataFrame, corpusDir: String, seq: Long = 0L): DataFrame =
+    graft.operators.Similarity.landingRows(
+      graft.operators.Similarity.prefixCells(batch.sparkSession, corpusDir, normalized(batch)), seq)
+
+  /** (vec_id, v, nrm) of raw (vec_id, embedding) rows — the corpus
+    * landing's cast and norm expressions. */
+  private def normalized(batch: DataFrame): DataFrame =
+    batch.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
-    EmbedDedupStream.assignments(batch, ci, cells)
-      .select(col("bv").as("cell"), col("doc_id").as("vec_id"))
-      .join(normed, Seq("vec_id"))
-      .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq"))
-  }
 
   /** Start the maintenance stream: `vecs` (a streaming DataFrame of
     * (vec_id, embedding); embedding NULL ⇒ delete) → frozen-quantizer
@@ -150,31 +150,6 @@ object IndexIngest {
       compactMaxTombstones: Long = 0L): StreamingQuery = {
     val s = vecs.sparkSession
     val table = graft.operators.Similarity.prefixIndexTable(s, corpusDir)
-    // the frozen quantizer: √K coarse anchors driver-resident, K-row
-    // fine side distributed — both derived from the ORIGINAL corpus
-    // prefix, never from appended rows
-    val corpus = graft.Tables.embeddings(s, corpusDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
-    // Coarse anchors via the landing's memo/sidecar (r18, guide §1.2 —
-    // cut redundant jobs): prefixIndexTable above just landed (or
-    // re-registered) the index, so the corpus count is already
-    // memo-resident and the coarse anchors are one memoized prefix
-    // collect shared with the serve path — where the old
-    // collectCoarse() re-paid a corpus count() + its own prefix
-    // collect() per maintenance-stream start. This is also the honest
-    // "frozen quantizer" semantics: maintenance assigns under the
-    // anchors THE LANDING froze rather than re-deriving them. The
-    // anchors are bit-identical either way (same first-K1 rows, same
-    // sequential-sum norms — the stream==batch assignment parity spec
-    // pins that equality).
-    val ci = {
-      val (n, anchors) = graft.operators.Similarity.frozenCoarse(s, corpusDir)
-      val k = graft.operators.Dedup.dd7AnchorCount(n)
-      EmbedDedupStream.CoarseIndex(k, graft.operators.Dedup.dd7CoarseCount(k),
-        anchors.map(an => (an.id, an.v, an.nrm)))
-    }
-    val cells = EmbedDedupStream.fineCells(corpus, ci).cache()
     // the commit log's batchId counter is scoped to THIS stream's
     // checkpoint (ADVICE r12): a restart under a new checkpoint dir
     // restarts batchIds at 0, and skipping those against a previous
@@ -228,14 +203,12 @@ object IndexIngest {
               pqT.foreach(graft.sources.Lakehouse.appendTombstones(s, _, trows))
             }
           } finally { existing.unpersist(); () }
-          val assigned = assignBatch(ups, ci, cells, seq)
+          val assigned = assignBatch(ups, corpusDir, seq)
           graft.sources.Lakehouse.appendBucketed(assigned, table)
           if (kmT.isDefined || pqT.isDefined) {
             // the batch's normalized vectors, same expressions as
             // assignBatch — identical doubles everywhere
-            val e = ups
-              .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-              .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
+            val e = normalized(ups)
             kmT.foreach { t =>
               graft.sources.Lakehouse.appendBucketed(
                 graft.operators.Similarity.kmAssignFrame(s, corpusDir, e)
@@ -280,16 +253,6 @@ object IndexIngest {
         s.catalog.refreshTable(table)
       }
     checkpointDir.foreach(cp => w.option("checkpointLocation", cp))
-    val q = w.start()
-    // release the quantizer cache when THIS query terminates (ADVICE
-    // r11: it leaked per invocation in a long-lived session)
-    s.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) { cells.unpersist(); s.streams.removeListener(this) }
-    })
-    q
+    w.start()
   }
 }

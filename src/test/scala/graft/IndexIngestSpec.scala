@@ -55,14 +55,8 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       .as[(Long, Array[Float])].collect().toSeq
       .map { case (id, v) => (900000L + id, v) }
     // the assignment stage in isolation: Dd7Probes cells per vector
-    val corpus = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
-    val ci = graft.streaming.EmbedDedupStream.collectCoarse(
-      corpus.select(col("vec_id"), col("v").as("embedding")))
-    val cells = graft.streaming.EmbedDedupStream.fineCells(corpus, ci)
     val batchDf = copies.toDF("vec_id", "embedding")
-    val assigned = IndexIngest.assignBatch(batchDf, ci, cells)
+    val assigned = IndexIngest.assignBatch(batchDf, corpusDir)
     assert(assigned.count() == copies.size * Dedup.Dd7Probes,
       s"assignBatch produced ${assigned.count()} rows")
 
@@ -428,5 +422,19 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       Seq((-99L, emb5.map(_.toDouble))), Similarity.defaultNprobe(spark, corpusDir))
       .select(col("neighbor_id")).collect().map(_.getLong(0)).toSet
     assert(!got.contains(970000L), "the deleted id must stay masked after the fold")
+  }
+
+  test("a maintenance batch's assignment adds no Exchange: one narrow map over the batch") {
+    import spark.implicits._
+    val batch = Seq((910000L, Array.fill(64)(0.5f)), (910001L, Array.fill(64)(-0.25f)))
+      .toDF("vec_id", "embedding")
+    val assigned = IndexIngest.assignBatch(batch, sfDir, 5L)
+    assert(assigned.count() == 2 * Dedup.Dd7Probes)
+    val plan = assigned.queryExecution.executedPlan
+    val wide = plan.collect {
+      case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+    }
+    assert(wide.isEmpty, s"the batch assignment plans ${wide.mkString(", ")}:\n$plan")
   }
 }

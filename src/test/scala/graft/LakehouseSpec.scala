@@ -376,4 +376,14 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
       assert(landed == 2, "fingerprint mismatch must force a re-land")
     } finally s.sql(s"DROP TABLE IF EXISTS `$t`")
   }
+
+  test("pass-1 staging is sized by the bytes it stages, capped at landSplitsPerBucket") {
+    // a prefix index row at d = 64 stages ~8·64 + 32 B; 3 rows per vector
+    val row = 8L * 64 + 32
+    val cap = Lakehouse.landSplitsPerBucket
+    assert(Lakehouse.stagedSplits(5000000L * 3 * row, 16) == math.min(8, cap)) // 128 partitions
+    assert(Lakehouse.stagedSplits(20000L * 3 * row, 16) == 1)                  // 16 partitions
+    assert(Lakehouse.stagedSplits(0L, 16) == 1)
+    assert(Lakehouse.stagedSplits(Long.MaxValue, 16) == cap) // size unknown: the cap
+  }
 }

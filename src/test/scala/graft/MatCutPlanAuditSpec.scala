@@ -7,15 +7,15 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.types.ArrayType
 
-/** STRUCTURAL guard for the matCut footgun (VERDICT r16 #2): lineage-cut
-  * frames (`Dedup.rankedPrefix`, `Dedup.fineTaggedPrefix`) carry no size
-  * stats, so any consumer that relies on auto-broadcast silently falls
-  * back to a SortMergeJoin — and when the other side carries the corpus
+/** STRUCTURAL guard for the matCut footgun (VERDICT r16 #2): a
+  * memoized or lineage-cut frame may carry no usable size stats, so any
+  * consumer that relies on auto-broadcast silently falls back to a
+  * SortMergeJoin — and when the other side carries the corpus
   * vectors, that SMJ external-sorts wide rows (the r14/r15 landing
   * wall, reintroducible one innocent join at a time). Until round 16
   * the guard was per-site (sim2's plan pinned in SimilaritySpec); this
   * spec walks EVERY graded query and landing frame that consumes a
-  * matCut frame and fails on any SortMergeJoin whose input carries an
+  * memoized assignment frame and fails on any SortMergeJoin whose input carries an
   * array column. The audit runs with auto-broadcast DISABLED — the
   * regime a 100 TB corpus is actually in (stats-less frames never
   * qualify, and real dimension tables outgrow the threshold), so a
@@ -45,14 +45,27 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
     }.distinct
 
   private def consumers: Seq[(String, DataFrame)] = Seq(
-    // graded queries whose plans consume rankedPrefix / fineTaggedPrefix
+    // graded queries whose plans consume the prefix assignment
     "sim2_ann_ivf_topk", "dd6_dedup_clusters",
     "dd7_dedup_embedding_ivf", "dd9_semantic_dedup"
   ).map(n => n -> SparkEntry.queries(n)(spark, sfDir)) ++ Seq(
-    // the landing frames — the 100×-scale hot paths (plan only; the
-    // extracted builders mean nothing is landed here)
-    "prefix_index_landing" -> Similarity.prefixIndexLandingFrame(spark, sfDir),
+    // the ivfpq landing frame — a 100×-scale hot path (plan only; the
+    // extracted builder means nothing is landed here)
     "ivfpq_landing_base" -> Similarity.ivfPqLandingBase(spark, sfDir))
+
+  test("the prefix landing plan is one narrow pass: no Exchange or join before the staged write") {
+    // the quantizer kernel runs as a per-partition map over the corpus
+    // scan, so the only shuffle of a landing is the staged write's own
+    // bucket repartition
+    val df = Similarity.prefixIndexLandingFrame(spark, sfDir)
+    df.count()
+    val wide = nodes(df.queryExecution.executedPlan).collect {
+      case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+    }
+    assert(wide.isEmpty, s"the landing plans ${wide.mkString(", ")}:\n${df.queryExecution.executedPlan}")
+    assert(df.schema.toDDL == "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL")
+  }
 
   test("no matCut consumer plans a SortMergeJoin over an array-carrying side " +
       "even with auto-broadcast off") {

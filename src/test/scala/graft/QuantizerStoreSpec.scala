@@ -77,11 +77,25 @@ class QuantizerStoreSpec extends SparkSpecBase with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$d2/embeddings.parquet")
     val n1 = Similarity.corpusN(spark, d2) // computes + persists
     assert(QuantizerStore.load(spark, d2).exists(_.n == n1), "corpusN must persist n")
+    Similarity.buildIndex(spark, d2, "prefix")
     // simulate a cold session: drop every memoized frame, then read n
     // back — the sidecar answers without a corpus job
     graft.operators.Memo.clearCaches(spark)
     val loaded = QuantizerStore.load(spark, d2)
     assert(loaded.exists(_.n == n1))
     assert(Similarity.corpusN(spark, d2) == n1)
+    // and the first serve ranks its probes against the fine set the
+    // quantizer kernel holds: no corpus cache, no landed fine table
+    val v = spark.read.parquet(s"$d2/embeddings.parquet").filter(col("vec_id") === 3)
+      .select(col("embedding").cast("array<double>")).collect().head.getSeq[Double](0).toArray
+    val got = Similarity.searchTopk(spark, d2, "prefix", Seq((-7L, v))).collect()
+    assert(got.length == Similarity.TopK && got.exists(_.getLong(2) == 3L))
+    assert(!Similarity.corpusCached(spark, d2), "a cold serve must not materialize the corpus")
+    val sfx = java.security.MessageDigest.getInstance("MD5")
+      .digest(d2.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    assert(!graft.sources.Lakehouse.isLanded(spark, s"graft_ann_fine_$sfx") &&
+      !spark.catalog.tableExists(s"graft_ann_fine_$sfx"),
+      s"K <= FineResidentMax must serve without landing graft_ann_fine_$sfx")
+    spark.sql(s"DROP TABLE IF EXISTS `graft_ann_index_$sfx`")
   }
 }

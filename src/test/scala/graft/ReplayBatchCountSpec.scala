@@ -32,15 +32,20 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 class ReplayBatchCountSpec extends SparkSpecBase {
 
-  /** Run `body` and return how many micro-batches its streaming
-    * queries executed (progress events observed while it ran). */
+  /** Run `body` and return how many micro-batches ITS streaming
+    * queries executed: progress events of the query runs started while
+    * `body` ran. Other streams on the shared session (a background
+    * query another spec left running, a late progress event of an
+    * earlier run) post on the same bus and are not counted. */
   private def countBatches(body: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val runs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val l = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        n.incrementAndGet(); ()
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        runs.add(e.runId); ()
       }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (runs.contains(e.progress.runId)) { n.incrementAndGet(); () }
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(l)

@@ -20,6 +20,7 @@
 set -uo pipefail
 set -x
 cd /root/repo
+mkdir -p /tmp/r18
 
 AVAIL_GB=$(df -BG --output=avail / | tail -1 | tr -dc '0-9')
 [ "$AVAIL_GB" -lt 25 ] && { echo "REFUSING: need 25 GB free, have ${AVAIL_GB}"; exit 2; }
