@@ -37,7 +37,11 @@ object Graft {
     *    across all instances on the executor (the reference sizes its
     *    store cache the same way: a per-process budget, not per-store).
     * Tunable per session via [[session]]'s `rocksdbMemoryMB` (0 =
-    * leave RocksDB unbounded — opt OUT, not the default).
+    * leave RocksDB unbounded — opt OUT, not the default). Every other
+    * value here is a plain default: a deployment that wants a different
+    * one sets it with `spark.conf.set` on the session [[session]]
+    * returns, before it starts the stream (a stream reads its confs at
+    * start).
     */
   def streamConfs(rocksdbMemoryMB: Long = 4096L): Map[String, String] =
     Map("spark.sql.streaming.minBatchesToRetain" -> "2",
@@ -45,43 +49,39 @@ object Graft {
       // then cut the fixed cost"): the default full-snapshot commit
       // zips + uploads EVERY RocksDB instance on EVERY micro-batch —
       // measured 555-830 ms of each tiny replay batch's commit at 4
-      // state partitions (TwinProf r17); with the changelog mode the
-      // commit uploads only the batch's delta (142-200 ms measured with
-      // checksums off) and snapshots move to the background maintenance
-      // thread. At scale this is the production posture: commit latency
+      // state partitions (OPTIMIZATION_r17.md); with the changelog mode
+      // the commit uploads only the batch's delta (142-200 ms measured
+      // with checksums off) and snapshots move to the background
+      // maintenance thread. At scale this is the production posture: commit latency
       // ∝ batch delta, not ∝ total state. Restart replays
       // snapshot+changelog (q07r twin and the WINSCALE restore probes
-      // grade exactly that path). Env-overridable for deployments that
-      // want self-contained per-version snapshots.
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_CHANGELOG_CKPT", "true"),
+      // grade exactly that path). Deployments that want self-contained
+      // per-version snapshots set it back to false.
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
       // Spark 4.1 writes a sidecar CRC file for every checkpoint file
       // (offsets/commits/state zips/changelogs) by default — for
       // KB-scale state that DOUBLES the per-commit file ops and was
-      // measured as ~40% of the remaining commit time (TwinProf r17:
+      // measured as ~40% of the remaining commit time (OPTIMIZATION_r17.md:
       // 200-350 ms → 142-200 ms). RocksDB SSTs and the zip container
       // carry their own block checksums, and the durability story for
       // corrupted checkpoint storage is re-landing from the source —
-      // deployments on storage without end-to-end integrity can turn
-      // it back on via env.
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"),
+      // deployments on storage without end-to-end integrity turn it
+      // back on.
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       // Don't maintain the numRowsTotal gauge on the write path (r17
       // optimization, guide §1.2 "per-task work"): with tracking on,
       // EVERY put/merge/delete does a read-before-write just to keep
       // the per-store row count current — measured as ~half of every
-      // replay twin's addBatch (TwinProf r17 on the round's box: warm
-      // rep 5.85→3.40 s, per-batch addBatch 1888→871 ms, state commit
-      // 192→119 ms). Spark documents exactly this knob for write-heavy
+      // replay twin's addBatch (OPTIMIZATION_r17.md, on that round's
+      // box: warm rep 5.85→3.40 s, per-batch addBatch 1888→871 ms,
+      // state commit 192→119 ms). Spark documents exactly this knob for write-heavy
       // workloads. The trade is observability, not semantics:
       // stateOperators.numRowsTotal reads 0; numRowsUpdated, commit
-      // times and sizes still report. The scale probes (WinScale/
-      // FkScale/Ingest/Restore) build their own sessions and keep
-      // Spark's default tracking ON — their stateRows plateau evidence
-      // is the reason the flag exists. Deployments that want the gauge
-      // back set SPARK_GRAFT_TRACK_STATE_ROWS=true.
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-        sys.env.getOrElse("SPARK_GRAFT_TRACK_STATE_ROWS", "false")) ++
+      // times and sizes still report. The state-plateau probes
+      // (WinScale/FkScale/Restore) set it back to true on their session
+      // — their stateRows evidence needs the gauge; so does any
+      // deployment that wants it (StreamConfsSpec pins the route).
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false") ++
       (if (rocksdbMemoryMB > 0) Map(
         "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
         "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" ->
@@ -120,9 +120,8 @@ object Graft {
       //    would put exactly this stage back on the 186 GB sort path.
       // Deployments with wider groups-per-task (e.g. thousands of
       // shuffle partitions reduced back to few, or multi-KB sketch
-      // buffers at millions of groups) can lower the cap via env.
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "2097152"),
+      // buffers at millions of groups) lower it with spark.conf.set.
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2097152",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val builder = SparkSession.builder()

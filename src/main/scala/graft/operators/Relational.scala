@@ -120,8 +120,8 @@ object Relational {
     * (one-time landing per (session, dir), memoized). The join between
     * them then reads co-located and plans with NO Exchange on either
     * side — at 100 TB this replaces the big⋈big shuffle that is the
-    * scale probe's one superlinear point (BucketJoinProbe measured
-    * 66.7 → 21.0 s at 1000× with the same landing). */
+    * scale probe's one superlinear point (the bucket-join runs in NOTES.md
+    * measured 66.7 → 21.0 s at 1000× with the same landing). */
   private val bucketedFactsCache = Memo.newCache[(DataFrame, DataFrame)]()
   private[graft] def bucketedFacts(s: SparkSession, d: String): (DataFrame, DataFrame) =
     Memo.get(bucketedFactsCache, s, d) {
@@ -152,8 +152,7 @@ object Relational {
     * result (same DuckDB oracle as q04), but the lineitem⋈orders join
     * is Exchange-free under the SortMergeJoin (asserted on this
     * registered query's plan in LakehouseSpec). The dims stay
-    * broadcast. This is the registry-graded form of the scale answer
-    * BucketJoinProbe measures. */
+    * broadcast. This is the registry-graded form of that scale answer. */
   val q04b = QueryDef(
     "q04b_join_chain_bucketed",
     (s, d) => {

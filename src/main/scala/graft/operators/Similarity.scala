@@ -240,16 +240,14 @@ object Similarity {
     * probed cells' rows, not the corpus. */
   /** Bucket count for the landed cell-bucketed index tables. 16 suits
     * the graded fixtures and every probe corpus so far; at big decades
-    * bucket count is a scale knob (files ∝ index bytes / buckets — the
+    * bucket count is a scale lever (files ∝ index bytes / buckets — the
     * 40M landing's ~300 MB bucket files are where the serve-floor
-    * read-amplification was measured, SERVEPROF_r17_40M), and the
-    * r18 row-group-geometry probe uses a LOW count to reproduce that
-    * file geometry on a small corpus. Env-parameterized like the other
-    * scale-dependent landing knobs (LAND_WAVES, INDEX_ROWGROUP_MB);
-    * the default is unchanged, and dir-keyed probe corpora keep their
-    * landings isolated from the graded fixtures' tables. */
-  private[graft] def indexBuckets: Int =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_BUCKETS", "16").toInt
+    * read-amplification was measured, SERVEPROF_r17_40M; the r18
+    * row-group A/B reproduced that geometry at 4 buckets). The count is
+    * part of every landed table's bucket spec, and dir-keyed probe
+    * corpora keep their landings isolated from the graded fixtures'
+    * tables. */
+  private[graft] val IndexBuckets: Int = 16
 
   /** Collision-resistant table suffix — same reasoning as
     * Relational.bucketedFacts (ADVICE r8). */
@@ -281,17 +279,8 @@ object Similarity {
       // upserted ids since the last compaction) are masked at read.
       val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
       val staged = n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
-      val waves = graft.sources.Lakehouse.landWaves
-      // SAME fingerprint either way: the wave mode changes how the
-      // bytes are produced, not what they are (SimilaritySpec pins
-      // wave-union == single-frame rows)
-      val df =
-        if (waves <= 1)
-          graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), indexBuckets, fp, staged)(
-            prefixIndexLandingFrame(s, d))
-        else
-          graft.sources.Lakehouse.landBucketedWaves(s, t, Seq("cell"), indexBuckets, fp, staged)(
-            prefixIndexLandingWaves(s, d, waves))
+      val df = graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), IndexBuckets, fp, staged)(
+        prefixIndexLandingFrame(s, d))
       graft.sources.Lakehouse.maskTombstones(s, t, df, "vec_id")
     }
 
@@ -307,31 +296,6 @@ object Similarity {
   /** Index rows (cell, vec_id, v, nrm, seq) of a [[prefixCells]] frame. */
   private[graft] def landingRows(cells: DataFrame, seq: Long): DataFrame =
     cells.select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq"))
-
-  /** Drop the memoized normalized-corpus cache for (s, d): a 40M
-    * corpus's MEMORY_AND_DISK cache is ~18 GB of DISK that a
-    * disk-constrained landing ([[prefixIndexLandingWaves]]) does not
-    * need — it reads the corpus scan. */
-  private[graft] def dropCorpusCache(s: SparkSession, d: String): Unit =
-    normCache.remove((s, d)).foreach(_.unpersist(false))
-
-  /** The prefix landing as PASS-1 WAVES for disk-constrained boxes
-    * ([[graft.sources.Lakehouse.writeBucketedStagedWaves]]; activated
-    * by SPARK_GRAFT_LAND_WAVES > 1): wave w is the corpus slice
-    * `vec_id % waves == w` through the same kernel map, so each wave's
-    * bucket repartition moves 1/waves of the index rows and is
-    * reclaimed before the next wave starts; pass-1 transient ≈ staging
-    * + one wave's shuffle. The corpus cache is dropped up front. The
-    * single-pass form remains the cluster-shaped path: one corpus scan
-    * beats `waves` of them where transient disk is distributed. */
-  private[graft] def prefixIndexLandingWaves(
-      s: SparkSession, d: String, waves: Int): Seq[DataFrame] = {
-    dropCorpusCache(s, d)
-    val corpus = normedLazy(s, d)
-    (0 until waves).map { w =>
-      landingRows(prefixCells(s, d, corpus.filter(pmod(col("vec_id"), lit(waves)) === w)), 0L)
-    }
-  }
 
   /** Land (or re-register) the prefix-quantizer serving index for
     * `d`'s corpus and return its catalog table name — the handle
@@ -789,7 +753,7 @@ object Similarity {
       val n = corpusN(s, d)
       val t = s"graft_ann_km_index_${dirSuffix(d)}"
       graft.sources.Lakehouse.landBucketed(
-        s, t, Seq("cell"), indexBuckets,
+        s, t, Seq("cell"), IndexBuckets,
         s"kmidx|v2|$d|n=$n|k=${math.min(Dedup.dd7AnchorCount(n), TrainSample.toLong)}" +
           s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}") {
         // shuffle-hash on the narrow assignment — see servedIndex
@@ -1100,7 +1064,7 @@ object Similarity {
   private def ivfPqIndexRaw(s: SparkSession, d: String): DataFrame = {
     val n = corpusN(s, d)
     graft.sources.Lakehouse.landBucketed(
-      s, s"graft_ann_ivfpq_${dirSuffix(d)}", Seq("cell"), indexBuckets,
+      s, s"graft_ann_ivfpq_${dirSuffix(d)}", Seq("cell"), IndexBuckets,
       s"ivfpq|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}" +
         s"|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample") {
       val base = ivfPqLandingBase(s, d)

@@ -27,7 +27,7 @@ import org.apache.spark.sql.expressions.Window
   * windowed aggregation does map-side partial aggregation first. Hopping
   * windows: the native ×(size/slide) fan-out collapses map-side at q08's
   * 4× ratio; past ~12× use the slice decomposition (hoppingSliced), which
-  * ships each raw row once — measured crossover in HopRatioProbe.
+  * ships each raw row once — measured crossover in NOTES.md (hop ratio).
   */
 object WindowedAgg {
 
@@ -51,7 +51,7 @@ object WindowedAgg {
     * 0..3 cross join on the slide grid. Plans through [[hopping]], the
     * size-adaptive choice between the native fan-out and the slice
     * decomposition — the crossover is BOTH ratio- and scale-dependent
-    * (HopRatioProbe: naive wins ratio 4 at 10×, sliced wins every
+    * (NOTES.md hop-ratio runs: naive wins ratio 4 at 10×, sliced wins every
     * config at 1000×), so the choice reads the scan estimate instead
     * of hard-coding either plan. */
   val q08 = QueryDef(
@@ -64,7 +64,7 @@ object WindowedAgg {
   )
 
   /** Past this estimated scan size the slice decomposition wins at ANY
-    * window/slide ratio: HopRatioProbe at the 1000× corpus (100M
+    * window/slide ratio: the hop-ratio runs (NOTES.md) at the 1000× corpus (100M
     * events, ~3 GB) measured sliced ≤ naive in every config — sparse
     * ratio 4: 29.9 s vs 34.8, dense ratio 4: 1.4 s vs 3.7, dense ratio
     * 12: 1.6 s vs 12.1 — while at the 10× corpus (1M events) naive
@@ -79,7 +79,7 @@ object WindowedAgg {
     * decomposition once the ratio is high (≥ 12, measured crossover at
     * 10×) OR the scan estimate says the corpus is past
     * [[HoppingSliceBytes]] (at 1000× sliced wins at every ratio).
-    * Both forms are row-identical (HopRatioProbe equivalence). */
+    * Both forms are row-identical (PropertySpec pins the equivalence). */
   def hopping(events: org.apache.spark.sql.DataFrame,
               sizeSec: Long, slideSec: Long): org.apache.spark.sql.DataFrame =
     if (sizeSec / slideSec >= 12 ||
@@ -96,7 +96,7 @@ object WindowedAgg {
     * (1h size, 5m advance = 12 windows per event), shipped through the
     * slice decomposition: this is the ratio regime where the naive
     * fan-out plan's hash-aggregate work grows ×ratio and hoppingSliced
-    * overtakes it (HopRatioProbe). Registered so the scale path is
+    * overtakes it (NOTES.md hop-ratio runs). Registered so the scale path is
     * driver-graded against the enumerating oracle, not just spec'd
     * equivalent to the native plan. */
   val q08b = QueryDef(
@@ -115,8 +115,8 @@ object WindowedAgg {
     * sub-windows, the classic "slicing" optimization: Li et al., "No
     * Pane, No Gain", SIGMOD Record 2005). sizeSec must be a multiple of
     * slideSec. Identical results to the native `window(ts, size,
-    * slide)` plan (count/sum are associative over slices; HopRatioProbe
-    * asserts exceptAll == 0); use this form when size/slide ≳ 12 —
+    * slide)` plan (count/sum are associative over slices; PropertySpec
+    * asserts it at every ratio); use this form when size/slide ≳ 12 —
     * below that the native plan's map-side partial agg already absorbs
     * the fan-out and this one's second shuffle just costs latency. */
   def hoppingSliced(events: org.apache.spark.sql.DataFrame,

@@ -131,22 +131,20 @@ object Lakehouse {
     * across decades). Bounding groups keeps the fetch ∝ cell
     * occupancy; the trade is more row-group metadata and slightly
     * shorter compression runs on full scans (A/B at the 20M decade in
-    * OPTIMIZATION_r17.md "row-group bound"). Env-tunable; 0 disables
-    * the option (parquet default). */
-  private[graft] def indexRowGroupBytes: Long =
-    sys.env.get("SPARK_GRAFT_INDEX_ROWGROUP_MB").flatMap(_.toLongOption)
-      .map(_ * (1L << 20)).getOrElse(16L * (1 << 20))
+    * OPTIMIZATION_r17.md "row-group bound"; the r18 A/B against the
+    * parquet default is SERVEPROF_r18_rg{0,16}big). */
+  private[graft] val IndexRowGroupBytes: Long = 16L << 20
 
   /** Write `df` as a bucketed session-catalog table: `numBuckets` hash
     * buckets on `bucketCols`, sorted within each bucket. Joins and
     * aggregations keyed on `bucketCols` against another table with the
     * same bucketing read co-located — no Exchange in the plan.
     *
-    * Row groups are bounded by [[indexRowGroupBytes]] here (the
+    * Row groups are bounded by [[IndexRowGroupBytes]] here (the
     * landing and compaction writers both come through this method);
-    * chunked-landing APPEND groups ride `insertInto`, which ignores
-    * writer options, so their files keep parquet defaults until the
-    * next compaction folds them through this path. */
+    * maintenance appends ride `insertInto` ([[appendBucketed]]), which
+    * ignores writer options, so their files keep parquet defaults until
+    * the next compaction folds them through this path. */
   def writeBucketed(
       df: DataFrame,
       table: String,
@@ -160,65 +158,37 @@ object Lakehouse {
     // refuses to CREATE over an existing location, so clear it
     val loc = warehouseLoc(s, table)
     if (loc.exists()) rmTree(loc)
-    val w = df.write
+    df.write
       .mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
-    (if (indexRowGroupBytes > 0)
-      w.option("parquet.block.size", indexRowGroupBytes.toString)
-    else w).saveAsTable(table)
+      .option("parquet.block.size", IndexRowGroupBytes.toString)
+      .saveAsTable(table)
   }
 
   /** The CAP on splits per bucket for [[writeBucketedStaged]]'s pass-1
     * shuffle — bounds the pass-2 per-task sort at roughly (table bytes)
     * / (buckets × splits). 8 keeps a 5M-vector index landing's sorts in
-    * the low hundreds of MB per task; tune with SPARK_GRAFT_LAND_SPLITS.
-    * A write uses fewer when it stages less ([[stagedSplits]]). */
-  private[graft] def landSplitsPerBucket: Int =
-    sys.env.get("SPARK_GRAFT_LAND_SPLITS").flatMap(_.toIntOption)
-      .filter(_ > 0).getOrElse(8)
+    * the low hundreds of MB per task (the r16 sweep over 4/8/16 splits
+    * on a 10M-vector landing is PRELAND_r16_splits). A write uses fewer
+    * when it stages less ([[stagedSplits]]). */
+  private[graft] val LandSplitsPerBucket: Int = 8
 
   /** Pass-1 split of one bucket: at most this many staged bytes. */
   private val SplitBytes: Long = 64L << 20
 
   /** Splits per bucket for a write staging `stagedBytes`:
     * ⌈bytes / (numBuckets · 64 MB)⌉, at least 1 and at most
-    * [[landSplitsPerBucket]]. A 5M-vector prefix landing (~8 GB) keeps
+    * [[LandSplitsPerBucket]]. A 5M-vector prefix landing (~8 GB) keeps
     * the full 8 per bucket; a 20k-vector landing or a small compaction
     * stages one split per bucket, instead of 8× as many tiny tasks and
     * files. An unknown size (Long.MaxValue) takes the cap. */
   private[graft] def stagedSplits(stagedBytes: Long, numBuckets: Int): Int = {
     val perBucket = numBuckets.toLong * SplitBytes
     val splits = stagedBytes / perBucket + (if (stagedBytes % perBucket == 0) 0 else 1)
-    math.max(1L, math.min(landSplitsPerBucket.toLong, splits)).toInt
+    math.max(1L, math.min(LandSplitsPerBucket.toLong, splits)).toInt
   }
-
-  /** Bucket groups for [[writeBucketedStaged]]'s pass 2 (round 17 —
-    * the 40M-decade disk law): at 1 (default) pass 2 is one job and
-    * peak disk is staging + final ≈ 2× the table's at-rest size; at
-    * G > 1 pass 2 lands one bucket group at a time and DELETES each
-    * group's staging files as soon as they are consumed, capping peak
-    * at ≈ at-rest × (1 + 1/G) — the difference between a landing that
-    * fits the box and one that ENOSPCs at 2×. Group writes after the
-    * first APPEND into the bucketed table ([[appendBucketed]]): bucket
-    * ids are computed from the data by the writer, so correctness
-    * never depends on the file→bucket grouping — only the eager-delete
-    * accounting does. sys.prop `graft.land.chunks` overrides for
-    * tests. */
-  private[graft] def landChunks: Int =
-    sys.props.get("graft.land.chunks").orElse(sys.env.get("SPARK_GRAFT_LAND_CHUNKS"))
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1)
-
-  /** Pass-1 waves for landings that can slice their frame (round 17 —
-    * see [[writeBucketedStagedWaves]] and the prefix landing's
-    * bounded-broadcast slices). 1 (default) = the cluster-shaped
-    * single-pass form; > 1 = the disk-constrained mode the single-box
-    * scale probes run. sys.prop `graft.land.waves` overrides for
-    * tests. */
-  private[graft] def landWaves: Int =
-    sys.props.get("graft.land.waves").orElse(sys.env.get("SPARK_GRAFT_LAND_WAVES"))
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(1)
 
   /** Two-pass bucketed write — the SCALE path behind [[landBucketed]]
     * and the compaction swap (VERDICT r14 #1: the one-pass form fed the
@@ -243,99 +213,41 @@ object Lakehouse {
     * — one logical partition fans out to bounded physical ones) applied
     * to the landing sort. A bucket then holds `splits` files rather
     * than one; bucket pruning, Exchange-free joins, and row-group
-    * sort stats are per-file and unaffected. */
-  def writeBucketedStaged(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      numBuckets: Int,
-      stagedBytes: Long = Long.MaxValue): Unit =
-    writeBucketedStagedWaves(Seq(df), table, bucketCols, numBuckets, stagedBytes)
-
-  /** [[writeBucketedStaged]] over a SEQUENCE of pass-1 frames (round 17
-    * — the 40M landing's pass-1 disk law): the r17 40M attempt showed
-    * the remaining ENOSPC term is pass-1 itself — the landing frame's
-    * join shuffle, its bucket-hash repartition shuffle, and the staging
-    * all coexist (~2.5× at-rest live at once). Callers that can slice
-    * the landing frame into independent waves (e.g. the prefix landing
-    * slicing its checkpointed assignment into bounded-broadcast pieces
-    * — [[graft.operators.Similarity]] `prefixIndexLandingWaves`) land
-    * one wave per job: each wave's shuffle is 1/W of the total and is
-    * GC-reclaimed before the next wave starts, so pass-1 transient ≈
-    * staging + one wave's shuffle. Waves write disjoint staging
-    * subdirs; pass 2 (one-shot or bucket-group chunked) reads across
-    * them — a staged file's `part-NNNNN` index still identifies its
-    * bucket (NNNNN mod numBuckets) because every wave uses the same
-    * bucket-aligned partition count.
+    * sort stats are per-file and unaffected.
     *
     * `stagedBytes` is the caller's size of what pass 1 stages (a
     * landing: rows × row bytes; a compaction: the table's data bytes):
     * the pass-1 partition count is numBuckets × [[stagedSplits]], so
     * small writes stage one split per bucket. */
-  def writeBucketedStagedWaves(
-      dfs: Seq[DataFrame],
+  def writeBucketedStaged(
+      df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
       stagedBytes: Long = Long.MaxValue): Unit = {
-    require(dfs.nonEmpty, "writeBucketedStagedWaves needs at least one frame")
-    val s = dfs.head.sparkSession
-    val schema = dfs.head.schema
+    val s = df.sparkSession
     val stagingLoc = warehouseLoc(s, table + "__landstage")
     if (stagingLoc.exists()) rmTree(stagingLoc)
     val parts = numBuckets * stagedSplits(stagedBytes, numBuckets)
     try {
-      dfs.zipWithIndex.foreach { case (df, i) =>
-        df.repartition(parts, bucketCols.map(col): _*)
-          .write.mode(SaveMode.Overwrite).parquet(s"$stagingLoc/wave$i")
-        // Wave/pass-1 done: the shuffle files behind this frame's
-        // lineage (the quantization joins/aggs — corpus-scale at a big
-        // landing) are now garbage, but Spark's ContextCleaner only
-        // reclaims them after a DRIVER GC collects the dependency
-        // references, and the default periodic GC is 30 min — longer
-        // than a landing. Without this nudge the next wave / pass-2
-        // stacks its transient ON TOP of dead shuffle files: measured
-        // at the 20M-vector landing, 55 GB of blockmgr at peak
-        // (ENOSPC) vs ~20 GB with the cleanup. GATED on staged size
-        // (ADVICE r16): maintenance compaction ticks on a co-serving
-        // JVM must not inject a full-GC pause into query latency.
-        if (dirBytes(stagingLoc) >= GcNudgeMinStagedBytes) System.gc()
-      }
-      val waveDirs = (0 until dfs.length).map(i => s"$stagingLoc/wave$i")
-      val chunks = landChunks
-      if (chunks <= 1) {
-        // explicit schema: an all-empty staging (empty df) has no files
-        // to infer from, and the user schema also pins nullability so
-        // the landed table's DDL equals df's
-        val staged = s.read.schema(schema).parquet(waveDirs: _*)
-        writeBucketed(staged, table, bucketCols, numBuckets)
-      } else {
-        // pass 2 in bucket groups, deleting consumed staging eagerly:
-        // staged file part-NNNNN holds partition NNNNN of the
-        // parts-way hash repartition, and numBuckets | parts means
-        // that partition's rows belong to bucket NNNNN mod numBuckets
-        // (per wave — every wave used the same partitioner)
-        val partIdx = "part-(\\d+)".r
-        val staged = waveDirs
-          .flatMap(d => Option(new java.io.File(d).listFiles()).getOrElse(Array.empty))
-          .flatMap(f => partIdx.findFirstMatchIn(f.getName)
-            .map(m => (m.group(1).toInt % numBuckets, f)))
-        val groupSize = math.max(1, math.ceil(numBuckets.toDouble / chunks).toInt)
-        (0 until numBuckets).grouped(groupSize).zipWithIndex.foreach {
-          case (bs, gi) =>
-            val want = bs.toSet
-            val files = staged.collect { case (b, f) if want(b) => f }
-            val part =
-              if (files.isEmpty)
-                s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-              else s.read.schema(schema).parquet(files.map(_.getPath): _*)
-            // group 0 creates the table (schema even when empty);
-            // later groups append through the catalog's bucket spec
-            if (gi == 0) writeBucketed(part, table, bucketCols, numBuckets)
-            else if (files.nonEmpty) appendBucketed(part, table)
-            files.foreach(_.delete())
-        }
-      }
+      df.repartition(parts, bucketCols.map(col): _*)
+        .write.mode(SaveMode.Overwrite).parquet(stagingLoc.getPath)
+      // Pass 1 done: the shuffle files behind this frame's lineage (the
+      // quantization joins/aggs — corpus-scale at a big landing) are
+      // now garbage, but Spark's ContextCleaner only reclaims them
+      // after a DRIVER GC collects the dependency references, and the
+      // default periodic GC is 30 min — longer than a landing. Without
+      // this nudge pass 2 stacks its transient ON TOP of dead shuffle
+      // files: measured at the 20M-vector landing, 55 GB of blockmgr at
+      // peak (ENOSPC) vs ~20 GB with the cleanup. GATED on staged size
+      // (ADVICE r16): maintenance compaction ticks on a co-serving JVM
+      // must not inject a full-GC pause into query latency.
+      if (dirBytes(stagingLoc) >= GcNudgeMinStagedBytes) System.gc()
+      // explicit schema: an all-empty staging (empty df) has no files
+      // to infer from, and the user schema also pins nullability so
+      // the landed table's DDL equals df's
+      writeBucketed(s.read.schema(df.schema).parquet(stagingLoc.getPath),
+        table, bucketCols, numBuckets)
     } finally { if (stagingLoc.exists()) rmTree(stagingLoc) }
   }
 
@@ -357,7 +269,8 @@ object Lakehouse {
     * file-name suffix, so Exchange-free joins and bucket pruning work
     * exactly as on the writing session). `df` is by-name and never
     * evaluated on the reuse path — the quantization/shuffle job behind
-    * it does not run.
+    * it does not run. A fresh landing goes through
+    * [[writeBucketedStaged]] with the caller's `stagedBytes`.
     *
     * `fingerprint` must capture everything the landed bytes depend on
     * (source dir, corpus size, index formula/version): a mismatch — or
@@ -365,16 +278,7 @@ object Lakehouse {
   def landBucketed(
       s: SparkSession, table: String,
       bucketCols: Seq[String], numBuckets: Int,
-      fingerprint: String, stagedBytes: Long = Long.MaxValue)(df: => DataFrame): DataFrame =
-    landBucketedWaves(s, table, bucketCols, numBuckets, fingerprint, stagedBytes)(Seq(df))
-
-  /** [[landBucketed]] whose landing computation arrives as pass-1
-    * WAVES ([[writeBucketedStagedWaves]]); the reuse path is identical
-    * (no wave is ever evaluated when the fingerprint matches). */
-  def landBucketedWaves(
-      s: SparkSession, table: String,
-      bucketCols: Seq[String], numBuckets: Int,
-      fingerprint: String, stagedBytes: Long = Long.MaxValue)(dfs: => Seq[DataFrame]): DataFrame = {
+      fingerprint: String, stagedBytes: Long = Long.MaxValue)(df: => DataFrame): DataFrame = {
     require(!fingerprint.contains('\n'), "fingerprint must be single-line")
     lockFor(table).synchronized {
       adoptOrphanStage(s, table) // recover a crashed compaction swap first
@@ -396,14 +300,14 @@ object Lakehouse {
           }
           s.table(table)
         case _ =>
-          val data = dfs
-          writeBucketedStagedWaves(data, table, bucketCols, numBuckets, stagedBytes)
+          val data = df
+          writeBucketedStaged(data, table, bucketCols, numBuckets, stagedBytes)
           // a clean re-land invalidates any maintenance sidecar from the
           // previous landing: the commit log died with the location rm in
           // writeBucketed; the tombstone dir lives beside it — clear too
           locally { val td = tombsDir(s, table); if (td.exists()) rmTree(td) }
           java.nio.file.Files.write(marker.toPath,
-            s"$fingerprint\n$spec\n${data.head.schema.toDDL}".getBytes("UTF-8"))
+            s"$fingerprint\n$spec\n${data.schema.toDDL}".getBytes("UTF-8"))
           stampGeneration(loc) // volume-trigger denominator ([[compactionDue]])
           s.table(table)
       }

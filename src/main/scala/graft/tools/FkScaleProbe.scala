@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming FK-join probe at scale (VERDICT r12 #7): q24s oracle-
@@ -30,7 +30,9 @@ import org.apache.spark.sql.functions._
   * Run: sbt "runMain graft.tools.FkScaleProbe [srcDir]" (default
   * /tmp/scale100d1 = 100× orders). Env: SPARK_GRAFT_INGEST_FILES
   * (files/trigger, default 4), SPARK_GRAFT_INGEST_DEADLINE_SEC (per-
-  * pass deadline, default 1800), SPARK_GRAFT_PROBE_OUT (artifact dir).
+  * pass deadline, default 1800), SPARK_GRAFT_PROBE_OUT (artifact dir),
+  * SPARK_GRAFT_CPUS (local cores = state shards, default nproc),
+  * SPARK_GRAFT_ROCKS_MB (RocksDB native-memory bound, default 16384).
   * Artifact: $out/fk_scale.json.
   */
 object FkScaleProbe {
@@ -39,31 +41,19 @@ object FkScaleProbe {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "/tmp")
     val mft = sys.env.getOrElse("SPARK_GRAFT_INGEST_FILES", "4")
     val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_INGEST_DEADLINE_SEC", "1800").toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      // Cap RocksDB's NATIVE allocation (write buffers + block cache
-      // shared across all store instances): a 1000× run holds ~300M
-      // state rows across 64 store partitions, and an uncapped native
-      // footprint next to a large JVM heap squeezed the box until a
-      // RocksDB JNI thread SEGV'd. Keep the driver heap moderate
-      // (SPARK_DRIVER_MEM≈48g) and let the state live here.
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKS_MB", "16384"))
-      // The default minBatchesToRetain=100 keeps ~100 full state
-      // versions in the checkpoint — at ~300M state rows that was 25 GB
-      // and filled the disk mid-run (the root cause behind both 1000×
-      // failures: RocksDB's background compaction hit ENOSPC and its
-      // error-logging JNI path SEGV'd). A probe needs no deep replay
-      // history; retain the minimum.
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // RocksDB's NATIVE allocation stays bounded (rocksdbMemoryMB): a
+    // 1000× run holds ~300M state rows, and an uncapped native
+    // footprint next to a large JVM heap squeezed the box until a
+    // RocksDB JNI thread SEGV'd
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "FkScaleProbe",
+      rocksdbMemoryMB = sys.env.get("SPARK_GRAFT_ROCKS_MB").map(_.toLong).getOrElse(16384L))
+    // the stateRows plateau is this probe's evidence: keep the gauge on
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
+    // the per-batch series needs every batch's progress, not the last 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.streaming.{FkJoin, StateTtl}

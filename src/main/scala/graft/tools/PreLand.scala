@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-time index builder: land all three ANN index kinds (+ the
@@ -11,51 +10,36 @@ import org.apache.spark.sql.functions._
   * (PROBE_r13_*_sims_cold), so running this ahead of a measurement
   * session moves the one-time build cost off the measured path.
   * Run: sbt "runMain graft.tools.PreLand <corpusDir> [corpusDir...]".
+  * Env: SPARK_GRAFT_PRELAND_KINDS (csv, default prefix,kmeans,ivfpq),
+  * SPARK_GRAFT_CPUS (local cores = shuffle partitions, default nproc).
   */
 object PreLand {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PreLand <corpusDir> [corpusDir...]")
-    // Shuffle partitions scale the landing's PER-TASK memory: the
-    // final aggregates and shuffle-hash builds hold totalRows/parts
-    // rows per task, so a corpus decade crossed with parts fixed at 32
-    // crosses a heap line too (measured r16: the 20M ivfpq landing's
-    // then-existing encode fold OOM'd a 64 GB heap at 32 parts; 64
-    // fits. The fold is gone since r17 — codegen encode — but the
-    // ranking aggregates keep the same per-task law). The r13
-    // more-parts-means-more-spill-files penalty applied to SPILL-bound
-    // plans; the staged landing path spills nothing.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32"))
-      // reclaim dead shuffle files DURING a landing, not after: the
-      // default 30 min periodic GC is longer than the landing itself,
-      // so corpus-scale shuffles from finished stages pile up under
-      // the live transient (measured 55 GB of blockmgr at the 20M
-      // landing's peak — the ENOSPC margin)
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      // a landing JVM is an EXECUTION-heavy process that happens to
-      // hold a corpus cache: don't let the default 0.5 storageFraction
-      // protect ~19 GB of cached corpus blocks from eviction while the
-      // encode/ranking aggregates starve (measured: the 20M ivfpq
-      // landing OOM'd at 64 GB with the default, the cache evicts to
-      // disk harmlessly at 0.1)
-      .config("spark.memory.storageFraction", "0.1")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // SPARK_GRAFT_EVENTLOG=1: write the event log so a landing's
-      // per-stage shuffle volume is auditable after the fact (the
-      // round-17 "encode is shuffle-free" evidence)
-      .config("spark.eventLog.enabled",
-        if (sys.env.get("SPARK_GRAFT_EVENTLOG").contains("1")) "true" else "false")
-      .config("spark.eventLog.dir", {
-        val d = sys.env.getOrElse("SPARK_GRAFT_EVENTLOG_DIR", "/tmp/graft-eventlog")
-        new java.io.File(d).mkdirs(); d
-      })
-      // plain single-file JSON so tools/eventlog_shuffle.py can read it
-      // (the box has no zstd bindings)
-      .config("spark.eventLog.rolling.enabled", "false")
-      .config("spark.eventLog.compress", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // Static core confs, set before the session starts:
+    //  - reclaim dead shuffle files DURING a landing, not after: the
+    //    default 30 min periodic GC is longer than the landing itself,
+    //    so corpus-scale shuffles from finished stages pile up under
+    //    the live transient (measured 55 GB of blockmgr at the 20M
+    //    landing's peak — the ENOSPC margin);
+    //  - a landing JVM is an EXECUTION-heavy process that happens to
+    //    hold a corpus cache: don't let the default 0.5 storageFraction
+    //    protect ~19 GB of cached corpus blocks from eviction while the
+    //    encode/ranking aggregates starve (measured: the 20M ivfpq
+    //    landing OOM'd at 64 GB with the default, the cache evicts to
+    //    disk harmlessly at 0.1).
+    sys.props("spark.cleaner.periodicGC.interval") = "120s"
+    sys.props("spark.memory.storageFraction") = "0.1"
+    // Shuffle partitions scale the landing's PER-TASK memory (the
+    // ranking aggregates hold totalRows/parts rows per task; by the
+    // same law r16's 20M ivfpq landing OOM'd a 64 GB heap at 32 parts
+    // and fit at 64), so a big decade wants more cores or a runtime
+    // spark.sql.shuffle.partitions override; one per core is the
+    // engine default.
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "PreLand")
     spark.sparkContext.setLogLevel("ERROR")
     for (src <- args.toSeq) {
       val v = spark.read.parquet(s"$src/embeddings.parquet")
@@ -74,10 +58,8 @@ object PreLand {
       // calibrate the serving depth while the landing JVM is warm: one
       // exact scan + a bounded nprobe ladder persists the recall-
       // justified depth to the sidecar, which defaultNprobe serves at
-      // from then on (round 17 — VERDICT r16 #3). Skippable for
-      // probe-shaped runs that want the raw √K default.
-      if (kinds.contains("ivfpq") &&
-          !sys.env.get("SPARK_GRAFT_SKIP_CALIBRATE").contains("1")) {
+      // from then on (round 17 — VERDICT r16 #3)
+      if (kinds.contains("ivfpq")) {
         val t0 = System.nanoTime()
         val depth = graft.operators.Similarity.calibrateServedNprobe(spark, src)
         println(f"PRELAND $src calibrated servedNprobe=$depth " +

@@ -18,7 +18,7 @@ object QExplain {
     val outDir = Paths.get(args(0))
     val suffix = args(1)
     Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.Graft.session(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sustained-QPS ANN serving probe: [[graft.streaming.ServeStream]]
-  * driven by a `rate` source. [[ServeConcurrencyProbe]] measured
-  * THREAD concurrency (N synchronous callers, CONC_r13_1000x); this
-  * measures ARRIVAL-RATE backpressure — the deployment question "at
-  * what request rate does the serving stream stop keeping up?".
+  * driven by a `rate` source. Thread concurrency (N synchronous
+  * callers) was measured in CONC_r13_1000x; this measures
+  * ARRIVAL-RATE backpressure — the deployment question "at what
+  * request rate does the serving stream stop keeping up?".
   *
   * The dynamics it maps: a serve micro-batch costs T ≈ a + b·rows
   * (a = the per-batch plan/scan floor, b = the per-query driver
@@ -38,8 +37,10 @@ import org.apache.spark.sql.functions._
   * per rate, default 60), SPARK_GRAFT_SERVE_NPROBE (0 = kind default),
   * SPARK_GRAFT_SERVE_RPP (ivfpq re-rank shortlist per probe, default
   * [[graft.operators.Similarity.DefaultRerankPerProbe]]),
-  * SPARK_GRAFT_RATE_TAG (artifact name tag, default r14),
-  * SPARK_GRAFT_PROBE_OUT (artifact dir, default /tmp).
+  * SPARK_GRAFT_SERVE_SCHED (FAIR|FIFO, default FAIR),
+  * SPARK_GRAFT_PROBE_OUT (artifact dir, default /tmp),
+  * SPARK_GRAFT_CPUS (local cores = shuffle partitions, default nproc).
+  * Artifact: $out/RATESERVE_<N>x_<kinds>_q<rates>_np<nprobe>_rpp<rpp>_<sec>s_<sched>.json.
   */
 object RateServeProbe {
   def main(args: Array[String]): Unit = {
@@ -54,7 +55,6 @@ object RateServeProbe {
     val nprobe = sys.env.getOrElse("SPARK_GRAFT_SERVE_NPROBE", "0").toInt
     val rpp = sys.env.get("SPARK_GRAFT_SERVE_RPP").map(_.toInt)
       .getOrElse(graft.operators.Similarity.DefaultRerankPerProbe)
-    val tag = sys.env.getOrElse("SPARK_GRAFT_RATE_TAG", "r14")
 
     // FAIR scheduling across serve streams (VERDICT r15 #4): each
     // ServeStream batch runs in a per-kind pool; under the default
@@ -63,14 +63,13 @@ object RateServeProbe {
     // per-batch floor. SPARK_GRAFT_SERVE_SCHED=FIFO restores the old
     // behavior for A/B runs.
     val schedMode = sys.env.getOrElse("SPARK_GRAFT_SERVE_SCHED", "FAIR")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", schedMode)
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    sys.props("spark.scheduler.mode") = schedMode
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "RateServeProbe")
+    // the per-batch series needs every batch's progress, not the last 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     spark.sparkContext.setLogLevel("ERROR")
 
     // query pool: a fixed set of corpus vectors cycled by the rate
@@ -160,8 +159,9 @@ object RateServeProbe {
         s""""nprobe":$nprobe,"rpp":$rpp,"mixed":$mixed,"scheduler":"$schedMode",""" +
         s""""warm_sec":{${warms.mkString(",")}},"rates":[${rates.mkString(",")}],""" +
         s""""results":{${results.mkString(",")}}}"""
-    val outName = s"$outDir/RATESERVE_${tag}_${m}x" +
-      (if (mixed) "_mixed" else "") + ".json"
+    // the name carries every setting that shapes the run
+    val outName = s"$outDir/RATESERVE_${m}x_${kinds.mkString("+")}_q${rates.mkString("-")}" +
+      s"_np${nprobe}_rpp${rpp}_${secPerRate}s_${schedMode.toLowerCase}.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(outName), json.getBytes("UTF-8"))
     println(s"RATESERVE wrote $outName")
     spark.stop()

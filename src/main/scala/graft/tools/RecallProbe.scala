@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall@k / nprobe trade-off curve for the served ANN indexes
   * (VERDICT r10 #8): the fixture-scale recall GATE (sim3's per-qid
   * recall ≥ 0.6) is a single point; an index you would ship at 100 TB
@@ -23,18 +21,17 @@ import org.apache.spark.sql.SparkSession
   * Run: sbt "runMain graft.tools.RecallProbe [srcDir]" (default
   * /root/testdata/sf0.1; point at a probe corpus e.g. /tmp/scale100d1
   * for the 100× curve). Artifact: $SPARK_GRAFT_PROBE_OUT/recall.json
-  * (default /tmp/recall.json's parent = /tmp).
+  * (default /tmp/recall.json). SPARK_GRAFT_CPUS sets the local cores
+  * (= shuffle partitions, default nproc).
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "/tmp")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "RecallProbe")
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.Similarity
 

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Restore-at-scale probe (VERDICT r11 missing #4): exactly-once
@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   * Env: SPARK_GRAFT_PROBE_OUT (artifact dir, default /tmp),
   * SPARK_GRAFT_INGEST_FILES (files/trigger, default 2),
   * SPARK_GRAFT_INGEST_DEADLINE_SEC (per-phase deadline, default 1800),
-  * SPARK_GRAFT_INGEST_MAXBUCKET (LSH cap, default DedupStream default).
+  * SPARK_GRAFT_INGEST_MAXBUCKET (LSH cap, default DedupStream default),
+  * SPARK_GRAFT_CPUS (local cores = state shards, default nproc).
   */
 object RestoreProbe {
   def main(args: Array[String]): Unit = {
@@ -45,16 +46,16 @@ object RestoreProbe {
     val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_INGEST_DEADLINE_SEC", "1800").toLong
     val maxBucket = sys.env.get("SPARK_GRAFT_INGEST_MAXBUCKET").map(_.toInt)
       .getOrElse(graft.streaming.LshBucketProcessor.DefaultMaxBucket)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // reclaim dead per-batch shuffle files while the stream runs
+    sys.props("spark.cleaner.periodicGC.interval") = "60s"
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "RestoreProbe")
+    // state rows at death are part of this probe's evidence: keep the gauge on
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
+    // the per-batch series needs every batch's progress, not the last 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     spark.sparkContext.setLogLevel("ERROR")
 
     def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }

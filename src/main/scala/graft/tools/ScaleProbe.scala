@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** N× scale probe: synthesize an N×-source dataset (at 10×: 6M lineitem
@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   * sf0.1, out /tmp/scale$N) or "runMain graft.tools.ScaleProbe 100
   * q02_agg ..." (N=100, explicit target list). Env overrides:
   * SPARK_GRAFT_PROBE_SRC (source dir), SPARK_GRAFT_PROBE_OUT (output
-  * dir), SPARK_GRAFT_PROBE_PARTS (shuffle partitions),
-  * SPARK_GRAFT_PROBE_DUP (near-dup fraction).
+  * dir), SPARK_GRAFT_PROBE_DUP (near-dup fraction), SPARK_GRAFT_CPUS
+  * (local cores = shuffle partitions, default nproc).
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -43,21 +43,16 @@ object ScaleProbe {
     val defaultOut = if (dupFrac >= 1.0) s"/tmp/scale$N"
       else s"/tmp/scale${N}d${math.round(dupFrac * 100)}"
     val Out = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", defaultOut)
-    // Shuffle-partition count, measured at 1000× (600M lineitem rows,
-    // 64g heap): raising it 10× to 320 helped the orders⋈lineitem spill
-    // only 15% (82→70 s) but cost the wide fan-out aggregations 1.4–3×
-    // (q08 60→182 s, q09 23→31 s, sim4 33→62 s, isolated reruns) — on a
-    // SINGLE-DISK local node more initial partitions just means more,
-    // smaller spill files and more random IO. On a real cluster the
-    // right value tracks executor×disk count, so it's a knob here, not
-    // a formula: default one-partition-per-core, override via
-    // SPARK_GRAFT_PROBE_PARTS when probing cluster-shaped configs.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // one shuffle partition per core (Graft.session's sizing): at 1000×
+    // (600M lineitem rows, 64g heap) raising it 10× helped the
+    // orders⋈lineitem spill only 15% (82→70 s) but cost the wide fan-out
+    // aggregations 1.4–3× (q08 60→182 s, q09 23→31 s, sim4 33→62 s) —
+    // on a SINGLE-DISK local node more partitions just means more,
+    // smaller spill files and more random IO
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "ScaleProbe")
     spark.sparkContext.setLogLevel("ERROR")
     val src = sys.env.getOrElse("SPARK_GRAFT_PROBE_SRC", "/root/testdata/sf0.1")
 
@@ -289,7 +284,7 @@ object ScaleProbe {
       f"${q(name)}:{" + f""""sec":${r.sec}%.2f,"rows":${r.rows},"ok":${r.error.isEmpty}$err}"""
     }.mkString(",")
     val meta = f""""n":$N,"dup":$dupFrac,"src":${q(src)},"out":${q(Out)},""" +
-      f""""shuffle_partitions":$shufflePartitions,"datagen_sec":$datagenSec%.1f,""" +
+      f""""shuffle_partitions":$cores,"datagen_sec":$datagenSec%.1f,""" +
       s""""isolated":$isolate,""" +
       s""""failed":${results.count(_._2.error.isDefined)},"ran":${results.size}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$Out/probe.json"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming WINDOW-engine probe at scale: the tumbling and session
@@ -62,7 +62,9 @@ import org.apache.spark.sql.functions._
   * engine, multiset parity), SPARK_GRAFT_WIN_ROWS_PER_FILE (batch
   * granularity, default 500k), SPARK_GRAFT_WIN_PARITY (join|checksum),
   * SPARK_GRAFT_WIN_RESTART (kill-after-k-batches, 0=off),
-  * SPARK_GRAFT_PROBE_OUT (artifact dir, default /tmp).
+  * SPARK_GRAFT_PROBE_OUT (artifact dir, default /tmp),
+  * SPARK_GRAFT_CPUS (local cores = state shards, default nproc),
+  * SPARK_GRAFT_ROCKS_MB (RocksDB native-memory bound, default 16384).
   * Artifact: $out/win_scale.json, flushed per phase.
   */
 object WinScaleProbe {
@@ -73,27 +75,20 @@ object WinScaleProbe {
     val kinds = sys.env.getOrElse("SPARK_GRAFT_WIN_KINDS", "tumbling,session")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val restartAfter = sys.env.getOrElse("SPARK_GRAFT_WIN_RESTART", "0").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "32"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      // the 1000×-stateful-probe hardening, now also the engine default
-      // (Graft.streamConfs): bounded native memory, minimal retained
-      // checkpoint history
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKS_MB", "16384"))
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      // a 64g driver heap GCs rarely, so ContextCleaner's weak-ref
-      // shuffle cleanup never fires and dozens of obsolete per-batch
-      // shuffles accumulate on disk (~0.6 GB/batch at the 1B decade —
-      // the disk ran out before the stream did)
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // a large driver heap GCs rarely, so ContextCleaner's weak-ref
+    // shuffle cleanup never fires and dozens of obsolete per-batch
+    // shuffles accumulate on disk (~0.6 GB/batch at the 1B decade —
+    // the disk ran out before the stream did)
+    sys.props("spark.cleaner.periodicGC.interval") = "120s"
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
+      appName = "WinScaleProbe",
+      rocksdbMemoryMB = sys.env.get("SPARK_GRAFT_ROCKS_MB").map(_.toLong).getOrElse(16384L))
+    // the stateRows plateau is this probe's evidence: keep the gauge on
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
+    // the per-batch series needs every batch's progress, not the last 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     spark.sparkContext.setLogLevel("ERROR")
     import graft.streaming.StreamOps
 
@@ -372,11 +367,11 @@ object WinScaleProbe {
       // needs the disk for its own shuffle
       rm(new java.io.File(ckpt))
       // the PARITY phase is a batch plan over the full corpus — at the
-      // 1B decade the hopping agg materializes ~4B groups, and 32
-      // partitions means ~120M groups/partition of partial-agg spill
-      // (the single-box floor NOTES flagged). The stream keeps its 32
-      // state shards (shards ≈ cores, FKSCALE_r13); only the batch
-      // compare scales its shuffle out.
+      // 1B decade the hopping agg materializes ~4B groups, and one
+      // partition per core (32 there) means ~120M groups/partition of
+      // partial-agg spill (the single-box floor NOTES flagged). The
+      // stream keeps its per-core state shards (shards ≈ cores,
+      // FKSCALE_r13); only the batch compare scales its shuffle out.
       val streamParts = spark.conf.get("spark.sql.shuffle.partitions")
       sys.env.get("SPARK_GRAFT_WIN_PARITY_PARTS")
         .foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))

@@ -103,7 +103,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(compacted.size < sliverCount, s"$sliverCount -> ${compacted.size}")
     // the two-pass staged rewrite bounds per-task sort memory at the
     // cost of splits-per-bucket files (default 8) instead of one
-    assert(compacted.size <= 16 * graft.sources.Lakehouse.landSplitsPerBucket, s"unbounded file count: ${compacted.size}")
+    assert(compacted.size <= 16 * graft.sources.Lakehouse.LandSplitsPerBucket, s"unbounded file count: ${compacted.size}")
     assert(spark.table(tbl).count() == after)
     // the landing marker survived the swap → a later session re-registers
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -335,7 +335,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     for (t <- allTables) {
       assert(graft.sources.Lakehouse.tombstones(spark, t).isEmpty,
         s"$t: compaction must clear the tombstone sidecar")
-      assert(indexFiles(t).size <= 16 * graft.sources.Lakehouse.landSplitsPerBucket,
+      assert(indexFiles(t).size <= 16 * graft.sources.Lakehouse.LandSplitsPerBucket,
         s"$t: slivers must fold back into a bounded file count (buckets x staged splits)")
       // superseded version physically dropped: exactly one live version
       assert(spark.table(t).filter(col("vec_id") === 950000L)
@@ -384,7 +384,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       src2.addData(Seq((960002L, emb3))); q2.processAllAvailable()
       src2.addData(Seq((960003L, emb3))); q2.processAllAvailable() // tick compacts
     } finally q2.stop()
-    assert(indexFiles(tbl).size <= 16 * graft.sources.Lakehouse.landSplitsPerBucket,
+    assert(indexFiles(tbl).size <= 16 * graft.sources.Lakehouse.LandSplitsPerBucket,
       "ratio 0: the cadence must fold slivers back to a bounded file count")
     // nothing lost either way: all four maintained ids serve
     val got = Similarity.searchTopk(spark, corpusDir, "prefix",
@@ -414,7 +414,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       src.addData(Seq((970000L, emb5))); q.processAllAvailable()
       src.addData(Seq((970000L, null: Array[Float]))); q.processAllAvailable()
     } finally q.stop()
-    assert(indexFiles(tbl).size <= 16 * graft.sources.Lakehouse.landSplitsPerBucket,
+    assert(indexFiles(tbl).size <= 16 * graft.sources.Lakehouse.LandSplitsPerBucket,
       "the tombstone bound must fold the table at the tick (bounded by buckets x staged splits)")
     assert(graft.sources.Lakehouse.tombstones(spark, tbl).isEmpty,
       "compaction must clear the mask sidecar")

@@ -82,65 +82,25 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
     }
   }
 
-  test("chunked pass-2 staged landing equals the one-shot landing (bucket layout intact)") {
-    // round 17 (the 40M-decade disk law): pass 2 in bucket groups with
-    // eager staging deletes caps peak disk at ~at-rest × (1 + 1/G)
-    // instead of 2×. Same rows, same bucket layout, same exchange-free
-    // join behavior as the one-shot write.
-    val s = spark
-    val events = Tables.events(s, sfDir)
-      .select("event_id", "user_id", "value")
-    try {
-      sys.props("graft.land.chunks") = "4"
-      Lakehouse.writeBucketedStaged(events, "lh_events_chunked", Seq("user_id"), 4)
-      sys.props.remove("graft.land.chunks")
-      Lakehouse.writeBucketedStaged(events, "lh_events_oneshot", Seq("user_id"), 4)
-      val a = s.table("lh_events_chunked")
-      val b = s.table("lh_events_oneshot")
-      assert(a.count() == b.count())
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-      // bucket layout: the chunked table must still join exchange-free
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = a.join(b, "user_id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"chunked landing broke bucketing:\n${plan.take(800)}")
-      assert(joined.count() > 0)
-    } finally {
-      sys.props.remove("graft.land.chunks")
-      s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      s.sql("DROP TABLE IF EXISTS lh_events_chunked")
-      s.sql("DROP TABLE IF EXISTS lh_events_oneshot")
-    }
-  }
-
-  test("wave pass-1 + chunked pass-2 landing equals the one-shot landing") {
-    // round 17 (the 40M pass-1 disk law): pass-1 arrives as independent
-    // wave frames (disjoint row slices), staged per wave; pass 2 is
-    // unchanged. Rows and bucket layout must match the one-shot form.
+  test("staged landing equals its input rows and joins exchange-free") {
+    // the two-pass staged write (hash-repartitioned staging, then the
+    // bucketed write) must land exactly its input with the bucket layout
+    // intact: the landed table joins itself with no Exchange
     val s = spark
     val events = Tables.events(s, sfDir).select("event_id", "user_id", "value")
     try {
-      sys.props("graft.land.chunks") = "4"
-      Lakehouse.writeBucketedStagedWaves(
-        Seq(events.filter(pmod(col("user_id"), lit(2)) === 0),
-          events.filter(pmod(col("user_id"), lit(2)) === 1)),
-        "lh_events_waved", Seq("user_id"), 4)
-      sys.props.remove("graft.land.chunks")
-      Lakehouse.writeBucketedStaged(events, "lh_events_oneshot2", Seq("user_id"), 4)
-      val a = s.table("lh_events_waved")
-      val b = s.table("lh_events_oneshot2")
-      assert(a.count() == b.count())
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+      Lakehouse.writeBucketedStaged(events, "lh_events_staged", Seq("user_id"), 4)
+      val a = s.table("lh_events_staged")
+      assert(a.count() == events.count())
+      assert(a.exceptAll(events).isEmpty && events.exceptAll(a).isEmpty)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = a.join(b, "user_id")
+      val joined = a.join(s.table("lh_events_staged"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"waved landing broke bucketing:\n${plan.take(800)}")
+      assert(!plan.contains("Exchange"), s"staged landing broke bucketing:\n${plan.take(800)}")
       assert(joined.count() > 0)
     } finally {
-      sys.props.remove("graft.land.chunks")
       s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      s.sql("DROP TABLE IF EXISTS lh_events_waved")
-      s.sql("DROP TABLE IF EXISTS lh_events_oneshot2")
+      s.sql("DROP TABLE IF EXISTS lh_events_staged")
     }
   }
 
@@ -380,7 +340,7 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
   test("pass-1 staging is sized by the bytes it stages, capped at landSplitsPerBucket") {
     // a prefix index row at d = 64 stages ~8·64 + 32 B; 3 rows per vector
     val row = 8L * 64 + 32
-    val cap = Lakehouse.landSplitsPerBucket
+    val cap = Lakehouse.LandSplitsPerBucket
     assert(Lakehouse.stagedSplits(5000000L * 3 * row, 16) == math.min(8, cap)) // 128 partitions
     assert(Lakehouse.stagedSplits(20000L * 3 * row, 16) == 1)                  // 16 partitions
     assert(Lakehouse.stagedSplits(0L, 16) == 1)

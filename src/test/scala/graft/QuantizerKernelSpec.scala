@@ -127,7 +127,7 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     val loc = new java.io.File(wh, s"graft_ann_index_$sfx")
     // ~33 MB staged: one pass-1 split per bucket, so pass 2 writes one
     // file per bucket (the 8-split cap left up to 8 per bucket)
-    assert(loc.listFiles().count(_.getName.endsWith(".parquet")) == Similarity.indexBuckets)
+    assert(loc.listFiles().count(_.getName.endsWith(".parquet")) == Similarity.IndexBuckets)
     val marker = new java.io.File(loc, "_graft_meta")
     val Array(fp, _, ddl) = new String(Files.readAllBytes(marker.toPath), "UTF-8").split("\n", -1)
     assert(fp == s"annidx|v2|$dir|n=$N|k=$k|p=${Dedup.Dd7Probes}")

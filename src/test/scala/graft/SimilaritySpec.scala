@@ -30,19 +30,6 @@ class SimilaritySpec extends SparkSpecBase {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$plan")
   }
 
-  test("prefix landing waves union to exactly the single-frame landing rows") {
-    // round 17: the disk-constrained wave mode slices the checkpointed
-    // assignment into bounded broadcasts — the landed BYTES must be the
-    // same either way (servedIndex uses one fingerprint for both)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("cell", "vec_id", "seq").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val one = rows(Similarity.prefixIndexLandingFrame(spark, sfDir))
-    val waved = Similarity.prefixIndexLandingWaves(spark, sfDir, 3).map(rows)
-    assert(waved.map(_.size).sum == one.size, "waves overlap or drop rows")
-    assert(waved.reduce(_ ++ _) == one)
-  }
-
   test("served-index ANN returns exactly the recomputed answer (sim2b == sim2)") {
     // the landing writes the SAME assignment the live pipeline
     // computes, so serving from the bucketed index must be

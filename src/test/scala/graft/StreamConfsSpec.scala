@@ -21,9 +21,8 @@ class StreamConfsSpec extends SparkSpecBase {
       "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB") == "4096")
     // r17: changelog checkpointing (commit ∝ batch delta, not total
     // state), no per-file checkpoint checksums, and no write-path
-    // numRowsTotal tracking are engine defaults; all env-overridable
-    // (SPARK_GRAFT_CHANGELOG_CKPT / SPARK_GRAFT_CKPT_CHECKSUM /
-    // SPARK_GRAFT_TRACK_STATE_ROWS)
+    // numRowsTotal tracking are engine defaults; a deployment
+    // overrides any of them with spark.conf.set (tested below)
     assert(Graft.streamConfs(rocksdbMemoryMB = 0) ==
       Map("spark.sql.streaming.minBatchesToRetain" -> "2",
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
@@ -71,5 +70,34 @@ class StreamConfsSpec extends SparkSpecBase {
       assert(offsets() < 13,
         s"offset log never purged under minBatchesToRetain=2 (have ${offsets()} entries)")
     } finally q.stop()
+  }
+
+  test("a deployment overrides a streaming default with spark.conf.set") {
+    // the engine's streaming defaults are plain values: the one route to
+    // change them is spark.conf.set on the session Graft.session returns,
+    // before the stream starts — the route the state-plateau probes use
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val track = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+    def stateRowsTotal(sink: String): Long = {
+      val ms = MemoryStream[Event]
+      (1L to 3L).foreach { i =>
+        ms.addData(Event(i, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+          i, "view", 1.0, "{}"))
+      }
+      val ckpt = java.nio.file.Files.createTempDirectory("confspec").toString
+      val q = ms.toDF().dropDuplicates("user_id")
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(spark.table(sink).count() == 3)
+        q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      } finally q.stop()
+    }
+    assert(stateRowsTotal("confspec_default") == 0L)
+    spark.conf.set(track, "true")
+    try assert(stateRowsTotal("confspec_tracked") > 0L)
+    finally spark.conf.set(track, "false")
   }
 }

@@ -13,7 +13,9 @@ The baseline is the last fenced code block in BASELINE.md (the most
 recent round's "name seconds" table, three pairs per line). A query is
 flagged when bench/baseline > ratio (default 2.0 — the grading bar).
 Queries new since the baseline table are listed informationally, never
-flagged. Exit 1 iff any query is flagged, so this can gate a script.
+flagged. A query the bench lists in "failed" (it threw) has no timing
+and always fails the comparison. Exit 1 iff any query is flagged or
+failed, so this can gate a script.
 
 With the min-of-2 bench artifact, a flag here is a REAL plan change,
 not positional contention — check the JSON's raw_passes to confirm
@@ -32,6 +34,15 @@ def load_baseline(path):
         for name, sec in re.findall(r"(\S+)\s+(\d+\.\d+)", line):
             table[name] = float(sec)
     return table
+
+
+def failed_queries(doc):
+    """The bench line's "failed" list; a driver-written artifact keeps
+    only a tail of the line, so recover the list from it there."""
+    if isinstance(doc.get("failed"), list):
+        return doc["failed"]
+    m = re.search(r'"failed":\[([^\]]*)\]', doc.get("tail", ""))
+    return re.findall(r'"([^"]+)"', m.group(1)) if m else []
 
 
 def compare_probes(new_path, old_path, ratio):
@@ -80,6 +91,7 @@ def main():
     if isinstance(doc.get("parsed"), dict) and "queries" in doc["parsed"]:
         # driver-parsed compact bench line (short keys since round 9)
         doc = doc["parsed"]
+    failed = failed_queries(doc)
     if "queries" in doc:
         bench = doc["queries"]
     else:
@@ -96,7 +108,7 @@ def main():
             # the reported number is the min of the warm passes
             bench = {m[0]: min(float(x) for x in m[1].split(",")) for m in
                      re.findall(r'"(\w+)":\[([\d.,]+)\]', doc.get("tail", ""))}
-        if not bench:
+        if not bench and not failed:
             sys.exit(f"no per-query numbers found in {sys.argv[1]}")
     ratio = float(sys.argv[2]) if len(sys.argv) > 2 else 2.0
     base = load_baseline(Path(__file__).resolve().parent.parent / "BASELINE.md")
@@ -132,9 +144,11 @@ def main():
         print(f"  new (no baseline): {name} {bench[name]:.2f}s")
     for name, sec, b in flagged:
         print(f"  FLAG {name}: {sec:.2f}s vs baseline {b:.2f}s ({sec / b:.1f}x)")
+    for name in failed:
+        print(f"  FAILED {name}: threw during the bench, no timing")
     if not flagged:
-        print(f"  all queries within {ratio}x of baseline")
-    sys.exit(1 if flagged else 0)
+        print(f"  all timed queries within {ratio}x of baseline")
+    sys.exit(1 if flagged or failed else 0)
 
 
 if __name__ == "__main__":
