@@ -339,13 +339,21 @@ object Relational {
 
   /** Q23 — approximate distinct count (approximateNumEntries analog,
     * kafka-client/src/main/java/dev/responsive/kafka/internal/db/RemoteKVTable.java:89-96). HLL sketches differ across engines, so
-    * the checked contract is the 5%-tolerance flag plus the exact count. */
+    * the checked contract is the 5%-tolerance flag plus the exact count.
+    *
+    * The sketch is Spark's DataSketches HLL at lgK = 14 (~0.8% standard
+    * error): its aggregation buffer is one binary sketch. The earlier
+    * `approx_count_distinct(o_custkey, 0.01)` (HLL++ at p = 14, same
+    * error) keeps 1,639 long fields in its buffer — past
+    * `spark.sql.codegen.maxFields` — so the aggregate ran uncompiled
+    * behind huge generated projections, the cost `count()` used to hide
+    * (ROADMAP #1; before/after in BASELINE.md "q23"). */
   val q23 = QueryDef(
     "q23_approx_count",
     (s, d) =>
       Tables.orders(s, d).agg(
         countDistinct(col("o_custkey")).as("exact_cnt"),
-        when(abs(approx_count_distinct(col("o_custkey"), 0.01) - countDistinct(col("o_custkey")))
+        when(abs(hll_sketch_estimate(hll_sketch_agg(col("o_custkey"), 14)) - countDistinct(col("o_custkey")))
           <= countDistinct(col("o_custkey")) * 0.05, lit(1)).otherwise(lit(0)).as("ok")),
     Some("SELECT count(DISTINCT o_custkey) AS exact_cnt, 1 AS ok FROM orders")
   )
@@ -1026,7 +1034,7 @@ object Relational {
   /** Q53 — declarative HyperLogLog cardinality, completing the
     * hand-built sketch family (q46 CMS frequency, q48 Bloom membership,
     * q49 reservoir sample — each with a streaming twin; q23 exercises
-    * Spark's own HLL++, this one is ours and therefore
+    * Spark's own DataSketches HLL, this one is ours and therefore
     * stream-mergeable). Registers are a ≤ 4096-row aggregation;
     * the estimate applies the standard small-range linear-counting
     * correction (m·ln(m/V) when the raw estimate ≤ 2.5m and empty

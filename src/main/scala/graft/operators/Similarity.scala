@@ -264,9 +264,9 @@ object Similarity {
     * maintained index.
     *
     * The landing is one narrow pass: the corpus scan, the quantizer
-    * kernel's per-partition map ([[prefixCells]]) and the staged
-    * bucketed write, whose pass-1 partition count follows the bytes it
-    * stages (n · Dd7Probes rows of ~8d + 32 B). */
+    * kernel's per-partition map ([[prefixCells]]) and the bucketed
+    * write, whose one exchange's partition count follows the bytes it
+    * writes (n · Dd7Probes rows of ~8d + 32 B). */
   private def servedIndex(s: SparkSession, d: String): DataFrame =
     {
       val n = corpusN(s, d)

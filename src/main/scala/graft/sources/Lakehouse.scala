@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Batch sink surface — the `.to(topic)` analog for tables at rest
   * (reference sink: `.to(topic, Produced.with)`,
@@ -20,7 +21,11 @@ import org.apache.spark.sql.functions._
   *    matching dirs).
   *  - [[writeBucketed]] — `bucketBy` table write; two tables bucketed on
   *    the same key join with ZERO exchange on either side (asserted in
-  *    LakehouseSpec against the physical plan).
+  *    LakehouseSpec against the physical plan). [[writeBucketedStaged]]
+  *    puts one hash exchange in front of it, so every write task holds
+  *    rows of one bucket; landings, maintenance appends and the
+  *    compaction rewrite all encode each row once, with the same
+  *    table options ([[tableOptions]]).
   *  - [[compact]] — small-file compaction: rewrite a directory into
   *    size-targeted files. The round-trip answer to incremental sinks
   *    (every micro-batch appends a file per partition; a day of
@@ -31,15 +36,6 @@ object Lakehouse {
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
-
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isDirectory) Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
-    else f.length()
-
-  /** Smallest pass-1 staging (bytes) that earns the ContextCleaner GC
-    * nudge in [[writeBucketedStaged]] — ~a corpus-scale landing; test
-    * landings and streaming compaction ticks stay pause-free. */
-  private val GcNudgeMinStagedBytes: Long = 1L << 30
 
   private def warehouseLoc(s: SparkSession, table: String): java.io.File = {
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -135,16 +131,31 @@ object Lakehouse {
     * parquet default is SERVEPROF_r18_rg{0,16}big). */
   private[graft] val IndexRowGroupBytes: Long = 16L << 20
 
-  /** Write `df` as a bucketed session-catalog table: `numBuckets` hash
-    * buckets on `bucketCols`, sorted within each bucket. Joins and
-    * aggregations keyed on `bucketCols` against another table with the
-    * same bucketing read co-located — no Exchange in the plan.
+  /** Parquet writer settings of a bucketed table, stored as TABLE
+    * options: `insertInto` writes with the catalog table's options, so
+    * the landing, every [[appendBucketed]] maintenance append, the
+    * compaction rewrite and a landing re-registered by a later JVM
+    * ([[landBucketed]]'s reuse path) all write alike.
     *
-    * Row groups are bounded by [[IndexRowGroupBytes]] here (the
-    * landing and compaction writers both come through this method);
-    * maintenance appends ride `insertInto` ([[appendBucketed]]), which
-    * ignores writer options, so their files keep parquet defaults until
-    * the next compaction folds them through this path. */
+    *  - Row groups are bounded by [[IndexRowGroupBytes]].
+    *  - Floating-point array columns (the index's `v` vectors) are
+    *    written without a dictionary. Random doubles never fit one: each
+    *    row group hashed ~131k distinct values into the dictionary until
+    *    it hit parquet's 1 MB bound, then re-encoded them all as plain —
+    *    the largest single CPU cost of an index landing. Every other
+    *    column (`cell`, ids) keeps its dictionary. */
+  private[graft] def tableOptions(schema: StructType): Map[String, String] =
+    Map("parquet.block.size" -> IndexRowGroupBytes.toString) ++
+      schema.fields.collect {
+        case StructField(name, ArrayType(DoubleType | FloatType, _), _, _) =>
+          s"parquet.enable.dictionary#$name.list.element" -> "false"
+      }
+
+  /** Write `df` as a bucketed session-catalog table: `numBuckets` hash
+    * buckets on `bucketCols`, sorted within each bucket, with
+    * [[tableOptions]]. Joins and aggregations keyed on `bucketCols`
+    * against another table with the same bucketing read co-located — no
+    * Exchange in the plan. */
   def writeBucketed(
       df: DataFrame,
       table: String,
@@ -163,26 +174,26 @@ object Lakehouse {
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
-      .option("parquet.block.size", IndexRowGroupBytes.toString)
+      .options(tableOptions(df.schema))
       .saveAsTable(table)
   }
 
-  /** The CAP on splits per bucket for [[writeBucketedStaged]]'s pass-1
-    * shuffle — bounds the pass-2 per-task sort at roughly (table bytes)
-    * / (buckets × splits). 8 keeps a 5M-vector index landing's sorts in
-    * the low hundreds of MB per task (the r16 sweep over 4/8/16 splits
-    * on a 10M-vector landing is PRELAND_r16_splits). A write uses fewer
-    * when it stages less ([[stagedSplits]]). */
+  /** The CAP on write tasks per bucket for [[writeBucketedStaged]] —
+    * bounds each task's sort at roughly (table bytes) / (buckets ×
+    * splits). 8 keeps a 5M-vector index landing's sorts in the low
+    * hundreds of MB per task (the r16 sweep over 4/8/16 splits on a
+    * 10M-vector landing is PRELAND_r16_splits). A write uses fewer when
+    * it is smaller ([[stagedSplits]]). */
   private[graft] val LandSplitsPerBucket: Int = 8
 
-  /** Pass-1 split of one bucket: at most this many staged bytes. */
+  /** One write task's share of a bucket: at most this many bytes. */
   private val SplitBytes: Long = 64L << 20
 
-  /** Splits per bucket for a write staging `stagedBytes`:
+  /** Write tasks per bucket for a write of `stagedBytes`:
     * ⌈bytes / (numBuckets · 64 MB)⌉, at least 1 and at most
     * [[LandSplitsPerBucket]]. A 5M-vector prefix landing (~8 GB) keeps
     * the full 8 per bucket; a 20k-vector landing or a small compaction
-    * stages one split per bucket, instead of 8× as many tiny tasks and
+    * writes one file per bucket, instead of 8× as many tiny tasks and
     * files. An unknown size (Long.MaxValue) takes the cap. */
   private[graft] def stagedSplits(stagedBytes: Long, numBuckets: Int): Int = {
     val perBucket = numBuckets.toLong * SplitBytes
@@ -190,66 +201,41 @@ object Lakehouse {
     math.max(1L, math.min(LandSplitsPerBucket.toLong, splits)).toInt
   }
 
-  /** Two-pass bucketed write — the SCALE path behind [[landBucketed]]
-    * and the compaction swap (VERDICT r14 #1: the one-pass form fed the
-    * V1 bucketed writer from join-partitioned input, whose injected
-    * per-task sort externally sorted the whole frame — vector payloads
-    * spill as wide uncompressed rows, measured ~11 GB of transient per
-    * 1M vectors; a 100 TB corpus cannot be sorted as one dataset).
-    *
-    * Pass 1 shuffles `df` ONCE, hashed on the bucket columns into
-    * `numBuckets × splits` partitions, and stages it as compressed
-    * parquet — the transient is ≈ the table's at-rest size, never an
-    * uncompressed row spill, and because numBuckets divides the
-    * partition count every staged split holds rows of exactly one
-    * bucket (pmod(h, k·n) = i ⇒ pmod(h, n) = i mod n). Pass 2 reads
-    * the staging back (tasks sized by maxPartitionBytes) and runs the
-    * normal bucketed write: each task's injected (bucket-id, sort-col)
-    * sort now covers one bounded split instead of 1/Pth of the corpus.
-    * The staging also checkpoints the expensive landing computation —
-    * a pass-2 failure re-reads the staging, it does not re-quantize.
-    * This is the reference's sub-partitioned write idea
+  /** Bucketed write behind [[landBucketed]] and the compaction swap:
+    * ONE shuffle, hashed on the bucket columns into `numBuckets ×`
+    * [[stagedSplits]] partitions, feeding [[writeBucketed]] directly.
+    * Because numBuckets divides the partition count, every write task
+    * holds rows of exactly one bucket (pmod(h, k·n) = i ⇒
+    * pmod(h, n) = i mod n), so the writer's injected (bucket-id,
+    * sort-col) sort covers one bounded split, never 1/Pth of the corpus
+    * (VERDICT r14 #1: fed from join-partitioned input, that sort
+    * spilled vector payloads as wide rows, ~11 GB per 1M vectors), and
+    * a bucket holds `splits` files. This is the reference's
+    * sub-partitioned write idea
     * (kafka-client/src/main/java/dev/responsive/kafka/internal/db/partitioning/SubPartitioner.java:49-110
-    * — one logical partition fans out to bounded physical ones) applied
-    * to the landing sort. A bucket then holds `splits` files rather
-    * than one; bucket pruning, Exchange-free joins, and row-group
-    * sort stats are per-file and unaffected.
+    * — one logical partition fans out to bounded physical ones).
+    * Bucket pruning, Exchange-free joins and row-group sort stats are
+    * per file and unaffected.
     *
-    * `stagedBytes` is the caller's size of what pass 1 stages (a
-    * landing: rows × row bytes; a compaction: the table's data bytes):
-    * the pass-1 partition count is numBuckets × [[stagedSplits]], so
-    * small writes stage one split per bucket. */
+    * The exchange survives planning because `df` is not bucketed: the
+    * planner drops a repartition whose child already has the same hash
+    * partitioning, which a bucketed scan of the table itself has. A
+    * landing reads the corpus, and [[compactSwap]] reads the table's
+    * files as plain parquet for exactly this reason (read through the
+    * catalog, the rewrite planned Scan → Sort → WriteFiles and left
+    * tasks × buckets sliver files).
+    *
+    * `stagedBytes` is the caller's size of what is written (a landing:
+    * rows × row bytes; a compaction: the table's data bytes). */
   def writeBucketedStaged(
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
-      stagedBytes: Long = Long.MaxValue): Unit = {
-    val s = df.sparkSession
-    val stagingLoc = warehouseLoc(s, table + "__landstage")
-    if (stagingLoc.exists()) rmTree(stagingLoc)
-    val parts = numBuckets * stagedSplits(stagedBytes, numBuckets)
-    try {
-      df.repartition(parts, bucketCols.map(col): _*)
-        .write.mode(SaveMode.Overwrite).parquet(stagingLoc.getPath)
-      // Pass 1 done: the shuffle files behind this frame's lineage (the
-      // quantization joins/aggs — corpus-scale at a big landing) are
-      // now garbage, but Spark's ContextCleaner only reclaims them
-      // after a DRIVER GC collects the dependency references, and the
-      // default periodic GC is 30 min — longer than a landing. Without
-      // this nudge pass 2 stacks its transient ON TOP of dead shuffle
-      // files: measured at the 20M-vector landing, 55 GB of blockmgr at
-      // peak (ENOSPC) vs ~20 GB with the cleanup. GATED on staged size
-      // (ADVICE r16): maintenance compaction ticks on a co-serving JVM
-      // must not inject a full-GC pause into query latency.
-      if (dirBytes(stagingLoc) >= GcNudgeMinStagedBytes) System.gc()
-      // explicit schema: an all-empty staging (empty df) has no files
-      // to infer from, and the user schema also pins nullability so
-      // the landed table's DDL equals df's
-      writeBucketed(s.read.schema(df.schema).parquet(stagingLoc.getPath),
-        table, bucketCols, numBuckets)
-    } finally { if (stagingLoc.exists()) rmTree(stagingLoc) }
-  }
+      stagedBytes: Long = Long.MaxValue): Unit =
+    writeBucketed(
+      df.repartition(numBuckets * stagedSplits(stagedBytes, numBuckets), bucketCols.map(col): _*),
+      table, bucketCols, numBuckets)
 
   /** One-time bucketed landing with CROSS-SESSION reuse: land `df` as a
     * bucketed table exactly once per (warehouse, table, fingerprint) —
@@ -293,8 +279,10 @@ object Lakehouse {
         case Some(Array(fp, spc, ddl, _*)) if fp == fingerprint && spc == spec =>
           if (!s.catalog.tableExists(table)) {
             val bk = bucketCols.map(c => s"`$c`").mkString(", ")
+            val opts = tableOptions(StructType.fromDDL(ddl))
+              .map { case (k, v) => s"'$k' '$v'" }.mkString(", ")
             s.sql(
-              s"""CREATE TABLE `$table` ($ddl) USING parquet
+              s"""CREATE TABLE `$table` ($ddl) USING parquet OPTIONS ($opts)
                  |CLUSTERED BY ($bk) SORTED BY ($bk) INTO $numBuckets BUCKETS
                  |LOCATION '${loc.toURI}'""".stripMargin)
           }
@@ -342,7 +330,8 @@ object Lakehouse {
   }
 
   /** Compact a bucketed table in place: rewrite its current rows into
-    * one file per bucket and swap. Incremental appends
+    * [[stagedSplits]] files per bucket (one below 64 MB a bucket) and
+    * swap. Incremental appends
     * ([[appendBucketed]]) add a file per bucket per batch — a day of
     * 5-minute batches is 288 slivers per bucket, and scan cost is
     * per-file, not per-row; this is the bucketed-table twin of
@@ -378,28 +367,24 @@ object Lakehouse {
     * table, guard against concurrent appends, then swap the stage into
     * place carrying the landing marker and commit log.
     *
-    * The rewrite goes through [[writeBucketedStaged]]: the write
-    * planner would REMOVE a bare repartition above a bucketed
-    * WriteFiles (V1 bucketed writes only require an ordering; observed
-    * plan: Scan → Sort → WriteFiles, no Exchange → tasks × buckets
-    * sliver files survive the "compaction"), and the earlier
-    * fix — persisting a pre-repartitioned frame MEMORY_AND_DISK to pin
-    * the exchange — cached the entire table through the fold, the
-    * storage-pressure suspect in the r14 delete-heavy probe's 24 GB
-    * OOM (VERDICT r14 #3). The staged write pins the shuffle by
-    * materializing it to disk instead: nothing is cached, pass-2 sorts
-    * are split-bounded, and the compacted table holds a bounded
-    * splits-per-bucket file count (vs the sliver population it
-    * replaces). */
+    * The rewrite reads the table's FILES as plain parquet, not the
+    * bucketed relation, and goes through [[writeBucketedStaged]]: over a
+    * bucketed scan the planner drops the write's hash exchange (see
+    * there), and tasks × buckets sliver files would survive the
+    * "compaction". Nothing is cached or staged; each task's sort is
+    * split-bounded, and the compacted table holds `splits` files per
+    * bucket (vs the sliver population it replaces). */
   private def compactSwap(
       s: SparkSession, table: String,
       spec: org.apache.spark.sql.catalyst.catalog.BucketSpec,
       liveRowsOf: DataFrame => DataFrame): Unit = {
     val stage = stageName(table)
-    val snapshot = s.table(table).count() // raw-row snapshot for the drift guard
+    val live = s.table(table)
+    val snapshot = live.count() // raw-row snapshot for the drift guard
+    val loc = warehouseLoc(s, table)
     writeBucketedStaged(
-      liveRowsOf(s.table(table)), stage, spec.bucketColumnNames, spec.numBuckets,
-      dataBytes(warehouseLoc(s, table)))
+      liveRowsOf(s.read.schema(live.schema).parquet(loc.getPath)), stage,
+      spec.bucketColumnNames, spec.numBuckets, dataBytes(loc))
     // Metadata half of the swap under the table's monitor: a concurrent
     // reader resolving the table mid-swap would otherwise adopt the
     // stage itself (killing this RENAME) or re-land over the maintained
@@ -420,7 +405,6 @@ object Lakehouse {
           s"compactBucketed(`$table`): table grew $snapshot -> $nowRows rows during the rewrite " +
             "(concurrent append?). Stage discarded; stop ingest streams during compaction and retry.")
       }
-      val loc = warehouseLoc(s, table)
       // marker + commit log into the STAGE before the swap (ADVICE r11): at
       // every instant at least one of (live marker, stage marker) exists,
       // so a crash anywhere in the swap is recoverable by

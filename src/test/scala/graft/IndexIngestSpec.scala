@@ -101,8 +101,8 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     Lakehouse.compactBucketed(spark, tbl)
     val compacted = indexFiles(tbl)
     assert(compacted.size < sliverCount, s"$sliverCount -> ${compacted.size}")
-    // the two-pass staged rewrite bounds per-task sort memory at the
-    // cost of splits-per-bucket files (default 8) instead of one
+    // the split-bounded rewrite bounds per-task sort memory at the
+    // cost of splits-per-bucket files (at most 8) instead of one
     assert(compacted.size <= 16 * graft.sources.Lakehouse.LandSplitsPerBucket, s"unbounded file count: ${compacted.size}")
     assert(spark.table(tbl).count() == after)
     // the landing marker survived the swap → a later session re-registers

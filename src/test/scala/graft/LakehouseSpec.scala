@@ -83,9 +83,9 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
   }
 
   test("staged landing equals its input rows and joins exchange-free") {
-    // the two-pass staged write (hash-repartitioned staging, then the
-    // bucketed write) must land exactly its input with the bucket layout
-    // intact: the landed table joins itself with no Exchange
+    // the split-bounded write (one hash exchange on the bucket columns
+    // feeding the bucketed write) must land exactly its input with the
+    // bucket layout intact: the landed table joins itself with no Exchange
     val s = spark
     val events = Tables.events(s, sfDir).select("event_id", "user_id", "value")
     try {

@@ -55,7 +55,7 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
 
   test("the prefix landing plan is one narrow pass: no Exchange or join before the staged write") {
     // the quantizer kernel runs as a per-partition map over the corpus
-    // scan, so the only shuffle of a landing is the staged write's own
+    // scan, so the only shuffle of a landing is the bucketed write's own
     // bucket repartition
     val df = Similarity.prefixIndexLandingFrame(spark, sfDir)
     df.count()

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.SplittableRandom
 
 import graft.operators.{Dedup, Similarity}
+import graft.sources.Lakehouse
 import graft.streaming.{EmbedDedupStream, IndexIngest}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -125,7 +126,7 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     Similarity.buildIndex(spark, dir, "prefix")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val loc = new java.io.File(wh, s"graft_ann_index_$sfx")
-    // ~33 MB staged: one pass-1 split per bucket, so pass 2 writes one
+    // ~33 MB written: one split per bucket, so the write leaves one
     // file per bucket (the 8-split cap left up to 8 per bucket)
     assert(loc.listFiles().count(_.getName.endsWith(".parquet")) == Similarity.IndexBuckets)
     val marker = new java.io.File(loc, "_graft_meta")
@@ -133,5 +134,158 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(fp == s"annidx|v2|$dir|n=$N|k=$k|p=${Dedup.Dd7Probes}")
     assert(ddl == "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL")
     assert(spark.table(s"graft_ann_index_$sfx").count() == N.toLong * Dedup.Dd7Probes)
+  }
+
+  private def table: String = s"graft_ann_index_$sfx"
+  private def loc: java.io.File = new java.io.File(
+    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
+  private def dataFiles(d: java.io.File): Set[java.io.File] =
+    d.listFiles().filter(_.getName.endsWith(".parquet")).toSet
+
+  /** Rows of a seeded maintenance batch, placed by the quantizer. */
+  private def batchRows(seed: Long, ids: Range): DataFrame = {
+    import spark.implicits._
+    IndexIngest.assignBatch(vectors(seed, ids).toDF("vec_id", "embedding"), dir, 1L)
+  }
+
+  /** Encodings of every chunk of column `path` in `files`' footers. */
+  private def encodings(files: Set[java.io.File], path: String): Seq[Set[String]] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    files.toSeq.flatMap { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toURI), conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == path).map(_.getEncodings.asScala.map(_.name).toSet)
+      finally reader.close()
+    }
+  }
+
+  /** No `v` chunk of `files` is dictionary-encoded, while `cell` keeps
+    * its dictionary: in every chunk of a landing-sized file, in some
+    * chunk of an append (parquet drops a dictionary that does not shrink
+    * a chunk of a few rows). */
+  private def assertVectorsPlain(files: Set[java.io.File], what: String, small: Boolean = false): Unit = {
+    assert(files.nonEmpty, s"$what wrote no files")
+    val dict = Set("PLAIN_DICTIONARY", "RLE_DICTIONARY")
+    val v = encodings(files, "v.list.element")
+    assert(v.size >= files.size && v.forall(e => e.nonEmpty && (e & dict).isEmpty),
+      s"$what: v chunks carry a dictionary: $v")
+    val cell = encodings(files, "cell").map(e => (e & dict).nonEmpty)
+    assert(cell.size >= files.size && (if (small) cell.contains(true) else !cell.contains(false)),
+      s"$what: cell chunks lost their dictionary: ${encodings(files, "cell")}")
+  }
+
+  /** The table option every write of `table` reads: a landing-sized
+    * chunk whose dictionary overflowed is re-encoded plain, so its
+    * footer cannot show the dictionary the writer tried; the option can. */
+  private def assertNoVectorDictOption(what: String): Unit = {
+    val props = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).storage.properties
+    assert(props.get("parquet.enable.dictionary#v.list.element").contains("false"), s"$what: $props")
+  }
+
+  test("index files encode v without a dictionary: landing, append, compaction, re-registered append") {
+    Similarity.buildIndex(spark, dir, "prefix")
+    val landed = dataFiles(loc)
+    assertVectorsPlain(landed, "landing")
+    assertNoVectorDictOption("landing")
+    Lakehouse.appendBucketed(batchRows(7L, 900000 until 900200), table)
+    val appended = dataFiles(loc) -- landed
+    assertVectorsPlain(appended, "maintenance append", small = true)
+    Lakehouse.compactBucketed(spark, table)
+    assertVectorsPlain(dataFiles(loc), "compaction")
+    assertNoVectorDictOption("compaction")
+    // a later JVM re-registers the landing from its files (the catalog
+    // forgets it; a managed DROP would delete the files, so stash them)
+    val stash = new java.io.File(loc.getParentFile, s"${table}__stash")
+    Files.move(loc.toPath, stash.toPath)
+    spark.sql(s"DROP TABLE `$table`")
+    Files.move(stash.toPath, loc.toPath)
+    Similarity.buildIndex(spark, dir, "prefix")
+    assertNoVectorDictOption("re-registered landing")
+    val before = dataFiles(loc)
+    Lakehouse.appendBucketed(batchRows(8L, 910000 until 910200), table)
+    assertVectorsPlain(dataFiles(loc) -- before, "append to a re-registered landing", small = true)
+    assert(spark.table(table).count() == (N.toLong + 400) * Dedup.Dd7Probes)
+  }
+
+  private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The physical plans of the bucketed writes `body` runs into `into`,
+    * from the session's query-execution listener. */
+  private def writesInto(into: String)(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        aqe.collectFirst(qe.executedPlan) {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+              if c.bucketSpec.isDefined && c.outputPath.getName == into => qe.executedPlan
+        }.foreach(seen.add)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** The shuffles of a write plan, final AQE stages included. */
+  private def exchanges(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] =
+    aqe.collect(plan) { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+
+  /** Exactly one shuffle, hash-partitioned on `cell` into `parts`. */
+  private def assertOneCellExchange(plans: Seq[org.apache.spark.sql.execution.SparkPlan],
+      parts: Int, what: String): Unit = {
+    assert(plans.size == 1, s"$what: ${plans.size} bucketed writes reported")
+    val ex = exchanges(plans.head)
+    assert(ex.size == 1, s"$what plans ${ex.size} exchanges:\n${plans.head}")
+    ex.head.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        val keys = h.expressions.collect { case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name }
+        assert(h.numPartitions == parts && keys == Seq("cell"), s"$what: $h")
+      case p => fail(s"$what: exchange partitions by $p")
+    }
+  }
+
+  test("landing and compaction each write through one cell exchange; compaction leaves splits files per bucket") {
+    val buckets = Similarity.IndexBuckets
+    // the re-registered table is external: clear its files for a re-land
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    scala.reflect.io.Directory(loc).deleteRecursively()
+    val landing = writesInto(table)(Similarity.buildIndex(spark, dir, "prefix"))
+    val landSplits = Lakehouse.stagedSplits(N.toLong * Dedup.Dd7Probes * (8L * Dim + 32L), buckets)
+    assertOneCellExchange(landing, buckets * landSplits, "landing")
+    assert(dataFiles(loc).size == buckets * landSplits)
+    Lakehouse.appendBucketed(batchRows(9L, 920000 until 920200), table)
+    Lakehouse.appendBucketed(batchRows(10L, 930000 until 930200), table)
+    assert(dataFiles(loc).size > buckets * landSplits, "the appends left no slivers to fold")
+    val bytes = dataFiles(loc).toSeq.map(_.length).sum
+    val splits = Lakehouse.stagedSplits(bytes, buckets)
+    val compaction = writesInto(s"${table}__compacting")(Lakehouse.compactBucketed(spark, table))
+    assertOneCellExchange(compaction, buckets * splits, "compaction")
+    val ids = dataFiles(loc).toSeq.flatMap(f =>
+      org.apache.spark.sql.execution.datasources.BucketingUtils.getBucketId(f.getName))
+    assert(ids.size == dataFiles(loc).size &&
+      ids.groupBy(identity).values.map(_.size).toSet == Set(splits) && ids.toSet.size == buckets,
+      s"compacted bucket ids: ${ids.sorted}")
+    assert(spark.table(table).count() == (N.toLong + 400) * Dedup.Dd7Probes)
+    // control: the same rewrite fed from the BUCKETED relation loses its
+    // exchange, which is why the compaction reads the table's files
+    val ctl = s"${table}__ctl"
+    try {
+      val viaCatalog = writesInto(ctl)(
+        Lakehouse.writeBucketedStaged(spark.table(table), ctl, Seq("cell"), buckets, bytes))
+      assert(viaCatalog.size == 1 && exchanges(viaCatalog.head).isEmpty,
+        s"a write over the bucketed relation kept its exchange:\n${viaCatalog.mkString}")
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$ctl`")
   }
 }

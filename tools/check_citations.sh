@@ -13,10 +13,16 @@
 # abbreviated.
 #
 # Exit 0 with "OK: N citations, 0 dangling" or exit 1 listing each
-# dangling path and the file:line that cites it.
+# dangling path and the file:line that cites it. Exit 2 with one line
+# when the reference checkout is absent: nothing can be checked then,
+# which is not the same as every citation dangling.
 set -u
 REF=/root/reference
 SRC=${1:-src/main/scala}
+if [ ! -d "$REF" ]; then
+  echo "reference checkout $REF is absent: citations not checked"
+  exit 2
+fi
 ROOTS=(
   ""
   "kafka-client/src/main/java/"
