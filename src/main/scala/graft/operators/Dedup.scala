@@ -352,22 +352,6 @@ object Dedup {
        |  SELECT DISTINCT x.vec_id AS id1, y.vec_id AS id2
        |  FROM assigned x JOIN assigned y ON x.cell = y.cell AND x.vec_id < y.vec_id)""".stripMargin
 
-  /** Level 1 of the two-level quantizer as DataFrames: each FINE anchor
-    * of `fine` (aid, av, an) tagged with its single nearest coarse cell
-    * of `coarse` (cid, cv, cn) — K·K1 cosines, broadcast of the
-    * √K-sized coarse set. The k-means quantizer (sim3,
-    * [[Similarity.kmAssignFrame]]) ranks through it; the prefix
-    * quantizer tags on the driver ([[QuantizerKernel]]) and specs hold
-    * it to this reference. */
-  private[graft] def tagFine(fine: DataFrame, coarse: DataFrame): DataFrame = {
-    val a2c = fine.crossJoin(broadcast(coarse))
-      .withColumn("ccos", VectorExprs.dot(col("av"), col("cv")) / (col("an") * col("cn")))
-      .groupBy(col("aid"))
-      .agg(graft.functions.SketchAggs.topk(col("ccos"), col("cid"), 1).as("t"))
-      .select(col("aid"), col("t.id").getItem(0).as("cid"))
-    fine.join(a2c, Seq("aid"))
-  }
-
   /** Largest fine-anchor set shipped as ONE broadcast (the FAISS
     * posture — the quantizer lives with every worker), as a BYTE
     * budget: ~640 MB ≈ 2^20 anchors on the reference 64-dim corpus
@@ -388,36 +372,6 @@ object Dedup {
     * array+row object overhead. 64-dim ⇒ 608 B — the measured ~600 B
     * the r15 row-count bound assumed. */
   private[graft] def fineAnchorRowBytes(dim: Int): Long = 8L * dim + 96L
-
-  /** Levels 2–3 of the two-level quantizer as DataFrames: rank every
-    * vector of `e` (vec_id, v, nrm) against `coarse` (cid, cv, cn) and
-    * the pre-tagged `fineTagged` set (aid, av, an, cid), returning
-    * (vec_id, cell, r) with r ≤ probes — (cos DESC, id ASC) order
-    * throughout (TopKAgg = the oracle's row_number). The Spark twin of
-    * [[twoLevelRankedSql]]: the k-means quantizer ranks through it, and
-    * it is the reference the prefix [[QuantizerKernel]] is held to
-    * bit-for-bit. The fine join is left to the optimizer: the trained
-    * sets are ≤ TrainSample rows, where auto-broadcast fires. */
-  private[graft] def twoLevelRankedTagged(
-      e: DataFrame, fineTagged: DataFrame, coarse: DataFrame, probes: Int): DataFrame = {
-    // level 2: each VECTOR's Dd7CoarseProbes nearest coarse cells —
-    // n·K1 cosines against a √K broadcast; first(v) rides the same
-    // map-side partial agg so the corpus is never re-joined
-    val vc = e.crossJoin(broadcast(coarse))
-      .withColumn("ccos", VectorExprs.dot(col("v"), col("cv")) / (col("nrm") * col("cn")))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.SketchAggs.topk(col("ccos"), col("cid"), Dd7CoarseProbes).as("ct"),
-        first(col("v")).as("v"), first(col("nrm")).as("nrm"))
-      .select(col("vec_id"), col("v"), col("nrm"), explode(col("ct.id")).as("cid"))
-    // refine: rank ONLY the probed coarse cells' fine anchors — the
-    // per-vector work is K1 + P₁·K/K1 ≈ √K cosines
-    vc.join(fineTagged, Seq("cid"))
-      .withColumn("acos", VectorExprs.dot(col("v"), col("av")) / (col("nrm") * col("an")))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.SketchAggs.topk(col("acos"), col("aid"), probes).as("top"))
-      .select(col("vec_id"), posexplode(col("top.id")))
-      .select(col("vec_id"), col("col").as("cell"), (col("pos") + 1).cast("int").as("r"))
-  }
 
   /** The prefix index's fine anchors (aid, av, an): the first K vec_ids. */
   private[graft] def prefixFine(e: DataFrame, k: Long): DataFrame =

@@ -9,16 +9,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 /** The two-level IVF quantizer as one kernel over primitive arrays: the
   * K1 coarse anchors, and the fine anchors grouped by the coarse cell
   * each one is tagged to (its single nearest coarse anchor). [[rank]]
-  * is the assignment every prefix-index surface runs — the corpus
-  * landing, each maintenance micro-batch, sim2/dd7/dd9's memoized
-  * corpus ranking, and the driver-side probe ranking of every serve —
-  * so the quantizer has one implementation, applied where the vectors
-  * already are.
+  * is the assignment every index surface runs, prefix and k-means
+  * alike — the corpus landings, each maintenance micro-batch,
+  * sim2/dd7/dd9's memoized corpus ranking, sim3's corpus placement,
+  * and the driver-side probe ranking of every serve — so the quantizer
+  * has one implementation, applied where the vectors already are.
   *
-  * Bit-identical to [[Dedup.twoLevelRankedTagged]]: the same ascending
-  * dot loop as `VectorExprs.dot`, the same `dot / (nrm · an)` cosine,
-  * and the same (cos DESC, id ASC) bounded top-k ([[TopKBuf]], the
-  * TopKAgg buffer) at both levels. Coarse anchors are held in id order,
+  * Bit-identical to the DataFrame reference
+  * `graft.QuantizerReference.twoLevelRankedTagged` (src/test): the same
+  * ascending dot loop as `VectorExprs.dot`, the same `dot / (nrm · an)`
+  * cosine, and the same (cos DESC, id ASC) bounded top-k ([[TopKBuf]],
+  * the TopKAgg buffer) at both levels. Coarse anchors are held in id order,
   * so ranking coarse POSITIONS ranks coarse ids.
   *
   * Size: (K1 + K)·(d + 2) doubles. The landing and maintenance ship it
@@ -103,8 +104,8 @@ object QuantizerKernel {
   }
 
   /** Tag each fine anchor with its nearest coarse anchor — level 1,
-    * [[Dedup.tagFine]]'s top-1 by (cos DESC, cid ASC) — and build the
-    * kernel. K·K1 cosines, once per quantizer. */
+    * `graft.QuantizerReference.tagFine`'s top-1 by (cos DESC, cid ASC) —
+    * and build the kernel. K·K1 cosines, once per quantizer. */
   def apply(coarse: Array[Similarity.Anchor], fine: Array[Similarity.Anchor]): QuantizerKernel = {
     val level1 = tagged(coarse, Array.empty)
     tagged(coarse, fine.map(a => (level1.nearestCoarse(a.v, a.nrm), a)))

@@ -179,7 +179,6 @@ object Similarity {
   val sim2 = QueryDef(
     "sim2_ann_ivf_topk",
     (s, d) => {
-      val e = normed(s, d)
       // corpus multi-assignment at Dd7Probes depth — memoized, shared
       // with dd7/dd9
       val assigned = Dedup.rankedPrefix(s, d).select(col("vec_id"), col("cell"))
@@ -190,30 +189,8 @@ object Similarity {
       // bit-identical to slicing the query rows out of a full-corpus
       // deep ranking (what the oracle computes).
       val k1 = Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
-      import s.implicits._
-      val probes = prefixProbes(s, d, math.max(NProbe.toLong, k1).toInt, queryVecs(s, d))
-        .toSeq.toDF("qid", "cell")
-      // candidates = corpus rows sharing ≥ 1 probed cell with a query,
-      // deduped before scoring (a pair can share several cells).
-      // probes is NumQueries × nprobe rows → broadcast; cand is the
-      // per-query-bounded shortlist, so the vector-fetch join moves
-      // candidates only, never the corpus
-      val cand = assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id")).distinct()
-      val q = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      // candidate fetch: BROADCAST the per-query-bounded (qid, vec_id)
-      // shortlist (~NumQueries·nprobe·cellsize rows — √n growth, ~16 MB
-      // at 20M vectors, ~120 MB at 10⁹) so the corpus streams once and
-      // never shuffles its vectors. Left to the optimizer, cand sits
-      // just past the auto-broadcast threshold and the fetch planned as
-      // a both-sides exchange — ~11 GB of corpus vectors at the 1000×
-      // probe, the whole tail cost of the query.
-      topkPerQid(
-        broadcast(cand).join(e, Seq("vec_id")).join(broadcast(q), Seq("qid"))
-          .withColumn("cos",
-            VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn"))))
+      ivfTopk(s, d, assigned,
+        prefixProbes(s, d, math.max(NProbe.toLong, k1).toInt, queryVecs(s, d)))
     },
     Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             |${Dedup.twoLevelRankedSql(s"greatest($NProbe, ${Dedup.Dd7CoarseSql})")},
@@ -230,6 +207,39 @@ object Similarity {
             |SELECT qid, rank, neighbor_id FROM scored WHERE rank <= $TopK""".stripMargin),
     doc = "two-level n-scaled IVF ANN (dd7's quantizer): deterministic — oracle replays the same algorithm"
   )
+
+  /** The IVF tail of sim2 and sim3: corpus rows of `assigned`
+    * (vec_id, cell) sharing ≥ 1 of a query's `probeRows` (qid, cell)
+    * become its candidates, which fetch their vectors and score exactly
+    * into the per-qid top-k. Only the corpus placement and the probe
+    * ranking differ between the two quantizers. */
+  private def ivfTopk(s: SparkSession, d: String, assigned: DataFrame,
+      probeRows: Array[(Long, Long)]): DataFrame = {
+    val e = normed(s, d)
+    import s.implicits._
+    val probes = probeRows.toSeq.toDF("qid", "cell")
+    // candidates = corpus rows sharing ≥ 1 probed cell with a query,
+    // deduped before scoring (a pair can share several cells).
+    // probes is NumQueries × nprobe rows → broadcast; cand is the
+    // per-query-bounded shortlist, so the vector-fetch join moves
+    // candidates only, never the corpus
+    val cand = assigned.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id")).distinct()
+    val q = e.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
+    // candidate fetch: BROADCAST the per-query-bounded (qid, vec_id)
+    // shortlist (~NumQueries·nprobe·cellsize rows — √n growth, ~16 MB
+    // at 20M vectors, ~120 MB at 10⁹) so the corpus streams once and
+    // never shuffles its vectors. Left to the optimizer, cand sits
+    // just past the auto-broadcast threshold and the fetch planned as
+    // a both-sides exchange — ~11 GB of corpus vectors at the 1000×
+    // probe, the whole tail cost of the query.
+    topkPerQid(
+      broadcast(cand).join(e, Seq("vec_id")).join(broadcast(q), Seq("qid"))
+        .withColumn("cos",
+          VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn"))))
+  }
 
   /** One-time cell-bucketed ANN index landing for [[sim2b]]: the
     * corpus's Dd7Probes multi-assignment joined with its vectors,
@@ -350,15 +360,6 @@ object Similarity {
     else Some(servedIndex(s, d).filter(col("seq") > 0)
       .select(col("vec_id"), col("v"), col("nrm"), col("seq"))
       .dropDuplicates("vec_id", "seq"))
-  }
-
-  /** Multi-assignment of `e` (vec_id, v, nrm) under the FROZEN trained
-    * k-means quantizer — (cell, vec_id) at Dd7Probes depth, exactly the
-    * corpus landing's assignment applied to new rows. */
-  private[graft] def kmAssignFrame(s: SparkSession, d: String, e: DataFrame): DataFrame = {
-    val (fineTagged, coarse, _) = kmFrames(s, d)
-    Dedup.twoLevelRankedTagged(e, fineTagged, coarse, Dedup.Dd7Probes)
-      .select(col("cell"), col("vec_id"))
   }
 
   /** A quantizer anchor held driver-side: (id, vector, norm). Norms are
@@ -654,21 +655,34 @@ object Similarity {
       }
     }
 
-  /** The trained set routed two-level (coarse = first K1 surviving
-    * centroids, fine tagged under them) — the broadcastable quantizer
-    * frames shared by sim3's inline path and sim3b's serving path. */
-  private def kmFrames(s: SparkSession, d: String): (DataFrame, DataFrame, Int) = {
+  /** The trained quantizer as a driver-resident [[QuantizerKernel]]:
+    * coarse = the first K1 = ⌈√k⌉ surviving centroids, every centroid
+    * tagged to its nearest coarse member. Everything is ≤ TrainSample
+    * rows, so the whole quantizer lives on the driver (sim3/sim3b's
+    * probe ranking) and ships as one broadcast ([[kmAssignFrame]]).
+    * Norms use `dotA`'s ascending loop, VectorExprs.dot's arithmetic.
+    * `QuantizerKernelSpec` holds its placement to the DataFrame
+    * reference, `graft.QuantizerReference` under src/test. */
+  private def kmLocal(s: SparkSession, d: String): (QuantizerKernel, Int) = {
     val trained = kmCentroids(s, d)
     val k1 = Dedup.dd7CoarseCount(trained.length.toLong).toInt
-    import s.implicits._
-    def centFrame(cs: Array[(Int, Array[Double])], idc: String, vc: String, nc: String) =
-      cs.toSeq.toDF("i", "cw")
-        .select(col("i").cast("long").as(idc), col("cw").as(vc),
-          sqrt(VectorExprs.dot(col("cw"), col("cw"))).as(nc))
-    val coarse = centFrame(trained.take(k1), "cid", "cv", "cn")
-    val fineTagged = Dedup.tagFine(centFrame(trained, "aid", "av", "an"), coarse)
-    (fineTagged, coarse, k1)
+    val all = trained.map { case (i, v) => Anchor(i.toLong, v, math.sqrt(dotA(v, v))) }
+    (QuantizerKernel(all.take(k1), all), k1)
   }
+
+  private val kmKernelBcCache =
+    Memo.newCache[org.apache.spark.broadcast.Broadcast[QuantizerKernel]]()
+
+  /** Placement of `e` (vec_id, v, nrm) under the FROZEN trained k-means
+    * quantizer: (cell, vec_id, v, nrm, r) at Dd7Probes depth — the
+    * prefix placement's narrow per-partition map
+    * ([[QuantizerKernel.cells]]) over the k-means kernel, broadcast once
+    * per (session, dir). The km landing, each maintenance append and
+    * sim3's corpus side place through it. */
+  private[graft] def kmAssignFrame(s: SparkSession, d: String, e: DataFrame): DataFrame =
+    QuantizerKernel.cells(e,
+      Memo.get(kmKernelBcCache, s, d)(s.sparkContext.broadcast(kmLocal(s, d)._1)),
+      Dedup.Dd7Probes)
 
   /** Recall-gate tail shared by the trained-index queries (sim3/sim4
     * and their served twins): per-qid ok = recall@TopK ≥ RecallGate vs
@@ -685,49 +699,28 @@ object Similarity {
         (col("matched") >= math.ceil(TopK * RecallGate).toInt).cast("int").as("ok"))
   }
 
-  /** sim3 — IVF with k-means-refined centroids, served through the
-    * SAME two-level topology as sim2/dd7: centroid count scales with
-    * the corpus (k = min(max(256, ⌈n/64⌉), TrainSample) — you cannot
-    * train more centroids than sample points; past n ≈ 64·TrainSample
-    * the untrained prefix quantizer (sim2/dd7) is the designated
-    * path), Lloyd runs on the driver over the bounded sample
-    * (deterministic init = the first k sample vectors), and the
-    * trained set itself is routed two-level: coarse = the first
-    * K1 = ⌈√k⌉ surviving centroids, a2c maps every fine centroid to
-    * its nearest coarse member, so per-vector assignment stays ~√k
-    * cosines and only the √k coarse frame plus the k-row fine frame
-    * (both driver-bounded by TrainSample) are broadcast. Corpus
-    * multi-assigns to Dd7Probes cells; queries probe max(NProbe, K1).
-    * Unlike sim2's prefix anchors the trained centroids are
+  /** sim3 — IVF with k-means-refined centroids: sim2 with another
+    * kernel. Centroid count scales with the corpus (k = min(max(256,
+    * ⌈n/64⌉), TrainSample) — you cannot train more centroids than
+    * sample points; past n ≈ 64·TrainSample the untrained prefix
+    * quantizer (sim2/dd7) is the designated path), Lloyd runs on the
+    * driver over the bounded sample (deterministic init = the first k
+    * sample vectors), and the trained set is routed two-level like the
+    * prefix one ([[kmLocal]]). The corpus multi-assigns to Dd7Probes
+    * cells through the kernel's narrow map ([[kmAssignFrame]]); the
+    * NumQueries queries rank max(NProbe, K1) deep on the driver with the
+    * same kernel; the candidate tail is sim2's ([[ivfTopk]]). Unlike
+    * sim2's prefix anchors the trained centroids are
     * float-summation-order sensitive, so the driver oracle is a recall
     * GATE rather than a replay: per-qid ok = recall@5 ≥ 0.6 vs the
     * exact answer (wide margin measured). */
   val sim3 = QueryDef(
     "sim3_ann_ivf_kmeans",
     (s, d) => {
-      val e = normed(s, d)
-      // tag the trained fine centroids under the coarse subset once;
-      // corpus multi-assigns at Dd7Probes depth, only the NumQueries
-      // query rows rank at nprobe = max(NProbe, K1) depth (same
-      // corpus-shallow / query-deep split as sim2 — ranking the whole
-      // corpus nprobe-deep is a √k-factor blowup for rows whose depth
-      // beyond Dd7Probes is never read)
-      val (fineTagged, coarse, k1) = kmFrames(s, d)
-      val nprobe = math.max(NProbe, k1)
-      val assigned = Dedup.twoLevelRankedTagged(e, fineTagged, coarse, Dedup.Dd7Probes)
-        .select(col("vec_id"), col("cell"))
-      val probes = Dedup.twoLevelRankedTagged(
-          e.filter(col("vec_id") < NumQueries), fineTagged, coarse, nprobe)
-        .select(col("vec_id").as("qid"), col("cell"))
-      val cand = assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id")).distinct()
-      val q = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      // broadcast the bounded shortlist — corpus never shuffles (sim2)
-      val scored = broadcast(cand).join(e, Seq("vec_id")).join(broadcast(q), Seq("qid"))
-        .withColumn("cos", VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-      recallGate(s, d, topkPerQid(scored))
+      val assigned = kmAssignFrame(s, d, normed(s, d)).select(col("vec_id"), col("cell"))
+      val (kernel, k1) = kmLocal(s, d)
+      recallGate(s, d,
+        ivfTopk(s, d, assigned, probesOf(kernel, math.max(NProbe, k1), queryVecs(s, d))))
     },
     Some("SELECT CAST(vec_id AS BIGINT) AS qid, 1 AS ok FROM embeddings WHERE vec_id < 10"),
     doc = "k-means IVF (n-scaled k, two-level routing): recall-gated vs sim1"
@@ -735,18 +728,19 @@ object Similarity {
 
   /** One-time landing of the k-means corpus assignment (the sim3
     * analog of [[servedIndex]]): the corpus's Dd7Probes multi-
-    * assignment under the TRAINED cells, joined with its vectors,
-    * bucketed and sorted on `cell`. Valid across sessions because
-    * training is deterministic (see [[kmCentroids]]); the fingerprint
-    * re-lands on any corpus or formula change.
+    * assignment under the TRAINED cells with its vectors, bucketed and
+    * sorted on `cell`. Valid across sessions because training is
+    * deterministic (see [[kmCentroids]]); the fingerprint re-lands on
+    * any corpus or formula change.
     *
     * MAINTAINED like the prefix index (ADVICE r12: kmeans used to
     * serve a stale corpus-only snapshot after maintenance): rows carry
     * `seq`, [[graft.streaming.IndexIngest]] appends new vectors under
     * the frozen trained cells, reads mask tombstoned versions, and a
     * landing that happens AFTER maintenance began folds in the prefix
-    * table's appended rows + pending tombstones (catch-up). */
-  /** Not DataFrame-memoized — same maintained-index re-resolution
+    * table's appended rows + pending tombstones (catch-up).
+    *
+    * Not DataFrame-memoized — same maintained-index re-resolution
     * contract as [[servedIndex]]. */
   private def kmServedIndexRaw(s: SparkSession, d: String): DataFrame =
     {
@@ -756,10 +750,7 @@ object Similarity {
         s, t, Seq("cell"), IndexBuckets,
         s"kmidx|v2|$d|n=$n|k=${math.min(Dedup.dd7AnchorCount(n), TrainSample.toLong)}" +
           s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}") {
-        // shuffle-hash on the narrow assignment — see servedIndex
-        val base = kmAssignFrame(s, d, normed(s, d)).hint("shuffle_hash")
-          .join(normed(s, d), Seq("vec_id"))
-          .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(0L).as("seq"))
+        val base = kmIndexLandingFrame(s, d)
         if (!prefixMaintained(s, d)) base
         else {
           // catch-up landing (maintenance already ran): corpus rows are
@@ -770,13 +761,20 @@ object Similarity {
           // versions come in with their real seqs
           val liveAt0 = servedIndex(s, d).filter(col("seq") === 0).select(col("vec_id"))
           val app = appendedFromPrefix(s, d).get
-          val appPart = kmAssignFrame(s, d, app.select(col("vec_id"), col("v"), col("nrm")))
-            .join(app, Seq("vec_id"))
+          val appPart = kmAssignFrame(s, d, app)
+            .join(app.select(col("vec_id"), col("seq")), Seq("vec_id"))
             .select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("seq"))
           base.join(liveAt0, Seq("vec_id"), "left_semi").unionByName(appPart)
         }
       }
     }
+
+  /** The corpus-only landing frame of the k-means serving index —
+    * (cell, vec_id, v, nrm, seq = 0) straight from the lazy corpus scan
+    * through [[kmAssignFrame]]: no join, no exchange, and the corpus is
+    * not materialized. The k-means twin of [[prefixIndexLandingFrame]]. */
+  private[graft] def kmIndexLandingFrame(s: SparkSession, d: String): DataFrame =
+    landingRows(kmAssignFrame(s, d, normedLazy(s, d)), 0L)
 
   private def kmServedIndex(s: SparkSession, d: String): DataFrame = {
     val df = kmServedIndexRaw(s, d)
@@ -789,20 +787,7 @@ object Similarity {
     * [[kmServedIndex]] landing; a query's cost is probed cells only
     * (same serving plan as sim2b — In-filter → bucket pruning +
     * row-group skip). Recall-gated like sim3: the landed cells ARE
-    * sim3's cells by deterministic-training construction. */
-  /** The trained quantizer as a driver-resident [[QuantizerKernel]]
-    * (coarse subset + coarse-tagged fine set) — everything is ≤
-    * TrainSample rows, so the whole serving quantizer lives on the
-    * driver. The kernel's tagging is [[Dedup.tagFine]]'s (ccos DESC,
-    * cid ASC) argmax with the same ascending-loop arithmetic, so the
-    * cells match the landed index bit-for-bit. */
-  private def kmLocal(s: SparkSession, d: String): (QuantizerKernel, Int) = {
-    val trained = kmCentroids(s, d)
-    val k1 = Dedup.dd7CoarseCount(trained.length.toLong).toInt
-    val all = trained.map { case (i, v) => Anchor(i.toLong, v, math.sqrt(dotA(v, v))) }
-    (QuantizerKernel(all.take(k1), all), k1)
-  }
-
+    * sim3's cells, placed by the same kernel. */
   val sim3b = QueryDef(
     "sim3b_ann_kmeans_served",
     (s, d) => {
@@ -1284,53 +1269,6 @@ object Similarity {
     val qs = queries.map { case (id, v) => Anchor(id, v, math.sqrt(dotA(v, v))) }.toArray
     val np = if (nprobe > 0) nprobe else defaultNprobe(s, d)
     searchAnchors(s, d, kind, np, qs, rerankPerProbe)
-  }
-
-  /** Phase-timed breakdown of ONE ivfpq serve batch (VERDICT r15 #4:
-    * where does the per-batch floor live?). Times the SAME pieces
-    * [[searchTopk]]("ivfpq") runs: driver probe ranking, driver ADC
-    * tables, index re-resolution, the shortlist (ADC scan + top-k agg)
-    * job, the exact re-rank job, then the unmodified end-to-end serve.
-    * The shortlist persists between its timing and the re-rank's so
-    * the re-rank number excludes shortlist recompute. Profiling only —
-    * the serving path stays [[searchTopk]]. */
-  private[graft] def profileServeIvfpq(
-      s: SparkSession, d: String,
-      queries: Seq[(Long, Array[Double])],
-      nprobe: Int = 0,
-      rerankPerProbe: Int = DefaultRerankPerProbe): Seq[(String, Double)] = {
-    assertLandedForServe(s, d, "ivfpq")
-    val qs = queries.map { case (id, v) => Anchor(id, v, math.sqrt(dotA(v, v))) }.toArray
-    val np = if (nprobe > 0) nprobe else defaultNprobe(s, d)
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val (probes, probeSec) =
-      t(prefixProbes(s, d, np, qs))
-    val (tabs, adcSec) = t(adcTables(s, d, qs))
-    val (_, resolveSec) = t { ivfPqIndex(s, d); servedIndex(s, d) }
-    val ((cands, cells), planSec) = t(ivfPqCands(s, d, np, qs, rerankPerProbe))
-    val candsP = cands.persist()
-    val (nCand, shortlistSec) = t(candsP.count())
-    val (nOut, rerankSec) = t(pqRerank(s, d, candsP, qs, Some(cells)).count())
-    candsP.unpersist()
-    val (nFull, fullSec) = t(searchAnchors(s, d, "ivfpq", np, qs, rerankPerProbe).count())
-    Seq(
-      "nprobe" -> np.toDouble,
-      "queries" -> qs.length.toDouble,
-      "probe_pairs" -> probes.length.toDouble,
-      "probed_cells" -> cells.size.toDouble,
-      "adc_tables" -> tabs.size.toDouble,
-      "driver_probe_ranking_sec" -> probeSec,
-      "driver_adc_tables_sec" -> adcSec,
-      "index_resolve_sec" -> resolveSec,
-      "plan_build_sec" -> planSec,
-      "shortlist_rows" -> nCand.toDouble,
-      "shortlist_job_sec" -> shortlistSec,
-      "rerank_job_sec" -> rerankSec,
-      "out_rows" -> nOut.toDouble,
-      "full_rows" -> nFull.toDouble,
-      "end_to_end_sec" -> fullSec)
   }
 
   /** Exact brute-force top-[[TopK]] for ARBITRARY query vectors (the

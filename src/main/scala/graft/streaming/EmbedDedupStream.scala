@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *  2. LEVEL 1 per-row: rank the K1 = ⌈√K⌉ coarse cells against the
   *     broadcast [[CoarseIndex]] and keep Dd7CoarseProbes of them;
   *  3. LEVEL 2 via a cid-keyed STREAM-STATIC JOIN against
-  *     [[fineCells]] (the topology of the DataFrame reference,
-  *     Dedup.twoLevelRankedTagged's cid join): each joined row carries ONE probed
+  *     [[fineCells]] (the topology of the DataFrame reference's cid
+  *     join, `graft.QuantizerReference.twoLevelRankedTagged` under
+  *     src/test): each joined row carries ONE probed
   *     coarse cell's fine anchors, scores them locally, and keeps that
   *     cell's Dd7Probes best — the global best-Dd7Probes fine cells
   *     are a subset of the per-cell bests, merged per vector by a

@@ -70,6 +70,13 @@ object IndexIngest {
     graft.operators.Similarity.landingRows(
       graft.operators.Similarity.prefixCells(batch.sparkSession, corpusDir, normalized(batch)), seq)
 
+  /** [[assignBatch]] under the frozen trained k-means quantizer
+    * ([[graft.operators.Similarity.kmAssignFrame]]): the same narrow
+    * kernel map, the rows a landed k-means index receives. */
+  private[graft] def kmAssignBatch(batch: DataFrame, corpusDir: String, seq: Long): DataFrame =
+    graft.operators.Similarity.landingRows(
+      graft.operators.Similarity.kmAssignFrame(batch.sparkSession, corpusDir, normalized(batch)), seq)
+
   /** (vec_id, v, nrm) of raw (vec_id, embedding) rows — the corpus
     * landing's cast and norm expressions. */
   private def normalized(batch: DataFrame): DataFrame =
@@ -205,24 +212,16 @@ object IndexIngest {
           } finally { existing.unpersist(); () }
           val assigned = assignBatch(ups, corpusDir, seq)
           graft.sources.Lakehouse.appendBucketed(assigned, table)
-          if (kmT.isDefined || pqT.isDefined) {
+          kmT.foreach(graft.sources.Lakehouse.appendBucketed(kmAssignBatch(ups, corpusDir, seq), _))
+          pqT.foreach { t =>
             // the batch's normalized vectors, same expressions as
             // assignBatch — identical doubles everywhere
-            val e = normalized(ups)
-            kmT.foreach { t =>
-              graft.sources.Lakehouse.appendBucketed(
-                graft.operators.Similarity.kmAssignFrame(s, corpusDir, e)
-                  .join(e, Seq("vec_id"))
-                  .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq")),
-                t)
-            }
-            pqT.foreach { t =>
-              graft.sources.Lakehouse.appendBucketed(
-                assigned.select(col("cell"), col("vec_id"), col("seq"))
-                  .join(graft.operators.Similarity.pqCodeArrays(s, corpusDir, e), Seq("vec_id"))
-                  .select(col("cell"), col("vec_id"), col("codes"), col("seq")),
-                t)
-            }
+            graft.sources.Lakehouse.appendBucketed(
+              assigned.select(col("cell"), col("vec_id"), col("seq"))
+                .join(graft.operators.Similarity.pqCodeArrays(s, corpusDir, normalized(ups)),
+                  Seq("vec_id"))
+                .select(col("cell"), col("vec_id"), col("codes"), col("seq")),
+              t)
           }
           graft.sources.Lakehouse.writeCommits(s, table, batchId, seq, identity)
           kmT.foreach(s.catalog.refreshTable)

@@ -29,18 +29,19 @@ import org.apache.spark.sql.functions._
   *
   * Run: sbt "runMain graft.tools.FkScaleProbe [srcDir]" (default
   * /tmp/scale100d1 = 100× orders). Env: SPARK_GRAFT_INGEST_FILES
-  * (files/trigger, default 4), SPARK_GRAFT_INGEST_DEADLINE_SEC (per-
-  * pass deadline, default 1800), SPARK_GRAFT_PROBE_OUT (artifact dir),
+  * (files/trigger, default 4), SPARK_GRAFT_PROBE_OUT (artifact dir),
   * SPARK_GRAFT_CPUS (local cores = state shards, default nproc),
   * SPARK_GRAFT_ROCKS_MB (RocksDB native-memory bound, default 16384).
   * Artifact: $out/fk_scale.json.
   */
 object FkScaleProbe {
+  /** Per-pass deadline, seconds. */
+  private val DeadlineSec = 1800L
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/tmp/scale100d1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "/tmp")
     val mft = sys.env.getOrElse("SPARK_GRAFT_INGEST_FILES", "4")
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_INGEST_DEADLINE_SEC", "1800").toLong
     // RocksDB's NATIVE allocation stays bounded (rocksdbMemoryMB): a
     // 1000× run holds ~300M state rows, and an uncapped native
     // footprint next to a large JVM heap squeezed the box until a
@@ -112,7 +113,7 @@ object FkScaleProbe {
         finally done.countDown()
       })
       w.setDaemon(true); w.start()
-      done.await(deadlineSec, java.util.concurrent.TimeUnit.SECONDS)
+      done.await(DeadlineSec, java.util.concurrent.TimeUnit.SECONDS)
       val wall = (System.nanoTime() - t0) / 1e9
       val prog = q.recentProgress.toSeq
         .filter(p => p.numInputRows > 0 && p.batchId > startBatch).sortBy(_.batchId)

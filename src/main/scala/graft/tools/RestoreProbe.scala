@@ -32,20 +32,18 @@ import org.apache.spark.sql.functions._
   * Run: sbt "runMain graft.tools.RestoreProbe [srcDir] [stopAfterBatches] [parity]"
   * Env: SPARK_GRAFT_PROBE_OUT (artifact dir, default /tmp),
   * SPARK_GRAFT_INGEST_FILES (files/trigger, default 2),
-  * SPARK_GRAFT_INGEST_DEADLINE_SEC (per-phase deadline, default 1800),
-  * SPARK_GRAFT_INGEST_MAXBUCKET (LSH cap, default DedupStream default),
   * SPARK_GRAFT_CPUS (local cores = state shards, default nproc).
   */
 object RestoreProbe {
+  /** Per-phase deadline, seconds. */
+  private val DeadlineSec = 1800L
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/tmp/scale100d1")
     val stopAfter = args.lift(1).map(_.toInt).getOrElse(10)
     val parity = args.lift(2).contains("parity")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "/tmp")
     val mft = sys.env.getOrElse("SPARK_GRAFT_INGEST_FILES", "2")
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_INGEST_DEADLINE_SEC", "1800").toLong
-    val maxBucket = sys.env.get("SPARK_GRAFT_INGEST_MAXBUCKET").map(_.toInt)
-      .getOrElse(graft.streaming.LshBucketProcessor.DefaultMaxBucket)
     // reclaim dead per-batch shuffle files while the stream runs
     sys.props("spark.cleaner.periodicGC.interval") = "60s"
     val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -77,7 +75,7 @@ object RestoreProbe {
         .option("maxFilesPerTrigger", mft)
         .parquet(path)
       graft.streaming.DedupStream.verifiedPairs(
-        docs.select(col("doc_id"), col("text")), store, maxBucket = maxBucket)
+        docs.select(col("doc_id"), col("text")), store)
     }
 
     /** Start the twin writing pairs into `sink`; stop after
@@ -95,7 +93,7 @@ object RestoreProbe {
       try {
         stopBatches match {
           case Some(n) =>
-            val dl = t0 + deadlineSec * 1_000_000_000L
+            val dl = t0 + DeadlineSec * 1_000_000_000L
             while (q.recentProgress.count(_.numInputRows > 0) < n &&
                 q.exception.isEmpty && System.nanoTime() < dl) {
               if (firstCommitSec < 0 && q.recentProgress.exists(_.numInputRows > 0))
@@ -110,13 +108,13 @@ object RestoreProbe {
             })
             w.setDaemon(true); w.start()
             while (firstCommitSec < 0 && done.getCount > 0 &&
-                (System.nanoTime() - t0) < deadlineSec * 1_000_000_000L) {
+                (System.nanoTime() - t0) < DeadlineSec * 1_000_000_000L) {
               if (q.recentProgress.exists(_.numInputRows > 0))
                 firstCommitSec = (System.nanoTime() - t0) / 1e9
               Thread.sleep(100)
             }
             done.await(
-              math.max(1, deadlineSec - (System.nanoTime() - t0) / 1_000_000_000L),
+              math.max(1, DeadlineSec - (System.nanoTime() - t0) / 1_000_000_000L),
               TimeUnit.SECONDS)
             ()
         }
@@ -160,7 +158,7 @@ object RestoreProbe {
     }
     locally { java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir)); () }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/restore.json"),
-      s"""{"src":"$src","stop_after":$stopAfter,"max_bucket":$maxBucket,${parts.mkString(",")}}\n""")
+      s"""{"src":"$src","stop_after":$stopAfter,"max_bucket":${graft.streaming.LshBucketProcessor.DefaultMaxBucket},${parts.mkString(",")}}\n""")
     println(s"RESTORE artifact $outDir/restore.json")
     Seq(ckpt, pairsDir, refPairsDir).foreach(p => rm(new java.io.File(p)))
     spark.stop()

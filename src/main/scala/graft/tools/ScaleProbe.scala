@@ -36,6 +36,9 @@ import org.apache.spark.sql.functions._
   * (local cores = shuffle partitions, default nproc).
   */
 object ScaleProbe {
+  /** Fraction of vectors planted at controlled cosine (the hard band). */
+  private val HardFrac = 0.02
+
   def main(args: Array[String]): Unit = {
     val N = args.headOption.flatMap(a => scala.util.Try(a.toInt).toOption).getOrElse(10)
     val dupFrac = sys.env.get("SPARK_GRAFT_PROBE_DUP").map(_.toDouble).getOrElse(1.0)
@@ -155,16 +158,14 @@ object ScaleProbe {
       // those and cos≈0 rewrites existed); hard pairs sit near cell
       // boundaries, so served recall genuinely degrades as nprobe drops
       // and the recall/nprobe curve carries information.
-      // SPARK_GRAFT_PROBE_HARD (default 0.02) is the hard fraction.
+      // HardFrac is the hard fraction.
       // The hard band sits ABOVE the dup band; when dup+hard would
       // overflow the hash range the DUP band yields (ADVICE r12: the
       // old `dupCut + hard` layout silently truncated the hard band —
-      // at the dupFrac=1.0 default sel<dupCut always won and
-      // SPARK_GRAFT_PROBE_HARD was ignored entirely). Effective plant
-      // fractions are logged so an artifact's provenance is explicit.
-      val hardFrac = sys.env.get("SPARK_GRAFT_PROBE_HARD").map(_.toDouble).getOrElse(0.02)
-      require(hardFrac >= 0.0 && hardFrac <= 1.0, s"SPARK_GRAFT_PROBE_HARD=$hardFrac out of [0,1]")
-      val hardCnt = math.round(hardFrac * 1000)
+      // at the dupFrac=1.0 default sel<dupCut always won and the hard
+      // fraction was ignored entirely). Effective plant fractions are
+      // logged so an artifact's provenance is explicit.
+      val hardCnt = math.round(HardFrac * 1000)
       val dupCutEmb = math.min(dupCut, 1000L - hardCnt)
       val hardCut = dupCutEmb + hardCnt
       println(s"PROBE plant (per-1000, embeddings): dup=$dupCutEmb hard=$hardCnt " +
@@ -249,18 +250,16 @@ object ScaleProbe {
     // dd7's 100× wall went unnoticed for two rounds)
     final case class Res(sec: Double, rows: Long, error: Option[String])
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Res]
-    // Per-query isolation (default ON): drop the memoized intermediate
+    // Per-query isolation: drop the memoized intermediate
     // frames between queries. The memoized frames are
     // persist(MEMORY_AND_DISK) blocks that accumulate across the whole
     // list — at 100× the storage pool's residue plus one heavy query's
     // execution memory OOM'd a 48g heap mid-list (dd7, which runs clean
     // in a fresh JVM). Isolation also makes each number a STANDALONE
     // cost (td1/td3 pay their full dep chain) — comparable across runs,
-    // not dependent on list order. Set SPARK_GRAFT_PROBE_ISOLATE=false
-    // to measure the shared-memoization schedule instead.
-    val isolate = sys.env.getOrElse("SPARK_GRAFT_PROBE_ISOLATE", "true").toBoolean
+    // not dependent on list order.
     for (name <- targets) {
-      if (isolate) graft.operators.Memo.clearCaches(spark)
+      graft.operators.Memo.clearCaches(spark)
       val t0 = System.nanoTime()
       // per-query catch: one blown query (OOM, disk-full spill) must not
       // kill the rest of the list
@@ -285,7 +284,7 @@ object ScaleProbe {
     }.mkString(",")
     val meta = f""""n":$N,"dup":$dupFrac,"src":${q(src)},"out":${q(Out)},""" +
       f""""shuffle_partitions":$cores,"datagen_sec":$datagenSec%.1f,""" +
-      s""""isolated":$isolate,""" +
+      s""""isolated":true,""" +
       s""""failed":${results.count(_._2.error.isDefined)},"ran":${results.size}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$Out/probe.json"),
       s"{$meta,\"queries\":{$qjson}}\n")

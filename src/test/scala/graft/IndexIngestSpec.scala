@@ -428,13 +428,16 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = Seq((910000L, Array.fill(64)(0.5f)), (910001L, Array.fill(64)(-0.25f)))
       .toDF("vec_id", "embedding")
-    val assigned = IndexIngest.assignBatch(batch, sfDir, 5L)
-    assert(assigned.count() == 2 * Dedup.Dd7Probes)
-    val plan = assigned.queryExecution.executedPlan
-    val wide = plan.collect {
-      case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+    // the prefix append and the k-means append place through the same kernel map
+    for ((kind, assigned) <- Seq("prefix" -> IndexIngest.assignBatch(batch, sfDir, 5L),
+        "k-means" -> IndexIngest.kmAssignBatch(batch, sfDir, 5L))) {
+      assert(assigned.count() == 2 * Dedup.Dd7Probes)
+      val plan = assigned.queryExecution.executedPlan
+      val wide = plan.collect {
+        case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+      }
+      assert(wide.isEmpty, s"the $kind batch assignment plans ${wide.mkString(", ")}:\n$plan")
     }
-    assert(wide.isEmpty, s"the batch assignment plans ${wide.mkString(", ")}:\n$plan")
   }
 }

@@ -56,15 +56,19 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
   test("the prefix landing plan is one narrow pass: no Exchange or join before the staged write") {
     // the quantizer kernel runs as a per-partition map over the corpus
     // scan, so the only shuffle of a landing is the bucketed write's own
-    // bucket repartition
-    val df = Similarity.prefixIndexLandingFrame(spark, sfDir)
-    df.count()
-    val wide = nodes(df.queryExecution.executedPlan).collect {
-      case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+    // bucket repartition — for the prefix and the k-means index alike
+    for ((kind, df) <- Seq("prefix" -> Similarity.prefixIndexLandingFrame(spark, sfDir),
+        "k-means" -> Similarity.kmIndexLandingFrame(spark, sfDir))) {
+      df.count()
+      val wide = nodes(df.queryExecution.executedPlan).collect {
+        case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName
+      }
+      assert(wide.isEmpty,
+        s"the $kind landing plans ${wide.mkString(", ")}:\n${df.queryExecution.executedPlan}")
+      assert(df.schema.toDDL == "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL",
+        s"the $kind landing's DDL changed")
     }
-    assert(wide.isEmpty, s"the landing plans ${wide.mkString(", ")}:\n${df.queryExecution.executedPlan}")
-    assert(df.schema.toDDL == "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL")
   }
 
   test("no matCut consumer plans a SortMergeJoin over an array-carrying side " +

@@ -10,16 +10,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
-/** The prefix quantizer kernel against its DataFrame reference,
-  * `Dedup.twoLevelRankedTagged` over `Dedup.tagFine`, in the regime the
-  * graded fixtures never reach: at n ≤ 2000, K1 = 16 = Dd7CoarseProbes
-  * and every vector probes every coarse cell. Here a seeded, clustered
-  * 20,000-vector corpus gives K = 313 fine anchors under K1 = 18 coarse
-  * ones, so the coarse restriction decides which fine anchors a vector
-  * even sees. Every placement the index uses must reproduce the
-  * reference exactly: the landing rows, a maintenance batch's rows,
-  * `rankedPrefix`, and the routed placement used past the broadcast
-  * bound. */
+/** The quantizer kernel against its DataFrame reference,
+  * [[QuantizerReference.twoLevelRankedTagged]] over
+  * [[QuantizerReference.tagFine]], in the regime the graded fixtures
+  * never reach: at n ≤ 2000, K1 = 16 = Dd7CoarseProbes and every vector
+  * probes every coarse cell. Here a seeded, clustered 20,000-vector
+  * corpus gives K = 313 fine anchors under K1 = 18 coarse ones, so the
+  * coarse restriction decides which fine anchors a vector even sees.
+  * Every placement the indexes use must reproduce the reference
+  * exactly: the prefix landing rows, a maintenance batch's rows,
+  * `rankedPrefix`, the routed placement used past the broadcast bound,
+  * and the same two surfaces under the trained k-means quantizer. */
 class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   private val root = Files.createTempDirectory("graft-kernel")
@@ -77,9 +78,34 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
   private def reference(e: DataFrame): DataFrame = {
     val c = corpus
     val coarse = Dedup.prefixCoarse(c, k1)
-    Dedup.twoLevelRankedTagged(e, Dedup.tagFine(Dedup.prefixFine(c, k), coarse), coarse,
-      Dedup.Dd7Probes)
+    QuantizerReference.twoLevelRankedTagged(e,
+      QuantizerReference.tagFine(Dedup.prefixFine(c, k), coarse), coarse, Dedup.Dd7Probes)
   }
+
+  /** The trained k-means centroids and their coarse count K1 = ⌈√k⌉. */
+  private def trained: (Array[(Int, Array[Double])], Int) = {
+    val t = Similarity.kmCentroids(spark, dir)
+    (t, Dedup.dd7CoarseCount(t.length.toLong).toInt)
+  }
+
+  /** The reference ranking of `e` under the trained k-means quantizer:
+    * coarse = the first K1 centroids, every centroid tagged under them,
+    * norms from the distributed dot. */
+  private def kmReference(e: DataFrame): DataFrame = {
+    import spark.implicits._
+    val (cents, kmK1) = trained
+    def frame(cs: Array[(Int, Array[Double])], id: String, v: String, n: String) =
+      cs.toSeq.toDF("i", "cw").select(col("i").cast("long").as(id), col("cw").as(v),
+        sqrt(graft.functions.VectorExprs.dot(col("cw"), col("cw"))).as(n))
+    val coarse = frame(cents.take(kmK1), "cid", "cv", "cn")
+    QuantizerReference.twoLevelRankedTagged(e,
+      QuantizerReference.tagFine(frame(cents, "aid", "av", "an"), coarse), coarse, Dedup.Dd7Probes)
+  }
+
+  /** Index rows (cell, vec_id, v, nrm, seq) of a reference ranking of `e`. */
+  private def indexRows(ranked: DataFrame, e: DataFrame, seq: Long): DataFrame =
+    ranked.join(e, Seq("vec_id"))
+      .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq"))
 
   private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
     val (g, w) = (got.cache(), want.cache())
@@ -94,9 +120,8 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
   }
 
   test("kernel landing rows equal the reference ranking joined with the vectors") {
-    val want = reference(corpus).join(corpus, Seq("vec_id"))
-      .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(0L).as("seq"))
-    assertSameRows(Similarity.prefixIndexLandingFrame(spark, dir), want, "landing")
+    assertSameRows(Similarity.prefixIndexLandingFrame(spark, dir),
+      indexRows(reference(corpus), corpus, 0L), "landing")
   }
 
   test("rankedPrefix (vec_id, cell, r) equals the reference ranking") {
@@ -107,9 +132,24 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = vectors(77L, N until N + 600).toDF("vec_id", "embedding")
     val e = normed(batch)
-    val want = reference(e).join(e, Seq("vec_id"))
-      .select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(9L).as("seq"))
-    assertSameRows(IndexIngest.assignBatch(batch, dir, 9L), want, "maintenance batch")
+    assertSameRows(IndexIngest.assignBatch(batch, dir, 9L), indexRows(reference(e), e, 9L),
+      "maintenance batch")
+  }
+
+  test("k-means landing rows equal the reference ranking under the trained quantizer") {
+    val (cents, kmK1) = trained
+    assert(kmK1 > Dedup.Dd7CoarseProbes,
+      s"${cents.length} trained centroids give K1 = $kmK1: the coarse restriction is inactive")
+    assertSameRows(Similarity.kmIndexLandingFrame(spark, dir),
+      indexRows(kmReference(corpus), corpus, 0L), "k-means landing")
+  }
+
+  test("a k-means maintenance batch's rows equal the reference ranking of the batch") {
+    import spark.implicits._
+    val batch = vectors(77L, N until N + 600).toDF("vec_id", "embedding")
+    val e = normed(batch)
+    assertSameRows(IndexIngest.kmAssignBatch(batch, dir, 9L), indexRows(kmReference(e), e, 9L),
+      "k-means maintenance batch")
   }
 
   test("the routed placement past the broadcast bound equals the reference ranking") {
