@@ -43,9 +43,48 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"),
     "events" -> Seq("ts"))
 
+  /** Inferred schema per fixture path, with the signature it was
+    * inferred under: the file listing (path, length, mtime) and the
+    * nanosAsLong setting. Inference is a Spark job that reads a footer;
+    * the registry and the ANN path load the same fixtures many times
+    * per session and across sessions, so one inference per path and
+    * listing serves them all. A rewritten fixture changes its listing
+    * and is inferred again. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
+
+  /** The listing half of a fixture's signature; None when `path` is not
+    * a local file or directory (the read then infers every time). */
+  private def listing(path: String): Option[String] = {
+    val root = new java.io.File(path.stripPrefix("file:"))
+    def walk(f: java.io.File): Seq[String] =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).toSeq
+          .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+          .sortBy(_.getName).flatMap(walk)
+      else Seq(s"${f.getPath}:${f.length}:${f.lastModified}")
+    if (root.exists()) Some(walk(root).mkString("\n")) else None
+  }
+
+  /** `spark.read.parquet(path)`, with the schema inferred once per
+    * signature ([[schemas]]). */
+  private def readParquet(spark: SparkSession, path: String): DataFrame =
+    listing(path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val sig = s"${spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")}|$files"
+        Option(schemas.get(path)) match {
+          case Some((`sig`, st)) => spark.read.schema(st).parquet(path)
+          case _ =>
+            val raw = spark.read.parquet(path)
+            schemas.put(path, (sig, raw.schema))
+            raw
+        }
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = readParquet(spark, s"$dir/$name.parquet")
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.LongType
     val converted = tsCols.getOrElse(name, Nil).foldLeft(raw) { (df, c) =>
@@ -74,7 +113,7 @@ object Tables {
     def ns(iso: String): Long =
       java.time.LocalDate.parse(iso).atStartOfDay(java.time.ZoneOffset.UTC)
         .toInstant.getEpochSecond * 1000000000L
-    val raw = s.read.parquet(s"$d/events.parquet")
+    val raw = readParquet(s, s"$d/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.filter(col("ts") >= lit(ns(loIso)) && col("ts") < lit(ns(hiIso)))

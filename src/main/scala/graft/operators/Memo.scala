@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Shared memoization registry for per-(session, dir) intermediate
@@ -7,11 +8,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * table, …). Frames are persist(MEMORY_AND_DISK)-cached and eagerly
   * materialized: the columnar cache compresses, keeps lineage (executor
   * loss recomputes — fault-tolerant, unlike localCheckpoint), and stays
-  * visible to AQE's size estimation. Entries are evicted (and blocks
-  * unpersisted) when their session's application ends, so a long-lived
-  * JVM cycling sessions does not retain block-manager memory without
-  * bound. At production scale these intermediates would be written
-  * tables.
+  * visible to AQE's size estimation. Entries stay until
+  * [[clearCaches]] is called for their session or their application
+  * ends (one listener per `SparkContext` evicts them and unpersists
+  * their blocks then). Ending a session does not free them: a JVM that
+  * cycles sessions on one context must call [[clearCaches]] for each
+  * session it retires. At production scale these intermediates would
+  * be written tables.
   */
 private[graft] object Memo {
 
@@ -25,14 +28,19 @@ private[graft] object Memo {
     c
   }
 
-  private val hooked = scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
+  /** Contexts with an application-end hook: one listener per
+    * `SparkContext`, however many sessions share it. */
+  private val hooked = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkContext]()
 
-  /** Evict every memoized frame belonging to `s` (registered to fire on
-    * application end; callable directly for explicit invalidation).
-    * Unpersists the cached blocks as it drops the entries. */
-  def clearCaches(s: SparkSession): Unit = {
+  /** Evict every memoized frame belonging to `s` (explicit
+    * invalidation). Unpersists the cached blocks as it drops the
+    * entries. */
+  def clearCaches(s: SparkSession): Unit = evict(_ eq s)
+
+  /** Drop (and unpersist) the entries of every session `dead` holds. */
+  private def evict(dead: SparkSession => Boolean): Unit =
     caches.synchronized(caches.toList).foreach(_.filterInPlace { case ((ss, _), v) =>
-      val keep = ss ne s
+      val keep = !dead(ss)
       if (!keep) v match {
         case df: Dataset[_] => df.unpersist(false)
         case (a: Dataset[_], b: Dataset[_]) => a.unpersist(false); b.unpersist(false)
@@ -40,7 +48,6 @@ private[graft] object Memo {
       }
       keep
     })
-  }
 
   /** Cache + eagerly materialize: columnar, compressed, lineage kept. */
   def mat(df: DataFrame): DataFrame = {
@@ -51,12 +58,16 @@ private[graft] object Memo {
 
   def get[V](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
       s: SparkSession, d: String)(build: => V): V = {
-    hooked.getOrElseUpdate(s, {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val sc = s.sparkContext
+    if (hooked.add(sc))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = clearCaches(s)
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          evict(_.sparkContext eq sc)
+          hooked.remove(sc)
+          ()
+        }
       })
-    })
     cache.getOrElseUpdate((s, d), build)
   }
 }

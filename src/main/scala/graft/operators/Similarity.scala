@@ -62,7 +62,7 @@ object Similarity {
     * serve with [[searchTopk]], which refuses rather than building
     * inline. Idempotent: a matching landing re-registers in ~ms. */
   def buildIndex(s: SparkSession, d: String, kind: String): Unit = kind match {
-    case "prefix" => servedIndex(s, d); ()
+    case "prefix" => prefixIndexTable(s, d); ()
     case "kmeans" => kmServedIndex(s, d); ()
     case "ivfpq"  => ivfPqIndex(s, d); ()
     case other => throw new IllegalArgumentException(s"unknown index kind: $other")
@@ -265,40 +265,24 @@ object Similarity {
     java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
 
-  /** NOT DataFrame-memoized (unlike the corpus-side frames): a held
+  /** The prefix serving index ([[prefixIndexTable]]), tombstone-masked.
+    * NOT DataFrame-memoized (unlike the corpus-side frames): a held
     * Dataset pins the relation's file listing at resolution time, so a
     * serve through it can miss rows a later [[graft.streaming.IndexIngest]]
     * micro-batch appended (observed: refreshTable did not un-pin the
     * held plan). Re-resolving per serve costs one marker read + catalog
     * lookup (~ms) and is what a serving node must do anyway against a
-    * maintained index.
-    *
-    * The landing is one narrow pass: the corpus scan, the quantizer
-    * kernel's per-partition map ([[prefixCells]]) and the bucketed
-    * write, whose one exchange's partition count follows the bytes it
-    * writes (n · Dd7Probes rows of ~8d + 32 B). */
-  private def servedIndex(s: SparkSession, d: String): DataFrame =
-    {
-      val n = corpusN(s, d)
-      val t = s"graft_ann_index_${dirSuffix(d)}"
-      // landBucketed: a later JVM finding the fingerprint-stamped
-      // landing registers it instead of re-quantizing the corpus — the
-      // by-name body (and the kernel map behind it) never runs.
-      // `seq` = 0 marks corpus rows; maintenance appends carry their
-      // batch seq (IndexIngest), and tombstoned versions (deleted or
-      // upserted ids since the last compaction) are masked at read.
-      val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
-      val staged = n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
-      val df = graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), IndexBuckets, fp, staged)(
-        prefixIndexLandingFrame(s, d))
-      graft.sources.Lakehouse.maskTombstones(s, t, df, "vec_id")
-    }
+    * maintained index. */
+  private def servedIndex(s: SparkSession, d: String): DataFrame = {
+    val t = prefixIndexTable(s, d)
+    graft.sources.Lakehouse.maskTombstones(s, t, s.table(t), "vec_id")
+  }
 
   /** The corpus-only landing frame of the prefix serving index —
     * (cell, vec_id, v, nrm, seq = 0) straight from the corpus scan
     * through [[prefixCells]]: no join, no exchange before the staged
     * write (MatCutPlanAuditSpec pins the plan). Extracted from
-    * [[servedIndex]]'s landBucketed body so specs can audit the landing
+    * [[prefixIndexTable]]'s landBucketed body so specs can audit the landing
     * plan and rows without landing. */
   private[graft] def prefixIndexLandingFrame(s: SparkSession, d: String): DataFrame =
     landingRows(prefixCells(s, d, normedLazy(s, d)), 0L)
@@ -313,10 +297,29 @@ object Similarity {
     * into. The quantizer is FROZEN at landing (standard IVF add
     * semantics: adding vectors never retrains the coarse structure),
     * so appended rows extend the table under the same cells and the
-    * landing fingerprint stays valid. */
+    * landing fingerprint stays valid. Only the catalog entry is
+    * resolved: no tombstone mask is built ([[servedIndex]] does that
+    * per serve).
+    *
+    * The landing is one narrow pass: the corpus scan, the quantizer
+    * kernel's per-partition map ([[prefixCells]]) and the bucketed
+    * write, whose one exchange's partition count follows the bytes it
+    * writes (n · Dd7Probes rows of ~8d + 32 B). */
   private[graft] def prefixIndexTable(s: SparkSession, d: String): String = {
-    servedIndex(s, d)
-    s"graft_ann_index_${dirSuffix(d)}"
+    val n = corpusN(s, d)
+    val t = s"graft_ann_index_${dirSuffix(d)}"
+    // landBucketed: a later JVM finding the fingerprint-stamped
+    // landing registers it instead of re-quantizing the corpus — the
+    // by-name body (and the kernel map behind it) never runs.
+    // `seq` = 0 marks corpus rows; maintenance appends carry their
+    // batch seq (IndexIngest), and tombstoned versions (deleted or
+    // upserted ids since the last compaction) are masked at read
+    // ([[servedIndex]]).
+    val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
+    val staged = n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
+    graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), IndexBuckets, fp, staged)(
+      prefixIndexLandingFrame(s, d))
+    t
   }
 
   /** The km / composed-IVF+PQ table handles FOR MAINTENANCE: Some(name)
@@ -395,29 +398,39 @@ object Similarity {
     * instead of scanning the corpus prefix (VERDICT r12 #3). */
   private val coarseLocalCache = Memo.newCache[Array[Anchor]]()
   private def coarsePrefixLocal(s: SparkSession, d: String): Array[Anchor] =
+    coarseOr(s, d)(Dedup.prefixCoarse(normedLazy(s, d), prefixCoarseCount(s, d))
+      .select(col("cid"), col("cv"), col("cn")).collect().map(anchorOf))
+
+  private def prefixCoarseCount(s: SparkSession, d: String): Long =
+    Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
+
+  /** The memoized coarse anchors: from the sidecar when it holds them,
+    * else `collected` — persisted to the sidecar for the next session. */
+  private def coarseOr(s: SparkSession, d: String)(collected: => Array[Anchor]): Array[Anchor] =
     Memo.get(coarseLocalCache, s, d) {
       QuantizerStore.load(s, d).flatMap(_.coarse).getOrElse {
-        val k1 = Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
-        val arr = Dedup.prefixCoarse(normedLazy(s, d), k1)
-          .select(col("cid"), col("cv"), col("cn")).collect().map(anchorOf)
+        val arr = collected
         QuantizerStore.update(s, d, corpusN(s, d))(_.copy(coarse = Some(arr)))
         arr
       }
     }
 
   /** The prefix quantizer as one driver-resident [[QuantizerKernel]]
-    * (memoized): the √K coarse anchors plus the K = first-vec_id fine
-    * anchors, read with the `vec_id < K` filter pushed into the corpus
-    * scan (no corpus cache) and tagged on the driver (K·K1 cosines).
-    * FROZEN at first use — maintenance assigns appended vectors under
-    * exactly the anchors the landing used. */
+    * (memoized): the K = first-vec_id fine anchors, read with the
+    * `vec_id < K` filter pushed into the corpus scan (no corpus cache)
+    * and tagged on the driver (K·K1 cosines) under the √K coarse
+    * anchors. The coarse anchors are the first K1 ≤ K vec_ids, so one
+    * collect serves both levels: the coarse ones are the fine rows with
+    * id < K1, in scan order, with the same doubles a coarse-only collect
+    * reads. FROZEN at first use — maintenance assigns appended vectors
+    * under exactly the anchors the landing used. */
   private val kernelCache = Memo.newCache[QuantizerKernel]()
   private[graft] def prefixKernel(s: SparkSession, d: String): QuantizerKernel =
     Memo.get(kernelCache, s, d) {
-      val k = Dedup.dd7AnchorCount(corpusN(s, d))
-      QuantizerKernel(coarsePrefixLocal(s, d),
-        Dedup.prefixFine(normedLazy(s, d), k)
-          .select(col("aid"), col("av"), col("an")).collect().map(anchorOf))
+      val fine = Dedup.prefixFine(normedLazy(s, d), Dedup.dd7AnchorCount(corpusN(s, d)))
+        .select(col("aid"), col("av"), col("an")).collect().map(anchorOf)
+      val k1 = prefixCoarseCount(s, d)
+      QuantizerKernel(coarseOr(s, d)(fine.filter(_.id < k1)), fine)
     }
 
   private val kernelBcCache =
@@ -499,7 +512,9 @@ object Similarity {
     * k-means TrainSample — are used two ways: the distinct cell ids
     * push into the index scan as an In filter (bucket pruning +
     * row-group stats skip every unprobed cell), and the (qid, cell)
-    * pairs become a local relation for the candidate join.
+    * pairs, each carrying its query's vector and norm, become ONE
+    * broadcast local relation for the candidate join (one broadcast,
+    * not a probe one plus a query one).
     *
     * The serving job is ONE scan and ONE exchange: the index rows
     * already carry their vectors co-located with the cell id, so
@@ -516,15 +531,18 @@ object Similarity {
       qs: Array[Anchor]): DataFrame = {
     val cellIds = probeRows.map(_._2).distinct.toSeq
     import s.implicits._
-    val probes = probeRows.toSeq.toDF("qid", "cell")
-    // the query batch broadcasts from the driver-resident anchors —
-    // collected from the same normed frame for the graded queries
-    // (identical doubles), arbitrary caller vectors for searchTopk
-    val q = qs.toSeq.map(a => (a.id, a.v, a.nrm)).toDF("qid", "qv", "qn")
+    // the query vectors ride the probe pairs from the driver-resident
+    // anchors — collected from the same normed frame for the graded
+    // queries (identical doubles), arbitrary caller vectors for
+    // searchTopk
+    val byId = qs.map(a => a.id -> a).toMap
+    val probes = probeRows.toSeq.map { case (qid, cell) =>
+      val a = byId(qid)
+      (qid, cell, a.v, a.nrm)
+    }.toDF("qid", "cell", "qv", "qn")
     val scored = idx.filter(col("cell").isin(cellIds: _*))
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(q), Seq("qid"))
       .withColumn("cos",
         VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
     topkPerQid(scored, distinctIds = true)

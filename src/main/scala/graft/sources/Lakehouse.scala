@@ -444,9 +444,13 @@ object Lakehouse {
   /** Whether `table` has been LANDED in this warehouse (marker file on
     * disk), independent of whether this session has registered it yet.
     * The cheap existence probe maintenance uses to decide which index
-    * landings to extend — it must never trigger a landing itself. */
+    * landings to extend — it must never trigger a landing itself.
+    * Checked under the table's monitor: a compaction swap in this JVM
+    * drops the live marker and renames the stage's into place inside
+    * that monitor, so a serve checking mid-swap waits for the swap
+    * instead of reading the table as never landed. */
   private[graft] def isLanded(s: SparkSession, table: String): Boolean =
-    new java.io.File(warehouseLoc(s, table), "_graft_meta").isFile
+    lockFor(table).synchronized(new java.io.File(warehouseLoc(s, table), "_graft_meta").isFile)
 
   /** Tombstone sidecar location for a maintained table (plain parquet
     * dir — no catalog entry, so it needs no cross-JVM re-registration). */
@@ -463,35 +467,75 @@ object Lakehouse {
       .coalesce(1) // per-batch tombstone sets are small; one sliver file each
       .write.mode(SaveMode.Append).parquet(tombsDir(s, table).toString)
 
+  /** The sidecar's fixed schema: no inference job to read it. */
+  private val TombstoneSchema = StructType(Seq(
+    StructField("id", LongType), StructField("seq", LongType)))
+
+  /** The sidecar's parquet files, sorted by name; empty when no deletes
+    * are pending. */
+  private def tombstoneFiles(s: SparkSession, table: String): Seq[java.io.File] =
+    Option(tombsDir(s, table).listFiles()).toSeq.flatten
+      .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
+
   /** The current tombstone set, or None when no deletes are pending. */
-  private[graft] def tombstones(s: SparkSession, table: String): Option[DataFrame] = {
-    val dir = tombsDir(s, table)
-    if (dir.isDirectory && Option(dir.listFiles()).exists(_.exists(_.getName.endsWith(".parquet"))))
-      Some(s.read.parquet(dir.toString))
-    else None
+  private[graft] def tombstones(s: SparkSession, table: String): Option[DataFrame] =
+    if (tombstoneFiles(s, table).isEmpty) None
+    else Some(s.read.schema(TombstoneSchema).parquet(tombsDir(s, table).toString))
+
+  /** Per sidecar dir: its file listing (name, length, mtime) and the
+    * id → max tombstone seq map read under it. Every serve masks with
+    * this map; it is re-read only when a maintenance batch or a
+    * compaction changes the listing. */
+  private val tombstoneMaps =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[(Long, Long)])]()
+
+  /** id → max tombstone seq of `table`'s sidecar, driver-held; empty when
+    * no deletes are pending. One collect of the sidecar rows when its
+    * listing changed since the last call, none otherwise. */
+  private[graft] def tombstoneMap(s: SparkSession, table: String): Array[(Long, Long)] = {
+    val dir = tombsDir(s, table).getPath
+    val files = tombstoneFiles(s, table)
+    if (files.isEmpty) { tombstoneMaps.remove(dir); Array.empty }
+    else {
+      val listing = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("\n")
+      Option(tombstoneMaps.get(dir)) match {
+        case Some((`listing`, m)) => m
+        case _ =>
+          val m = s.read.schema(TombstoneSchema).parquet(files.map(_.getPath): _*).collect()
+            .map(r => (r.getLong(0), r.getLong(1)))
+            .groupMapReduce(_._1)(_._2)(math.max).toArray.sortBy(_._1)
+          tombstoneMaps.put(dir, (listing, m))
+          m
+      }
+    }
   }
 
   /** `df` (rows of `table`, carrying a bigint `seq` column) with
     * tombstoned rows masked out: a row is live iff its seq is >= every
-    * tombstone seq recorded for its id. The tombstone set is bounded by
-    * deletes + re-upserts of EXISTING ids since the last compaction —
+    * tombstone seq recorded for its id. The id → max seq map is held on
+    * the driver ([[tombstoneMap]]: re-read only when the sidecar's
+    * listing changes) and joins as one broadcast local relation, so a
+    * serve pays no sidecar scan or aggregation while nothing changed.
+    * The tombstone set is bounded by deletes + re-upserts of EXISTING
+    * ids since the last compaction —
     * [[graft.streaming.IndexIngest.maintainPrefixIndex]] existence-
     * filters its tombstones (ADVICE r12), so first-time inserts write
-    * none and the broadcast(tmax) cannot grow with total appended rows
-    * on an insert-heavy stream. It still grows with update/delete
-    * volume, so a compaction cadence bounds it; the mask disappears
-    * entirely (df returned as-is) when no tombstones are pending. */
+    * none and the map cannot grow with total appended rows on an
+    * insert-heavy stream. It still grows with update/delete volume, so
+    * a compaction cadence bounds it; the mask disappears entirely (df
+    * returned as-is) when no tombstones are pending. */
   private[graft] def maskTombstones(
-      s: SparkSession, table: String, df: DataFrame, idCol: String): DataFrame =
-    tombstones(s, table) match {
-      case None => df
-      case Some(t) =>
-        val tmax = t.groupBy(col("id")).agg(max(col("seq")).as("__tseq"))
-          .withColumnRenamed("id", idCol)
-        df.join(broadcast(tmax), Seq(idCol), "left_outer")
-          .filter(col("__tseq").isNull || col("seq") >= col("__tseq"))
-          .drop("__tseq")
+      s: SparkSession, table: String, df: DataFrame, idCol: String): DataFrame = {
+    val m = tombstoneMap(s, table)
+    if (m.isEmpty) df
+    else {
+      import s.implicits._
+      val tmax = m.toSeq.toDF(idCol, "__tseq")
+      df.join(broadcast(tmax), Seq(idCol), "left_outer")
+        .filter(col("__tseq").isNull || col("seq") >= col("__tseq"))
+        .drop("__tseq")
     }
+  }
 
   /** Maintenance commit log: (last applied streaming batchId, max issued
     * seq). Lives as `_graft_commits` beside the landing marker, so a

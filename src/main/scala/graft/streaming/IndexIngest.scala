@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -48,10 +48,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    corpora at d = 64): the batch's assignment adds no exchange, no
   *    join and no cached fine table. Past that bound the batch routes
   *    to its coarse cells through [[EmbedDedupStream]]'s cid join;
-  *  - per micro-batch: ONE bucketed append — files land hashed and
-  *    named by bucket id, so bucket pruning and Exchange-free joins
-  *    keep working across old and new rows — plus (when the batch
-  *    deletes/upserts) one small tombstone sliver;
+  *  - per micro-batch: the existence probe on the driver — the
+  *    batch's ids collected, then ONE scan of the table's `vec_id`
+  *    column with those ids pushed in as an IN filter, collecting the
+  *    ids already present — then (when any are) one small tombstone
+  *    sliver written from a local relation, and ONE bucketed append —
+  *    files land hashed and named by bucket id, so bucket pruning and
+  *    Exchange-free joins keep working across old and new rows. The
+  *    quantizer memos are keyed on the stream's own session, so no
+  *    batch re-collects or re-broadcasts the kernel the landing built;
   *  - file slivers (one per bucket per batch) are bounded by
   *    [[graft.sources.Lakehouse.compactMaintained]], the bucketed twin
   *    of the compaction every incremental sink needs.
@@ -65,17 +70,21 @@ object IndexIngest {
     * with the norm computed by the batch pipeline's exact expressions
     * so served cosines are bit-identical for old and new rows. `seq` is
     * the batch's maintenance sequence number (0 for the corpus
-    * landing). */
-  private[graft] def assignBatch(batch: DataFrame, corpusDir: String, seq: Long = 0L): DataFrame =
+    * landing). `s` keys the quantizer memos: the maintenance stream
+    * passes its own session, not the micro-batch's clone, so its first
+    * batch reuses the kernel and the broadcast the landing built. */
+  private[graft] def assignBatch(
+      s: SparkSession, batch: DataFrame, corpusDir: String, seq: Long = 0L): DataFrame =
     graft.operators.Similarity.landingRows(
-      graft.operators.Similarity.prefixCells(batch.sparkSession, corpusDir, normalized(batch)), seq)
+      graft.operators.Similarity.prefixCells(s, corpusDir, normalized(batch)), seq)
 
   /** [[assignBatch]] under the frozen trained k-means quantizer
     * ([[graft.operators.Similarity.kmAssignFrame]]): the same narrow
     * kernel map, the rows a landed k-means index receives. */
-  private[graft] def kmAssignBatch(batch: DataFrame, corpusDir: String, seq: Long): DataFrame =
+  private[graft] def kmAssignBatch(
+      s: SparkSession, batch: DataFrame, corpusDir: String, seq: Long): DataFrame =
     graft.operators.Similarity.landingRows(
-      graft.operators.Similarity.kmAssignFrame(batch.sparkSession, corpusDir, normalized(batch)), seq)
+      graft.operators.Similarity.kmAssignFrame(s, corpusDir, normalized(batch)), seq)
 
   /** (vec_id, v, nrm) of raw (vec_id, embedding) rows — the corpus
     * landing's cast and norm expressions. */
@@ -175,19 +184,7 @@ object IndexIngest {
           // replayed after restart: already applied — skip (idempotence)
         } else {
           val seq = maxSeq + 1
-          val dels = batch.filter(col("embedding").isNull).select(col("vec_id"))
           val ups = batch.filter(col("embedding").isNotNull)
-          // tombstone first, then append with the same seq: if the batch
-          // re-runs after a crash here, the replayed tombstones are
-          // byte-equal (same seq) and mask nothing extra.
-          // Only ids ALREADY IN the table need a tombstone (ADVICE r12:
-          // tombstoning every upsert id made the sidecar — and the
-          // read-side broadcast(tmax) — grow with TOTAL appended rows on
-          // insert-heavy streams; a first-time insert has no older
-          // version to mask). The existence probe is a broadcast
-          // semi-join of the micro-batch's ids against one id column of
-          // the table — batch side broadcasts, table side scans ids
-          // only.
           // sibling index kinds already landed for this corpus receive
           // the SAME maintenance (ADVICE r12: kmeans/ivfpq used to
           // serve stale corpus-only snapshots): frozen-quantizer
@@ -196,23 +193,34 @@ object IndexIngest {
           // at landing time from the prefix table.
           val kmT = graft.operators.Similarity.kmIndexTableIfLanded(s, corpusDir)
           val pqT = graft.operators.Similarity.ivfPqTableIfLanded(s, corpusDir)
-          val batchIds = (if (upserts) batch.select(col("vec_id")) else dels).distinct()
-          // cached: the existence semi-join scans the table once, not
-          // once per sidecar write
-          val existing = s.table(table).select(col("vec_id"))
-            .join(broadcast(batchIds), Seq("vec_id"), "left_semi").distinct()
-            .persist()
-          try {
-            if (!existing.isEmpty) {
-              val trows = existing.select(col("vec_id").as("id"), lit(seq).as("seq"))
-              graft.sources.Lakehouse.appendTombstones(s, table, trows)
-              kmT.foreach(graft.sources.Lakehouse.appendTombstones(s, _, trows))
-              pqT.foreach(graft.sources.Lakehouse.appendTombstones(s, _, trows))
-            }
-          } finally { existing.unpersist(); () }
-          val assigned = assignBatch(ups, corpusDir, seq)
+          // tombstone first, then append with the same seq: if the batch
+          // re-runs after a crash here, the replayed tombstones are
+          // byte-equal (same seq) and mask nothing extra.
+          // Only ids ALREADY IN the table need a tombstone (ADVICE r12:
+          // tombstoning every upsert id made the sidecar — and the
+          // read-side tombstone map — grow with TOTAL appended rows on
+          // insert-heavy streams; a first-time insert has no older
+          // version to mask). The existence probe runs on the driver:
+          // the micro-batch's ids are collected (a batch is driver-sized
+          // by construction), one scan of the table's id column
+          // collects the ones already present (an IN filter pushed into
+          // the scan), and their tombstones are written from a local
+          // relation.
+          val batchIds = (if (upserts) batch else batch.filter(col("embedding").isNull))
+            .select(col("vec_id")).filter(col("vec_id").isNotNull)
+            .collect().map(_.getLong(0)).distinct
+          val existing =
+            if (batchIds.isEmpty) Array.empty[Long]
+            else s.table(table).filter(col("vec_id").isin(batchIds.toSeq: _*))
+              .select(col("vec_id")).collect().map(_.getLong(0)).distinct
+          if (existing.nonEmpty) {
+            import s.implicits._
+            val trows = existing.toSeq.map(id => (id, seq)).toDF("id", "seq")
+            (Seq(table) ++ kmT ++ pqT).foreach(graft.sources.Lakehouse.appendTombstones(s, _, trows))
+          }
+          val assigned = assignBatch(s, ups, corpusDir, seq)
           graft.sources.Lakehouse.appendBucketed(assigned, table)
-          kmT.foreach(graft.sources.Lakehouse.appendBucketed(kmAssignBatch(ups, corpusDir, seq), _))
+          kmT.foreach(graft.sources.Lakehouse.appendBucketed(kmAssignBatch(s, ups, corpusDir, seq), _))
           pqT.foreach { t =>
             // the batch's normalized vectors, same expressions as
             // assignBatch — identical doubles everywhere

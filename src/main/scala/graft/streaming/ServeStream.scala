@@ -19,7 +19,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * is |batch|·√K driver cosines against the resident quantizer, the
   * same bounded pattern every serve call uses), then one
   * probed-cells-only Spark job scores and the top-k rows append to
-  * `sink` tagged with the micro-batch id. Restart semantics: with a
+  * `sink` tagged with the micro-batch id. The probe pairs carry their
+  * query vectors in one broadcast local relation, and a maintained
+  * index's tombstones mask through the driver-held id → max-seq map
+  * ([[graft.sources.Lakehouse.maskTombstones]]), which is re-read
+  * only in the first batch after a maintenance batch or a compaction
+  * changed the sidecar. Restart semantics: with a
   * checkpoint the source replays the last uncommitted batch; the sink
   * append then duplicates that batch's rows, which downstream readers
   * drop by (qid, batch_id) — at-least-once with idempotent-read, the

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * serves from every kind, a deleted one from none.
   *
   * The shape this certifies for 100 TB: per-batch cost must track
-  * BATCH size (quantizer assignment + bounded existence semi-join),
+  * BATCH size (quantizer assignment + the driver-side existence probe),
   * never corpus size, and the sidecar/file gauges must saw-tooth at
   * the compaction cadence instead of growing with total maintained
   * rows.
@@ -78,7 +78,7 @@ object MaintenanceProbe {
     val spark = graft.Graft.session(master = s"local[$cores]", shufflePartitions = cores,
       appName = "MaintenanceProbe")
     // AQE off: a maintenance batch's plan (assignment map, existence
-    // semi-join, bucketed append) is measured as planned, without
+    // probe scan, bucketed append) is measured as planned, without
     // runtime re-planning of the tiny per-batch shuffles
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")

@@ -56,7 +56,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       .map { case (id, v) => (900000L + id, v) }
     // the assignment stage in isolation: Dd7Probes cells per vector
     val batchDf = copies.toDF("vec_id", "embedding")
-    val assigned = IndexIngest.assignBatch(batchDf, corpusDir)
+    val assigned = IndexIngest.assignBatch(spark, batchDf, corpusDir)
     assert(assigned.count() == copies.size * Dedup.Dd7Probes,
       s"assignBatch produced ${assigned.count()} rows")
 
@@ -429,8 +429,8 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     val batch = Seq((910000L, Array.fill(64)(0.5f)), (910001L, Array.fill(64)(-0.25f)))
       .toDF("vec_id", "embedding")
     // the prefix append and the k-means append place through the same kernel map
-    for ((kind, assigned) <- Seq("prefix" -> IndexIngest.assignBatch(batch, sfDir, 5L),
-        "k-means" -> IndexIngest.kmAssignBatch(batch, sfDir, 5L))) {
+    for ((kind, assigned) <- Seq("prefix" -> IndexIngest.assignBatch(spark, batch, sfDir, 5L),
+        "k-means" -> IndexIngest.kmAssignBatch(spark, batch, sfDir, 5L))) {
       assert(assigned.count() == 2 * Dedup.Dd7Probes)
       val plan = assigned.queryExecution.executedPlan
       val wide = plan.collect {

@@ -1,0 +1,205 @@
+package graft
+
+import java.nio.file.Files
+import java.util.SplittableRandom
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import graft.operators.Similarity
+import graft.sources.Lakehouse
+import graft.streaming.{IndexIngest, ServeStream}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+
+/** Spark jobs per call on the ANN path, counted with a `SparkListener`:
+  * the landing of a prefix index, the first maintenance micro-batch
+  * after it, and the first serve micro-batch with tombstones pending —
+  * the three calls of perfbench's `ann_serve_maintain` unit, on a
+  * seeded clustered 20,000-vector corpus. Each job is a scheduler round
+  * trip and, on a cold JVM, a new plan shape to compile, so a job that
+  * recomputes something already known is a cost this spec makes
+  * visible: the counts are pinned, and a change that adds a job fails
+  * here with the call sites of every job listed. Beside them: the
+  * driver-side caches that removed jobs (fixture schemas, the tombstone
+  * map) must notice when the files under them change. */
+class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
+
+  private val root = Files.createTempDirectory("graft-jobs")
+  private val dir = root.toString
+  private val N = 20000
+  private val Dim = 64
+
+  private def sfx(d: String): String = java.security.MessageDigest.getInstance("MD5")
+    .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** Seeded clustered vectors: 48 Gaussian centers plus noise. */
+  private def vectors(seed: Long, ids: Range): Seq[(Long, Array[Float])] = {
+    val rnd = new SplittableRandom(seed)
+    def gauss(): Double = {
+      val u = math.max(rnd.nextDouble(), 1e-12)
+      math.sqrt(-2 * math.log(u)) * math.cos(2 * math.Pi * rnd.nextDouble())
+    }
+    val centers = Array.fill(48, Dim)(gauss())
+    ids.map { i =>
+      val c = centers(rnd.nextInt(centers.length))
+      (i.toLong, Array.tabulate(Dim)(j => (c(j) + 0.35 * gauss()).toFloat))
+    }
+  }
+
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    import spark.implicits._
+    vectors(4244L, 0 until N).toDF("vec_id", "embedding").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+  }
+
+  override protected def afterAll(): Unit =
+    try {
+      spark.sql(s"DROP TABLE IF EXISTS `graft_ann_index_${sfx(dir)}`")
+      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles.foreach(rm)
+        f.delete()
+      }
+      rm(new java.io.File(wh, s"graft_ann_index_${sfx(dir)}"))
+      rm(new java.io.File(wh, s"graft_ann_index_${sfx(dir)}__tombs"))
+      new java.io.File(wh, s"graft_ann_quantizer_${sfx(dir)}.bin").delete()
+      rm(root.toFile)
+    } finally super.afterAll()
+
+  /** Call sites of the jobs `body` starts, on any thread. A marker job
+    * run after the body flushes the listener: the bus delivers events
+    * in order, so once the marker's start arrives every earlier job's
+    * has too. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val marker = s"jobbudget-marker-${System.nanoTime}"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else seen.add(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(callSite))
+    }
+    sc.addSparkListener(l)
+    try {
+      val v = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      (v, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A job's stage name plus the engine frames under it. */
+  private def callSite(st: org.apache.spark.scheduler.StageInfo): String =
+    (st.name +: st.details.split("\n").toSeq
+      .filter(f => f.startsWith("graft.") && !f.contains("JobBudgetSpec")).take(3)).mkString(" <- ")
+
+  private def budget(what: String, jobs: Seq[String], pinned: Int): Unit =
+    assert(jobs.size == pinned,
+      s"$what ran ${jobs.size} jobs, pinned at $pinned:\n  ${jobs.mkString("\n  ")}")
+
+  test("a repeated fixture load runs no schema-inference job") {
+    val d = Files.createTempDirectory("graft-jobs-fixture").toString
+    spark.read.parquet(s"$dir/embeddings.parquet").limit(10)
+      .write.parquet(s"$d/embeddings.parquet")
+    val (_, first) = jobsOf(Tables.embeddings(spark, d))
+    budget("the first fixture load", first, 1)
+    val (again, repeat) = jobsOf(Tables.embeddings(spark, d))
+    budget("a repeated fixture load", repeat, 0)
+    // a new session of the same JVM shares the inferred schema
+    val (_, otherSession) = jobsOf(Tables.embeddings(spark.newSession(), d))
+    budget("a fixture load in a new session", otherSession, 0)
+    assert(again.count() == 10)
+  }
+
+  test("a fixture rewritten with a different schema is inferred again") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-jobs-rewrite").toString
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$d/region.parquet")
+    assert(Tables.region(spark, d).columns.toSeq == Seq("id", "name"))
+    Seq((1L, 2.5, "a")).toDF("id", "score", "name").write.mode("overwrite").parquet(s"$d/region.parquet")
+    val (rewritten, jobs) = jobsOf(Tables.region(spark, d))
+    budget("a load after the rewrite", jobs, 1)
+    assert(rewritten.columns.toSeq == Seq("id", "score", "name"))
+    assert(rewritten.collect().toSeq.map(r => (r.getLong(0), r.getDouble(1))) == Seq((1L, 2.5)))
+  }
+
+  test("land, first maintenance batch and first serve batch stay within their job budgets") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ck = Files.createTempDirectory("graft-jobs-ckpt").toString
+    val sink = s"$ck/serve_sink"
+    val (_, land) = jobsOf(Similarity.buildIndex(spark, dir, "prefix"))
+    val vecSrc = MemoryStream[(Long, Array[Float])]
+    val qSrc = MemoryStream[(Long, Array[Double])]
+    // 6 new ids, 2 re-upserts and 2 deletes of corpus ids: tombstones pend
+    val fresh = vectors(7L, N + 1 to N + 6)
+    val upserts = vectors(8L, 100 until 102)
+    val ops = fresh ++ upserts ++ Seq((200L, null: Array[Float]), (201L, null: Array[Float]))
+    val (maintain, firstBatch) = jobsOf {
+      val m = IndexIngest.maintainPrefixIndex(vecSrc.toDF().toDF("vec_id", "embedding"), dir,
+        checkpointDir = Some(s"$ck/maintain"), compactEvery = Some(4))
+      vecSrc.addData(ops)
+      m.processAllAvailable()
+      m
+    }
+    val queries = vectors(9L, 0 until 10).map { case (i, v) => (-(i + 1), v.map(_.toDouble)) }
+    val (serve, firstServe) = jobsOf {
+      val q = ServeStream.serveTopk(qSrc.toDF().toDF("qid", "embedding"), dir, "prefix", sink,
+        checkpointDir = Some(s"$ck/serve"))
+      qSrc.addData(queries)
+      q.processAllAvailable()
+      q
+    }
+    try {
+      assert(Lakehouse.tombstones(spark, s"graft_ann_index_${sfx(dir)}").isDefined,
+        "the serve batch must run with tombstones pending")
+      assert(spark.read.parquet(sink).count() == 10L * Similarity.TopK)
+      // landing: the corpus's schema inference, its count (map stage +
+      // result), the query-vector collect, ONE quantizer-prefix collect
+      // (fine and coarse anchors), and the bucketed write (map stage +
+      // write)
+      budget("the landing", land, 7)
+      // batch ids, the IN-filtered id scan, the tombstone write and the
+      // bucketed append; the quantizer is the landing's
+      budget("the first maintenance batch", firstBatch, 4)
+      // query collect, tombstone-map read, the probe and tombstone
+      // local-relation broadcasts, the scoring map stage and the sink
+      // write
+      budget("the first serve batch", firstServe, 6)
+    } finally { maintain.stop(); serve.stop() }
+  }
+
+  test("the tombstone map follows the sidecar: a new delete is masked, compaction clears it") {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    Similarity.buildIndex(spark, dir, "prefix")
+    val t = s"graft_ann_index_${sfx(dir)}"
+    val id = 300L
+    val v = vectors(4244L, 0 until N)(id.toInt)._2.map(_.toDouble)
+    def served(): Seq[Long] =
+      Similarity.searchTopk(spark, dir, "prefix", Seq((-1L, v))).orderBy("rank")
+        .collect().map(_.getLong(2)).toSeq
+    assert(served().head == id, "a corpus vector is its own top neighbor")
+    val before = Lakehouse.tombstoneMap(spark, t).toMap // held on the driver from here
+    val src = MemoryStream[(Long, Array[Float])]
+    val m = IndexIngest.maintainPrefixIndex(src.toDF().toDF("vec_id", "embedding"), dir)
+    try { src.addData(Seq((id, null: Array[Float]))); m.processAllAvailable() } finally m.stop()
+    val after = Lakehouse.tombstoneMap(spark, t).toMap
+    assert(after.keySet == before.keySet + id && after(id) > before.getOrElse(id, -1L),
+      s"the new sidecar file is read: $before -> $after")
+    assert(!served().contains(id), "a serve after the delete masks the deleted id")
+    Lakehouse.compactMaintained(spark, t, "vec_id")
+    assert(Lakehouse.tombstoneMap(spark, t).isEmpty)
+    val raw = spark.table(t)
+    assert(Lakehouse.maskTombstones(spark, t, raw, "vec_id") eq raw, "no mask after compaction")
+    assert(spark.table(t).filter(col("vec_id") === id).count() == 0)
+    assert(!served().contains(id))
+  }
+}

@@ -132,7 +132,7 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = vectors(77L, N until N + 600).toDF("vec_id", "embedding")
     val e = normed(batch)
-    assertSameRows(IndexIngest.assignBatch(batch, dir, 9L), indexRows(reference(e), e, 9L),
+    assertSameRows(IndexIngest.assignBatch(spark, batch, dir, 9L), indexRows(reference(e), e, 9L),
       "maintenance batch")
   }
 
@@ -148,7 +148,7 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = vectors(77L, N until N + 600).toDF("vec_id", "embedding")
     val e = normed(batch)
-    assertSameRows(IndexIngest.kmAssignBatch(batch, dir, 9L), indexRows(kmReference(e), e, 9L),
+    assertSameRows(IndexIngest.kmAssignBatch(spark, batch, dir, 9L), indexRows(kmReference(e), e, 9L),
       "k-means maintenance batch")
   }
 
@@ -185,7 +185,7 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
   /** Rows of a seeded maintenance batch, placed by the quantizer. */
   private def batchRows(seed: Long, ids: Range): DataFrame = {
     import spark.implicits._
-    IndexIngest.assignBatch(vectors(seed, ids).toDF("vec_id", "embedding"), dir, 1L)
+    IndexIngest.assignBatch(spark, vectors(seed, ids).toDF("vec_id", "embedding"), dir, 1L)
   }
 
   /** Encodings of every chunk of column `path` in `files`' footers. */
