@@ -122,6 +122,11 @@ object Graft {
       // shuffle partitions reduced back to few, or multi-KB sketch
       // buffers at millions of groups) lower it with spark.conf.set.
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2097152",
+      // the local file system through java.nio: without the native
+      // hadoop library, Hadoop's own forks a chmod per created file and a
+      // readlink per link-status lookup (graft.sources.NioRawLocalFileSystem)
+      "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.NioLocalFs].getName,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val builder = SparkSession.builder()

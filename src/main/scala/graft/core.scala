@@ -129,6 +129,29 @@ object Tables {
     }
   }
 
+  /** Rows of fixture `name` under `dir`, summed over the row groups in
+    * its parquet footers on the driver: no Spark job. The files are the
+    * ones a scan reads (names starting with `_` or `.` are skipped,
+    * subdirectories are walked). */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(s"$dir/$name.parquet")
+    val fs = root.getFileSystem(conf)
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+        .flatMap(files)
+    files(fs.getFileStatus(root)).map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+      finally reader.close()
+    }.sum
+  }
+
   def region(s: SparkSession, d: String)    = load(s, d, "region")
   def nation(s: SparkSession, d: String)    = load(s, d, "nation")
   def customer(s: SparkSession, d: String)  = load(s, d, "customer")

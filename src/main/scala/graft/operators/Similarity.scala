@@ -94,15 +94,15 @@ object Similarity {
   /** Corpus size, memoized per (session, dir): sizes the shared
     * two-level quantizer for sim2/sim3 and dd7/dd9. Loaded from the
     * quantizer sidecar when one matches the corpus signature — a cold
-    * serving session then never scans the corpus for a count; computed
-    * (one count of the embeddings scan — parquet answers it from
-    * footers, so a cold landing does not materialize [[normed]] just to
-    * size K) and persisted otherwise. */
+    * serving session then never scans the corpus for a count; otherwise
+    * summed from the embeddings' parquet footers on the driver
+    * ([[Tables.rowCount]]: no Spark job, and a cold landing does not
+    * materialize [[normed]] just to size K) and persisted. */
   private val nCache = Memo.newCache[Long]()
   private[graft] def corpusN(s: SparkSession, d: String): Long =
     Memo.get(nCache, s, d) {
       QuantizerStore.load(s, d).map(_.n).getOrElse {
-        val n = Tables.embeddings(s, d).count()
+        val n = Tables.rowCount(s, d, "embeddings")
         QuantizerStore.update(s, d, n)(identity)
         n
       }
@@ -248,15 +248,19 @@ object Similarity {
     * to ANN serving). At 100 TB this is the deployable index shape:
     * the quantization pass runs at ingest, and a query's cost is the
     * probed cells' rows, not the corpus. */
-  /** Bucket count for the landed cell-bucketed index tables. 16 suits
-    * the graded fixtures and every probe corpus so far; at big decades
-    * bucket count is a scale lever (files ∝ index bytes / buckets — the
-    * 40M landing's ~300 MB bucket files are where the serve-floor
-    * read-amplification was measured, SERVEPROF_r17_40M; the r18
-    * row-group A/B reproduced that geometry at 4 buckets). The count is
-    * part of every landed table's bucket spec, and dir-keyed probe
-    * corpora keep their landings isolated from the graded fixtures'
-    * tables. */
+  /** The CAP on the bucket count of the landed cell-bucketed index
+    * tables (prefix, k-means, IVF-PQ). Each landing passes the bytes it
+    * writes, and [[graft.sources.Lakehouse.bucketLayout]] sizes it at one
+    * bucket per 64 MB up to this cap: a 20k-vector prefix index (~33 MB)
+    * is one bucket, written by one task and scanned by one task, and a
+    * 5M-vector one (~8 GB) keeps 16 buckets × 8 splits. Past the cap,
+    * files grow with index bytes / buckets — the 40M landing's ~300 MB
+    * bucket files are where the serve-floor read-amplification was
+    * measured (SERVEPROF_r17_40M). The count lands in each table's
+    * bucket spec and marker and stays there: a maintained table keeps
+    * its landing's count until it is re-landed, so a table that grows
+    * past 16 × 64 MB only through appends is a re-land decision, not
+    * something a compaction changes. */
   private[graft] val IndexBuckets: Int = 16
 
   /** Collision-resistant table suffix — same reasoning as
@@ -291,6 +295,12 @@ object Similarity {
   private[graft] def landingRows(cells: DataFrame, seq: Long): DataFrame =
     cells.select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq"))
 
+  /** Bytes a vector-carrying index landing writes: n · Dd7Probes rows
+    * (cell, vec_id, v, nrm, seq) of ~8d + 32 B. Sizes the prefix and
+    * k-means landings ([[IndexBuckets]]). */
+  private def vectorIndexBytes(s: SparkSession, d: String, n: Long): Long =
+    n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
+
   /** Land (or re-register) the prefix-quantizer serving index for
     * `d`'s corpus and return its catalog table name — the handle
     * [[graft.streaming.IndexIngest]] appends newly-ingested vectors
@@ -303,8 +313,8 @@ object Similarity {
     *
     * The landing is one narrow pass: the corpus scan, the quantizer
     * kernel's per-partition map ([[prefixCells]]) and the bucketed
-    * write, whose one exchange's partition count follows the bytes it
-    * writes (n · Dd7Probes rows of ~8d + 32 B). */
+    * write, whose bucket count and one exchange's partition count follow
+    * the bytes it writes ([[vectorIndexBytes]]). */
   private[graft] def prefixIndexTable(s: SparkSession, d: String): String = {
     val n = corpusN(s, d)
     val t = s"graft_ann_index_${dirSuffix(d)}"
@@ -316,9 +326,8 @@ object Similarity {
     // upserted ids since the last compaction) are masked at read
     // ([[servedIndex]]).
     val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
-    val staged = n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
-    graft.sources.Lakehouse.landBucketed(s, t, Seq("cell"), IndexBuckets, fp, staged)(
-      prefixIndexLandingFrame(s, d))
+    graft.sources.Lakehouse.landBucketed(
+      s, t, Seq("cell"), IndexBuckets, fp, vectorIndexBytes(s, d, n))(prefixIndexLandingFrame(s, d))
     t
   }
 
@@ -767,7 +776,8 @@ object Similarity {
       graft.sources.Lakehouse.landBucketed(
         s, t, Seq("cell"), IndexBuckets,
         s"kmidx|v2|$d|n=$n|k=${math.min(Dedup.dd7AnchorCount(n), TrainSample.toLong)}" +
-          s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}") {
+          s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}",
+        vectorIndexBytes(s, d, n)) {
         val base = kmIndexLandingFrame(s, d)
         if (!prefixMaintained(s, d)) base
         else {
@@ -1066,10 +1076,12 @@ object Similarity {
     * (live-at-seq-0 filter + appended versions re-encoded). */
   private def ivfPqIndexRaw(s: SparkSession, d: String): DataFrame = {
     val n = corpusN(s, d)
+    // n · Dd7Probes rows (cell, vec_id, codes, seq): PqM int codes + ~32 B
     graft.sources.Lakehouse.landBucketed(
       s, s"graft_ann_ivfpq_${dirSuffix(d)}", Seq("cell"), IndexBuckets,
       s"ivfpq|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}" +
-        s"|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample") {
+        s"|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample",
+      n * Dedup.Dd7Probes * (4L * PqM + 32L)) {
       val base = ivfPqLandingBase(s, d)
       if (!prefixMaintained(s, d)) base
       else {

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   *    puts one hash exchange in front of it, so every write task holds
   *    rows of one bucket; landings, maintenance appends and the
   *    compaction rewrite all encode each row once, with the same
-  *    table options ([[tableOptions]]).
+  *    table options ([[tableOptions]]). [[landBucketed]] sizes a
+  *    landing's buckets and splits by the bytes it writes
+  *    ([[bucketLayout]]).
   *  - [[compact]] — small-file compaction: rewrite a directory into
   *    size-targeted files. The round-trip answer to incremental sinks
   *    (every micro-batch appends a file per partition; a day of
@@ -186,19 +188,32 @@ object Lakehouse {
     * it is smaller ([[stagedSplits]]). */
   private[graft] val LandSplitsPerBucket: Int = 8
 
-  /** One write task's share of a bucket: at most this many bytes. */
+  /** Most bytes one write task of a bucketed write holds, below the caps. */
   private val SplitBytes: Long = 64L << 20
 
-  /** Write tasks per bucket for a write of `stagedBytes`:
-    * ⌈bytes / (numBuckets · 64 MB)⌉, at least 1 and at most
-    * [[LandSplitsPerBucket]]. A 5M-vector prefix landing (~8 GB) keeps
-    * the full 8 per bucket; a 20k-vector landing or a small compaction
-    * writes one file per bucket, instead of 8× as many tiny tasks and
-    * files. An unknown size (Long.MaxValue) takes the cap. */
-  private[graft] def stagedSplits(stagedBytes: Long, numBuckets: Int): Int = {
-    val perBucket = numBuckets.toLong * SplitBytes
-    val splits = stagedBytes / perBucket + (if (stagedBytes % perBucket == 0) 0 else 1)
-    math.max(1L, math.min(LandSplitsPerBucket.toLong, splits)).toInt
+  private def ceilDiv(a: Long, b: Long): Long = a / b + (if (a % b == 0) 0 else 1)
+
+  /** The sizing rule of a bucketed write of `stagedBytes`: no write task
+    * holds more than 64 MB, until both caps bind. A landing takes
+    * ⌈bytes / 64 MB⌉ buckets, at least 1 and at most `maxBuckets`
+    * ([[bucketLayout]]); splits then fill each bucket, ⌈bytes / (buckets
+    * · 64 MB)⌉ write tasks per bucket, at least 1 and at most
+    * [[LandSplitsPerBucket]] (this function). A compaction keeps its
+    * table's bucket count and sizes only the splits.
+    *
+    * A 20k-vector prefix landing (~33 MB) is one bucket written by one
+    * task; a 5M-vector one (~8 GB) keeps 16 buckets × 8 splits. An
+    * unknown size (Long.MaxValue) takes both caps, so a caller that
+    * passes no size keeps exactly the bucket count it asks for. */
+  private[graft] def stagedSplits(stagedBytes: Long, numBuckets: Int): Int =
+    math.max(1L, math.min(LandSplitsPerBucket.toLong,
+      ceilDiv(stagedBytes, numBuckets.toLong * SplitBytes))).toInt
+
+  /** (buckets, splits per bucket) of a landing of `stagedBytes` under the
+    * cap `maxBuckets` — the bucket half of [[stagedSplits]]'s rule. */
+  private[graft] def bucketLayout(stagedBytes: Long, maxBuckets: Int): (Int, Int) = {
+    val buckets = math.max(1L, math.min(maxBuckets.toLong, ceilDiv(stagedBytes, SplitBytes))).toInt
+    (buckets, stagedSplits(stagedBytes, buckets))
   }
 
   /** Bucketed write behind [[landBucketed]] and the compaction swap:
@@ -245,62 +260,77 @@ object Lakehouse {
     * "persisted" index that re-lands per session is a demo, not an
     * index (VERDICT r10 #2).
     *
+    * Layout: `maxBuckets` is a cap. A fresh landing takes
+    * [[bucketLayout]]`(stagedBytes, maxBuckets)`: one bucket per 64 MB
+    * the caller says it writes, then splits per bucket, so no write task
+    * holds more than 64 MB below the caps. `stagedBytes` is the caller's
+    * size of the rows written (rows × row bytes); a caller that passes
+    * none gets exactly `maxBuckets`.
+    *
     * Mechanics: the landing stamps a `_graft_meta` marker file (hidden
     * from parquet listings by the `_` prefix) into the table location
     * recording the caller's `fingerprint` plus the schema DDL and
-    * bucket spec. A later session finding a matching marker REGISTERS
-    * the existing files instead of rewriting them — `CREATE TABLE ...
-    * USING parquet CLUSTERED BY ... LOCATION ...` restores the bucket
-    * spec in the catalog (bucket ids are recovered from the `_NNNNN`
-    * file-name suffix, so Exchange-free joins and bucket pruning work
-    * exactly as on the writing session). `df` is by-name and never
+    * bucket spec. A later session finding a marker with the same
+    * fingerprint and bucket columns REGISTERS the existing files
+    * instead of rewriting them — `CREATE TABLE ... USING parquet
+    * CLUSTERED BY ... LOCATION ...` restores the bucket spec in the
+    * catalog (bucket ids are recovered from the `_NNNNN` file-name
+    * suffix, so Exchange-free joins and bucket pruning work exactly as
+    * on the writing session). The bucket count registered is the one
+    * the marker RECORDS: layout is a property of the landed files, so a
+    * landing made under another rule or cap keeps its count, its
+    * maintained appends, commit log and tombstones until it is
+    * re-landed. `df` is by-name and never
     * evaluated on the reuse path — the quantization/shuffle job behind
-    * it does not run. A fresh landing goes through
-    * [[writeBucketedStaged]] with the caller's `stagedBytes`.
+    * it does not run.
     *
     * `fingerprint` must capture everything the landed bytes depend on
     * (source dir, corpus size, index formula/version): a mismatch — or
     * a marker-less location — forces a clean re-land. */
   def landBucketed(
       s: SparkSession, table: String,
-      bucketCols: Seq[String], numBuckets: Int,
+      bucketCols: Seq[String], maxBuckets: Int,
       fingerprint: String, stagedBytes: Long = Long.MaxValue)(df: => DataFrame): DataFrame = {
     require(!fingerprint.contains('\n'), "fingerprint must be single-line")
     lockFor(table).synchronized {
       adoptOrphanStage(s, table) // recover a crashed compaction swap first
       val loc = warehouseLoc(s, table)
       val marker = new java.io.File(loc, "_graft_meta")
-      val spec = s"buckets=$numBuckets cols=${bucketCols.mkString(",")}"
+      val cols = bucketCols.mkString(",")
       val recorded: Option[Array[String]] =
         if (marker.isFile)
           Some(new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n", -1))
         else None
       recorded match {
-        case Some(Array(fp, spc, ddl, _*)) if fp == fingerprint && spc == spec =>
+        case Some(Array(fp, BucketSpecLine(n, `cols`), ddl, _*)) if fp == fingerprint =>
           if (!s.catalog.tableExists(table)) {
             val bk = bucketCols.map(c => s"`$c`").mkString(", ")
             val opts = tableOptions(StructType.fromDDL(ddl))
               .map { case (k, v) => s"'$k' '$v'" }.mkString(", ")
             s.sql(
               s"""CREATE TABLE `$table` ($ddl) USING parquet OPTIONS ($opts)
-                 |CLUSTERED BY ($bk) SORTED BY ($bk) INTO $numBuckets BUCKETS
+                 |CLUSTERED BY ($bk) SORTED BY ($bk) INTO $n BUCKETS
                  |LOCATION '${loc.toURI}'""".stripMargin)
           }
           s.table(table)
         case _ =>
           val data = df
-          writeBucketedStaged(data, table, bucketCols, numBuckets, stagedBytes)
+          val (buckets, _) = bucketLayout(stagedBytes, maxBuckets)
+          writeBucketedStaged(data, table, bucketCols, buckets, stagedBytes)
           // a clean re-land invalidates any maintenance sidecar from the
           // previous landing: the commit log died with the location rm in
           // writeBucketed; the tombstone dir lives beside it — clear too
           locally { val td = tombsDir(s, table); if (td.exists()) rmTree(td) }
           java.nio.file.Files.write(marker.toPath,
-            s"$fingerprint\n$spec\n${data.schema.toDDL}".getBytes("UTF-8"))
+            s"$fingerprint\nbuckets=$buckets cols=$cols\n${data.schema.toDDL}".getBytes("UTF-8"))
           stampGeneration(loc) // volume-trigger denominator ([[compactionDue]])
           s.table(table)
       }
     }
   }
+
+  /** The marker's bucket-spec line: `buckets=<count> cols=<c1,c2,...>`. */
+  private val BucketSpecLine = """buckets=(\d+) cols=(.*)""".r
 
   /** Append rows to an existing bucketed table, preserving its bucket
     * layout: `insertInto` carries the catalog table's bucket spec into
@@ -330,8 +360,8 @@ object Lakehouse {
   }
 
   /** Compact a bucketed table in place: rewrite its current rows into
-    * [[stagedSplits]] files per bucket (one below 64 MB a bucket) and
-    * swap. Incremental appends
+    * [[stagedSplits]] files per bucket (one below 64 MB a bucket),
+    * keeping the table's bucket count, and swap. Incremental appends
     * ([[appendBucketed]]) add a file per bucket per batch — a day of
     * 5-minute batches is 288 slivers per bucket, and scan cost is
     * per-file, not per-row; this is the bucketed-table twin of

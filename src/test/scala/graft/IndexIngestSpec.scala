@@ -440,4 +440,61 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(wide.isEmpty, s"the $kind batch assignment plans ${wide.mkString(", ")}:\n$plan")
     }
   }
+
+  test("a landing re-registered under a different bucket count keeps its recorded count and maintained rows") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = Files.createTempDirectory("graft-idx-relayout")
+    val d = root.toString
+    spark.read.parquet(s"$sfDir/embeddings.parquet").write.parquet(s"$d/embeddings.parquet")
+    val sfx = java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    val tbl = s"graft_ann_index_$sfx"
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val loc = new java.io.File(wh, tbl)
+    def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
+    def bucketsOf(t: String): Int = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(t)).bucketSpec.get.numBuckets
+    try {
+      // a landing sized by a fixed count, as before the sizing rule:
+      // same table, fingerprint and rows, no size passed -> 16 buckets
+      val n = spark.read.parquet(s"$d/embeddings.parquet").count()
+      val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
+      Lakehouse.landBucketed(spark, tbl, Seq("cell"), Similarity.IndexBuckets, fp)(
+        Similarity.prefixIndexLandingFrame(spark, d))
+      assert(bucketsOf(tbl) == 16)
+      // maintain one batch: a copy of vector 0 under a fresh id, and a delete
+      val v0 = spark.read.parquet(s"$d/embeddings.parquet").filter(col("vec_id") === 0)
+        .select(col("embedding").cast("array<float>")).as[Array[Float]].head()
+      val src = MemoryStream[(Long, Array[Float])]
+      val q = IndexIngest.maintainPrefixIndex(src.toDF().toDF("vec_id", "embedding"), d)
+      try { src.addData(Seq((990000L, v0), (7L, null: Array[Float]))); q.processAllAvailable() }
+      finally q.stop()
+      val files = loc.listFiles().map(_.getName).toSet
+      // a later JVM: the catalog forgets the table, the files stay
+      val stash = new java.io.File(wh, s"${tbl}__stash")
+      Files.move(loc.toPath, stash.toPath)
+      spark.sql(s"DROP TABLE `$tbl`")
+      Files.move(stash.toPath, loc.toPath)
+      // the sizing rule would land this corpus as one bucket; the
+      // recorded 16 are registered instead, nothing is re-landed
+      assert(Lakehouse.bucketLayout(n * Dedup.Dd7Probes * (8L * v0.length + 32L), Similarity.IndexBuckets)._1 == 1)
+      assert(Similarity.prefixIndexTable(spark, d) == tbl)
+      assert(bucketsOf(tbl) == 16)
+      assert(loc.listFiles().map(_.getName).toSet == files, "the landing was rewritten")
+      assert(new java.io.File(loc, "_graft_commits").isFile, "the commit log was cleared")
+      assert(Lakehouse.tombstones(spark, tbl).isDefined, "the tombstones were cleared")
+      val got = Similarity.searchTopk(spark, d, "prefix", Seq((-1L, v0.map(_.toDouble))))
+        .select(col("neighbor_id")).collect().map(_.getLong(0)).toSet
+      assert(got.contains(990000L), s"the maintained row is not served: $got")
+      val deleted = spark.read.parquet(s"$d/embeddings.parquet").filter(col("vec_id") === 7)
+        .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
+      assert(!Similarity.searchTopk(spark, d, "prefix", Seq((-2L, deleted)))
+        .select(col("neighbor_id")).collect().map(_.getLong(0)).contains(7L), "the delete is not masked")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+      Seq(loc, new java.io.File(wh, s"${tbl}__tombs"), new java.io.File(wh, s"graft_ann_quantizer_$sfx.bin"),
+        root.toFile).foreach(rm)
+    }
+  }
 }

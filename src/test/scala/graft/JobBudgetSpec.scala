@@ -22,7 +22,9 @@ import org.scalatest.BeforeAndAfterAll
   * trip and, on a cold JVM, a new plan shape to compile, so a job that
   * recomputes something already known is a cost this spec makes
   * visible: the counts are pinned, and a change that adds a job fails
-  * here with the call sites of every job listed. Beside them: the
+  * here with the call sites of every job listed. So are the tasks of
+  * the landing's write stage and the serve's scoring stage, which
+  * follow the index's bucket count. Beside them: the
   * driver-side caches that removed jobs (fixture schemas, the tombstone
   * map) must notice when the files under them change. */
 class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
@@ -70,20 +72,28 @@ class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
       rm(root.toFile)
     } finally super.afterAll()
 
-  /** Call sites of the jobs `body` starts, on any thread. A marker job
-    * run after the body flushes the listener: the bus delivers events
-    * in order, so once the marker's start arrives every earlier job's
-    * has too. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+  /** A job as the listener saw it: the call site and task count of the
+    * stage it runs (its last; AQE runs each shuffle map stage as a job
+    * of its own), whether that stage reads a shuffle, and the operator
+    * scopes of its RDDs (a scan's names the table it reads). */
+  private case class Job(site: String, tasks: Int, readsShuffle: Boolean, scopes: String) {
+    override def toString: String = s"$site [$tasks tasks]"
+  }
+
+  /** The jobs `body` starts, on any thread. A marker job run after the
+    * body flushes the listener: the bus delivers events in order, so
+    * once the marker's start arrives every earlier job's has too. */
+  private def jobsOf[T](body: => T): (T, Seq[Job]) = {
     val sc = spark.sparkContext
     val marker = s"jobbudget-marker-${System.nanoTime}"
-    val seen = new ConcurrentLinkedQueue[String]()
+    val seen = new ConcurrentLinkedQueue[Job]()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           markerSeen.countDown()
-        else seen.add(e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(callSite))
+        else e.stageInfos.sortBy(_.stageId).lastOption.foreach(st => seen.add(Job(callSite(st),
+          st.numTasks, st.parentIds.nonEmpty, st.rddInfos.flatMap(_.scope.map(_.toString)).mkString(" "))))
     }
     sc.addSparkListener(l)
     try {
@@ -100,7 +110,7 @@ class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
     (st.name +: st.details.split("\n").toSeq
       .filter(f => f.startsWith("graft.") && !f.contains("JobBudgetSpec")).take(3)).mkString(" <- ")
 
-  private def budget(what: String, jobs: Seq[String], pinned: Int): Unit =
+  private def budget(what: String, jobs: Seq[Job], pinned: Int): Unit =
     assert(jobs.size == pinned,
       s"$what ran ${jobs.size} jobs, pinned at $pinned:\n  ${jobs.mkString("\n  ")}")
 
@@ -161,11 +171,11 @@ class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(Lakehouse.tombstones(spark, s"graft_ann_index_${sfx(dir)}").isDefined,
         "the serve batch must run with tombstones pending")
       assert(spark.read.parquet(sink).count() == 10L * Similarity.TopK)
-      // landing: the corpus's schema inference, its count (map stage +
-      // result), the query-vector collect, ONE quantizer-prefix collect
-      // (fine and coarse anchors), and the bucketed write (map stage +
-      // write)
-      budget("the landing", land, 7)
+      // landing: the corpus's schema inference, the query-vector
+      // collect, ONE quantizer-prefix collect (fine and coarse anchors),
+      // and the bucketed write (map stage + write); the corpus count is
+      // read from the parquet footers on the driver
+      budget("the landing", land, 5)
       // batch ids, the IN-filtered id scan, the tombstone write and the
       // bucketed append; the quantizer is the landing's
       budget("the first maintenance batch", firstBatch, 4)
@@ -173,6 +183,13 @@ class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
       // local-relation broadcasts, the scoring map stage and the sink
       // write
       budget("the first serve batch", firstServe, 6)
+      // ~33 MB of index rows is one bucket: the landing's write stage
+      // (after its one exchange) and the serve's scoring stage (the
+      // stage scanning the index) each run one task
+      val write = land.last
+      assert(write.readsShuffle && write.tasks == 1, s"the landing's write stage: $write")
+      val scoring = firstServe.filter(_.scopes.contains(s"graft_ann_index_${sfx(dir)}"))
+      assert(scoring.map(_.tasks) == Seq(1), s"the serve's scoring stage:\n  ${firstServe.mkString("\n  ")}")
     } finally { maintain.stop(); serve.stop() }
   }
 

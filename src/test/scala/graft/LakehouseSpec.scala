@@ -345,5 +345,21 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
     assert(Lakehouse.stagedSplits(20000L * 3 * row, 16) == 1)                  // 16 partitions
     assert(Lakehouse.stagedSplits(0L, 16) == 1)
     assert(Lakehouse.stagedSplits(Long.MaxValue, 16) == cap) // size unknown: the cap
+    // a landing's layout: one bucket per 64 MB up to the cap, then splits.
+    // staged bytes -> (buckets, splits per bucket) under a 16-bucket cap
+    val mb = 1L << 20
+    val table = Seq(
+      0L -> ((1, 1)),
+      20000L * 3 * row -> ((1, 1)),          // 32.6 MB: a 20k-vector prefix index
+      100 * mb -> ((2, 1)),
+      1024 * mb -> ((16, 1)),
+      8192 * mb -> ((16, 8)),                // ~ a 5M-vector prefix index
+      Long.MaxValue -> ((16, cap)))          // size unknown: cap × cap
+    for ((bytes, layout) <- table)
+      assert(Lakehouse.bucketLayout(bytes, 16) == layout, s"$bytes B")
+    // below both caps no write task holds more than 64 MB
+    for ((bytes, (b, sp)) <- table.init)
+      assert(bytes <= b.toLong * sp * 64 * mb, s"$bytes B in $b x $sp tasks")
+    assert(Lakehouse.bucketLayout(1024 * mb, 4) == ((4, 4)), "a lower cap moves the bytes into splits")
   }
 }

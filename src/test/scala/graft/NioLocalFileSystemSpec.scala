@@ -1,0 +1,79 @@
+package graft
+
+import java.net.URI
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import graft.sources.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.scalatest.BeforeAndAfterAll
+
+/** The session's `file:` FileSystem and FileContext are the java.nio
+  * ones, and they create and stat files as Hadoop's own do. */
+class NioLocalFileSystemSpec extends SparkSpecBase with BeforeAndAfterAll {
+
+  private val root = Files.createTempDirectory("graft-niofs")
+
+  override protected def afterAll(): Unit =
+    try {
+      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
+      rm(root.toFile)
+    } finally super.afterAll()
+
+  private def conf = spark.sessionState.newHadoopConf()
+
+  private def mode(p: java.nio.file.Path): String =
+    PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  /** The rwx string of a Hadoop permission with the conf's umask applied. */
+  private def masked(p: FsPermission): String = p.applyUMask(FsPermission.getUMask(conf)).toString
+
+  test("the session's file: FileSystem and FileContext resolve to the nio classes") {
+    val fs = FileSystem.get(new URI("file:///"), conf)
+    assert(fs.isInstanceOf[NioLocalFileSystem], fs.getClass.getName)
+    assert(fs.asInstanceOf[NioLocalFileSystem].getRawFileSystem.isInstanceOf[NioRawLocalFileSystem])
+    val fc = FileContext.getFileContext(new URI("file:///"), conf)
+    assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs], fc.getDefaultFileSystem.getClass.getName)
+  }
+
+  test("created files and directories get Hadoop's permission bits, umask applied") {
+    val fs = FileSystem.get(new URI("file:///"), conf)
+    val dir = new Path(root.toUri.toString, "a/b")
+    assert(fs.mkdirs(dir))
+    assert(mode(root.resolve("a/b")) == masked(FsPermission.getDirDefault))
+    val file = new Path(dir, "part-0.parquet")
+    val out = fs.create(file)
+    try out.write(Array[Byte](1, 2, 3)) finally out.close()
+    assert(mode(root.resolve("a/b/part-0.parquet")) == masked(FsPermission.getFileDefault))
+    fs.setPermission(file, new FsPermission(Integer.parseInt("640", 8).toShort))
+    assert(mode(root.resolve("a/b/part-0.parquet")) == "rw-r-----")
+    // a missing file is reported as Hadoop reports it
+    intercept[java.io.FileNotFoundException](
+      fs.setPermission(new Path(dir, "missing"), new FsPermission(Integer.parseInt("600", 8).toShort)))
+    // the FileContext path (streaming checkpoints) creates alike
+    val fc = FileContext.getFileContext(new URI("file:///"), conf)
+    val ck = new Path(root.toUri.toString, "ckpt/offsets")
+    fc.mkdir(ck, FsPermission.getDirDefault, true)
+    assert(mode(root.resolve("ckpt/offsets")) == masked(FsPermission.getDirDefault))
+  }
+
+  test("link status: a plain file is its own status, a symlink still resolves as a link") {
+    val fs = FileSystem.get(new URI("file:///"), conf).asInstanceOf[NioLocalFileSystem].getRawFileSystem
+    val hadoop = new org.apache.hadoop.fs.RawLocalFileSystem
+    hadoop.initialize(new URI("file:///"), conf)
+    val target = Files.write(root.resolve("target.txt"), Array[Byte](7, 7))
+    val link = Files.createSymbolicLink(root.resolve("link.txt"), target)
+    def seen(st: org.apache.hadoop.fs.FileStatus) =
+      (st.getPath, st.isSymlink, st.isFile, st.getLen, if (st.isSymlink) st.getSymlink else null)
+    // plain and qualified paths, as Hadoop's own code answers them (its
+    // readlink sees a link only under a plain path)
+    for (p <- Seq(target, link); path <- Seq(new Path(p.toString), new Path(p.toUri)))
+      assert(seen(fs.getFileLinkStatus(path)) == seen(hadoop.getFileLinkStatus(path)), path)
+    val plain = fs.getFileLinkStatus(new Path(target.toString))
+    assert(!plain.isSymlink && plain.isFile && plain.getLen == 2)
+    val st = fs.getFileLinkStatus(new Path(link.toString))
+    assert(st.isSymlink && st.getSymlink.toUri.getPath == target.toString, st)
+    intercept[java.io.FileNotFoundException](fs.getFileLinkStatus(new Path(root.resolve("none").toString)))
+  }
+}

@@ -166,15 +166,23 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     Similarity.buildIndex(spark, dir, "prefix")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val loc = new java.io.File(wh, s"graft_ann_index_$sfx")
-    // ~33 MB written: one split per bucket, so the write leaves one
-    // file per bucket (the 8-split cap left up to 8 per bucket)
-    assert(loc.listFiles().count(_.getName.endsWith(".parquet")) == Similarity.IndexBuckets)
+    // ~33 MB written: below 64 MB, one bucket of one split, so the write
+    // leaves one file
+    val (buckets, splits) = landedLayout
+    assert((buckets, splits) == ((1, 1)))
+    assert(loc.listFiles().count(_.getName.endsWith(".parquet")) == buckets)
     val marker = new java.io.File(loc, "_graft_meta")
-    val Array(fp, _, ddl) = new String(Files.readAllBytes(marker.toPath), "UTF-8").split("\n", -1)
+    val Array(fp, spec, ddl) = new String(Files.readAllBytes(marker.toPath), "UTF-8").split("\n", -1)
     assert(fp == s"annidx|v2|$dir|n=$N|k=$k|p=${Dedup.Dd7Probes}")
+    assert(spec == s"buckets=$buckets cols=cell")
     assert(ddl == "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL")
     assert(spark.table(s"graft_ann_index_$sfx").count() == N.toLong * Dedup.Dd7Probes)
   }
+
+  /** (buckets, splits) of the prefix landing: n · Dd7Probes rows of
+    * 8d + 32 B under the [[Similarity.IndexBuckets]] cap. */
+  private def landedLayout: (Int, Int) =
+    Lakehouse.bucketLayout(N.toLong * Dedup.Dd7Probes * (8L * Dim + 32L), Similarity.IndexBuckets)
 
   private def table: String = s"graft_ann_index_$sfx"
   private def loc: java.io.File = new java.io.File(
@@ -282,7 +290,8 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
       : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] =
     aqe.collect(plan) { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
 
-  /** Exactly one shuffle, hash-partitioned on `cell` into `parts`. */
+  /** Exactly one shuffle, hash-partitioned on `cell` into `parts`; into
+    * one partition Spark plans the same repartition as a single one. */
   private def assertOneCellExchange(plans: Seq[org.apache.spark.sql.execution.SparkPlan],
       parts: Int, what: String): Unit = {
     assert(plans.size == 1, s"$what: ${plans.size} bucketed writes reported")
@@ -292,17 +301,18 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
       case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
         val keys = h.expressions.collect { case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name }
         assert(h.numPartitions == parts && keys == Seq("cell"), s"$what: $h")
+      case org.apache.spark.sql.catalyst.plans.physical.SinglePartition =>
+        assert(parts == 1, s"$what: one partition, expected $parts")
       case p => fail(s"$what: exchange partitions by $p")
     }
   }
 
   test("landing and compaction each write through one cell exchange; compaction leaves splits files per bucket") {
-    val buckets = Similarity.IndexBuckets
+    val (buckets, landSplits) = landedLayout
     // the re-registered table is external: clear its files for a re-land
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     scala.reflect.io.Directory(loc).deleteRecursively()
     val landing = writesInto(table)(Similarity.buildIndex(spark, dir, "prefix"))
-    val landSplits = Lakehouse.stagedSplits(N.toLong * Dedup.Dd7Probes * (8L * Dim + 32L), buckets)
     assertOneCellExchange(landing, buckets * landSplits, "landing")
     assert(dataFiles(loc).size == buckets * landSplits)
     Lakehouse.appendBucketed(batchRows(9L, 920000 until 920200), table)
@@ -318,14 +328,17 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
       ids.groupBy(identity).values.map(_.size).toSet == Set(splits) && ids.toSet.size == buckets,
       s"compacted bucket ids: ${ids.sorted}")
     assert(spark.table(table).count() == (N.toLong + 400) * Dedup.Dd7Probes)
-    // control: the same rewrite fed from the BUCKETED relation loses its
-    // exchange, which is why the compaction reads the table's files
-    val ctl = s"${table}__ctl"
+    // control: the same rewrite fed from a BUCKETED relation loses its
+    // exchange, which is why the compaction reads the table's files. A
+    // one-bucket write plans its repartition as a single partition, not
+    // a hash on cell, so the control runs over a 2-bucket copy
+    val (src, ctl) = (s"${table}__ctl_src", s"${table}__ctl")
     try {
+      Lakehouse.writeBucketedStaged(spark.table(table), src, Seq("cell"), 2, bytes)
       val viaCatalog = writesInto(ctl)(
-        Lakehouse.writeBucketedStaged(spark.table(table), ctl, Seq("cell"), buckets, bytes))
+        Lakehouse.writeBucketedStaged(spark.table(src), ctl, Seq("cell"), 2, bytes))
       assert(viaCatalog.size == 1 && exchanges(viaCatalog.head).isEmpty,
         s"a write over the bucketed relation kept its exchange:\n${viaCatalog.mkString}")
-    } finally spark.sql(s"DROP TABLE IF EXISTS `$ctl`")
+    } finally Seq(src, ctl).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 }
