@@ -18,7 +18,16 @@ import org.apache.spark.sql.SparkSession
   *  - AQE + skew-join: runtime re-planning and hot-key splitting
   *    (SkewOps.saltedJoin covers what AQE can't);
   *  - shuffle partitions sized to the parallelism in use, NOT the 200
-  *    default (32-core local harness → 32; a cluster sizes to executors).
+  *    default (32-core local harness → 32; a cluster sizes to executors);
+  *  - JVM case mapping for `upper`/`lower` on UTF8_BINARY strings
+  *    (`spark.sql.icu.caseMappings.enabled=false`, Spark 3.x's
+  *    behaviour): an ASCII fast path, `java.lang.String` for other text.
+  *    Spark 4.1's ICU default runs, on its first call in a JVM, a static
+  *    initializer that title-cases all 1,114,112 code points: cold, q20
+  *    cost 5.96 s of CPU with it, 1.28 s without (BASELINE.md "q20"). The
+  *    two mappings agree on every sample `CaseMappingSpec` checks
+  *    (ASCII, `ß`, Greek with a final sigma, `İ`/`ı`, accented Latin,
+  *    CJK).
   */
 object Graft {
 
@@ -100,6 +109,8 @@ object Graft {
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      // JVM case mapping, not ICU's (see the object's scaladoc)
+      "spark.sql.icu.caseMappings.enabled" -> "false",
       // ObjectHashAggregate (every TypedImperativeAggregate: the topk /
       // sketch aggs) falls back to SORT-BASED aggregation after 128
       // in-map keys by default — for a high-cardinality group key that

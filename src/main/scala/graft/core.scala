@@ -31,8 +31,17 @@ final case class QueryDef(
   * that scan options stay in one place. At 100 TB these parquet dirs
   * would be partitioned tables; the loaders are the seam where
   * partition pruning / bucketing metadata would attach.
+  *
+  * A fixture's schema is read on the driver from a parquet footer
+  * ([[readParquet]]): the file Spark's own inference would read,
+  * converted with the session's parquet settings. Spark runs that
+  * inference as a job, even for one file.
   */
 object Tables {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.types.StructType
+
   /** Parquet TIMESTAMP(NANOS) columns per table. Spark has no ns
     * timestamp type; we read them as raw ns longs
     * (spark.sql.legacy.parquet.nanosAsLong) and truncate to µs
@@ -43,44 +52,75 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"),
     "events" -> Seq("ts"))
 
-  /** Inferred schema per fixture path, with the signature it was
-    * inferred under: the file listing (path, length, mtime) and the
-    * nanosAsLong setting. Inference is a Spark job that reads a footer;
-    * the registry and the ANN path load the same fixtures many times
-    * per session and across sessions, so one inference per path and
-    * listing serves them all. A rewritten fixture changes its listing
-    * and is inferred again. */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
+  /** Footer schema per fixture path, with the signature it was read
+    * under: the file listing (path, length, mtime) and the nanosAsLong
+    * setting. The registry and the ANN path load the same fixtures many
+    * times per session and across sessions, so one footer read per path
+    * and listing serves them all. A rewritten fixture changes its
+    * listing and is read again. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
-  /** The listing half of a fixture's signature; None when `path` is not
-    * a local file or directory (the read then infers every time). */
-  private def listing(path: String): Option[String] = {
-    val root = new java.io.File(path.stripPrefix("file:"))
-    def walk(f: java.io.File): Seq[String] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
-          .sortBy(_.getName).flatMap(walk)
-      else Seq(s"${f.getPath}:${f.length}:${f.lastModified}")
-    if (root.exists()) Some(walk(root).mkString("\n")) else None
+  private val Summaries = Set("_common_metadata", "_metadata")
+
+  /** The files a parquet scan of `path` lists, sorted by path as
+    * Spark's schema inference sorts them: subdirectories are walked;
+    * names starting with `_` or `.` and in-flight `._COPYING_` copies
+    * are skipped, except partition directories and the
+    * `_metadata`/`_common_metadata` summaries (Spark's
+    * `HadoopFSUtils.shouldFilterOutPathName`). None when `path` cannot
+    * be listed. */
+  private def parquetFiles(conf: Configuration, path: String): Option[Seq[FileStatus]] = {
+    def listed(name: String): Boolean = {
+      val hidden = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+      !hidden || name.startsWith("_common_metadata") || name.startsWith("_metadata")
+    }
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName)).flatMap(leaves)
+      Some(leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString))
+    } catch { case _: java.io.IOException | _: IllegalArgumentException => None }
   }
 
-  /** `spark.read.parquet(path)`, with the schema inferred once per
-    * signature ([[schemas]]). */
-  private def readParquet(spark: SparkSession, path: String): DataFrame =
-    listing(path) match {
-      case None => spark.read.parquet(path)
-      case Some(files) =>
-        val sig = s"${spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")}|$files"
-        Option(schemas.get(path)) match {
-          case Some((`sig`, st)) => spark.read.schema(st).parquet(path)
-          case _ =>
-            val raw = spark.read.parquet(path)
-            schemas.put(path, (sig, raw.schema))
-            raw
-        }
+  /** The data files among [[parquetFiles]]: the summaries left out. */
+  private def dataFiles(files: Seq[FileStatus]): Seq[FileStatus] =
+    files.filterNot(st => Summaries(st.getPath.getName))
+
+  /** The schema Spark's inference gives `files` without schema merging,
+    * read on the driver: the footer of `_common_metadata`, else
+    * `_metadata`, else the first data file (`ParquetUtils.inferSchema`),
+    * converted as `ParquetFileFormat.mergeSchemasInParallel` converts
+    * it. None when there is no file to read. */
+  private def footerSchema(spark: SparkSession, conf: Configuration, files: Seq[FileStatus]): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+      ParquetToSparkSchemaConverter}
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata")).orElse(dataFiles(files).headOption).map { st =>
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new org.apache.parquet.hadoop.Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
+  }
+
+  /** `spark.read.parquet(path)` with the schema read from a footer on
+    * the driver ([[footerSchema]]), once per signature ([[schemas]]).
+    * With schema merging on, or a path that cannot be listed, Spark
+    * infers it as usual. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val listed = if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None else parquetFiles(conf, path)
+    val schema = listed.flatMap { files =>
+      val sig = s"${spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")}|" +
+        files.map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}").mkString("\n")
+      Option(schemas.get(path)).collect { case (`sig`, st) => st }
+        .orElse(footerSchema(spark, conf, files).map { st => schemas.put(path, (sig, st)); st })
+    }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -131,20 +171,13 @@ object Tables {
 
   /** Rows of fixture `name` under `dir`, summed over the row groups in
     * its parquet footers on the driver: no Spark job. The files are the
-    * ones a scan reads (names starting with `_` or `.` are skipped,
-    * subdirectories are walked). */
+    * data files a scan reads ([[parquetFiles]]). */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    def files(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
-        .flatMap(files)
-    files(fs.getFileStatus(root)).map { st =>
+    val path = s"$dir/$name.parquet"
+    val files = parquetFiles(conf, path).getOrElse(throw new java.io.FileNotFoundException(path))
+    dataFiles(files).map { st =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
       try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum

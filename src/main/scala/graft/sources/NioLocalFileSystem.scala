@@ -6,8 +6,8 @@ import java.nio.file.{Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -24,8 +24,12 @@ import org.apache.hadoop.fs.permission.FsPermission
   *    does. A sticky bit, or a file system without POSIX attributes,
   *    falls back to Hadoop's own code.
   *  - [[getFileLinkStatus]]: a path that is not a symbolic link has the
-  *    status of the file itself, as in Hadoop's code; a link falls back
-  *    to it.
+  *    status of the file itself, as in Hadoop's code. A link's status
+  *    has the fields Hadoop's `deprecatedGetFileLinkStatusInternal` sets,
+  *    with the target from `Files.readSymbolicLink`: Hadoop's own code
+  *    runs `readlink` on the path's string, which for a qualified
+  *    `file:/…` path names no file, so it reports the link as a plain
+  *    file.
   *
   * Everything else is Hadoop's. [[graft.Graft.session]] installs it as
   * the `file:` FileSystem ([[NioLocalFileSystem]]) and FileContext
@@ -45,9 +49,23 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     }
   }
 
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
-    else getFileStatus(f)
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val file = pathToFile(f).toPath
+    if (!Files.isSymbolicLink(file)) getFileStatus(f)
+    else {
+      val target = FSLinkResolver.qualifySymlinkTarget(getUri, f, new Path(Files.readSymbolicLink(file).toString))
+      // the fields of what the link points to; a dangling link gets
+      // Hadoop's placeholder ones
+      try {
+        val st = getFileStatus(f)
+        new FileStatus(st.getLen, false, st.getReplication, st.getBlockSize, st.getModificationTime,
+          st.getAccessTime, st.getPermission, st.getOwner, st.getGroup, target, f)
+      } catch {
+        case _: FileNotFoundException =>
+          new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "", target, f)
+      }
+    }
+  }
 }
 
 object NioRawLocalFileSystem {

@@ -580,7 +580,7 @@ object StreamTwins {
     * provenance, sink append semantics). */
   private def replayServe(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val qs = s.read.parquet(s"$d/embeddings.parquet")
+    val qs = Tables.embeddings(s, d)
       .filter(col("vec_id") < graft.operators.Similarity.NumQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])].collect().sortBy(_._1).toVector
@@ -654,7 +654,7 @@ object StreamTwins {
       cp(new java.io.File(s"$d/embeddings.parquet"),
         new java.io.File(s"$tmpRoot/embeddings.parquet"))
     }
-    val qs = s.read.parquet(s"$d/embeddings.parquet")
+    val qs = Tables.embeddings(s, d)
       .filter(col("vec_id") < S.NumQueries)
       .select(col("vec_id"), col("embedding").cast("array<float>"))
       .as[(Long, Array[Float])].collect().sortBy(_._1).toVector

@@ -66,14 +66,26 @@ class NioLocalFileSystemSpec extends SparkSpecBase with BeforeAndAfterAll {
     val link = Files.createSymbolicLink(root.resolve("link.txt"), target)
     def seen(st: org.apache.hadoop.fs.FileStatus) =
       (st.getPath, st.isSymlink, st.isFile, st.getLen, if (st.isSymlink) st.getSymlink else null)
-    // plain and qualified paths, as Hadoop's own code answers them (its
-    // readlink sees a link only under a plain path)
-    for (p <- Seq(target, link); path <- Seq(new Path(p.toString), new Path(p.toUri)))
+    // a plain file under both paths, and a link under a plain path, as
+    // Hadoop's own code answers them
+    for (path <- Seq(new Path(target.toString), new Path(target.toUri), new Path(link.toString)))
       assert(seen(fs.getFileLinkStatus(path)) == seen(hadoop.getFileLinkStatus(path)), path)
     val plain = fs.getFileLinkStatus(new Path(target.toString))
     assert(!plain.isSymlink && plain.isFile && plain.getLen == 2)
-    val st = fs.getFileLinkStatus(new Path(link.toString))
-    assert(st.isSymlink && st.getSymlink.toUri.getPath == target.toString, st)
+    // a link under a qualified path: Hadoop's readlink runs on the
+    // string "file:/…" and reports a plain file; this one is the link
+    for (path <- Seq(new Path(link.toString), new Path(link.toUri))) {
+      val st = fs.getFileLinkStatus(path)
+      assert(st.isSymlink && st.getPath == path && st.getLen == 2, st)
+      assert(st.getSymlink == new Path(target.toUri), st)
+    }
+    // a relative target is qualified against the link's directory; a
+    // dangling link is still a link
+    val rel = Files.createSymbolicLink(root.resolve("rel.txt"), java.nio.file.Paths.get("target.txt"))
+    assert(fs.getFileLinkStatus(new Path(rel.toUri)).getSymlink == new Path(target.toUri))
+    val dangling = Files.createSymbolicLink(root.resolve("dangling.txt"), root.resolve("gone.txt"))
+    val st = fs.getFileLinkStatus(new Path(dangling.toUri))
+    assert(st.isSymlink && st.getLen == 0 && st.getSymlink == new Path(root.resolve("gone.txt").toUri), st)
     intercept[java.io.FileNotFoundException](fs.getFileLinkStatus(new Path(root.resolve("none").toString)))
   }
 }
