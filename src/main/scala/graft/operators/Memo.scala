@@ -35,12 +35,17 @@ private[graft] object Memo {
   /** Evict every memoized frame belonging to `s` (explicit
     * invalidation). Unpersists the cached blocks as it drops the
     * entries. */
-  def clearCaches(s: SparkSession): Unit = evict(_ eq s)
+  def clearCaches(s: SparkSession): Unit = evict(_._1 eq s)
 
-  /** Drop (and unpersist) the entries of every session `dead` holds. */
-  private def evict(dead: SparkSession => Boolean): Unit =
-    caches.synchronized(caches.toList).foreach(_.filterInPlace { case ((ss, _), v) =>
-      val keep = !dead(ss)
+  /** Evict the entries memoized for corpus dir `d` under session `s` —
+    * for a caller that deletes the corpus it memoized (sim2m's temp
+    * copy). */
+  def forget(s: SparkSession, d: String): Unit = evict(k => (k._1 eq s) && k._2 == d)
+
+  /** Drop (and unpersist) every entry whose (session, dir) key is `dead`. */
+  private def evict(dead: ((SparkSession, String)) => Boolean): Unit =
+    caches.synchronized(caches.toList).foreach(_.filterInPlace { case (key, v) =>
+      val keep = !dead(key)
       if (!keep) v match {
         case df: Dataset[_] => df.unpersist(false)
         case (a: Dataset[_], b: Dataset[_]) => a.unpersist(false); b.unpersist(false)
@@ -63,7 +68,7 @@ private[graft] object Memo {
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          evict(_.sparkContext eq sc)
+          evict(_._1.sparkContext eq sc)
           hooked.remove(sc)
           ()
         }

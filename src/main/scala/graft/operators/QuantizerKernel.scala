@@ -115,17 +115,29 @@ object QuantizerKernel {
     * its `depth` best cells under the broadcast kernel, r = 1 for the
     * best. ONE narrow map per partition: no join, no shuffle, and `v`,
     * `nrm` and `vec_id` pass through with their scanned values and
-    * column types (the landed DDL keeps `cell` and `vec_id` nullable). */
+    * column types (the landed DDL keeps `cell` and `vec_id` nullable).
+    * When `e` carries index versions (a `seq` column), `seq` rides the
+    * map beside its vector: (cell, vec_id, v, nrm, seq, r). */
   def cells(e: DataFrame, kernel: Broadcast[QuantizerKernel], depth: Int): DataFrame = {
-    val in = e.select(col("vec_id"), col("v"), col("nrm"))
-    val schema = StructType(Seq(StructField("cell", LongType), in.schema("vec_id"),
-      in.schema("v"), in.schema("nrm"), StructField("r", IntegerType, nullable = false)))
+    val versioned = e.columns.contains("seq")
+    val in = e.select(Seq(col("vec_id"), col("v"), col("nrm")) ++
+      Option.when(versioned)(col("seq")): _*)
+    val schema = StructType(StructField("cell", LongType) +: in.schema.fields :+
+      StructField("r", IntegerType, nullable = false))
     import in.sparkSession.implicits._
-    in.as[(Long, Array[Double], Double)].mapPartitions { rows =>
-      val q = kernel.value
-      rows.flatMap { case (id, v, nrm) =>
-        q.rank(v, nrm, depth).iterator.zipWithIndex.map { case (c, i) => Row(c, id, v, nrm, i + 1) }
-      }
-    }(Encoders.row(schema))
+    if (versioned)
+      in.as[(Long, Array[Double], Double, Long)].mapPartitions { rows =>
+        val q = kernel.value
+        rows.flatMap { case (id, v, nrm, seq) =>
+          q.rank(v, nrm, depth).iterator.zipWithIndex.map { case (c, i) => Row(c, id, v, nrm, seq, i + 1) }
+        }
+      }(Encoders.row(schema))
+    else
+      in.as[(Long, Array[Double], Double)].mapPartitions { rows =>
+        val q = kernel.value
+        rows.flatMap { case (id, v, nrm) =>
+          q.rank(v, nrm, depth).iterator.zipWithIndex.map { case (c, i) => Row(c, id, v, nrm, i + 1) }
+        }
+      }(Encoders.row(schema))
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.VectorExprs
+import graft.functions.{SketchAggs, VectorExprs}
+import graft.sources.Lakehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,17 +43,9 @@ object Similarity {
         "serving with graft.tools.PreLand / Similarity.buildIndex, or pass " +
         "buildIfMissing = true to searchTopk if an inline build is really intended.")
 
-  /** The landed-table name serving kind `kind` for corpus `d`. */
-  private def indexTableFor(d: String, kind: String): String = kind match {
-    case "prefix" => s"graft_ann_index_${dirSuffix(d)}"
-    case "kmeans" => s"graft_ann_km_index_${dirSuffix(d)}"
-    case "ivfpq"  => s"graft_ann_ivfpq_${dirSuffix(d)}"
-    case other => throw new IllegalArgumentException(s"unknown index kind: $other")
-  }
-
   private def assertLandedForServe(s: SparkSession, d: String, kind: String): Unit = {
-    val t = indexTableFor(d, kind)
-    if (!graft.sources.Lakehouse.isLanded(s, t))
+    val t = tableOf(kindOf(kind), d)
+    if (!Lakehouse.isLanded(s, t))
       throw new MissingIndexException(kind, t, d)
   }
 
@@ -61,16 +54,20 @@ object Similarity {
     * call this (or [[graft.tools.PreLand]]) at ingest/deploy time, then
     * serve with [[searchTopk]], which refuses rather than building
     * inline. Idempotent: a matching landing re-registers in ~ms. */
-  def buildIndex(s: SparkSession, d: String, kind: String): Unit = kind match {
-    case "prefix" => prefixIndexTable(s, d); ()
-    case "kmeans" => kmServedIndex(s, d); ()
-    case "ivfpq"  => ivfPqIndex(s, d); ()
-    case other => throw new IllegalArgumentException(s"unknown index kind: $other")
+  def buildIndex(s: SparkSession, d: String, kind: String): Unit = {
+    indexTable(s, d, kindOf(kind)); ()
   }
 
   private def withNorm(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(VectorExprs.dot(col("v"), col("v"))))
+
+  /** Index versions (vec_id, v, nrm, seq) of raw (vec_id, embedding)
+    * rows at maintenance sequence number `seq`: the corpus's cast and
+    * norm expressions, so served cosines are bit-identical for corpus
+    * and appended rows. */
+  private[graft] def versionsOf(df: DataFrame, seq: Long): DataFrame =
+    withNorm(df).withColumn("seq", lit(seq))
 
   /** Normalized corpus, memoized per (session, dir): sim1–sim4 each
     * scan the embeddings table 2–3×; one cached columnar copy serves
@@ -127,8 +124,8 @@ object Similarity {
     * row_number window form shuffles the whole scored set. */
   private def topkPerQid(scored: DataFrame, distinctIds: Boolean = false): DataFrame = {
     val agg =
-      if (distinctIds) graft.functions.SketchAggs.topkDistinct(col("cos"), col("vec_id"), TopK)
-      else graft.functions.SketchAggs.topk(col("cos"), col("vec_id"), TopK)
+      if (distinctIds) SketchAggs.topkDistinct(col("cos"), col("vec_id"), TopK)
+      else SketchAggs.topk(col("cos"), col("vec_id"), TopK)
     scored.groupBy(col("qid"))
       .agg(agg.as("top"))
       .select(col("qid"), posexplode(col("top")))
@@ -241,13 +238,6 @@ object Similarity {
           VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn"))))
   }
 
-  /** One-time cell-bucketed ANN index landing for [[sim2b]]: the
-    * corpus's Dd7Probes multi-assignment joined with its vectors,
-    * written once as a lakehouse table bucketed and sorted on `cell`
-    * (memoized per (session, dir) — the q04b landing pattern applied
-    * to ANN serving). At 100 TB this is the deployable index shape:
-    * the quantization pass runs at ingest, and a query's cost is the
-    * probed cells' rows, not the corpus. */
   /** The CAP on the bucket count of the landed cell-bucketed index
     * tables (prefix, k-means, IVF-PQ). Each landing passes the bytes it
     * writes, and [[graft.sources.Lakehouse.bucketLayout]] sizes it at one
@@ -269,31 +259,128 @@ object Similarity {
     java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
 
-  /** The prefix serving index ([[prefixIndexTable]]), tombstone-masked.
-    * NOT DataFrame-memoized (unlike the corpus-side frames): a held
-    * Dataset pins the relation's file listing at resolution time, so a
-    * serve through it can miss rows a later [[graft.streaming.IndexIngest]]
-    * micro-batch appended (observed: refreshTable did not un-pin the
-    * held plan). Re-resolving per serve costs one marker read + catalog
-    * lookup (~ms) and is what a serving node must do anyway against a
-    * maintained index. */
-  private def servedIndex(s: SparkSession, d: String): DataFrame = {
-    val t = prefixIndexTable(s, d)
-    graft.sources.Lakehouse.maskTombstones(s, t, s.table(t), "vec_id")
+  /** A served ANN index kind: a landed table bucketed and sorted on
+    * `cell`, so a query's cost is its probed cells' rows, not the
+    * corpus. The landing, the catch-up after maintenance began and each
+    * maintenance append all write the kind's ONE row rule:
+    *  - `table`: the table name's prefix (the corpus dir's hash follows);
+    *  - `fingerprint`: what the landed bytes depend on, given the corpus
+    *    dir and size n — a mismatch re-lands ([[Lakehouse.landBucketed]]);
+    *  - `bytes`: the bytes a landing of n vectors writes ([[IndexBuckets]]);
+    *  - `rows`: the row rule — the kind's index rows of versions (vec_id,
+    *    v, nrm, seq) under the FROZEN quantizer (standard IVF add
+    *    semantics: appended rows extend the table under the same cells,
+    *    so the fingerprint stays valid);
+    *  - `landing`: what a (re-)landing writes — the row rule over the
+    *    corpus at seq 0, or over the live versions of the maintained
+    *    prefix index when the kind lands after maintenance began. */
+  private final case class IndexKind(
+      name: String, table: String,
+      fingerprint: (String, Long) => String,
+      bytes: (SparkSession, String, Long) => Long,
+      rows: (SparkSession, String, DataFrame) => DataFrame,
+      landing: (SparkSession, String) => DataFrame)
+
+  private val PrefixKind = IndexKind("prefix", "graft_ann_index_",
+    (d, n) => s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}",
+    vectorIndexBytes, prefixRows, prefixIndexLandingFrame)
+  private val KmKind = IndexKind("kmeans", "graft_ann_km_index_",
+    (d, n) => s"kmidx|v2|$d|n=$n|k=${math.min(Dedup.dd7AnchorCount(n), TrainSample.toLong)}" +
+      s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}",
+    vectorIndexBytes, kmRows,
+    (s, d) => kmRows(s, d, if (prefixMaintained(s, d)) prefixVersions(s, d, 0L).get
+      else corpusVersions(s, d)))
+  // n · Dd7Probes rows (cell, vec_id, codes, seq): PqM int codes + ~32 B
+  private val IvfPqKind = IndexKind("ivfpq", "graft_ann_ivfpq_",
+    (d, n) => s"ivfpq|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}" +
+      s"|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample",
+    (_, _, n) => n * Dedup.Dd7Probes * (4L * PqM + 32L),
+    (s, d, versions) => ivfPqOf(s, d, prefixRows(s, d, versions)), ivfPqLandingFrame)
+  private val Kinds = Seq(PrefixKind, KmKind, IvfPqKind)
+
+  private def kindOf(name: String): IndexKind = Kinds.find(_.name == name)
+    .getOrElse(throw new IllegalArgumentException(s"unknown index kind: $name"))
+
+  private def tableOf(k: IndexKind, d: String): String = k.table + dirSuffix(d)
+
+  /** Land (or re-register) kind `k`'s index for `d`'s corpus and return
+    * its catalog table name — the handle [[graft.streaming.IndexIngest]]
+    * appends into. A later JVM finding the fingerprint-stamped landing
+    * registers it: the by-name landing frame (and the quantization behind
+    * it) never runs. Only the catalog entry is resolved: no tombstone
+    * mask is built ([[servedIndex]] does that per serve). */
+  private def indexTable(s: SparkSession, d: String, k: IndexKind): String = {
+    val n = corpusN(s, d)
+    val t = tableOf(k, d)
+    Lakehouse.landBucketed(s, t, Seq("cell"), IndexBuckets, k.fingerprint(d, n),
+      k.bytes(s, d, n))(k.landing(s, d))
+    t
   }
 
-  /** The corpus-only landing frame of the prefix serving index —
-    * (cell, vec_id, v, nrm, seq = 0) straight from the corpus scan
-    * through [[prefixCells]]: no join, no exchange before the staged
-    * write (MatCutPlanAuditSpec pins the plan). Extracted from
-    * [[prefixIndexTable]]'s landBucketed body so specs can audit the landing
-    * plan and rows without landing. */
-  private[graft] def prefixIndexLandingFrame(s: SparkSession, d: String): DataFrame =
-    landingRows(prefixCells(s, d, normedLazy(s, d)), 0L)
+  /** The prefix index's table, landed first if absent. */
+  private[graft] def prefixIndexTable(s: SparkSession, d: String): String =
+    indexTable(s, d, PrefixKind)
 
-  /** Index rows (cell, vec_id, v, nrm, seq) of a [[prefixCells]] frame. */
-  private[graft] def landingRows(cells: DataFrame, seq: Long): DataFrame =
-    cells.select(col("cell"), col("vec_id"), col("v"), col("nrm"), lit(seq).as("seq"))
+  /** (kind, table) of every index kind LANDED for `d` before this call,
+    * the prefix index first — re-registered, never freshly landed: the
+    * kinds a maintenance batch extends. A kind landed later catches up at
+    * its landing instead. One marker check per kind on the driver: no
+    * Spark job. */
+  private[graft] def landedKinds(s: SparkSession, d: String): Seq[(String, String)] =
+    Kinds.filter(k => Lakehouse.isLanded(s, tableOf(k, d))).map(k => k.name -> indexTable(s, d, k))
+
+  /** Drop every ANN landing of `d`'s corpus — each kind's table, the
+    * fine and flat-PQ tables, their sidecars and the quantizer sidecar,
+    * all named by the dir's hash — and forget what `s` memoized for `d`:
+    * the cleanup of a caller that deletes the corpus it landed. */
+  private[graft] def dropLandings(s: SparkSession, d: String): Unit = {
+    val sfx = dirSuffix(d)
+    val tables = Kinds.map(tableOf(_, d)) ++ Seq("graft_ann_fine_", "graft_ann_pq_codes_").map(_ + sfx)
+    tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+    val wh = new java.io.File(s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    Option(wh.listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("graft_ann_") && f.getName.contains(sfx)).foreach(rm)
+    tables.foreach(Lakehouse.tombstoneMap(s, _)) // an emptied sidecar drops its driver-held map
+    Memo.forget(s, d)
+  }
+
+  /** Kind `kind`'s index rows of `versions` (vec_id, v, nrm, seq). */
+  private[graft] def indexRows(s: SparkSession, d: String, kind: String, versions: DataFrame): DataFrame =
+    kindOf(kind).rows(s, d, versions)
+
+  /** The frame a landing of kind `kind` writes. */
+  private[graft] def landingFrame(s: SparkSession, d: String, kind: String): DataFrame =
+    kindOf(kind).landing(s, d)
+
+  /** Kind `k`'s serving index, tombstone-masked. NOT DataFrame-memoized
+    * (unlike the corpus-side frames): a held Dataset pins the relation's
+    * file listing at resolution time, so a serve through it can miss rows
+    * a later [[graft.streaming.IndexIngest]] micro-batch appended
+    * (observed: refreshTable did not un-pin the held plan). Re-resolving
+    * per serve costs one marker read + catalog lookup (~ms) and is what a
+    * serving node must do anyway against a maintained index. */
+  private def servedIndex(s: SparkSession, d: String, k: IndexKind = PrefixKind): DataFrame = {
+    val t = indexTable(s, d, k)
+    Lakehouse.maskTombstones(s, t, s.table(t), "vec_id")
+  }
+
+  /** The corpus as index versions (vec_id, v, nrm, seq = 0), lazily. */
+  private def corpusVersions(s: SparkSession, d: String): DataFrame =
+    normedLazy(s, d).withColumn("seq", lit(0L))
+
+  /** Prefix index rows (cell, vec_id, v, nrm, seq) of `versions`: each
+    * version in its Dd7Probes cells under the frozen prefix quantizer
+    * ([[prefixCells]]), its vector and seq beside the cell. */
+  private def prefixRows(s: SparkSession, d: String, versions: DataFrame): DataFrame =
+    prefixCells(s, d, versions).select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("seq"))
+
+  /** The corpus-only landing frame of the prefix serving index: one
+    * narrow pass of the corpus scan through the quantizer kernel's
+    * per-partition map, no join and no exchange before the staged write
+    * (MatCutPlanAuditSpec pins the plan). */
+  private[graft] def prefixIndexLandingFrame(s: SparkSession, d: String): DataFrame =
+    prefixRows(s, d, corpusVersions(s, d))
 
   /** Bytes a vector-carrying index landing writes: n · Dd7Probes rows
     * (cell, vec_id, v, nrm, seq) of ~8d + 32 B. Sizes the prefix and
@@ -301,78 +388,27 @@ object Similarity {
   private def vectorIndexBytes(s: SparkSession, d: String, n: Long): Long =
     n * Dedup.Dd7Probes * (8L * corpusDim(s, d) + 32L)
 
-  /** Land (or re-register) the prefix-quantizer serving index for
-    * `d`'s corpus and return its catalog table name — the handle
-    * [[graft.streaming.IndexIngest]] appends newly-ingested vectors
-    * into. The quantizer is FROZEN at landing (standard IVF add
-    * semantics: adding vectors never retrains the coarse structure),
-    * so appended rows extend the table under the same cells and the
-    * landing fingerprint stays valid. Only the catalog entry is
-    * resolved: no tombstone mask is built ([[servedIndex]] does that
-    * per serve).
-    *
-    * The landing is one narrow pass: the corpus scan, the quantizer
-    * kernel's per-partition map ([[prefixCells]]) and the bucketed
-    * write, whose bucket count and one exchange's partition count follow
-    * the bytes it writes ([[vectorIndexBytes]]). */
-  private[graft] def prefixIndexTable(s: SparkSession, d: String): String = {
-    val n = corpusN(s, d)
-    val t = s"graft_ann_index_${dirSuffix(d)}"
-    // landBucketed: a later JVM finding the fingerprint-stamped
-    // landing registers it instead of re-quantizing the corpus — the
-    // by-name body (and the kernel map behind it) never runs.
-    // `seq` = 0 marks corpus rows; maintenance appends carry their
-    // batch seq (IndexIngest), and tombstoned versions (deleted or
-    // upserted ids since the last compaction) are masked at read
-    // ([[servedIndex]]).
-    val fp = s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}"
-    graft.sources.Lakehouse.landBucketed(
-      s, t, Seq("cell"), IndexBuckets, fp, vectorIndexBytes(s, d, n))(prefixIndexLandingFrame(s, d))
-    t
-  }
-
-  /** The km / composed-IVF+PQ table handles FOR MAINTENANCE: Some(name)
-    * — re-registered, never freshly landed — iff the kind was landed
-    * before this call; None means the stream should not (and cannot
-    * cheaply) create it mid-flight. A kind landed LATER still catches
-    * up: its landing body folds in the prefix table's appended rows
-    * ([[appendedFromPrefix]]) and copies its pending tombstones. */
-  private[graft] def kmIndexTableIfLanded(s: SparkSession, d: String): Option[String] = {
-    val t = s"graft_ann_km_index_${dirSuffix(d)}"
-    if (graft.sources.Lakehouse.isLanded(s, t)) { kmServedIndexRaw(s, d); Some(t) } else None
-  }
-  private[graft] def ivfPqTableIfLanded(s: SparkSession, d: String): Option[String] = {
-    val t = s"graft_ann_ivfpq_${dirSuffix(d)}"
-    if (graft.sources.Lakehouse.isLanded(s, t)) { ivfPqIndex(s, d); Some(t) } else None
-  }
-
   /** Whether maintenance has ever applied a batch to `d`'s prefix
-    * index — landed AND at least one issued seq. Gates the catch-up
-    * work in the km/ivfpq landings so a never-maintained corpus (every
-    * graded fixture, every fresh probe) lands exactly the plain
-    * corpus-only body. */
+    * index — landed AND at least one issued seq. Gates the k-means
+    * catch-up so a never-maintained corpus (every graded fixture, every
+    * fresh probe) lands exactly the plain corpus-only pass. */
   private def prefixMaintained(s: SparkSession, d: String): Boolean = {
-    val t = s"graft_ann_index_${dirSuffix(d)}"
-    graft.sources.Lakehouse.isLanded(s, t) &&
-      graft.sources.Lakehouse.readCommits(s, t)._2 > 0
+    val t = tableOf(PrefixKind, d)
+    Lakehouse.isLanded(s, t) && Lakehouse.readCommits(s, t)._2 > 0
   }
 
-  /** Rows a maintenance stream appended to the prefix index —
-    * (vec_id, v, nrm, seq), one row per (id, seq) version, already
-    * tombstone-masked — or None when the prefix index was never landed
-    * (⇒ no maintenance ever ran). The catch-up source for index kinds
-    * landed after maintenance began, and the version-aware vector
-    * source for [[pqRerank]]'s exact re-rank (appended ids are not in
-    * the corpus parquet). Appended files carry only seq > 0 rows and
-    * corpus files only seq = 0, so the filter prunes corpus files via
-    * row-group stats — cost ∝ appended slivers. */
-  private def appendedFromPrefix(s: SparkSession, d: String): Option[DataFrame] = {
-    val t = s"graft_ann_index_${dirSuffix(d)}"
-    if (!graft.sources.Lakehouse.isLanded(s, t)) None
-    else Some(servedIndex(s, d).filter(col("seq") > 0)
-      .select(col("vec_id"), col("v"), col("nrm"), col("seq"))
-      .dropDuplicates("vec_id", "seq"))
-  }
+  /** Live versions (vec_id, v, nrm, seq) with seq ≥ `from` in `d`'s
+    * tombstone-masked prefix index, one row per version (a batch that
+    * carries an id twice lands two versions at one seq) — or None when
+    * the prefix index was never landed (⇒ no maintenance ever ran). The
+    * k-means catch-up landing places every live version (from = 0); the
+    * flat-PQ re-rank fetches appended vectors beside the corpus parquet
+    * (from = 1), where only appended files hold seq > 0 rows, so the
+    * filter prunes corpus files via row-group stats. */
+  private def prefixVersions(s: SparkSession, d: String, from: Long): Option[DataFrame] =
+    if (!Lakehouse.isLanded(s, tableOf(PrefixKind, d))) None
+    else Some(servedIndex(s, d).filter(col("seq") >= from)
+      .select(col("vec_id"), col("v"), col("nrm"), col("seq")).distinct())
 
   /** A quantizer anchor held driver-side: (id, vector, norm). Norms are
     * collected from the distributed frames (never recomputed) so local
@@ -451,9 +487,10 @@ object Similarity {
     Dedup.dd7AnchorCount(corpusN(s, d)) * Dedup.fineAnchorRowBytes(corpusDim(s, d)) <=
       Dedup.BroadcastFineMaxBytes
 
-  /** The prefix assignment of `e` (vec_id, v, nrm): (cell, vec_id, v,
-    * nrm, r) at Dd7Probes depth — the one placement primitive behind the
-    * landing, maintenance batches and [[Dedup.rankedPrefix]]. While the
+  /** The prefix assignment of `e` (vec_id, v, nrm[, seq]): (cell,
+    * vec_id, v, nrm[, seq], r) at Dd7Probes depth — the one placement
+    * primitive behind the landing, maintenance batches and
+    * [[Dedup.rankedPrefix]]. While the
     * kernel fits a broadcast it is ONE narrow per-partition map (no
     * join, no exchange). Past the bound (K beyond ~2^20 anchors at
     * d = 64) no node holds the fine set: the vectors route to their
@@ -468,8 +505,8 @@ object Similarity {
       graft.streaming.EmbedDedupStream.routedCells(
           e.select(col("vec_id"), col("v").as("embedding")), routedIndex(s, d), routedFine(s, d))
         .hint("shuffle_hash")
-        .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-        .select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("r"))
+        .join(e, Seq("vec_id"))
+        .select(col("cell") +: e.columns.toSeq.map(col) :+ col("r"): _*)
     }
 
   /** The routed placement's coarse level, off the memo/sidecar. */
@@ -566,7 +603,7 @@ object Similarity {
   private def fineServedTable(s: SparkSession, d: String): DataFrame = {
     val n = corpusN(s, d)
     val k = Dedup.dd7AnchorCount(n)
-    graft.sources.Lakehouse.landBucketed(
+    Lakehouse.landBucketed(
       s, s"graft_ann_fine_${dirSuffix(d)}", Seq("cid"), 16,
       s"annfine|v1|$d|n=$n|k=$k")(
       routedFine(s, d).select(col("cid"), explode(col("anchors")).as("a"))
@@ -668,7 +705,7 @@ object Similarity {
     * deterministic (fixed iteration order over the sorted sample, fixed
     * init = first k sample vectors), so the trained cells are a pure
     * function of (dir, k, iters) — which is what lets a LANDED k-means
-    * index ([[kmServedIndex]]) be revalidated by fingerprint in a later
+    * index ([[kmRows]]) be revalidated by fingerprint in a later
     * session without retraining drift. */
   private val kmCache = Memo.newCache[Array[(Int, Array[Double])]]()
   private[graft] def kmCentroids(s: SparkSession, d: String): Array[(Int, Array[Double])] =
@@ -753,66 +790,24 @@ object Similarity {
     doc = "k-means IVF (n-scaled k, two-level routing): recall-gated vs sim1"
   )
 
-  /** One-time landing of the k-means corpus assignment (the sim3
-    * analog of [[servedIndex]]): the corpus's Dd7Probes multi-
-    * assignment under the TRAINED cells with its vectors, bucketed and
-    * sorted on `cell`. Valid across sessions because training is
-    * deterministic (see [[kmCentroids]]); the fingerprint re-lands on
-    * any corpus or formula change.
-    *
-    * MAINTAINED like the prefix index (ADVICE r12: kmeans used to
-    * serve a stale corpus-only snapshot after maintenance): rows carry
-    * `seq`, [[graft.streaming.IndexIngest]] appends new vectors under
-    * the frozen trained cells, reads mask tombstoned versions, and a
-    * landing that happens AFTER maintenance began folds in the prefix
-    * table's appended rows + pending tombstones (catch-up).
-    *
-    * Not DataFrame-memoized — same maintained-index re-resolution
-    * contract as [[servedIndex]]. */
-  private def kmServedIndexRaw(s: SparkSession, d: String): DataFrame =
-    {
-      val n = corpusN(s, d)
-      val t = s"graft_ann_km_index_${dirSuffix(d)}"
-      graft.sources.Lakehouse.landBucketed(
-        s, t, Seq("cell"), IndexBuckets,
-        s"kmidx|v2|$d|n=$n|k=${math.min(Dedup.dd7AnchorCount(n), TrainSample.toLong)}" +
-          s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}",
-        vectorIndexBytes(s, d, n)) {
-        val base = kmIndexLandingFrame(s, d)
-        if (!prefixMaintained(s, d)) base
-        else {
-          // catch-up landing (maintenance already ran): corpus rows are
-          // kept only for ids STILL LIVE AT SEQ 0 in the maintained
-          // prefix table (deleted ids absent, upserted ids live at a
-          // higher seq — both post-compaction-safe, since liveness is
-          // read from the masked table, not from sidecars); appended
-          // versions come in with their real seqs
-          val liveAt0 = servedIndex(s, d).filter(col("seq") === 0).select(col("vec_id"))
-          val app = appendedFromPrefix(s, d).get
-          val appPart = kmAssignFrame(s, d, app)
-            .join(app.select(col("vec_id"), col("seq")), Seq("vec_id"))
-            .select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("seq"))
-          base.join(liveAt0, Seq("vec_id"), "left_semi").unionByName(appPart)
-        }
-      }
-    }
-
-  /** The corpus-only landing frame of the k-means serving index —
-    * (cell, vec_id, v, nrm, seq = 0) straight from the lazy corpus scan
-    * through [[kmAssignFrame]]: no join, no exchange, and the corpus is
-    * not materialized. The k-means twin of [[prefixIndexLandingFrame]]. */
-  private[graft] def kmIndexLandingFrame(s: SparkSession, d: String): DataFrame =
-    landingRows(kmAssignFrame(s, d, normedLazy(s, d)), 0L)
-
-  private def kmServedIndex(s: SparkSession, d: String): DataFrame = {
-    val df = kmServedIndexRaw(s, d)
-    graft.sources.Lakehouse.maskTombstones(
-      s, s"graft_ann_km_index_${dirSuffix(d)}", df, "vec_id")
-  }
+  /** k-means index rows (cell, vec_id, v, nrm, seq) of `versions`
+    * (vec_id, v, nrm, seq): each version in its Dd7Probes cells under the
+    * FROZEN trained quantizer ([[kmAssignFrame]]), seq riding the kernel
+    * map. The one placement of the k-means index (the sim3 analog of the
+    * prefix index): the landing places the corpus at seq 0; a landing
+    * after maintenance began places the maintained prefix index's live
+    * versions, so deleted ids stay out and upserted ids land at their
+    * live seq (liveness is read from the masked table, so it holds after
+    * compactions too); each maintenance batch places its versions.
+    * Valid across sessions because training is deterministic (see
+    * [[kmCentroids]]); the fingerprint re-lands on any corpus or formula
+    * change. */
+  private def kmRows(s: SparkSession, d: String, versions: DataFrame): DataFrame =
+    kmAssignFrame(s, d, versions).select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("seq"))
 
   /** sim3b — sim3 SERVED from the persisted k-means index: the corpus
     * assignment (the linear-in-n stage) is read from the one-time
-    * [[kmServedIndex]] landing; a query's cost is probed cells only
+    * k-means index landing ([[kmRows]]); a query's cost is probed cells only
     * (same serving plan as sim2b — In-filter → bucket pruning +
     * row-group skip). Recall-gated like sim3: the landed cells ARE
     * sim3's cells, placed by the same kernel. */
@@ -821,7 +816,7 @@ object Similarity {
     (s, d) => {
       val (kernel, k1) = kmLocal(s, d)
       val probes = probesOf(kernel, math.max(NProbe, k1), queryVecs(s, d))
-      recallGate(s, d, serveTopk(s, d, kmServedIndex(s, d), probes, queryVecs(s, d)))
+      recallGate(s, d, serveTopk(s, d, servedIndex(s, d, KmKind), probes, queryVecs(s, d)))
     },
     sim3.oracle,
     doc = "sim3 served from the persisted k-means cell-bucketed index: probed-cells-only scan"
@@ -877,73 +872,22 @@ object Similarity {
       }
     }
 
-  /** (vec_id, m, sv): `df`'s vectors on the unit sphere (cosine
-    * reduces to dot there — every PQ stage works with plain inner
-    * products), exploded into their PqM sub-vectors. */
-  private def pqSubs(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), expr("transform(v, x -> x / nrm)").as("u"))
-      .select(col("vec_id"), explode(expr(
-          s"transform(sequence(0, ${PqM - 1})," +
-            s" m -> struct(m AS m, slice(u, m * $PqSubDim + 1, $PqSubDim) AS sv))")).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
-
   /** The whole-row PQ encode as one codegen'd expression over (v, nrm)
     * — [[graft.functions.PqEncodeCodes]] holding this corpus's frozen
-    * codebooks (serialized with the plan: M·K·subDim doubles, KBs). */
+    * codebooks (serialized with the plan: M·K·subDim doubles, KBs). The
+    * encode is scan-bound: the M-element code array is computed inside
+    * whole-stage codegen, with no exchange (through round 16 an explode →
+    * codebook join → max_by groupBy form shuffled the corpus twice per
+    * encode; `graft.PqReference` under src/test keeps that form, and
+    * PqEncodeSpec holds the expression to it bit for bit, the max_by
+    * tie-break included). */
   private def pqEncodeCol(s: SparkSession, d: String): org.apache.spark.sql.Column =
     graft.functions.PqEncodeCodes.fromCodebooks(
       col("v"), col("nrm"), pqCodebooks(s, d), PqM, PqSubDim)
 
-  /** Encode `e` (vec_id, v, nrm) against the FROZEN codebooks:
-    * (vec_id, m, cid) — 4 bits per subspace at rest. Linear in |e|;
-    * over the corpus it is the one linear-in-n PQ stage (why sim4b
-    * lands it), over a maintenance micro-batch it is the frozen-
-    * quantizer append encode. SCAN-BOUND (round 17): the per-row
-    * [[pqEncodeCol]] expression computes the code array inside
-    * whole-stage codegen and posexplode unpacks it — zero exchanges,
-    * where the former explode → codebook join → max_by groupBy form
-    * shuffled the corpus once per encode (and its (vec_id, m)-hashed
-    * output forced [[pqCodeArrays]] to shuffle AGAIN to co-locate by
-    * vec_id — together the largest live-shuffle term of the 20M
-    * composed-index landing). [[pqEncodeOfShuffled]] keeps that form
-    * as the executable semantic contract; PqEncodeSpec pins
-    * bit-identity on every path including the max_by tie-break. */
-  private[graft] def pqEncodeOf(s: SparkSession, d: String, e: DataFrame): DataFrame =
-    e.select(col("vec_id"), posexplode(pqEncodeCol(s, d)))
-      .toDF("vec_id", "m", "cid")
-
-  /** The distributed encode this engine used through round 16 — the
-    * executable specification [[pqEncodeOf]] must stay bit-identical
-    * to (sub-vector explode → broadcast codebook join → score =
-    * dot(sv,cv) − dot(cv,cv)/2 → `max_by(cid, struct(score, -cid))`):
-    * equal scores resolve to the SMALLEST cid under Spark's double
-    * ordering (NaN greatest, NaN == NaN, -0.0 == 0.0). Referenced by
-    * PqEncodeSpec only; the serving/landing paths run the expression
-    * form. */
-  private[graft] def pqEncodeOfShuffled(s: SparkSession, d: String, e: DataFrame): DataFrame = {
-    import s.implicits._
-    val cents = pqCodebooks(s, d).toDF("m", "cid", "cv")
-    pqSubs(e).join(broadcast(cents), Seq("m"))
-      .withColumn("score",
-        VectorExprs.dot(col("sv"), col("cv")) -
-          VectorExprs.dot(col("cv"), col("cv")) / 2)
-      .groupBy(col("vec_id"), col("m"))
-      .agg(expr("max_by(cid, struct(score, -cid))").as("cid"))
-  }
-
-  private def pqEncode(s: SparkSession, d: String): DataFrame =
-    pqEncodeOf(s, d, normed(s, d))
-
   /** (vec_id, codes): M-element ordered PQ code array per vector of
-    * `e` — the at-rest shape the composed index stores. One narrow
-    * projection: the [[pqEncodeCol]] expression emits the whole code
-    * array per row inside the scan's codegen stage, so the encode pass
-    * is shuffle-FREE (round 17; through round 16 this was encode-agg
-    * shuffle + vec_id repartition + collect_list fold — 2 corpus-scale
-    * exchanges whose misaligned partial agg OOM'd a 64 GB heap at 20M
-    * until an explicit co-locating repartition was added; the
-    * expression form makes both the exchanges and that co-location
-    * moot). */
+    * `e` (vec_id, v, nrm) — the at-rest shape both PQ tables store. One
+    * narrow projection ([[pqEncodeCol]]). */
   private[graft] def pqCodeArrays(s: SparkSession, d: String, e: DataFrame): DataFrame =
     e.select(col("vec_id"), pqEncodeCol(s, d).as("codes"))
 
@@ -968,18 +912,18 @@ object Similarity {
     //  - otherwise (flat sim4/sim4b, or no landed prefix index): one
     //    broadcast-joined lazy corpus scan (normedLazy: a cold session
     //    avoids the full Memo.mat materialization), unioned with the
-    //    prefix table's appended slivers on maintained corpora
+    //    prefix table's appended versions on maintained corpora
     //    (appended ids are not in the corpus parquet).
     // Either way a candidate with several versions re-ranks against
     // its HIGHEST-seq vector only (corpus rows carry seq 0).
     val cellFetch = probedCells
-      .filter(_ => graft.sources.Lakehouse.isLanded(s, s"graft_ann_index_${dirSuffix(d)}"))
+      .filter(_ => Lakehouse.isLanded(s, tableOf(PrefixKind, d)))
       .map(cells => servedIndex(s, d).filter(col("cell").isin(cells: _*))
         .select(col("vec_id"), col("v"), col("nrm"), col("seq")))
     val e = cellFetch.getOrElse {
       val corpusE = normedLazy(s, d)
         .select(col("vec_id"), col("v"), col("nrm"), lit(0L).as("seq"))
-      appendedFromPrefix(s, d).fold(corpusE)(app => corpusE.unionByName(app))
+      prefixVersions(s, d, 1L).fold(corpusE)(app => corpusE.unionByName(app))
     }
     import s.implicits._
     val q = qs.toSeq.map(a => (a.id, a.v, a.nrm)).toDF("qid", "qv", "qn")
@@ -994,158 +938,11 @@ object Similarity {
     topkPerQid(reranked)
   }
 
-  /** ADC + exact-re-rank serving tail over a FLAT code table (inline or
-    * landed): per-query lookup tables of subspace dot products
-    * broadcast against the codes, top ReRankFactor×k candidates fetch
-    * their raw vectors (broadcast shortlist — the corpus never
-    * shuffles for the fetch), then the recall gate. NOTE this is the
-    * flat-PQ shape: the ADC join scans the ENTIRE n·M code table per
-    * query batch. Kept as the un-pruned baseline; the designated scale
-    * path is [[sim4c]]'s composed IVF+PQ, whose ADC touches only
-    * probed cells. */
-  private def pqServe(s: SparkSession, d: String, codes: DataFrame): DataFrame = {
-    val e = normed(s, d)
-    import s.implicits._
-    val cents = pqCodebooks(s, d).toDF("m", "cid", "cv")
-    // per-query ADC lookup tables: dot(query sub-vector, centroid)
-    val qsubs = pqSubs(e.filter(col("vec_id") < NumQueries))
-      .select(col("vec_id").as("qid"), col("m"), col("sv").as("qsv"))
-    val table = qsubs.join(broadcast(cents), Seq("m"))
-      .select(col("qid"), col("m"), col("cid"),
-        VectorExprs.dot(col("qsv"), col("cv")).as("p"))
-    // approximate score = Σ_m table[qid][m][code(vec, m)]
-    val approx = codes.join(broadcast(table), Seq("m", "cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("p")).as("apx"))
-    val candK = ReRankFactor * TopK
-    val cands = approx.groupBy(col("qid"))
-      .agg(graft.functions.SketchAggs.topk(col("apx"), col("vec_id"), candK).as("top"))
-      .select(col("qid"), explode(col("top.id")).as("vec_id"))
-    recallGate(s, d, pqRerank(s, d, cands, queryVecs(s, d)))
-  }
-
-  val sim4 = QueryDef(
-    "sim4_ann_pq_topk",
-    (s, d) => pqServe(s, d, pqEncode(s, d)),
-    Some("SELECT CAST(vec_id AS BIGINT) AS qid, 1 AS ok FROM embeddings WHERE vec_id < 10"),
-    doc = "PQ ANN: ADC over 4-bit codes + exact re-rank; recall-gated vs sim1"
-  )
-
-  /** One-time landing of the PQ code table (8 B/vector at rest),
-    * bucketed on vec_id. Codebooks retrain from the memoized sample in
-    * a later session (deterministic — [[pqCodebooks]]) and the
-    * fingerprint guards corpus/formula drift, so the landed codes stay
-    * valid without re-encoding the corpus. */
-  /** Not DataFrame-memoized — same maintained-index re-resolution
-    * contract as [[servedIndex]]. */
-  private def pqCodesServed(s: SparkSession, d: String): DataFrame =
-    {
-      val n = corpusN(s, d)
-      graft.sources.Lakehouse.landBucketed(
-        s, s"graft_ann_pq_codes_${dirSuffix(d)}", Seq("vec_id"), 16,
-        s"pqcodes|v1|$d|n=$n|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample")(
-        pqEncode(s, d))
-    }
-
-  /** sim4b — sim4 SERVED from the persisted code table: the
-    * linear-in-n corpus encode pass (one [[pqEncodeCol]] scan since
-    * round 17) is read back as 8 B/vector codes instead of being
-    * recomputed; ADC + re-rank run as in sim4. The deployable PQ
-    * shape: encode at ingest, serve from codes. */
-  val sim4b = QueryDef(
-    "sim4b_ann_pq_served",
-    (s, d) => pqServe(s, d, pqCodesServed(s, d)),
-    sim4.oracle,
-    doc = "sim4 served from the persisted PQ code table: no per-query corpus re-encode"
-  )
-
-  /** One-time landing of the COMPOSED IVF+PQ index (the FAISS
-    * IndexIVFPQ shape — VERDICT r11 #1): each vector's M-element PQ
-    * code array, replicated into its Dd7Probes fine cells under the
-    * SAME frozen prefix quantizer as [[servedIndex]], bucketed and
-    * sorted on `cell`. ~8·Dd7Probes B/vector at rest; a query batch's
-    * ADC then touches ONLY its probed cells' codes (sim2b's In-filter
-    * pruning applied to the PQ path), where sim4/sim4b by construction
-    * scan the entire n·M code table per batch — the one plan that
-    * could not survive 100 TB. */
-  /** MAINTAINED like the prefix index (ADVICE r12): rows carry `seq`,
-    * [[graft.streaming.IndexIngest]] appends freshly-encoded codes
-    * under the frozen prefix cells, reads mask tombstoned versions,
-    * and a post-maintenance landing catches up from the prefix table
-    * (live-at-seq-0 filter + appended versions re-encoded). */
-  private def ivfPqIndexRaw(s: SparkSession, d: String): DataFrame = {
-    val n = corpusN(s, d)
-    // n · Dd7Probes rows (cell, vec_id, codes, seq): PqM int codes + ~32 B
-    graft.sources.Lakehouse.landBucketed(
-      s, s"graft_ann_ivfpq_${dirSuffix(d)}", Seq("cell"), IndexBuckets,
-      s"ivfpq|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}" +
-        s"|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample",
-      n * Dedup.Dd7Probes * (4L * PqM + 32L)) {
-      val base = ivfPqLandingBase(s, d)
-      if (!prefixMaintained(s, d)) base
-      else {
-        // catch-up landing: appended versions reuse their prefix CELLS
-        // (the composed index shares the prefix quantizer) and encode
-        // against the frozen codebooks. `base` reads the masked prefix
-        // table (prefixMaintained ⇒ the prefix index is landed), so
-        // the live-at-seq-0 filter is already applied — no extra
-        // semi-join (pre-r17 the base was the raw corpus assignment
-        // and needed one).
-        val app = appendedFromPrefix(s, d).get
-        val appCells = servedIndex(s, d).filter(col("seq") > 0)
-          .select(col("cell"), col("vec_id"), col("seq"))
-        val appPart = appCells
-          .join(pqCodeArrays(s, d, app.select(col("vec_id"), col("v"), col("nrm"))), Seq("vec_id"))
-          .select(col("cell"), col("vec_id"), col("codes"), col("seq"))
-        base.unionByName(appPart)
-      }
-    }
-  }
-
-  /** The corpus-only landing frame of the composed IVF+PQ index —
-    * extracted from [[ivfPqIndexRaw]]'s landBucketed body so the
-    * MatCutPlanAuditSpec can audit the landing PLAN without landing.
-    * Codes as one ordered array per vector (8 B at PqM=16, PqK=16):
-    * ADC reads M positions per candidate instead of joining M rows.
-    *
-    * ASSIGNMENT REUSE (round 17): when the prefix index is landed, its
-    * live seq-0 rows ARE `rankedPrefix`'s (cell, vec_id) — the
-    * landing reads `(cell, vec_id)` back from the bucketed table
-    * (column-pruned: two skinny columns of a 19 GB-at-20M table) and
-    * skips the corpus-wide n·√K quantization job entirely. With the
-    * codegen encode ([[pqCodeArrays]]) the composed landing is then
-    * scan-bound end to end: one pruned index read + one corpus scan +
-    * one skinny shuffle-hash join (measured at 20M: 1656 s re-ranking
-    * form → the cost of the join + write). Cold-start landings (no
-    * prefix index) keep the self-contained quantization form.
-    * Shuffle-hash on the narrow assignment: with neither side's size
-    * known to the planner, the stats-less fallback is a sort-merge that
-    * sorts both sides. */
-  private[graft] def ivfPqLandingBase(s: SparkSession, d: String): DataFrame = {
-    val assigned =
-      if (graft.sources.Lakehouse.isLanded(s, s"graft_ann_index_${dirSuffix(d)}"))
-        servedIndex(s, d).filter(col("seq") === 0)
-          .select(col("cell"), col("vec_id"))
-      else
-        Dedup.rankedPrefix(s, d).select(col("cell"), col("vec_id"))
-    assigned.hint("shuffle_hash")
-      .join(pqCodeArrays(s, d, normed(s, d)), Seq("vec_id"))
-      .select(col("cell"), col("vec_id"), col("codes"), lit(0L).as("seq"))
-  }
-
-  private[graft] def ivfPqIndex(s: SparkSession, d: String): DataFrame = {
-    val df = ivfPqIndexRaw(s, d)
-    graft.sources.Lakehouse.maskTombstones(
-      s, s"graft_ann_ivfpq_${dirSuffix(d)}", df, "vec_id")
-  }
-
   /** Per-query flattened ADC lookup tables, computed DRIVER-side from
     * the memoized codebooks and query vectors (PqM·PqK doubles per
     * query — 2 KB): tab[m·PqK + cid] = dot(unit-query sub-vector m,
-    * centroid cid). Same ascending-loop arithmetic as the distributed
-    * pqSubs/dot path, so ADC scores match sim4's bit-for-bit; zero
-    * distributed jobs where sim4's table build runs an explode + join. */
+    * centroid cid), in the encode's ascending-loop arithmetic. Zero
+    * distributed jobs. */
   private def adcTables(
       s: SparkSession, d: String, qs: Array[Anchor]): Seq[(Long, Array[Double])] = {
     val books = pqCodebooks(s, d)
@@ -1162,16 +959,102 @@ object Similarity {
     }
   }
 
+  /** The ADC shortlist shared by every PQ serve: each `scored` row
+    * (qid, vec_id, codes, tab) scores its code array against its query's
+    * lookup table in one codegen'd expression ([[VectorExprs.adcScore]]),
+    * and each qid keeps its `candK` best distinct ids out of the bounded
+    * top-k sketch (a multi-assigned vector scores identically in every
+    * cell it shares with a query) — k pairs per (qid, partition) cross
+    * the one exchange. */
+  private def adcShortlist(scored: DataFrame, candK: Int): DataFrame =
+    scored.withColumn("apx", VectorExprs.adcScore(col("codes"), col("tab"), PqK))
+      .groupBy(col("qid"))
+      .agg(SketchAggs.topkDistinct(col("apx"), col("vec_id"), candK).as("top"))
+      .select(col("qid"), explode(col("top.id")).as("vec_id"))
+
+  /** ADC + exact-re-rank serving tail over a FLAT code table (vec_id,
+    * codes), inline or landed: every code array scores against the
+    * broadcast per-query lookup tables ([[adcShortlist]]), the top
+    * ReRankFactor×k candidates fetch their raw vectors (broadcast
+    * shortlist — the corpus never shuffles for the fetch), then the
+    * recall gate. NOTE this is the flat-PQ shape: the ADC scans the
+    * ENTIRE code table per query batch. Kept as the un-pruned baseline;
+    * the designated scale path is [[sim4c]]'s composed IVF+PQ, whose ADC
+    * touches only probed cells. */
+  private def pqServe(s: SparkSession, d: String, codes: DataFrame): DataFrame = {
+    val qs = queryVecs(s, d)
+    import s.implicits._
+    val tabs = adcTables(s, d, qs).toDF("qid", "tab")
+    val scored = codes.join(broadcast(tabs), col("vec_id") =!= col("qid"))
+    recallGate(s, d, pqRerank(s, d, adcShortlist(scored, ReRankFactor * TopK), qs))
+  }
+
+  /** The corpus's flat PQ code table (vec_id, codes). */
+  private def pqCodes(s: SparkSession, d: String): DataFrame =
+    pqCodeArrays(s, d, normed(s, d))
+
+  val sim4 = QueryDef(
+    "sim4_ann_pq_topk",
+    (s, d) => pqServe(s, d, pqCodes(s, d)),
+    Some("SELECT CAST(vec_id AS BIGINT) AS qid, 1 AS ok FROM embeddings WHERE vec_id < 10"),
+    doc = "PQ ANN: ADC over 4-bit codes + exact re-rank; recall-gated vs sim1"
+  )
+
+  /** One-time landing of the flat PQ code table, one (vec_id, codes)
+    * array per vector, bucketed on vec_id. Codebooks retrain from the
+    * memoized sample in a later session (deterministic —
+    * [[pqCodebooks]]) and the fingerprint guards corpus/formula drift,
+    * so the landed codes stay valid without re-encoding the corpus (v2:
+    * code arrays; a v1 (vec_id, m, cid) landing re-lands). Not
+    * maintained: a corpus-only snapshot. Not DataFrame-memoized — same
+    * re-resolution contract as [[servedIndex]]. */
+  private def pqCodesServed(s: SparkSession, d: String): DataFrame = {
+    val n = corpusN(s, d)
+    Lakehouse.landBucketed(
+      s, s"graft_ann_pq_codes_${dirSuffix(d)}", Seq("vec_id"), 16,
+      s"pqcodes|v2|$d|n=$n|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample")(pqCodes(s, d))
+  }
+
+  /** sim4b — sim4 SERVED from the persisted code table: the
+    * linear-in-n corpus encode pass is read back as code arrays instead
+    * of being recomputed; ADC + re-rank run as in sim4. The deployable
+    * flat-PQ shape: encode at ingest, serve from codes. Recall-gated like
+    * sim4. */
+  val sim4b = QueryDef(
+    "sim4b_ann_pq_served",
+    (s, d) => pqServe(s, d, pqCodesServed(s, d)),
+    sim4.oracle,
+    doc = "sim4 served from the persisted PQ code table: no per-query corpus re-encode"
+  )
+
+  /** IVF-PQ index rows (cell, vec_id, codes, seq) of prefix index rows
+    * (cell, vec_id, v, nrm, seq) — the COMPOSED IVF+PQ index (the FAISS
+    * IndexIVFPQ shape, VERDICT r11 #1) shares the frozen prefix
+    * quantizer, so its rows ARE the prefix rows with each vector
+    * replaced by its PQ code array: the same doubles, so bit-identical
+    * codes. ~4·PqM B per row at rest; a query batch's ADC then touches
+    * ONLY its probed cells' codes (sim2b's In-filter pruning applied to
+    * the PQ path), where sim4/sim4b scan the whole code table per batch. */
+  private def ivfPqOf(s: SparkSession, d: String, prefixRows: DataFrame): DataFrame =
+    prefixRows.select(col("cell"), col("vec_id"), pqEncodeCol(s, d).as("codes"), col("seq"))
+
+  /** The IVF-PQ landing frame: the projection of the tombstone-masked
+    * prefix index when it is landed — every live version, appended ones
+    * at their seq, so a landing after maintenance began catches up with
+    * no code of its own — else of the prefix landing frame (one narrow
+    * pass over the corpus, nothing landed). */
+  private def ivfPqLandingFrame(s: SparkSession, d: String): DataFrame =
+    ivfPqOf(s, d,
+      if (Lakehouse.isLanded(s, tableOf(PrefixKind, d))) servedIndex(s, d)
+      else prefixIndexLandingFrame(s, d))
+
   /** Cell-pruned ADC top-k: probe ranking runs driver-local (as sim2b),
     * the probed cell ids push into the composed-index scan as an In
-    * filter (bucket pruning + row-group skip), the broadcast ADC tables
-    * score each candidate's code array in one codegen'd expression, and
-    * the per-qid candidate shortlist comes out of the bounded top-k
-    * sketch (id-deduped — a multi-assigned vector scores identically in
-    * every shared cell). ONE scan of probed cells + ONE k-pair-per-
-    * partition exchange per query batch. */
-  /** Returns (shortlist, probed cell ids) — the cells feed the
-    * re-rank's cell-pruned vector fetch. */
+    * filter (bucket pruning + row-group skip), and the broadcast ADC
+    * tables score the probed rows into the shared shortlist
+    * ([[adcShortlist]]). ONE scan of probed cells + ONE k-pair-per-
+    * partition exchange per query batch. Returns (shortlist, probed cell
+    * ids) — the cells feed the re-rank's cell-pruned vector fetch. */
   private def ivfPqCands(
       s: SparkSession, d: String, nprobe: Int, qs: Array[Anchor],
       rerankPerProbe: Int = DefaultRerankPerProbe): (DataFrame, Seq[Long]) = {
@@ -1198,15 +1081,11 @@ object Similarity {
     // the shortlist, and the top-k sketch holds candK pairs per (qid,
     // partition).
     val candK = math.min(math.max(ReRankFactor * TopK, rerankPerProbe * nprobe), 16384)
-    val scored = ivfPqIndex(s, d).filter(col("cell").isin(cellIds: _*))
+    val scored = servedIndex(s, d, IvfPqKind).filter(col("cell").isin(cellIds: _*))
       .join(broadcast(probesDf), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .join(broadcast(tabs), Seq("qid"))
-      .withColumn("apx", VectorExprs.adcScore(col("codes"), col("tab"), PqK))
-    (scored.groupBy(col("qid"))
-      .agg(graft.functions.SketchAggs.topkDistinct(col("apx"), col("vec_id"), candK).as("top"))
-      .select(col("qid"), explode(col("top.id")).as("vec_id")),
-      cellIds)
+    (adcShortlist(scored, candK), cellIds)
   }
 
   /** sim4c — the composed IVF+PQ serving path (FAISS IndexIVFPQ): PQ
@@ -1256,7 +1135,7 @@ object Similarity {
     case "prefix" =>
       serveTopk(s, d, servedIndex(s, d), prefixProbes(s, d, nprobe, qs), qs)
     case "kmeans" =>
-      serveTopk(s, d, kmServedIndex(s, d), probesOf(kmLocal(s, d)._1, nprobe, qs), qs)
+      serveTopk(s, d, servedIndex(s, d, KmKind), probesOf(kmLocal(s, d)._1, nprobe, qs), qs)
     case "ivfpq" =>
       val (cands, cells) = ivfPqCands(s, d, nprobe, qs, rerankPerProbe)
       pqRerank(s, d, cands, qs, Some(cells))
@@ -1273,13 +1152,13 @@ object Similarity {
     * batch: |queries|·√K driver cosines + one probed-cells-only scan.
     *
     * MAINTENANCE VISIBILITY: all three kinds reflect
-    * [[graft.streaming.IndexIngest]] maintenance. The prefix landing is
-    * the maintained table itself; the kmeans and ivfpq landings receive
-    * the same per-batch appends (frozen-quantizer assignment / frozen-
-    * codebook encode) and tombstones when they exist at maintenance
-    * time, and a landing created AFTER maintenance began catches up
-    * from the prefix table (live-at-seq-0 filter + appended versions).
-    * Only the flat sim4b code table (not a serving kind here) remains a
+    * [[graft.streaming.IndexIngest]] maintenance. Each kind writes one
+    * row rule over versions (vec_id, v, nrm, seq) ([[IndexKind]]): every
+    * landed kind receives each batch's rows and tombstones, and a kind
+    * landed AFTER maintenance began catches up at its landing from the
+    * maintained prefix table — k-means places its live versions, and the
+    * ivfpq rows are always the prefix rows projected to codes. Only the
+    * flat sim4b code table (not a serving kind here) remains a
     * corpus-only snapshot.
     *
     * FAIL-FAST (VERDICT r14 #1b): when the kind's index is NOT landed,

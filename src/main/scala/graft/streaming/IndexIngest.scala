@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Similarity
+import graft.sources.Lakehouse
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -63,42 +65,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object IndexIngest {
 
-  /** Assign one batch of raw vectors (vec_id, embedding: float array)
-    * to the frozen prefix quantizer's cells and return serving-index
-    * rows (cell, vec_id, v, nrm, seq) — the landing's placement
-    * ([[graft.operators.Similarity.prefixCells]]) applied to the batch,
-    * with the norm computed by the batch pipeline's exact expressions
-    * so served cosines are bit-identical for old and new rows. `seq` is
-    * the batch's maintenance sequence number (0 for the corpus
-    * landing). `s` keys the quantizer memos: the maintenance stream
-    * passes its own session, not the micro-batch's clone, so its first
-    * batch reuses the kernel and the broadcast the landing built. */
-  private[graft] def assignBatch(
-      s: SparkSession, batch: DataFrame, corpusDir: String, seq: Long = 0L): DataFrame =
-    graft.operators.Similarity.landingRows(
-      graft.operators.Similarity.prefixCells(s, corpusDir, normalized(batch)), seq)
-
-  /** [[assignBatch]] under the frozen trained k-means quantizer
-    * ([[graft.operators.Similarity.kmAssignFrame]]): the same narrow
-    * kernel map, the rows a landed k-means index receives. */
-  private[graft] def kmAssignBatch(
-      s: SparkSession, batch: DataFrame, corpusDir: String, seq: Long): DataFrame =
-    graft.operators.Similarity.landingRows(
-      graft.operators.Similarity.kmAssignFrame(s, corpusDir, normalized(batch)), seq)
-
-  /** (vec_id, v, nrm) of raw (vec_id, embedding) rows — the corpus
-    * landing's cast and norm expressions. */
-  private def normalized(batch: DataFrame): DataFrame =
-    batch.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
-
   /** Start the maintenance stream: `vecs` (a streaming DataFrame of
     * (vec_id, embedding); embedding NULL ⇒ delete) → frozen-quantizer
     * assignment → bucketed append into `corpusDir`'s landed prefix
-    * index (landed first if absent). Sibling index kinds that are
-    * ALREADY LANDED (kmeans cells, composed IVF+PQ codes) receive the
-    * same appends — frozen trained-quantizer assignment / frozen-
-    * codebook encode — and the same tombstones, so every serving kind
+    * index (landed first if absent). Every index kind ALREADY LANDED
+    * (kmeans cells, composed IVF+PQ codes) receives the same tombstones
+    * and its own row rule's rows of the batch's versions
+    * ([[graft.operators.Similarity.indexRows]]), so every serving kind
     * stays fresh (ADVICE r12); a kind landed later catches up at
     * landing time instead. Returns the running query; each committed
     * micro-batch is immediately visible to
@@ -165,7 +138,7 @@ object IndexIngest {
       compactSliverRatio: Double = 0.0,
       compactMaxTombstones: Long = 0L): StreamingQuery = {
     val s = vecs.sparkSession
-    val table = graft.operators.Similarity.prefixIndexTable(s, corpusDir)
+    val table = Similarity.prefixIndexTable(s, corpusDir)
     // the commit log's batchId counter is scoped to THIS stream's
     // checkpoint (ADVICE r12): a restart under a new checkpoint dir
     // restarts batchIds at 0, and skipping those against a previous
@@ -179,20 +152,17 @@ object IndexIngest {
     }
     val w = vecs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (lastBatch, maxSeq) = graft.sources.Lakehouse.readCommits(s, table, identity)
+        // (kind, table) of every index kind landed for this corpus, the
+        // prefix index first: each receives the batch's tombstones and
+        // its row rule's rows of the batch's versions. A kind landed
+        // LATER catches up at landing time from the prefix table.
+        val kinds = Similarity.landedKinds(s, corpusDir)
+        val tables = kinds.map(_._2)
+        val (lastBatch, maxSeq) = Lakehouse.readCommits(s, table, identity)
         if (checkpointDir.isDefined && batchId <= lastBatch) {
           // replayed after restart: already applied — skip (idempotence)
         } else {
           val seq = maxSeq + 1
-          val ups = batch.filter(col("embedding").isNotNull)
-          // sibling index kinds already landed for this corpus receive
-          // the SAME maintenance (ADVICE r12: kmeans/ivfpq used to
-          // serve stale corpus-only snapshots): frozen-quantizer
-          // assignment for km, frozen-codebook encode for ivfpq, and
-          // the same tombstones. A kind landed LATER instead catches up
-          // at landing time from the prefix table.
-          val kmT = graft.operators.Similarity.kmIndexTableIfLanded(s, corpusDir)
-          val pqT = graft.operators.Similarity.ivfPqTableIfLanded(s, corpusDir)
           // tombstone first, then append with the same seq: if the batch
           // re-runs after a crash here, the replayed tombstones are
           // byte-equal (same seq) and mask nothing extra.
@@ -216,48 +186,34 @@ object IndexIngest {
           if (existing.nonEmpty) {
             import s.implicits._
             val trows = existing.toSeq.map(id => (id, seq)).toDF("id", "seq")
-            (Seq(table) ++ kmT ++ pqT).foreach(graft.sources.Lakehouse.appendTombstones(s, _, trows))
+            tables.foreach(Lakehouse.appendTombstones(s, _, trows))
           }
-          val assigned = assignBatch(s, ups, corpusDir, seq)
-          graft.sources.Lakehouse.appendBucketed(assigned, table)
-          kmT.foreach(graft.sources.Lakehouse.appendBucketed(kmAssignBatch(s, ups, corpusDir, seq), _))
-          pqT.foreach { t =>
-            // the batch's normalized vectors, same expressions as
-            // assignBatch — identical doubles everywhere
-            graft.sources.Lakehouse.appendBucketed(
-              assigned.select(col("cell"), col("vec_id"), col("seq"))
-                .join(graft.operators.Similarity.pqCodeArrays(s, corpusDir, normalized(ups)),
-                  Seq("vec_id"))
-                .select(col("cell"), col("vec_id"), col("codes"), col("seq")),
-              t)
-          }
-          graft.sources.Lakehouse.writeCommits(s, table, batchId, seq, identity)
-          kmT.foreach(s.catalog.refreshTable)
-          pqT.foreach(s.catalog.refreshTable)
+          val versions = Similarity.versionsOf(batch.filter(col("embedding").isNotNull), seq)
+          for ((kind, t) <- kinds)
+            Lakehouse.appendBucketed(Similarity.indexRows(s, corpusDir, kind, versions), t)
+          Lakehouse.writeCommits(s, table, batchId, seq, identity)
           if (compactEvery.exists(n => n > 0 && batchId > 0 && batchId % n == 0)) {
             // refresh first: compaction's growth guard compares row
             // counts around the rewrite, and a relation cached from
             // before this batch's append under-counts the snapshot
-            s.catalog.refreshTable(table)
+            tables.foreach(s.catalog.refreshTable)
             // per-table volume trigger: tables whose sliver population
             // does not yet justify a full rewrite skip this tick
-            (Seq(table) ++ kmT ++ pqT).foreach { t =>
+            tables.foreach { t =>
               val volumeDue = compactSliverRatio <= 0 ||
-                graft.sources.Lakehouse.compactionDue(s, t, compactSliverRatio)
+                Lakehouse.compactionDue(s, t, compactSliverRatio)
               // delete-heavy guard: tombstones add no bytes, so the mask
               // sidecar can outgrow its broadcast long before the ratio
               lazy val tombsDue = compactMaxTombstones > 0 &&
-                graft.sources.Lakehouse.tombstones(s, t)
-                  .exists(_.count() >= compactMaxTombstones)
-              if (volumeDue || tombsDue)
-                graft.sources.Lakehouse.compactMaintained(s, t, "vec_id")
+                Lakehouse.tombstones(s, t).exists(_.count() >= compactMaxTombstones)
+              if (volumeDue || tombsDue) Lakehouse.compactMaintained(s, t, "vec_id")
             }
           }
         }
         // the insert runs in the micro-batch's CLONED session; its
         // refresh does not touch the serving session's relation cache,
         // so invalidate there — commit-then-visible, the IQ contract
-        s.catalog.refreshTable(table)
+        tables.foreach(s.catalog.refreshTable)
       }
     checkpointDir.foreach(cp => w.option("checkpointLocation", cp))
     w.start()

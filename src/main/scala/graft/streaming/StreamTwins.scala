@@ -660,22 +660,33 @@ object StreamTwins {
       .as[(Long, Array[Float])].collect().sortBy(_._1).toVector
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
-    val q = IndexIngest.maintainPrefixIndex(
-      src.toDF().toDF("vec_id", "embedding"), tmpRoot,
-      checkpointDir = Some(s"$tmpRoot/ckpt"))
     try {
-      src.addData(qs.map { case (id, v) => (id + InsOff, v) } ++
-        qs.map { case (id, v) => (id + Ins2Off, v) })
-      q.processAllAvailable()
-      src.addData(qs.map { case (id, _) => (id + Ins2Off, null: Array[Float]) } ++
-        (S.NumQueries until (S.NumQueries + DelN).toInt)
-          .map(i => (i.toLong, null: Array[Float])) ++
-        qs.map { case (id, v) => (id + InsOff, v) })
-      q.processAllAvailable()
-    } finally q.stop()
-    S.searchTopk(s, tmpRoot, "prefix",
-        qs.map { case (id, v) => (id, v.map(_.toDouble)) })
-      .select(col("qid"), col("rank"), col("neighbor_id"))
+      val q = IndexIngest.maintainPrefixIndex(
+        src.toDF().toDF("vec_id", "embedding"), tmpRoot,
+        checkpointDir = Some(s"$tmpRoot/ckpt"))
+      try {
+        src.addData(qs.map { case (id, v) => (id + InsOff, v) } ++
+          qs.map { case (id, v) => (id + Ins2Off, v) })
+        q.processAllAvailable()
+        src.addData(qs.map { case (id, _) => (id + Ins2Off, null: Array[Float]) } ++
+          (S.NumQueries until (S.NumQueries + DelN).toInt)
+            .map(i => (i.toLong, null: Array[Float])) ++
+          qs.map { case (id, v) => (id + InsOff, v) })
+        q.processAllAvailable()
+      } finally q.stop()
+      // the NumQueries × TopK answer, collected into a local relation:
+      // the index it was served from is dropped below
+      val top = S.searchTopk(s, tmpRoot, "prefix",
+          qs.map { case (id, v) => (id, v.map(_.toDouble)) })
+        .select(col("qid"), col("rank"), col("neighbor_id"))
+      s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+    } finally {
+      // the copy's landings, sidecars and memo entries, then the copy
+      // and checkpoint themselves: nothing of the run outlives the call
+      S.dropLandings(s, tmpRoot)
+      def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+      rm(new java.io.File(tmpRoot))
+    }
   }
 
   val sim2m = QueryDef(

@@ -284,10 +284,7 @@ object MaintenanceProbe {
       // landed for the copy (dir-hash-keyed, so nothing else shares them)
       // — ~5 GB per 1000× run if left behind
       def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
-      val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-      Option(wh.listFiles()).toSeq.flatten
-        .filter(f => f.getName.startsWith("graft_ann_") && f.getName.contains(sfx))
-        .foreach(rm)
+      graft.operators.Similarity.dropLandings(spark, corpusDir)
       Seq(corpusDir, ckpt).foreach(d => rm(new java.io.File(d)))
       spark.stop()
     }

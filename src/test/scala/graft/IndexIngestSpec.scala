@@ -20,12 +20,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   override protected def afterAll(): Unit =
     try {
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(corpusDir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      spark.sql(s"DROP TABLE IF EXISTS `${Similarity.prefixIndexTable(spark, corpusDir)}`")
-      spark.sql(s"DROP TABLE IF EXISTS `graft_ann_km_index_$sfx`")
-      spark.sql(s"DROP TABLE IF EXISTS `graft_ann_ivfpq_$sfx`")
-      spark.sql(s"DROP TABLE IF EXISTS `graft_ann_fine_$sfx`")
+      Similarity.dropLandings(spark, corpusDir)
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles.foreach(rm)
         f.delete()
@@ -56,9 +51,9 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       .map { case (id, v) => (900000L + id, v) }
     // the assignment stage in isolation: Dd7Probes cells per vector
     val batchDf = copies.toDF("vec_id", "embedding")
-    val assigned = IndexIngest.assignBatch(spark, batchDf, corpusDir)
+    val assigned = Similarity.indexRows(spark, corpusDir, "prefix", Similarity.versionsOf(batchDf, 0L))
     assert(assigned.count() == copies.size * Dedup.Dd7Probes,
-      s"assignBatch produced ${assigned.count()} rows")
+      s"the prefix row rule produced ${assigned.count()} rows")
 
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, Array[Float])]
@@ -428,9 +423,10 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = Seq((910000L, Array.fill(64)(0.5f)), (910001L, Array.fill(64)(-0.25f)))
       .toDF("vec_id", "embedding")
-    // the prefix append and the k-means append place through the same kernel map
-    for ((kind, assigned) <- Seq("prefix" -> IndexIngest.assignBatch(spark, batch, sfDir, 5L),
-        "k-means" -> IndexIngest.kmAssignBatch(spark, batch, sfDir, 5L))) {
+    // every kind's append places through the same kernel map; the
+    // IVF-PQ rows project the prefix rows
+    for (kind <- Seq("prefix", "kmeans", "ivfpq")) {
+      val assigned = Similarity.indexRows(spark, sfDir, kind, Similarity.versionsOf(batch, 5L))
       assert(assigned.count() == 2 * Dedup.Dd7Probes)
       val plan = assigned.queryExecution.executedPlan
       val wide = plan.collect {
@@ -439,6 +435,97 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       }
       assert(wide.isEmpty, s"the $kind batch assignment plans ${wide.mkString(", ")}:\n$plan")
     }
+  }
+
+  test("each kind writes its row rule: IVF-PQ rows are the prefix rows projected, k-means places the live versions") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = Files.createTempDirectory("graft-idx-rows")
+    val d = root.toString
+    spark.read.parquet(s"$sfDir/embeddings.parquet").write.parquet(s"$d/embeddings.parquet")
+    val corpus = spark.read.parquet(s"$d/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+    def emb(id: Long): Array[Float] =
+      corpus.filter(col("vec_id") === id).select(col("embedding")).as[Array[Float]].head()
+    def masked(kind: String) = {
+      val t = Similarity.landedKinds(spark, d).toMap.apply(kind)
+      Lakehouse.maskTombstones(spark, t, spark.table(t), "vec_id")
+    }
+    def assertSameRows(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
+        what: String): Unit = {
+      val g = got.select(want.columns.map(col).toSeq: _*) // the tombstone mask moves vec_id first
+      assert(g.count() == want.count() && g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty,
+        s"$what: rows differ")
+    }
+    // one to one: every live IVF-PQ row (cell, vec_id, seq) is a live
+    // prefix row, and its codes are the encode of that row's vector
+    // (pqCodeArrays keyed by the row's (cell, vec_id, seq))
+    def assertIvfPqProjectsPrefix(what: String): Unit = {
+      val want = Similarity.pqCodeArrays(spark, d, masked("prefix")
+          .select(struct(col("cell"), col("vec_id"), col("seq")).as("vec_id"), col("v"), col("nrm")))
+        .select(col("vec_id.cell"), col("vec_id.vec_id"), col("vec_id.seq"), col("codes"))
+      assertSameRows(masked("ivfpq").select(col("cell"), col("vec_id"), col("seq"), col("codes")),
+        want, s"$what: IVF-PQ rows vs projected prefix rows")
+    }
+    // batch 1: an insert, an upsert of corpus id 4, a delete of corpus
+    // id 6; batch 2 carries one id twice (both versions live at seq 2)
+    val b1 = Seq((990001L, emb(3L)), (4L, emb(5L)), (6L, null: Array[Float]))
+    val b2 = Seq((990002L, emb(7L)), (990002L, emb(8L)))
+    def liveVersions = Similarity.versionsOf(corpus.filter(!col("vec_id").isin(4L, 6L)), 0L)
+      .unionByName(Similarity.versionsOf(b1.toDF("vec_id", "embedding").filter(col("embedding").isNotNull), 1L))
+      .unionByName(Similarity.versionsOf(b2.toDF("vec_id", "embedding"), 2L))
+    try {
+      // fresh landings: IVF-PQ first, off the prefix landing frame; then
+      // the prefix and k-means tables
+      Seq("ivfpq", "prefix", "kmeans").foreach(Similarity.buildIndex(spark, d, _))
+      assertIvfPqProjectsPrefix("fresh landing")
+      val src = MemoryStream[(Long, Array[Float])]
+      val q = IndexIngest.maintainPrefixIndex(src.toDF().toDF("vec_id", "embedding"), d)
+      try {
+        for ((b, i) <- Seq(b1, b2).zipWithIndex) {
+          src.addData(b)
+          q.processAllAvailable()
+          assertIvfPqProjectsPrefix(s"append ${i + 1}")
+        }
+      } finally q.stop()
+      assertSameRows(masked("kmeans"), Similarity.indexRows(spark, d, "kmeans", liveVersions),
+        "k-means appends")
+      // catch-up landings: the sibling tables are dropped and landed
+      // again after maintenance
+      for (kind <- Seq("kmeans", "ivfpq")) {
+        spark.sql(s"DROP TABLE `${Similarity.landedKinds(spark, d).toMap.apply(kind)}`")
+        Similarity.buildIndex(spark, d, kind)
+      }
+      assertIvfPqProjectsPrefix("catch-up landing")
+      val km = Similarity.landedKinds(spark, d).toMap.apply("kmeans")
+      assert(Lakehouse.tombstones(spark, km).isEmpty, "a catch-up landing holds no tombstones")
+      assertSameRows(spark.table(km), Similarity.indexRows(spark, d, "kmeans", liveVersions),
+        "k-means catch-up vs the live versions placed from scratch")
+    } finally {
+      Similarity.dropLandings(spark, d)
+      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
+      rm(root.toFile)
+    }
+  }
+
+  test("sim2m leaves no landing, sidecar or temp root behind, and answers from a local relation") {
+    val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries(in: java.io.File, prefix: String): Set[String] =
+      Option(in.listFiles()).toSeq.flatten.map(_.getName).filter(_.startsWith(prefix)).toSet
+    val (annBefore, rootsBefore) = (entries(wh, "graft_ann_"), entries(tmp, "graft-sim2m"))
+    val sim2m = SparkEntry.queries("sim2m_ann_maintained_stream")
+    val answers = (1 to 2).map { _ =>
+      val df = sim2m(spark, sfDir)
+      assert(df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"sim2m is not a local relation:\n${df.queryExecution.analyzed}")
+      df.collect().toSeq
+    }
+    assert(answers(0).size == Similarity.NumQueries * Similarity.TopK && answers(0) == answers(1))
+    val newAnn = entries(wh, "graft_ann_") -- annBefore
+    assert(newAnn.isEmpty, s"sim2m left warehouse entries: $newAnn")
+    val newRoots = entries(tmp, "graft-sim2m") -- rootsBefore
+    assert(newRoots.isEmpty, s"sim2m left temp roots: $newRoots")
   }
 
   test("a landing re-registered under a different bucket count keeps its recorded count and maintained rows") {
@@ -492,9 +579,8 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(!Similarity.searchTopk(spark, d, "prefix", Seq((-2L, deleted)))
         .select(col("neighbor_id")).collect().map(_.getLong(0)).contains(7L), "the delete is not masked")
     } finally {
-      spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      Seq(loc, new java.io.File(wh, s"${tbl}__tombs"), new java.io.File(wh, s"graft_ann_quantizer_$sfx.bin"),
-        root.toFile).foreach(rm)
+      Similarity.dropLandings(spark, d)
+      rm(root.toFile)
     }
   }
 }

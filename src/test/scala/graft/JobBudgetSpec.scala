@@ -237,6 +237,31 @@ class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
     } finally { maintain.stop(); serve.stop() }
   }
 
+  test("a maintenance batch with all three kinds landed stays within its job budget") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // a copy of the corpus: its landings and memos are this test's own
+    val d = s"$dir/kinds"
+    vectors(4244L, 0 until N).toDF("vec_id", "embedding").coalesce(1)
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    try {
+      Seq("prefix", "kmeans", "ivfpq").foreach(Similarity.buildIndex(spark, d, _))
+      val src = MemoryStream[(Long, Array[Float])]
+      val ops = vectors(7L, N + 1 to N + 6) ++ vectors(8L, 100 until 102) ++
+        Seq((200L, null: Array[Float]), (201L, null: Array[Float]))
+      val (m, batch) = jobsOf {
+        val m = IndexIngest.maintainPrefixIndex(src.toDF().toDF("vec_id", "embedding"), d)
+        src.addData(ops)
+        m.processAllAvailable()
+        m
+      }
+      m.stop()
+      // batch ids, the IN-filtered id scan, then per kind one tombstone
+      // write and one bucketed append
+      budget("a maintenance batch with three kinds landed", batch, 8)
+    } finally Similarity.dropLandings(spark, d)
+  }
+
   test("the tombstone map follows the sidecar: a new delete is masked, compaction clears it") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._

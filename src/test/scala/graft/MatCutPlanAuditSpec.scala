@@ -51,14 +51,18 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
   ).map(n => n -> SparkEntry.queries(n)(spark, sfDir)) ++ Seq(
     // the ivfpq landing frame — a 100×-scale hot path (plan only; the
     // extracted builder means nothing is landed here)
-    "ivfpq_landing_base" -> Similarity.ivfPqLandingBase(spark, sfDir))
+    "ivfpq_landing_frame" -> Similarity.landingFrame(spark, sfDir, "ivfpq"))
 
   test("the prefix landing plan is one narrow pass: no Exchange or join before the staged write") {
     // the quantizer kernel runs as a per-partition map over the corpus
     // scan, so the only shuffle of a landing is the bucketed write's own
-    // bucket repartition — for the prefix and the k-means index alike
-    for ((kind, df) <- Seq("prefix" -> Similarity.prefixIndexLandingFrame(spark, sfDir),
-        "k-means" -> Similarity.kmIndexLandingFrame(spark, sfDir))) {
+    // bucket repartition — for the prefix and the k-means index alike;
+    // the IVF-PQ landing projects the prefix rows (the landed prefix
+    // table or the prefix landing frame) to code arrays
+    val vectorDDL = "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL"
+    for ((kind, columns) <- Seq("prefix" -> vectorDDL, "kmeans" -> vectorDDL,
+        "ivfpq" -> "cell,vec_id,codes,seq")) {
+      val df = Similarity.landingFrame(spark, sfDir, kind)
       df.count()
       val wide = nodes(df.queryExecution.executedPlan).collect {
         case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
@@ -66,8 +70,10 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
       }
       assert(wide.isEmpty,
         s"the $kind landing plans ${wide.mkString(", ")}:\n${df.queryExecution.executedPlan}")
-      assert(df.schema.toDDL == "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL",
-        s"the $kind landing's DDL changed")
+      // the IVF-PQ columns' nullability follows its source: the landed
+      // prefix table reads back nullable
+      val got = if (kind == "ivfpq") df.columns.mkString(",") else df.schema.toDDL
+      assert(got == columns, s"the $kind landing's columns changed: $got")
     }
   }
 

@@ -6,24 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** Bit-identity of the codegen'd PQ encode ([[PqEncodeCodes]]) against
   * the distributed explode → codebook join → `max_by(cid, struct(score,
-  * -cid))` form it replaced ([[Similarity.pqEncodeOfShuffled]] — kept as
-  * the executable semantic contract). Round 17: the expression makes
+  * -cid))` form it replaced ([[PqReference.pqEncodeOfShuffled]] — kept
+  * as the executable semantic contract). Round 17: the expression makes
   * the encode pass shuffle-free; these tests are the license for that
-  * swap — sim4/sim4b/sim4c hashes must be byte-for-byte unchanged. */
+  * swap — every code array the engine lands or scores equals the
+  * reference's. The PQ queries themselves (sim4/sim4b/sim4c) are
+  * recall-gated against the exact answer, not byte-pinned. */
 class PqEncodeSpec extends SparkSpecBase {
-
-  test("expression encode == distributed max_by encode on the whole corpus") {
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Int)] =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val fast = rows(Similarity.pqEncodeOf(spark, sfDir, e))
-    val ref = rows(Similarity.pqEncodeOfShuffled(spark, sfDir, e))
-    assert(fast == ref,
-      s"codegen encode diverged from max_by reference: ${(fast -- ref).take(5)} vs ${(ref -- fast).take(5)}")
-    assert(fast.nonEmpty)
-  }
 
   test("equal scores break to the SMALLEST cid (the max_by struct(score, -cid) contract)") {
     // two subspaces, each with a DUPLICATED centroid under distinct
@@ -62,7 +51,7 @@ class PqEncodeSpec extends SparkSpecBase {
       .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
     val arrays = Similarity.pqCodeArrays(spark, sfDir, e)
     val got = arrays.collect().map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
-    val want = Similarity.pqEncodeOfShuffled(spark, sfDir, e)
+    val want = PqReference.pqEncodeOfShuffled(spark, sfDir, e)
       .groupBy(col("vec_id"))
       .agg(sort_array(collect_list(struct(col("m"), col("cid")))).as("mc"))
       .select(col("vec_id"), expr("transform(mc, x -> x.cid)").as("codes"))

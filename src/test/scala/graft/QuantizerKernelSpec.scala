@@ -5,7 +5,7 @@ import java.util.SplittableRandom
 
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Lakehouse
-import graft.streaming.{EmbedDedupStream, IndexIngest}
+import graft.streaming.EmbedDedupStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -132,15 +132,15 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = vectors(77L, N until N + 600).toDF("vec_id", "embedding")
     val e = normed(batch)
-    assertSameRows(IndexIngest.assignBatch(spark, batch, dir, 9L), indexRows(reference(e), e, 9L),
-      "maintenance batch")
+    assertSameRows(Similarity.indexRows(spark, dir, "prefix", Similarity.versionsOf(batch, 9L)),
+      indexRows(reference(e), e, 9L), "maintenance batch")
   }
 
   test("k-means landing rows equal the reference ranking under the trained quantizer") {
     val (cents, kmK1) = trained
     assert(kmK1 > Dedup.Dd7CoarseProbes,
       s"${cents.length} trained centroids give K1 = $kmK1: the coarse restriction is inactive")
-    assertSameRows(Similarity.kmIndexLandingFrame(spark, dir),
+    assertSameRows(Similarity.landingFrame(spark, dir, "kmeans"),
       indexRows(kmReference(corpus), corpus, 0L), "k-means landing")
   }
 
@@ -148,8 +148,8 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
     import spark.implicits._
     val batch = vectors(77L, N until N + 600).toDF("vec_id", "embedding")
     val e = normed(batch)
-    assertSameRows(IndexIngest.kmAssignBatch(spark, batch, dir, 9L), indexRows(kmReference(e), e, 9L),
-      "k-means maintenance batch")
+    assertSameRows(Similarity.indexRows(spark, dir, "kmeans", Similarity.versionsOf(batch, 9L)),
+      indexRows(kmReference(e), e, 9L), "k-means maintenance batch")
   }
 
   test("the routed placement past the broadcast bound equals the reference ranking") {
@@ -193,7 +193,8 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
   /** Rows of a seeded maintenance batch, placed by the quantizer. */
   private def batchRows(seed: Long, ids: Range): DataFrame = {
     import spark.implicits._
-    IndexIngest.assignBatch(spark, vectors(seed, ids).toDF("vec_id", "embedding"), dir, 1L)
+    Similarity.indexRows(spark, dir, "prefix",
+      Similarity.versionsOf(vectors(seed, ids).toDF("vec_id", "embedding"), 1L))
   }
 
   /** Encodings of every chunk of column `path` in `files`' footers. */
