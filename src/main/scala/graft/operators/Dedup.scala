@@ -357,7 +357,8 @@ object Dedup {
     * budget: ~640 MB ≈ 2^20 anchors on the reference 64-dim corpus
     * (~608 B/row), covering corpora to ~67M vectors at K = n/64 — every
     * landing ever run, up to 40M vectors. It bounds the prefix
-    * [[QuantizerKernel]] broadcast (landing, maintenance, rankedPrefix).
+    * [[QuantizerKernel]] broadcast (landing, maintenance, sim2's inline
+    * rows, dd7/dd9's pair mining).
     * The bound is bytes, not rows, because broadcast size scales with
     * the embedding dimension — a row-count cap alone would force a
     * 4-8+ GB broadcast on a 512-1024-dim corpus, past Spark's 8 GB
@@ -381,22 +382,6 @@ object Dedup {
   private[graft] def prefixCoarse(e: DataFrame, k1: Long): DataFrame =
     e.filter(col("vec_id") < k1)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
-
-  /** The corpus's ranked prefix-index assignment (vec_id, cell, r),
-    * memoized per (session, dir) at depth Dd7Probes — dd7/dd9's
-    * multi-assignment depth, and the depth sim2's CORPUS side needs; the
-    * pipelines share ONE pass of the n·√K·d quantization. It is the
-    * quantizer kernel's narrow map over the cached corpus
-    * ([[Similarity.prefixCells]]): no join and no shuffle, so the
-    * cached output keeps its lineage. sim2's queries DO need √K-deep
-    * ranking, but only for its NumQueries vectors — they rank on the
-    * driver with the same kernel ([[graft.operators.Similarity]] sim2). */
-  private val rankedCache = Memo.newCache[DataFrame]()
-  private[graft] def rankedPrefix(s: SparkSession, d: String): DataFrame =
-    Memo.get(rankedCache, s, d) {
-      Memo.mat(Similarity.prefixCells(s, d, Similarity.normed(s, d))
-        .select(col("vec_id"), col("cell"), col("r")))
-    }
 
   /** dd7 — embedding near-dup via TWO-LEVEL IVF-cell blocking: the
     * bucketed scale path for dd4's O(n²) broadcast self-join. The K =

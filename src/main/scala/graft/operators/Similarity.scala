@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   *    with no shuffle of the corpus: exactly the shape a 100 TB corpus
   *    needs (queries broadcast, corpus partition-local scoring, per-query
   *    top-k via partial aggregation in TakeOrdered).
-  *  - sim2: IVF ANN over the shared two-level n-scaled quantizer
-  *    (dd7's: K = max(256, ⌈n/64⌉) fine cells under K1 = ⌈√K⌉ coarse,
-  *    [[QuantizerKernel]]), queries probe max(4, K1) fine cells →
-  *    per-query scored rows ~ √K · cell-size, SUBLINEAR in n. Fully
+  *  - sim2–sim4c: one IVF pipeline in several configurations — a coarse
+  *    quantizer (probe ranking), a fine code (raw vectors or PQ codes)
+  *    and an exact rerank. Each [[IndexKind]] is one configuration, and
+  *    every IVF query is one [[search]] over the kind's rows: computed
+  *    inline from the corpus (sim2, sim3) or read from the landed index
+  *    (sim2b, sim3b, sim4c, [[searchTopk]]). sim2 is fully
   *    deterministic; the oracle replays the identical algorithm.
   */
 object Similarity {
@@ -105,28 +107,37 @@ object Similarity {
       }
     }
 
-  /** Exact brute-force top-k, memoized: sim1's output and the recall
-    * gate of sim3/sim4 — one brute-force pass instead of three. */
+  /** Exact brute-force top-k of the driver-held queries `qs`: one corpus
+    * scan with the query batch broadcast. */
+  private def bruteTopk(s: SparkSession, d: String, qs: Array[Anchor]): DataFrame =
+    cosTopk(normed(s, d).join(broadcast(queryRel(s, qs)), col("vec_id") =!= col("qid")))
+
+  /** The graded queries' exact top-k, memoized: sim1's output and the
+    * recall gate of sim3/sim4 — one brute-force pass instead of three.
+    * The query norms are the collected ones ([[queryVecs]]), so the
+    * cosines are bit-identical to a corpus-side query frame's. */
   private val exactCache = Memo.newCache[DataFrame]()
   private def exactTopk(s: SparkSession, d: String): DataFrame =
-    Memo.get(exactCache, s, d) {
-      val e = normed(s, d)
-      val q = e.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      Memo.mat(topkPerQid(
-        e.join(broadcast(q), col("vec_id") =!= col("qid"))
-          .withColumn("cos", VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))))
-    }
+    Memo.get(exactCache, s, d)(Memo.mat(bruteTopk(s, d, queryVecs(s, d))))
 
-  /** Per-qid bounded top-k via the TopKAgg sketch: map-side partial
-    * aggregation keeps k pairs per (qid, partition), so the shuffle
-    * carries NumQueries × k pairs instead of every scored row — the
-    * row_number window form shuffles the whole scored set. */
-  private def topkPerQid(scored: DataFrame, distinctIds: Boolean = false): DataFrame = {
+  /** Driver-held queries as a local relation (qid, qv, qn). */
+  private def queryRel(s: SparkSession, qs: Array[Anchor]): DataFrame = {
+    import s.implicits._
+    qs.toSeq.map(a => (a.id, a.v, a.nrm)).toDF("qid", "qv", "qn")
+  }
+
+  /** Per-qid exact top-k of (qid, vec_id) pairs by the cosine of the row
+    * vector (v, nrm) and the query vector (qv, qn), via the TopKAgg
+    * sketch: map-side partial aggregation keeps k pairs per (qid,
+    * partition), so the shuffle carries NumQueries × k pairs instead of
+    * every scored row — the row_number window form shuffles the whole
+    * scored set. */
+  private def cosTopk(pairs: DataFrame, distinctIds: Boolean = false): DataFrame = {
     val agg =
       if (distinctIds) SketchAggs.topkDistinct(col("cos"), col("vec_id"), TopK)
       else SketchAggs.topk(col("cos"), col("vec_id"), TopK)
-    scored.groupBy(col("qid"))
+    pairs.withColumn("cos", VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
+      .groupBy(col("qid"))
       .agg(agg.as("top"))
       .select(col("qid"), posexplode(col("top")))
       .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
@@ -160,35 +171,24 @@ object Similarity {
     * restriction is inactive (Dd7CoarseProbes = 16 = K1 probes every
     * coarse cell), so ranking is bit-identical to a flat K-anchor scan.
     *
-    * Two ranking passes at the two depths actually consumed: the
-    * corpus multi-assigns at Dd7Probes depth (the memoized
-    * dd7/dd9-shared job), and ONLY the NumQueries query rows rank at
-    * nprobe = max(NProbe, K1) depth (√K cosines × NumQueries — free).
-    * The round-9 single-pass form ranked the whole corpus nprobe-deep,
-    * a √n-factor row blowup whose depth-beyond-3 rows were read for 10
-    * vectors and discarded for the rest (measured 58 s vs dd7's 17 s
-    * at the 100× probe). Per-vector ranking is independent, so the
-    * split is bit-identical to slicing the deep ranking. Fully
-    * deterministic ((cos DESC, id ASC) everywhere — TopKAgg order), so
-    * the oracle replays the identical algorithm in DuckDB
-    * (twoLevelRankedSql, shared verbatim with dd7/dd9) and the driver
-    * hash-grades the approximate operator directly. */
+    * sim2 is sim2b over inline rows: the prefix kind's row rule over the
+    * corpus (one narrow pass of the quantizer kernel's map, the rows its
+    * landing writes) is searched exactly as the landed index is — the
+    * NumQueries queries rank √K deep on the driver with the same kernel,
+    * the probed cells' rows join the broadcast probe pairs, and each
+    * pair's cosine is computed off the row's own vector. A vector sharing
+    * several probed cells with a query scores identically in each, and
+    * the top-k sketch keeps one (topkDistinct), so the answer is the
+    * distinct-candidate top-k the oracle computes. Per-vector ranking is
+    * independent, so the corpus's Dd7Probes-deep placement and the
+    * queries' √K-deep probing are bit-identical to slicing one deep
+    * ranking. Fully deterministic ((cos DESC, id ASC) everywhere —
+    * TopKAgg order), so the oracle replays the identical algorithm in
+    * DuckDB (twoLevelRankedSql, shared verbatim with dd7/dd9) and the
+    * driver hash-grades the approximate operator directly. */
   val sim2 = QueryDef(
     "sim2_ann_ivf_topk",
-    (s, d) => {
-      // corpus multi-assignment at Dd7Probes depth — memoized, shared
-      // with dd7/dd9
-      val assigned = Dedup.rankedPrefix(s, d).select(col("vec_id"), col("cell"))
-      // query probing at max(NProbe, K1) depth — ranked separately over
-      // ONLY the NumQueries query rows (√K cosines × NumQueries) by the
-      // same kernel on the driver, so the corpus never pays √K-deep
-      // ranking. Per-vector ranking is independent, so this is
-      // bit-identical to slicing the query rows out of a full-corpus
-      // deep ranking (what the oracle computes).
-      val k1 = Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
-      ivfTopk(s, d, assigned,
-        prefixProbes(s, d, math.max(NProbe.toLong, k1).toInt, queryVecs(s, d)))
-    },
+    (s, d) => inlineTopkAt(s, d, "prefix", sqrtKNprobe(s, d)),
     Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             |${Dedup.twoLevelRankedSql(s"greatest($NProbe, ${Dedup.Dd7CoarseSql})")},
             |assigned AS (SELECT vec_id, cell FROM ranked WHERE r <= ${Dedup.Dd7Probes}),
@@ -204,39 +204,6 @@ object Similarity {
             |SELECT qid, rank, neighbor_id FROM scored WHERE rank <= $TopK""".stripMargin),
     doc = "two-level n-scaled IVF ANN (dd7's quantizer): deterministic — oracle replays the same algorithm"
   )
-
-  /** The IVF tail of sim2 and sim3: corpus rows of `assigned`
-    * (vec_id, cell) sharing ≥ 1 of a query's `probeRows` (qid, cell)
-    * become its candidates, which fetch their vectors and score exactly
-    * into the per-qid top-k. Only the corpus placement and the probe
-    * ranking differ between the two quantizers. */
-  private def ivfTopk(s: SparkSession, d: String, assigned: DataFrame,
-      probeRows: Array[(Long, Long)]): DataFrame = {
-    val e = normed(s, d)
-    import s.implicits._
-    val probes = probeRows.toSeq.toDF("qid", "cell")
-    // candidates = corpus rows sharing ≥ 1 probed cell with a query,
-    // deduped before scoring (a pair can share several cells).
-    // probes is NumQueries × nprobe rows → broadcast; cand is the
-    // per-query-bounded shortlist, so the vector-fetch join moves
-    // candidates only, never the corpus
-    val cand = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id")).distinct()
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // candidate fetch: BROADCAST the per-query-bounded (qid, vec_id)
-    // shortlist (~NumQueries·nprobe·cellsize rows — √n growth, ~16 MB
-    // at 20M vectors, ~120 MB at 10⁹) so the corpus streams once and
-    // never shuffles its vectors. Left to the optimizer, cand sits
-    // just past the auto-broadcast threshold and the fetch planned as
-    // a both-sides exchange — ~11 GB of corpus vectors at the 1000×
-    // probe, the whole tail cost of the query.
-    topkPerQid(
-      broadcast(cand).join(e, Seq("vec_id")).join(broadcast(q), Seq("qid"))
-        .withColumn("cos",
-          VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn"))))
-  }
 
   /** The CAP on the bucket count of the landed cell-bucketed index
     * tables (prefix, k-means, IVF-PQ). Each landing passes the bytes it
@@ -259,10 +226,11 @@ object Similarity {
     java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
 
-  /** A served ANN index kind: a landed table bucketed and sorted on
-    * `cell`, so a query's cost is its probed cells' rows, not the
-    * corpus. The landing, the catch-up after maintenance began and each
-    * maintenance append all write the kind's ONE row rule:
+  /** An ANN index kind — one configuration of the IVF pipeline: a landed
+    * table bucketed and sorted on `cell`, so a query's cost is its probed
+    * cells' rows, not the corpus. The landing, the catch-up after
+    * maintenance began and each maintenance append all write the kind's
+    * ONE row rule, and every search reads rows of that rule:
     *  - `table`: the table name's prefix (the corpus dir's hash follows);
     *  - `fingerprint`: what the landed bytes depend on, given the corpus
     *    dir and size n — a mismatch re-lands ([[Lakehouse.landBucketed]]);
@@ -273,30 +241,54 @@ object Similarity {
     *    so the fingerprint stays valid);
     *  - `landing`: what a (re-)landing writes — the row rule over the
     *    corpus at seq 0, or over the live versions of the maintained
-    *    prefix index when the kind lands after maintenance began. */
+    *    prefix index when the kind lands after maintenance began;
+    *  - `probes`: the coarse axis — each query's `nprobe` best cells,
+    *    ranked on the driver ((qid, cell) pairs, best first);
+    *  - `score`: the fine-code axis — the per-qid top-k of the probed
+    *    cells' rows, given the probe pairs, the queries and the depth of
+    *    the shortlist an approximate code re-ranks ([[shortlistDepth]]). */
   private final case class IndexKind(
       name: String, table: String,
       fingerprint: (String, Long) => String,
       bytes: (SparkSession, String, Long) => Long,
       rows: (SparkSession, String, DataFrame) => DataFrame,
-      landing: (SparkSession, String) => DataFrame)
+      landing: (SparkSession, String) => DataFrame,
+      probes: (SparkSession, String, Int, Array[Anchor]) => Array[(Long, Long)],
+      score: (SparkSession, String, DataFrame, Array[(Long, Long)], Array[Anchor], Int) => DataFrame)
+
+  /** The raw-vector scorer: exact cosines off the rows' own vectors. */
+  private def rawScore(
+      s: SparkSession, d: String, rows: DataFrame, probes: Array[(Long, Long)],
+      qs: Array[Anchor], candK: Int): DataFrame =
+    serveTopk(s, rows, probes, qs)
 
   private val PrefixKind = IndexKind("prefix", "graft_ann_index_",
     (d, n) => s"annidx|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}",
-    vectorIndexBytes, prefixRows, prefixIndexLandingFrame)
+    vectorIndexBytes, prefixRows, prefixIndexLandingFrame, prefixProbes, rawScore)
   private val KmKind = IndexKind("kmeans", "graft_ann_km_index_",
     (d, n) => s"kmidx|v2|$d|n=$n|k=${math.min(Dedup.dd7AnchorCount(n), TrainSample.toLong)}" +
       s"|it=$KmeansIters|ts=$TrainSample|p=${Dedup.Dd7Probes}",
     vectorIndexBytes, kmRows,
     (s, d) => kmRows(s, d, if (prefixMaintained(s, d)) prefixVersions(s, d, 0L).get
-      else corpusVersions(s, d)))
+      else corpusVersions(s, d)),
+    (s, d, nprobe, qs) => probesOf(kmLocal(s, d)._1, nprobe, qs), rawScore)
   // n · Dd7Probes rows (cell, vec_id, codes, seq): PqM int codes + ~32 B
   private val IvfPqKind = IndexKind("ivfpq", "graft_ann_ivfpq_",
     (d, n) => s"ivfpq|v2|$d|n=$n|k=${Dedup.dd7AnchorCount(n)}|p=${Dedup.Dd7Probes}" +
       s"|m=$PqM|kc=$PqK|it=$PqIters|ts=$TrainSample",
     (_, _, n) => n * Dedup.Dd7Probes * (4L * PqM + 32L),
-    (s, d, versions) => ivfPqOf(s, d, prefixRows(s, d, versions)), ivfPqLandingFrame)
+    (s, d, versions) => ivfPqOf(s, d, prefixRows(s, d, versions)), ivfPqLandingFrame,
+    prefixProbes, ivfPqScore)
   private val Kinds = Seq(PrefixKind, KmKind, IvfPqKind)
+
+  /** The one IVF search: kind `k`'s probes of `qs` at depth `nprobe`,
+    * then its scorer over `rows` — the landed, tombstone-masked index
+    * ([[servedIndex]]) or the kind's row rule over the corpus computed
+    * inline. */
+  private def search(
+      s: SparkSession, d: String, k: IndexKind, rows: DataFrame, nprobe: Int,
+      qs: Array[Anchor], rerankPerProbe: Int = DefaultRerankPerProbe): DataFrame =
+    k.score(s, d, rows, k.probes(s, d, nprobe, qs), qs, shortlistDepth(nprobe, rerankPerProbe))
 
   private def kindOf(name: String): IndexKind = Kinds.find(_.name == name)
     .getOrElse(throw new IllegalArgumentException(s"unknown index kind: $name"))
@@ -337,10 +329,9 @@ object Similarity {
     val sfx = dirSuffix(d)
     val tables = Kinds.map(tableOf(_, d)) ++ Seq("graft_ann_fine_", "graft_ann_pq_codes_").map(_ + sfx)
     tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
-    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
     val wh = new java.io.File(s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
     Option(wh.listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("graft_ann_") && f.getName.contains(sfx)).foreach(rm)
+      .filter(f => f.getName.startsWith("graft_ann_") && f.getName.contains(sfx)).foreach(Lakehouse.rmTree)
     tables.foreach(Lakehouse.tombstoneMap(s, _)) // an emptied sidecar drops its driver-held map
     Memo.forget(s, d)
   }
@@ -489,14 +480,15 @@ object Similarity {
 
   /** The prefix assignment of `e` (vec_id, v, nrm[, seq]): (cell,
     * vec_id, v, nrm[, seq], r) at Dd7Probes depth — the one placement
-    * primitive behind the landing, maintenance batches and
-    * [[Dedup.rankedPrefix]]. While the
-    * kernel fits a broadcast it is ONE narrow per-partition map (no
-    * join, no exchange). Past the bound (K beyond ~2^20 anchors at
-    * d = 64) no node holds the fine set: the vectors route to their
-    * probed coarse cells through [[graft.streaming.EmbedDedupStream]]'s
-    * cid join (the dd7 stream twin's placement, same ranking) and the
-    * vectors join back on the narrow (vec_id, cell, r) side. */
+    * primitive behind the prefix and IVF-PQ row rules (landing,
+    * maintenance batches, sim2's inline rows) and dd7/dd9's pair mining
+    * ([[Dedup.ivfPairs]]). While the kernel fits a broadcast it is ONE
+    * narrow per-partition map (no join, no exchange). Past the bound (K
+    * beyond ~2^20 anchors at d = 64) no node holds the fine set: the
+    * vectors route to their probed coarse cells through
+    * [[graft.streaming.EmbedDedupStream]]'s cid join (the dd7 stream
+    * twin's placement, same ranking) and the vectors join back on the
+    * narrow (vec_id, cell, r) side. */
   private[graft] def prefixCells(s: SparkSession, d: String, e: DataFrame): DataFrame =
     if (kernelBroadcastable(s, d)) {
       val bc = Memo.get(kernelBcCache, s, d)(s.sparkContext.broadcast(prefixKernel(s, d)))
@@ -552,7 +544,8 @@ object Similarity {
       probesOf(QuantizerKernel.tagged(coarse, fine), nprobe, qs)
     }
 
-  /** Serve a top-k ANN query batch from a landed cell-bucketed index,
+  /** The raw-vector scorer's top-k over cell-sorted index rows `idx` —
+    * a landed cell-bucketed index or the same rows computed inline —
     * given the locally-ranked probe list. The probe pairs — NumQueries
     * × nprobe ≈ 10·√K, the same bounded-by-construction size as the
     * k-means TrainSample — are used two ways: the distinct cell ids
@@ -572,7 +565,7 @@ object Similarity {
     * vectors (ADVICE r10: the old distinct() hashed the vector payload
     * through an extra exchange). */
   private def serveTopk(
-      s: SparkSession, d: String, idx: DataFrame,
+      s: SparkSession, idx: DataFrame,
       probeRows: Array[(Long, Long)],
       qs: Array[Anchor]): DataFrame = {
     val cellIds = probeRows.map(_._2).distinct.toSeq
@@ -586,12 +579,9 @@ object Similarity {
       val a = byId(qid)
       (qid, cell, a.v, a.nrm)
     }.toDF("qid", "cell", "qv", "qn")
-    val scored = idx.filter(col("cell").isin(cellIds: _*))
+    cosTopk(idx.filter(col("cell").isin(cellIds: _*))
       .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-    topkPerQid(scored, distinctIds = true)
+      .filter(col("vec_id") =!= col("qid")), distinctIds = true)
   }
 
   /** The coarse-tagged fine anchors LANDED as a cid-bucketed table —
@@ -618,23 +608,18 @@ object Similarity {
     * ([[prefixProbes]]). */
   private[graft] val FineResidentMax = 131072L
 
-  /** sim2b — sim2 SERVED from the persisted index: identical result
-    * (same DuckDB oracle), but the corpus assignment is read from the
-    * one-time [[servedIndex]] landing instead of being recomputed, and
-    * the scan touches ONLY the probed cells. The probed cell-id list is
-    * bounded (NumQueries · nprobe ≈ 10·√K ids — 160 at the graded SFs,
-    * ~1.8k at 2M vectors, ~40k at 10⁹) and is pushed into the scan as
-    * an In filter, where bucket pruning + parquet row-group stats (the
-    * table is sorted on cell) skip every unprobed cell — per-query I/O
-    * ∝ probed cells, not corpus size. */
+  /** sim2b — sim2 SERVED from the persisted index: the same search at
+    * the same depth, so an identical result (same DuckDB oracle), but the
+    * rows are read from the one-time [[servedIndex]] landing instead of
+    * being recomputed, and the scan touches ONLY the probed cells. The
+    * probed cell-id list is bounded (NumQueries · nprobe ≈ 10·√K ids —
+    * 160 at the graded SFs, ~1.8k at 2M vectors, ~40k at 10⁹) and is
+    * pushed into the scan as an In filter, where bucket pruning +
+    * parquet row-group stats (the table is sorted on cell) skip every
+    * unprobed cell — per-query I/O ∝ probed cells, not corpus size. */
   val sim2b = QueryDef(
     "sim2b_ann_ivf_served",
-    (s, d) => {
-      val k1 = Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
-      // probes rank on the driver with the same kernel as sim2's
-      val probes = prefixProbes(s, d, math.max(NProbe.toLong, k1).toInt, queryVecs(s, d))
-      serveTopk(s, d, servedIndex(s, d), probes, queryVecs(s, d))
-    },
+    (s, d) => servedTopkAt(s, d, "prefix", sqrtKNprobe(s, d), buildIfMissing = true),
     sim2.oracle, // identical assignment + scoring by construction
     doc = "sim2 served from the persisted cell-bucketed index: probed-cells-only scan"
   )
@@ -734,6 +719,9 @@ object Similarity {
     (QuantizerKernel(all.take(k1), all), k1)
   }
 
+  /** sim3/sim3b's probe depth: max(NProbe, K1) of the trained quantizer. */
+  private def kmNprobe(s: SparkSession, d: String): Int = math.max(NProbe, kmLocal(s, d)._2)
+
   private val kmKernelBcCache =
     Memo.newCache[org.apache.spark.broadcast.Broadcast[QuantizerKernel]]()
 
@@ -742,7 +730,7 @@ object Similarity {
     * prefix placement's narrow per-partition map
     * ([[QuantizerKernel.cells]]) over the k-means kernel, broadcast once
     * per (session, dir). The km landing, each maintenance append and
-    * sim3's corpus side place through it. */
+    * sim3's inline rows place through it. */
   private[graft] def kmAssignFrame(s: SparkSession, d: String, e: DataFrame): DataFrame =
     QuantizerKernel.cells(e,
       Memo.get(kmKernelBcCache, s, d)(s.sparkContext.broadcast(kmLocal(s, d)._1)),
@@ -753,15 +741,13 @@ object Similarity {
     * the memoized exact answer. Trained centroids/codebooks are
     * float-summation-order sensitive, so the driver oracle gates recall
     * instead of replaying the assignment. */
-  private def recallGate(s: SparkSession, d: String, approxTopk: DataFrame): DataFrame = {
-    val exact = exactTopk(s, d).select(col("qid"), col("neighbor_id"))
+  private def recallGate(s: SparkSession, d: String, approxTopk: DataFrame): DataFrame =
     approxTopk
-      .join(exact.withColumn("hit", lit(1)), Seq("qid", "neighbor_id"), "left_outer")
+      .join(exactNeighbors(s, d).withColumn("hit", lit(1)), Seq("qid", "neighbor_id"), "left_outer")
       .groupBy(col("qid"))
       .agg(sum(coalesce(col("hit"), lit(0))).as("matched"))
       .select(col("qid"),
         (col("matched") >= math.ceil(TopK * RecallGate).toInt).cast("int").as("ok"))
-  }
 
   /** sim3 — IVF with k-means-refined centroids: sim2 with another
     * kernel. Centroid count scales with the corpus (k = min(max(256,
@@ -770,22 +756,18 @@ object Similarity {
     * quantizer (sim2/dd7) is the designated path), Lloyd runs on the
     * driver over the bounded sample (deterministic init = the first k
     * sample vectors), and the trained set is routed two-level like the
-    * prefix one ([[kmLocal]]). The corpus multi-assigns to Dd7Probes
-    * cells through the kernel's narrow map ([[kmAssignFrame]]); the
+    * prefix one ([[kmLocal]]). sim3 is sim3b over inline rows: the
+    * k-means kind's row rule over the corpus ([[kmRows]], the kernel's
+    * narrow map at Dd7Probes depth) is searched as sim2's rows are — the
     * NumQueries queries rank max(NProbe, K1) deep on the driver with the
-    * same kernel; the candidate tail is sim2's ([[ivfTopk]]). Unlike
+    * same kernel, and the probed cells' rows score exactly. Unlike
     * sim2's prefix anchors the trained centroids are
     * float-summation-order sensitive, so the driver oracle is a recall
     * GATE rather than a replay: per-qid ok = recall@5 ≥ 0.6 vs the
     * exact answer (wide margin measured). */
   val sim3 = QueryDef(
     "sim3_ann_ivf_kmeans",
-    (s, d) => {
-      val assigned = kmAssignFrame(s, d, normed(s, d)).select(col("vec_id"), col("cell"))
-      val (kernel, k1) = kmLocal(s, d)
-      recallGate(s, d,
-        ivfTopk(s, d, assigned, probesOf(kernel, math.max(NProbe, k1), queryVecs(s, d))))
-    },
+    (s, d) => recallGate(s, d, inlineTopkAt(s, d, "kmeans", kmNprobe(s, d))),
     Some("SELECT CAST(vec_id AS BIGINT) AS qid, 1 AS ok FROM embeddings WHERE vec_id < 10"),
     doc = "k-means IVF (n-scaled k, two-level routing): recall-gated vs sim1"
   )
@@ -805,19 +787,16 @@ object Similarity {
   private def kmRows(s: SparkSession, d: String, versions: DataFrame): DataFrame =
     kmAssignFrame(s, d, versions).select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("seq"))
 
-  /** sim3b — sim3 SERVED from the persisted k-means index: the corpus
-    * assignment (the linear-in-n stage) is read from the one-time
+  /** sim3b — sim3 SERVED from the persisted k-means index: the same
+    * search, its rows (the linear-in-n stage) read from the one-time
     * k-means index landing ([[kmRows]]); a query's cost is probed cells only
     * (same serving plan as sim2b — In-filter → bucket pruning +
     * row-group skip). Recall-gated like sim3: the landed cells ARE
     * sim3's cells, placed by the same kernel. */
   val sim3b = QueryDef(
     "sim3b_ann_kmeans_served",
-    (s, d) => {
-      val (kernel, k1) = kmLocal(s, d)
-      val probes = probesOf(kernel, math.max(NProbe, k1), queryVecs(s, d))
-      recallGate(s, d, serveTopk(s, d, servedIndex(s, d, KmKind), probes, queryVecs(s, d)))
-    },
+    (s, d) => recallGate(s, d,
+      servedTopkAt(s, d, "kmeans", kmNprobe(s, d), buildIfMissing = true)),
     sim3.oracle,
     doc = "sim3 served from the persisted k-means cell-bucketed index: probed-cells-only scan"
   )
@@ -925,17 +904,12 @@ object Similarity {
         .select(col("vec_id"), col("v"), col("nrm"), lit(0L).as("seq"))
       prefixVersions(s, d, 1L).fold(corpusE)(app => corpusE.unionByName(app))
     }
-    import s.implicits._
-    val q = qs.toSeq.map(a => (a.id, a.v, a.nrm)).toDF("qid", "qv", "qn")
     val fetched = broadcast(cands)
       .join(e, Seq("vec_id"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(expr("max_by(struct(v, nrm), seq)").as("vn"))
       .select(col("qid"), col("vec_id"), col("vn.v").as("v"), col("vn.nrm").as("nrm"))
-    val reranked = fetched
-      .join(broadcast(q), Seq("qid"))
-      .withColumn("cos", VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn")))
-    topkPerQid(reranked)
+    cosTopk(fetched.join(broadcast(queryRel(s, qs)), Seq("qid")))
   }
 
   /** Per-query flattened ADC lookup tables, computed DRIVER-side from
@@ -1048,98 +1022,93 @@ object Similarity {
       if (Lakehouse.isLanded(s, tableOf(PrefixKind, d))) servedIndex(s, d)
       else prefixIndexLandingFrame(s, d))
 
-  /** Cell-pruned ADC top-k: probe ranking runs driver-local (as sim2b),
-    * the probed cell ids push into the composed-index scan as an In
-    * filter (bucket pruning + row-group skip), and the broadcast ADC
-    * tables score the probed rows into the shared shortlist
-    * ([[adcShortlist]]). ONE scan of probed cells + ONE k-pair-per-
-    * partition exchange per query batch. Returns (shortlist, probed cell
-    * ids) — the cells feed the re-rank's cell-pruned vector fetch. */
-  private def ivfPqCands(
-      s: SparkSession, d: String, nprobe: Int, qs: Array[Anchor],
-      rerankPerProbe: Int = DefaultRerankPerProbe): (DataFrame, Seq[Long]) = {
-    val probes = prefixProbes(s, d, nprobe, qs)
+  /** The code-row scorer (IVF-PQ): the probed cell ids push into the
+    * composed-index scan as an In filter (bucket pruning + row-group
+    * skip), the broadcast ADC tables score the probed rows into a
+    * `candK`-deep shortlist ([[adcShortlist]]), and the shortlist
+    * re-ranks exactly off the same cells' vectors ([[pqRerank]]). ONE
+    * scan of probed cells + ONE k-pair-per-partition exchange per query
+    * batch before the re-rank. */
+  private def ivfPqScore(
+      s: SparkSession, d: String, rows: DataFrame, probes: Array[(Long, Long)],
+      qs: Array[Anchor], candK: Int): DataFrame = {
     val cellIds = probes.map(_._2).distinct.toSeq
     import s.implicits._
     val probesDf = probes.toSeq.toDF("qid", "cell")
     val tabs = adcTables(s, d, qs).toDF("qid", "tab")
-    // Shortlist ∝ probed depth (VERDICT r12 #4): ADC is approximate, so
-    // the impostor count above a true neighbor grows with the scored
-    // candidate set — which grows ∝ nprobe, since the n-scaled quantizer
-    // holds cell occupancy ~constant (≈ Dd7CellDiv·Dd7Probes rows per
-    // probe at every corpus size). A FIXED shortlist made recall
-    // DECREASE with nprobe (RECALL_r12_100x: ivfpq 0.98@1 → 0.94@56,
-    // degradation beginning once scored/candK ≳ 20); keeping the
-    // shortlist a FIXED FRACTION of the scored set restores
-    // monotonicity. Coefficient measured at the 100× probe: 20·nprobe
-    // (scored/10) holds recall FLAT at the nprobe=1 level (0.98 —
-    // monotone but depth buys nothing); 250·nprobe reaches 1.0 from
-    // depth 14 at 3× serve cost; 60·nprobe (re-rank ~⅓ of scored —
-    // cell occupancy is ~192 rows/probe by the n-scaled quantizer's
-    // design) captures the rise to 1.0 at moderate cost. Floored at
-    // the flat-PQ shortlist and capped: the re-rank fetch broadcasts
-    // the shortlist, and the top-k sketch holds candK pairs per (qid,
-    // partition).
-    val candK = math.min(math.max(ReRankFactor * TopK, rerankPerProbe * nprobe), 16384)
-    val scored = servedIndex(s, d, IvfPqKind).filter(col("cell").isin(cellIds: _*))
+    val scored = rows.filter(col("cell").isin(cellIds: _*))
       .join(broadcast(probesDf), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .join(broadcast(tabs), Seq("qid"))
-    (adcShortlist(scored, candK), cellIds)
+    pqRerank(s, d, adcShortlist(scored, candK), qs, Some(cellIds))
   }
+
+  /** The shortlist an approximate code re-ranks, ∝ probed depth
+    * (VERDICT r12 #4): ADC is approximate, so the impostor count above a
+    * true neighbor grows with the scored candidate set — which grows ∝
+    * nprobe, since the n-scaled quantizer holds cell occupancy
+    * ~constant (≈ Dd7CellDiv·Dd7Probes rows per probe at every corpus
+    * size). A FIXED shortlist made recall DECREASE with nprobe
+    * (RECALL_r12_100x: ivfpq 0.98@1 → 0.94@56, degradation beginning
+    * once scored/candK ≳ 20); keeping the shortlist a FIXED FRACTION of
+    * the scored set restores monotonicity. Coefficient measured at the
+    * 100× probe: 20·nprobe (scored/10) holds recall FLAT at the nprobe=1
+    * level (0.98 — monotone but depth buys nothing); 250·nprobe reaches
+    * 1.0 from depth 14 at 3× serve cost; 60·nprobe (re-rank ~⅓ of scored
+    * — cell occupancy is ~192 rows/probe by the n-scaled quantizer's
+    * design) captures the rise to 1.0 at moderate cost. Floored at the
+    * flat-PQ shortlist and capped: the re-rank fetch broadcasts the
+    * shortlist, and the top-k sketch holds candK pairs per (qid,
+    * partition). Raw-vector rows are exact and take no shortlist. */
+  private def shortlistDepth(nprobe: Int, rerankPerProbe: Int): Int =
+    math.min(math.max(ReRankFactor * TopK, rerankPerProbe * nprobe), 16384)
 
   /** sim4c — the composed IVF+PQ serving path (FAISS IndexIVFPQ): PQ
     * codes landed WITH their cell assignment, ADC restricted to probed
     * cells, exact re-rank of the bounded shortlist, recall-gated like
     * sim4. Per-query-batch cost ∝ probed cells' rows — the 100 TB PQ
     * shape; sim4/sim4b remain as the flat-PQ baselines whose ADC scans
-    * all codes. */
+    * all codes. It serves at [[defaultNprobe]]: the calibrated sidecar
+    * depth when the landing ran calibration, the √K heuristic otherwise
+    * (no calibration sidecar exists at the graded SFs) — the depth the
+    * deployable searchTopk/ServeStream surface serves at. */
   val sim4c = QueryDef(
     "sim4c_ann_ivfpq_served",
-    (s, d) => {
-      // defaultNprobe: the calibrated sidecar depth when the landing
-      // ran calibration, the √K heuristic otherwise (identical to the
-      // pre-r17 explicit max(NProbe, K1) at the graded SFs, where no
-      // calibration sidecar exists) — the graded path serves at the
-      // same depth the deployable searchTopk/ServeStream surface does
-      val (cands, cells) =
-        ivfPqCands(s, d, defaultNprobe(s, d), queryVecs(s, d))
-      recallGate(s, d, pqRerank(s, d, cands, queryVecs(s, d), Some(cells)))
-    },
+    (s, d) => recallGate(s, d,
+      servedTopkAt(s, d, "ivfpq", defaultNprobe(s, d), buildIfMissing = true)),
     sim4.oracle,
     doc = "composed IVF+PQ: probed-cells-only ADC over the landed cell-bucketed code table; recall-gated vs sim1"
   )
 
-  /** Recall instrumentation (VERDICT r10 #8): the served top-k answer
-    * at an EXPLICIT fine-probe depth for the prefix (sim2b) or k-means
-    * (sim3b) index, and the exact reference answer — the pieces
+  /** Recall instrumentation (VERDICT r10 #8): the graded queries' top-k
+    * answer served from kind `kind`'s landed index at an EXPLICIT
+    * fine-probe depth, beside the exact reference answer — the pieces
     * [[graft.tools.RecallProbe]] measures a recall@k / nprobe
-    * trade-off curve from. Runs the SAME driver-resident probe ranking
-    * and the SAME probed-cells-only serving plan as the graded
-    * queries, so the measured recall is the recall of what ships, not
-    * of a parallel implementation. */
+    * trade-off curve from. The served graded queries (sim2b, sim3b,
+    * sim4c) are this call at their depths, so the measured recall is the
+    * recall of what ships, not of a parallel implementation. */
   private[graft] def servedTopkAt(
       s: SparkSession, d: String, kind: String, nprobe: Int,
       rerankPerProbe: Int = DefaultRerankPerProbe,
-      buildIfMissing: Boolean = false): DataFrame = {
-    if (!buildIfMissing) assertLandedForServe(s, d, kind)
-    searchAnchors(s, d, kind, nprobe, queryVecs(s, d), rerankPerProbe)
+      buildIfMissing: Boolean = false): DataFrame =
+    searchServed(s, d, kind, nprobe, queryVecs(s, d), rerankPerProbe, buildIfMissing)
+
+  /** The graded queries' top-k through kind `kind` at depth `nprobe`
+    * over the kind's row rule applied to the corpus inline — nothing is
+    * landed or read from a landing (sim2, sim3). */
+  private[graft] def inlineTopkAt(s: SparkSession, d: String, kind: String, nprobe: Int): DataFrame = {
+    val k = kindOf(kind)
+    search(s, d, k, k.rows(s, d, corpusVersions(s, d)), nprobe, queryVecs(s, d))
   }
 
-  /** The serving dispatch shared by the graded queries (queryVecs) and
-    * [[searchTopk]] (arbitrary caller vectors). */
-  private def searchAnchors(
-      s: SparkSession, d: String, kind: String, nprobe: Int,
-      qs: Array[Anchor],
-      rerankPerProbe: Int = DefaultRerankPerProbe): DataFrame = kind match {
-    case "prefix" =>
-      serveTopk(s, d, servedIndex(s, d), prefixProbes(s, d, nprobe, qs), qs)
-    case "kmeans" =>
-      serveTopk(s, d, servedIndex(s, d, KmKind), probesOf(kmLocal(s, d)._1, nprobe, qs), qs)
-    case "ivfpq" =>
-      val (cands, cells) = ivfPqCands(s, d, nprobe, qs, rerankPerProbe)
-      pqRerank(s, d, cands, qs, Some(cells))
-    case other => throw new IllegalArgumentException(s"unknown index kind: $other")
+  /** [[search]] over kind `kind`'s landed index, shared by the graded
+    * queries (queryVecs) and [[searchTopk]] (arbitrary caller vectors). */
+  private def searchServed(
+      s: SparkSession, d: String, kind: String, nprobe: Int, qs: Array[Anchor],
+      rerankPerProbe: Int, buildIfMissing: Boolean): DataFrame = {
+    if (!buildIfMissing) assertLandedForServe(s, d, kind)
+    val k = kindOf(kind)
+    search(s, d, k, servedIndex(s, d, k), nprobe, qs, rerankPerProbe)
   }
 
   /** PUBLIC ANN search for ARBITRARY query vectors — the online-serving
@@ -1173,26 +1142,20 @@ object Similarity {
       queries: Seq[(Long, Array[Double])],
       nprobe: Int = 0,
       rerankPerProbe: Int = DefaultRerankPerProbe,
-      buildIfMissing: Boolean = false): DataFrame = {
-    if (!buildIfMissing) assertLandedForServe(s, d, kind)
-    val qs = queries.map { case (id, v) => Anchor(id, v, math.sqrt(dotA(v, v))) }.toArray
-    val np = if (nprobe > 0) nprobe else defaultNprobe(s, d)
-    searchAnchors(s, d, kind, np, qs, rerankPerProbe)
-  }
+      buildIfMissing: Boolean = false): DataFrame =
+    searchServed(s, d, kind, if (nprobe > 0) nprobe else defaultNprobe(s, d),
+      callerAnchors(queries), rerankPerProbe, buildIfMissing)
 
   /** Exact brute-force top-[[TopK]] for ARBITRARY query vectors (the
-    * ground truth [[searchTopk]] is measured against): one corpus scan
-    * with the query batch broadcast — the sim1 plan shape. */
+    * ground truth [[searchTopk]] is measured against): sim1's brute
+    * force over the caller's vectors. */
   def exactTopkFor(
-      s: SparkSession, d: String, queries: Seq[(Long, Array[Double])]): DataFrame = {
-    val e = normed(s, d)
-    import s.implicits._
-    val q = queries.map { case (id, v) => (id, v, math.sqrt(dotA(v, v))) }
-      .toDF("qid", "qv", "qn")
-    topkPerQid(
-      e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("cos", VectorExprs.dot(col("v"), col("qv")) / (col("nrm") * col("qn"))))
-  }
+      s: SparkSession, d: String, queries: Seq[(Long, Array[Double])]): DataFrame =
+    bruteTopk(s, d, callerAnchors(queries))
+
+  /** Caller query vectors as anchors, normed on the driver. */
+  private def callerAnchors(queries: Seq[(Long, Array[Double])]): Array[Anchor] =
+    queries.map { case (id, v) => Anchor(id, v, math.sqrt(dotA(v, v))) }.toArray
 
   /** (qid, neighbor_id) of the exact brute-force answer (memoized). */
   private[graft] def exactNeighbors(s: SparkSession, d: String): DataFrame =

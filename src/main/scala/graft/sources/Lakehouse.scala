@@ -35,7 +35,9 @@ import org.apache.spark.sql.types._
   */
 object Lakehouse {
 
-  private def rmTree(f: java.io.File): Unit = {
+  /** Delete `f` and everything under it: the engine's one recursive
+    * delete. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 

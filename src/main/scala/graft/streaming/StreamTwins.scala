@@ -37,6 +37,21 @@ object StreamTwins {
   def ReplayChunks: Int =
     math.max(2, sys.props.get("graft.replay.chunks").map(_.toInt).getOrElse(4))
 
+  /** Run a file-backed replay in a fresh temp root named `prefix` and
+    * return its answer collected into a local relation: the answer is
+    * read before `cleanup` and the deletion of the root (inputs, sinks,
+    * checkpoints), so nothing of the run outlives the call. */
+  private def inTempRoot(s: SparkSession, prefix: String, cleanup: String => Unit = _ => ())(
+      replay: String => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    try {
+      val answer = replay(root)
+      s.createDataFrame(java.util.Arrays.asList(answer.collect(): _*), answer.schema)
+    } finally {
+      try cleanup(root) finally graft.sources.Lakehouse.rmTree(new java.io.File(root))
+    }
+  }
+
   /** `flush = false` for transforms that emit EAGERLY (the inner
     * interval join: matches emit on arrival, the watermark only evicts
     * join state) — the flush sentinels exist to close windowed
@@ -145,13 +160,12 @@ object StreamTwins {
     * them up per trigger, and a foreachBatch parquet sink accumulates
     * the watermark-finalized windows. A graceful stop commits every
     * processed batch, so the resumed query appends no duplicates. */
-  private def replayRestart(s: SparkSession, d: String): DataFrame = {
+  private def replayRestart(s: SparkSession, d: String, root: String): DataFrame = {
     import s.implicits._
     val evs = orderedEvents(s, d)
     val maxTs = evs.map(_.ts.getTime).max
     val sentinel = Event(-1L,
       new java.sql.Timestamp(maxTs + 7L * 24 * 3600 * 1000), -1L, "view", 0.0, "{}")
-    val root = java.nio.file.Files.createTempDirectory("graft-q07r").toString
     val inDir = s"$root/in"; val sink = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(inDir).mkdirs() // file source requires the dir at start
     val chunkSize = math.max(1, (evs.size + ReplayChunks - 1) / ReplayChunks)
@@ -204,7 +218,7 @@ object StreamTwins {
 
   val q07r = QueryDef(
     "q07r_tumbling_restart",
-    (s, d) => replayRestart(s, d),
+    (s, d) => inTempRoot(s, "graft-q07r")(replayRestart(s, d, _)),
     graft.operators.WindowedAgg.q07.oracle,
     doc = "q07 streamed with a mid-replay stop + checkpoint resume: oracle-grades state restore",
     scalePath = false
@@ -390,11 +404,10 @@ object StreamTwins {
     * state row the reader misses, duplicates, or reads with a stale
     * value breaks the hash — this grades the STORE CONTENTS, where the
     * other twins grade emitted changelogs. */
-  private def replayIq(s: SparkSession, d: String): DataFrame = {
+  private def replayIq(s: SparkSession, d: String, ckpt: String): DataFrame = {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = orderedEvents(s, d)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-q59").toString
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
     val chunkSize = math.max(1, (evs.size + ReplayChunks - 1) / ReplayChunks)
     val key = "spark.sql.shuffle.partitions"
@@ -420,7 +433,7 @@ object StreamTwins {
 
   val q59 = QueryDef(
     "q59_interactive_query",
-    (s, d) => replayIq(s, d),
+    (s, d) => inTempRoot(s, "graft-q59")(replayIq(s, d, _)),
     Some("""SELECT user_id, event_id, round(value, 2) AS value,
            |  CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec
            |FROM (SELECT e.*, row_number() OVER (PARTITION BY user_id
@@ -578,13 +591,13 @@ object StreamTwins {
     * bit-identical to sim2b's, so sim2's DuckDB oracle grades streamed
     * serving end to end (answer completeness across batches, batch
     * provenance, sink append semantics). */
-  private def replayServe(s: SparkSession, d: String): DataFrame = {
+  private def replayServe(s: SparkSession, d: String, root: String): DataFrame = {
     import s.implicits._
     val qs = Tables.embeddings(s, d)
       .filter(col("vec_id") < graft.operators.Similarity.NumQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])].collect().sortBy(_._1).toVector
-    val sink = java.nio.file.Files.createTempDirectory("graft-sim2s").toString + "/answers"
+    val sink = s"$root/answers"
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Double])]
     val q = ServeStream.serveTopk(src.toDF().toDF("qid", "embedding"), d, "prefix", sink)
@@ -596,7 +609,7 @@ object StreamTwins {
 
   val sim2s = QueryDef(
     "sim2s_ann_serve_stream",
-    (s, d) => replayServe(s, d),
+    (s, d) => inTempRoot(s, "graft-sim2s")(replayServe(s, d, _)),
     graft.operators.Similarity.sim2.oracle,
     doc = "sim2b through the online serving stream: lookup-request micro-batches answered from the landed index",
     scalePath = false
@@ -634,10 +647,9 @@ object StreamTwins {
     * copies are bit-identical to their sources. CORRECTNESS therefore
     * fails if append visibility, delete masking, upsert supersede, or
     * the frozen-assignment invariant ever diverges. */
-  private def replayMaintain(s: SparkSession, d: String): DataFrame = {
+  private def replayMaintain(s: SparkSession, d: String, tmpRoot: String): DataFrame = {
     import s.implicits._
     val S = graft.operators.Similarity
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft-sim2m").toString
     // raw byte copy, not a Spark read→write round trip (r18): the twin
     // only needs the corpus present under the temp root so the dir-keyed
     // index tables of the GRADED landings stay untouched — a filesystem
@@ -660,38 +672,29 @@ object StreamTwins {
       .as[(Long, Array[Float])].collect().sortBy(_._1).toVector
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
+    val q = IndexIngest.maintainPrefixIndex(
+      src.toDF().toDF("vec_id", "embedding"), tmpRoot,
+      checkpointDir = Some(s"$tmpRoot/ckpt"))
     try {
-      val q = IndexIngest.maintainPrefixIndex(
-        src.toDF().toDF("vec_id", "embedding"), tmpRoot,
-        checkpointDir = Some(s"$tmpRoot/ckpt"))
-      try {
-        src.addData(qs.map { case (id, v) => (id + InsOff, v) } ++
-          qs.map { case (id, v) => (id + Ins2Off, v) })
-        q.processAllAvailable()
-        src.addData(qs.map { case (id, _) => (id + Ins2Off, null: Array[Float]) } ++
-          (S.NumQueries until (S.NumQueries + DelN).toInt)
-            .map(i => (i.toLong, null: Array[Float])) ++
-          qs.map { case (id, v) => (id + InsOff, v) })
-        q.processAllAvailable()
-      } finally q.stop()
-      // the NumQueries × TopK answer, collected into a local relation:
-      // the index it was served from is dropped below
-      val top = S.searchTopk(s, tmpRoot, "prefix",
-          qs.map { case (id, v) => (id, v.map(_.toDouble)) })
-        .select(col("qid"), col("rank"), col("neighbor_id"))
-      s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-    } finally {
-      // the copy's landings, sidecars and memo entries, then the copy
-      // and checkpoint themselves: nothing of the run outlives the call
-      S.dropLandings(s, tmpRoot)
-      def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
-      rm(new java.io.File(tmpRoot))
-    }
+      src.addData(qs.map { case (id, v) => (id + InsOff, v) } ++
+        qs.map { case (id, v) => (id + Ins2Off, v) })
+      q.processAllAvailable()
+      src.addData(qs.map { case (id, _) => (id + Ins2Off, null: Array[Float]) } ++
+        (S.NumQueries until (S.NumQueries + DelN).toInt)
+          .map(i => (i.toLong, null: Array[Float])) ++
+        qs.map { case (id, v) => (id + InsOff, v) })
+      q.processAllAvailable()
+    } finally q.stop()
+    // the NumQueries × TopK answer; it is collected before the copy's
+    // landings, sidecars and memo entries are dropped
+    S.searchTopk(s, tmpRoot, "prefix", qs.map { case (id, v) => (id, v.map(_.toDouble)) })
+      .select(col("qid"), col("rank"), col("neighbor_id"))
   }
 
   val sim2m = QueryDef(
     "sim2m_ann_maintained_stream",
-    (s, d) => replayMaintain(s, d),
+    (s, d) => inTempRoot(s, "graft-sim2m",
+      graft.operators.Similarity.dropLandings(s, _))(replayMaintain(s, d, _)),
     {
       val S = graft.operators.Similarity
       val D = graft.operators.Dedup

@@ -59,11 +59,11 @@ object FkScaleProbe {
     import spark.implicits._
     import graft.streaming.{FkJoin, StateTtl}
 
-    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+    import graft.sources.Lakehouse.rmTree
     val staging = s"$outDir/fkprobe_left"
     val ckpt = s"$outDir/fkprobe_ckpt"
     val sink = s"$outDir/fkprobe_sink"
-    Seq(staging, ckpt, sink).foreach(p => rm(new java.io.File(p)))
+    Seq(staging, ckpt, sink).foreach(p => rmTree(new java.io.File(p)))
     new java.io.File(staging).mkdirs()
 
     val ordersPath = s"$src/orders.parquet"
@@ -182,7 +182,7 @@ object FkScaleProbe {
 
     flush(finished = true)
     println(s"FKSCALE artifact $outDir/fk_scale.json")
-    Seq(staging, ckpt, sink).foreach(p => rm(new java.io.File(p)))
+    Seq(staging, ckpt, sink).foreach(p => rmTree(new java.io.File(p)))
     spark.stop()
   }
 }

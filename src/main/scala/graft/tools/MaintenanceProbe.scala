@@ -283,9 +283,9 @@ object MaintenanceProbe {
       // the corpus copy, the checkpoint and every index table / sidecar
       // landed for the copy (dir-hash-keyed, so nothing else shares them)
       // — ~5 GB per 1000× run if left behind
-      def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+      import graft.sources.Lakehouse.rmTree
       graft.operators.Similarity.dropLandings(spark, corpusDir)
-      Seq(corpusDir, ckpt).foreach(d => rm(new java.io.File(d)))
+      Seq(corpusDir, ckpt).foreach(d => rmTree(new java.io.File(d)))
       spark.stop()
     }
   }

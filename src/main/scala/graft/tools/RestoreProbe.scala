@@ -56,11 +56,11 @@ object RestoreProbe {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+    import graft.sources.Lakehouse.rmTree
     val ckpt = s"$outDir/restore_ckpt"
     val pairsDir = s"$outDir/restore_pairs"
     val refPairsDir = s"$outDir/restore_pairs_ref"
-    Seq(ckpt, pairsDir, refPairsDir).foreach(p => rm(new java.io.File(p)))
+    Seq(ckpt, pairsDir, refPairsDir).foreach(p => rmTree(new java.io.File(p)))
 
     val suffix = java.security.MessageDigest.getInstance("MD5")
       .digest(src.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
@@ -146,7 +146,7 @@ object RestoreProbe {
     parts += drive("restore", ckpt, pairsDir, None)
     if (parity) {
       val refCkpt = s"$outDir/restore_ckpt_ref"
-      rm(new java.io.File(refCkpt))
+      rmTree(new java.io.File(refCkpt))
       parts += drive("reference", refCkpt, refPairsDir, None)
       val got = spark.read.parquet(pairsDir).select("d1", "d2").distinct()
       val want = spark.read.parquet(refPairsDir).select("d1", "d2").distinct()
@@ -154,13 +154,13 @@ object RestoreProbe {
       val diff = got.unionAll(want).except(got.intersect(want)).count()
       println(s"RESTORE parity: interrupted+restored pairs=$gn reference=$wn symmetric-diff=$diff")
       parts += s""""parity":{"pairs":$gn,"reference_pairs":$wn,"symmetric_diff":$diff,"match":${diff == 0 && gn == wn}}"""
-      rm(new java.io.File(refCkpt))
+      rmTree(new java.io.File(refCkpt))
     }
     locally { java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir)); () }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/restore.json"),
       s"""{"src":"$src","stop_after":$stopAfter,"max_bucket":${graft.streaming.LshBucketProcessor.DefaultMaxBucket},${parts.mkString(",")}}\n""")
     println(s"RESTORE artifact $outDir/restore.json")
-    Seq(ckpt, pairsDir, refPairsDir).foreach(p => rm(new java.io.File(p)))
+    Seq(ckpt, pairsDir, refPairsDir).foreach(p => rmTree(new java.io.File(p)))
     spark.stop()
   }
 }

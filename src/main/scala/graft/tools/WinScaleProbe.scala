@@ -92,7 +92,7 @@ object WinScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.streaming.StreamOps
 
-    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
+    import graft.sources.Lakehouse.rmTree
     val src = sys.env.getOrElse("SPARK_GRAFT_PROBE_SRC", "/root/testdata/sf0.1")
     val prep = s"$outDir/winprobe_prep_$N"
 
@@ -120,7 +120,7 @@ object WinScaleProbe {
     Option(new java.io.File(prep).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("zz_sentinel")).foreach(_.delete())
     if (!new java.io.File(s"$prep/_done").exists()) {
-      rm(new java.io.File(prep))
+      rmTree(new java.io.File(prep))
       // one broadcast cross join against the copy index — a single plan
       // whatever N is (an N-way union bloats analysis past N≈100).
       // repartition FIRST: the sf0.1 events parquet is one split, and a
@@ -240,7 +240,7 @@ object WinScaleProbe {
       val streamSig = sigOf(keyCols)(streamed)
       // the streamed side is folded into five numbers — free its ~30 GB
       // of finalized-window parquet before the batch jobs need the disk
-      rm(new java.io.File(s"$outDir/winprobe_out_hopping"))
+      rmTree(new java.io.File(s"$outDir/winprobe_out_hopping"))
       val base = spark.read.parquet(prep).filter(col("user_id") =!= -1L)
       val batchSig = Seq(0, 15, 30, 45).map { off =>
         sigOf(keyCols)(base
@@ -274,7 +274,7 @@ object WinScaleProbe {
         mismatch: (DataFrame, DataFrame) => (Long, Long, Long)): Unit = {
       val ckpt = s"$outDir/winprobe_ckpt_$kind"
       val sink = s"$outDir/winprobe_out_$kind"
-      Seq(ckpt, sink).foreach(p => rm(new java.io.File(p)))
+      Seq(ckpt, sink).foreach(p => rmTree(new java.io.File(p)))
       // stream the prep files IN PLACE (a staging copy would double the
       // corpus's disk footprint): strictly increasing mod times pin
       // FileStreamSource arrival order to ts-range order. Sweep any
@@ -334,7 +334,7 @@ object WinScaleProbe {
       // user -1 is filtered from parity on both sides.
       import spark.implicits._
       val sentScratch = s"$outDir/winprobe_sent"
-      rm(new java.io.File(sentScratch))
+      rmTree(new java.io.File(sentScratch))
       val farTs = new java.sql.Timestamp(maxTs.getTime + 7L * 24 * 3600 * 1000)
       Seq(graft.streaming.Event(-1L, farTs, -1L, "purchase", 0.0, "{}"),
           graft.streaming.Event(-2L, farTs, -1L, "error", 0.0, "{}"))
@@ -348,7 +348,7 @@ object WinScaleProbe {
       q.processAllAvailable()
       val postProg = q.recentProgress.toSeq.filter(_.numInputRows > 0)
       q.stop()
-      sentDst.delete(); rm(new java.io.File(sentScratch))
+      sentDst.delete(); rmTree(new java.io.File(sentScratch))
       // across a restart the first query's progress is gone from the
       // second's buffer — stitch pre-kill + post-restart, dedup batchId
       // (the replayed batch appears in both; keep the committed one)
@@ -365,7 +365,7 @@ object WinScaleProbe {
       // the stream is stopped — free its checkpoint (RocksDB state
       // versions, 15+ GB at the 1B decade) BEFORE the parity phase
       // needs the disk for its own shuffle
-      rm(new java.io.File(ckpt))
+      rmTree(new java.io.File(ckpt))
       // the PARITY phase is a batch plan over the full corpus — at the
       // 1B decade the hopping agg materializes ~4B groups, and one
       // partition per core (32 there) means ~120M groups/partition of
@@ -402,7 +402,7 @@ object WinScaleProbe {
       // creation, and parity-sized shards would quadruple its per-batch
       // store-commit overhead (FKSCALE_r13 shard sweep)
       spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-      Seq(ckpt, sink).foreach(p => rm(new java.io.File(p)))
+      Seq(ckpt, sink).foreach(p => rmTree(new java.io.File(p)))
     }
 
     var succeeded = false

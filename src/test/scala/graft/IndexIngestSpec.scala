@@ -176,7 +176,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     val tbl = Similarity.prefixIndexTable(spark, corpusDir)
     val before = spark.table(tbl).count()
     val (lastBatch, maxSeq) = graft.sources.Lakehouse.readCommits(spark, tbl)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-idx-ckpt").toString
+    val ckpt = Files.createTempDirectory(corpusRoot, "ckpt").toString
     // pretend THIS stream (same checkpoint ⇒ same identity) already
     // applied batches up to 10: re-delivered batchIds 0..N≤10 must
     // append NOTHING
@@ -206,7 +206,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     // FRESH checkpoint dir restarts batchIds at 0 — those are new
     // batches, and skipping them against the old counter is data loss
     graft.sources.Lakehouse.writeCommits(spark, tbl, 10L, maxSeq, streamIdentity("/some/old/ckpt"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-idx-ckpt2").toString
+    val ckpt = Files.createTempDirectory(corpusRoot, "ckpt").toString
     val emb2 = spark.read.parquet(s"$corpusDir/embeddings.parquet")
       .filter(col("vec_id") === 2)
       .select(col("embedding").cast("array<float>")).as[Array[Float]].head()
@@ -508,24 +508,31 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     }
   }
 
-  test("sim2m leaves no landing, sidecar or temp root behind, and answers from a local relation") {
+  test("replay twins answer from a local relation and leave no temp root or landing") {
     val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def entries(in: java.io.File, prefix: String): Set[String] =
       Option(in.listFiles()).toSeq.flatten.map(_.getName).filter(_.startsWith(prefix)).toSet
-    val (annBefore, rootsBefore) = (entries(wh, "graft_ann_"), entries(tmp, "graft-sim2m"))
-    val sim2m = SparkEntry.queries("sim2m_ann_maintained_stream")
-    val answers = (1 to 2).map { _ =>
-      val df = sim2m(spark, sfDir)
-      assert(df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
-        s"sim2m is not a local relation:\n${df.queryExecution.analyzed}")
-      df.collect().toSeq
+    // sim2s serves the fixture's own prefix landing: land it first
+    Similarity.buildIndex(spark, sfDir, "prefix")
+    val twins = Seq("sim2m_ann_maintained_stream" -> "graft-sim2m", "q07r_tumbling_restart" -> "graft-q07r",
+      "q59_interactive_query" -> "graft-q59", "sim2s_ann_serve_stream" -> "graft-sim2s")
+    for ((name, rootPrefix) <- twins) {
+      val (annBefore, rootsBefore) = (entries(wh, "graft_ann_"), entries(tmp, rootPrefix))
+      val twin = SparkEntry.queries(name)
+      val answers = (1 to 2).map { _ =>
+        val df = twin(spark, sfDir)
+        assert(df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+          s"$name is not a local relation:\n${df.queryExecution.analyzed}")
+        df.collect().map(_.toString).sorted.toSeq
+      }
+      assert(answers(0).nonEmpty && answers(0) == answers(1), s"$name: the two runs answer differently")
+      if (name.startsWith("sim2")) assert(answers(0).size == Similarity.NumQueries * Similarity.TopK)
+      val newAnn = entries(wh, "graft_ann_") -- annBefore
+      assert(newAnn.isEmpty, s"$name left warehouse entries: $newAnn")
+      val newRoots = entries(tmp, rootPrefix) -- rootsBefore
+      assert(newRoots.isEmpty, s"$name left temp roots: $newRoots")
     }
-    assert(answers(0).size == Similarity.NumQueries * Similarity.TopK && answers(0) == answers(1))
-    val newAnn = entries(wh, "graft_ann_") -- annBefore
-    assert(newAnn.isEmpty, s"sim2m left warehouse entries: $newAnn")
-    val newRoots = entries(tmp, "graft-sim2m") -- rootsBefore
-    assert(newRoots.isEmpty, s"sim2m left temp roots: $newRoots")
   }
 
   test("a landing re-registered under a different bucket count keeps its recorded count and maintained rows") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -100,7 +100,8 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
     val old = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val broken = Dedup.rankedPrefix(spark, sfDir)
+      val broken = Similarity.prefixCells(spark, sfDir, Similarity.normed(spark, sfDir))
+        .select("vec_id", "cell", "r")
         .join(Similarity.normed(spark, sfDir), Seq("vec_id"))
       broken.count()
       val bad = arraySortMergeJoins(broken)

@@ -18,9 +18,10 @@ import org.scalatest.BeforeAndAfterAll
   * corpus gives K = 313 fine anchors under K1 = 18 coarse ones, so the
   * coarse restriction decides which fine anchors a vector even sees.
   * Every placement the indexes use must reproduce the reference
-  * exactly: the prefix landing rows, a maintenance batch's rows,
-  * `rankedPrefix`, the routed placement used past the broadcast bound,
-  * and the same two surfaces under the trained k-means quantizer. */
+  * exactly: the prefix landing rows, a maintenance batch's rows, the
+  * ranked placement of the corpus (`prefixCells`, dd7/dd9's), the
+  * routed placement used past the broadcast bound, and the same two
+  * surfaces under the trained k-means quantizer. */
 class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   private val root = Files.createTempDirectory("graft-kernel")
@@ -124,8 +125,9 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
       indexRows(reference(corpus), corpus, 0L), "landing")
   }
 
-  test("rankedPrefix (vec_id, cell, r) equals the reference ranking") {
-    assertSameRows(Dedup.rankedPrefix(spark, dir), reference(corpus), "rankedPrefix")
+  test("prefixCells (vec_id, cell, r) equals the reference ranking") {
+    assertSameRows(Similarity.prefixCells(spark, dir, Similarity.normed(spark, dir))
+      .select("vec_id", "cell", "r"), reference(corpus), "prefixCells")
   }
 
   test("a maintenance batch's rows equal the reference ranking of the batch") {

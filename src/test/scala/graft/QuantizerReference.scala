@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** The two-level IVF quantizer as DataFrames: the reference every
   * placement of [[graft.operators.QuantizerKernel]] (prefix and k-means
-  * landings, maintenance batches, `rankedPrefix`, the routed placement)
+  * landings, maintenance batches, `prefixCells`, the routed placement)
   * is held to row for row. The Spark twin of
   * [[graft.operators.Dedup.twoLevelRankedSql]], the DuckDB replay. */
 object QuantizerReference {

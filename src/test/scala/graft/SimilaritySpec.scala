@@ -17,12 +17,15 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("sim2's plan never shuffles the corpus: broadcast fetch, no sort-merge join") {
-    // the 1000x probe found the candidate fetch falling off the
-    // auto-broadcast cliff into a both-sides exchange (~11 GB of corpus
-    // vectors at 20M rows); sim2 now broadcasts the per-query-bounded
-    // shortlist explicitly. Pin the shape: every join in the serving
-    // plan is broadcast-built — a SortMergeJoin appearing here means
-    // the corpus is being shuffled again.
+    // sim2 scores its inline index rows the way sim2b scores the landed
+    // ones: the corpus streams once through the quantizer kernel's map,
+    // its probed cells' rows join the broadcast (qid, cell, query vector)
+    // probe pairs and score map-side, and only k pairs per (qid,
+    // partition) cross the one exchange. The 1000x probe once found a
+    // candidate fetch falling off the auto-broadcast cliff into a
+    // both-sides exchange (~11 GB of corpus vectors at 20M rows). Pin the
+    // shape: every join is broadcast-built — a SortMergeJoin appearing
+    // here means the corpus is being shuffled again.
     val df = SparkEntry.queries("sim2_ann_ivf_topk")(spark, sfDir)
     df.collect() // materialize so AQE settles on the final plan
     val plan = df.queryExecution.executedPlan.toString
@@ -61,6 +64,18 @@ class SimilaritySpec extends SparkSpecBase {
     assert(rows("sim4b_ann_pq_served") == rows("sim4_ann_pq_topk"))
     assert(rows("sim3b_ann_kmeans_served").forall(_._2 == 1))
     assert(rows("sim4b_ann_pq_served").forall(_._2 == 1))
+    // before the gate: for the raw-vector kinds, the search over the
+    // kind's rows computed inline and over its landed rows return the
+    // same (qid, rank, neighbor_id) rows
+    val np = Similarity.sqrtKNprobe(spark, sfDir)
+    def topk(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    for (kind <- Seq("prefix", "kmeans")) {
+      val inline = topk(Similarity.inlineTopkAt(spark, sfDir, kind, np))
+      assert(inline.size == Similarity.NumQueries * Similarity.TopK, s"$kind: ${inline.size} inline rows")
+      assert(inline == topk(Similarity.servedTopkAt(spark, sfDir, kind, np, buildIfMissing = true)),
+        s"$kind: the inline and landed rows answer differently")
+    }
   }
 
   test("composed IVF+PQ (sim4c) clears the recall gate; ADC matches flat-PQ on shared candidates") {
