@@ -354,18 +354,17 @@ object Dedup {
 
   /** Largest fine-anchor set shipped as ONE broadcast (the FAISS
     * posture — the quantizer lives with every worker), as a BYTE
-    * budget: ~640 MB ≈ 2^20 anchors on the reference 64-dim corpus
-    * (~608 B/row), covering corpora to ~67M vectors at K = n/64 — every
+    * budget: ~640 MB ≈ 1.1M anchors on the reference 64-dim corpus
+    * (~608 B/row), covering corpora to ~70M vectors at K = n/64 — every
     * landing ever run, up to 40M vectors. It bounds the prefix
     * [[QuantizerKernel]] broadcast (landing, maintenance, sim2's inline
-    * rows, dd7/dd9's pair mining).
+    * rows, dd7/dd9's pair mining, the dd7 stream twin).
     * The bound is bytes, not rows, because broadcast size scales with
     * the embedding dimension — a row-count cap alone would force a
     * 4-8+ GB broadcast on a 512-1024-dim corpus, past Spark's 8 GB
     * broadcast hard limit where the job FAILS outright instead of
-    * degrading. Past the bound
-    * the prefix placement routes vectors to their coarse cells by a cid
-    * join instead ([[Similarity.prefixCells]]). */
+    * degrading. A corpus past the bound is refused before any anchor is
+    * collected ([[QuantizerKernel.anchorCount]]). */
   private[graft] val BroadcastFineMaxBytes: Long = 640L << 20
 
   /** Estimated broadcast bytes per (aid, av, an, cid) fine-anchor row:
@@ -373,15 +372,6 @@ object Dedup {
     * array+row object overhead. 64-dim ⇒ 608 B — the measured ~600 B
     * the r15 row-count bound assumed. */
   private[graft] def fineAnchorRowBytes(dim: Int): Long = 8L * dim + 96L
-
-  /** The prefix index's fine anchors (aid, av, an): the first K vec_ids. */
-  private[graft] def prefixFine(e: DataFrame, k: Long): DataFrame =
-    e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("aid"), col("v").as("av"), col("nrm").as("an"))
-
-  private[graft] def prefixCoarse(e: DataFrame, k1: Long): DataFrame =
-    e.filter(col("vec_id") < k1)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
 
   /** dd7 — embedding near-dup via TWO-LEVEL IVF-cell blocking: the
     * bucketed scale path for dd4's O(n²) broadcast self-join. The K =
@@ -408,12 +398,11 @@ object Dedup {
     * K-anchor scan, which was the last quadratic asymptote on a scale
     * path: flat assignment is n·K·d ≈ n²d/Dd7CellDiv cosines under a
     * broadcast that grows LINEARLY in n (multi-GB at 10⁹ vectors).
-    * Two-level work is n·(K1 + Dd7CoarseProbes·K/K1)·d ≈ n√K·d with
-    * only the √K-sized coarse set broadcast; the fine side joins by
-    * cid, so beyond broadcast reach it becomes a linear-in-n shuffle,
-    * never a broadcast. Candidate volume keeps the flat bound (cell
-    * sizes unchanged: ~Dd7CellDiv·Dd7Probes expected members), so
-    * candidates stay ~linear in n at any scale. */
+    * Two-level work is n·(K1 + Dd7CoarseProbes·K/K1)·d ≈ n√K·d under
+    * one broadcast [[QuantizerKernel]] of (K1 + K)·(d + 2) doubles,
+    * bounded by [[BroadcastFineMaxBytes]]. Candidate volume keeps the
+    * flat bound (cell sizes unchanged: ~Dd7CellDiv·Dd7Probes expected
+    * members), so candidates stay ~linear in n at any scale. */
   private val ivfPairCache = Memo.newCache[DataFrame]()
 
   /** dd7's IVF-cell-verified pair set, memoized: dd9's semantic-dedup

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * each one is tagged to (its single nearest coarse anchor). [[rank]]
   * is the assignment every index surface runs, prefix and k-means
   * alike — the corpus landings, each maintenance micro-batch,
-  * sim2/dd7/dd9's memoized corpus ranking, sim3's corpus placement,
-  * and the driver-side probe ranking of every serve — so the quantizer
-  * has one implementation, applied where the vectors already are.
+  * sim2/dd7/dd9's memoized corpus ranking, the dd7 stream twin's
+  * arriving vectors, sim3's corpus placement, and the driver-side probe
+  * ranking of every serve — so the quantizer has one implementation,
+  * applied where the vectors already are.
   *
   * Bit-identical to the DataFrame reference
   * `graft.QuantizerReference.twoLevelRankedTagged` (src/test): the same
@@ -22,10 +23,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * the TopKAgg buffer) at both levels. Coarse anchors are held in id order,
   * so ranking coarse POSITIONS ranks coarse ids.
   *
-  * Size: (K1 + K)·(d + 2) doubles. The landing and maintenance ship it
-  * as one broadcast while K fits [[Dedup.BroadcastFineMaxBytes]]
-  * (~2^20 anchors at d = 64, corpora to ~67M vectors); serving holds
-  * it on the driver while K ≤ `Similarity.FineResidentMax`. */
+  * Size: (K1 + K)·(d + 2) doubles. Placement ships it as one broadcast
+  * and serving holds it on the driver; the prefix constructor
+  * ([[QuantizerKernel.prefix]]) refuses a corpus whose K anchors exceed
+  * [[Dedup.BroadcastFineMaxBytes]] (~1.1M anchors at d = 64, corpora to
+  * ~70M vectors). */
 final class QuantizerKernel private (
     dim: Int,
     coarseIds: Array[Long], coarseVecs: Array[Double], coarseNrm: Array[Double],
@@ -56,12 +58,6 @@ final class QuantizerKernel private (
   def nearestCoarse(v: Array[Double], nrm: Double): Long =
     coarseIds(coarseTop(v, nrm, 1).ids(0).toInt)
 
-  /** Ids of the coarse cells a vector probes (Dd7CoarseProbes nearest). */
-  def coarseCells(v: Array[Double], nrm: Double): Array[Long] = {
-    val c = coarseTop(v, nrm, Dedup.Dd7CoarseProbes)
-    Array.tabulate(c.size)(i => coarseIds(c.ids(i).toInt))
-  }
-
   /** The `depth` best fine cells of (v, nrm), best first: the
     * Dd7CoarseProbes nearest coarse cells, then only their fine anchors. */
   def rank(v: Array[Double], nrm: Double, depth: Int): Array[Long] = {
@@ -86,10 +82,8 @@ object QuantizerKernel {
     out
   }
 
-  /** A kernel over `coarse` and fine anchors already tagged by coarse id
-    * (a subset of cells is fine: [[QuantizerKernel.rank]] is exact for any
-    * vector whose probed cells are all present). */
-  def tagged(coarse: Array[Similarity.Anchor],
+  /** A kernel over `coarse` and fine anchors already tagged by coarse id. */
+  private def tagged(coarse: Array[Similarity.Anchor],
       fine: Array[(Long, Similarity.Anchor)]): QuantizerKernel = {
     val cs = coarse.sortBy(_.id)
     val dim = cs.headOption.map(_.v.length).getOrElse(0)
@@ -109,6 +103,34 @@ object QuantizerKernel {
   def apply(coarse: Array[Similarity.Anchor], fine: Array[Similarity.Anchor]): QuantizerKernel = {
     val level1 = tagged(coarse, Array.empty)
     tagged(coarse, fine.map(a => (level1.nearestCoarse(a.v, a.nrm), a)))
+  }
+
+  /** K = `Dedup.dd7AnchorCount(n)`, the prefix quantizer's anchor count
+    * for n vectors of dimension `dim` — refused with an
+    * IllegalArgumentException when K anchor rows exceed the one-broadcast
+    * budget [[Dedup.BroadcastFineMaxBytes]]. */
+  private[graft] def anchorCount(n: Long, dim: Int): Long = {
+    val k = Dedup.dd7AnchorCount(n)
+    val bytes = k * Dedup.fineAnchorRowBytes(dim)
+    if (bytes > Dedup.BroadcastFineMaxBytes)
+      throw new IllegalArgumentException(
+        s"prefix quantizer of $n vectors: K = $k anchors of dimension $dim need $bytes bytes, " +
+          s"past the ${Dedup.BroadcastFineMaxBytes}-byte broadcast bound")
+    k
+  }
+
+  /** The prefix quantizer of a normed corpus `e` (vec_id, v, nrm) of n
+    * vectors of dimension `dim`: the fine anchors are the first K
+    * vec_ids, read with the `vec_id < K` filter pushed into the scan, and
+    * the coarse anchors the first K1 = ⌈√K⌉ of them — one collect serves
+    * both levels with the doubles `e` holds, tagged on the driver (K·K1
+    * cosines). The bound ([[anchorCount]]) is checked before the collect. */
+  def prefix(e: DataFrame, n: Long, dim: Int): QuantizerKernel = {
+    val k = anchorCount(n, dim)
+    val fine = e.filter(col("vec_id") < k).select(col("vec_id"), col("v"), col("nrm"))
+      .collect().map(Similarity.anchorOf)
+    val k1 = Dedup.dd7CoarseCount(k)
+    QuantizerKernel(fine.filter(_.id < k1), fine)
   }
 
   /** (cell, vec_id, v, nrm, r) for every vector of `e` (vec_id, v, nrm):

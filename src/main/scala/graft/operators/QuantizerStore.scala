@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * serving fix (VERDICT r12 #3).
   *
   * A warm session holds the ANN serving quantizer on the driver: the
-  * corpus row count, the √K coarse anchors, the trained k-means
-  * centroids, and the PQ codebooks (all ≤ MBs — they are collected /
+  * corpus row count, the trained k-means centroids, the PQ codebooks
+  * and the calibrated serving depth (all ≤ MBs — they are collected /
   * Lloyd-trained from a bounded sample by construction). A COLD session
   * used to rebuild every one of them from the corpus, and the rebuild
   * path runs through `Memo.mat(normed)` — materializing the entire
@@ -30,8 +30,6 @@ import org.apache.spark.sql.SparkSession
   * torn write can never serve half a quantizer.
   */
 private[graft] object QuantizerStore {
-  import Similarity.Anchor
-
   /** Everything a cold serving session needs on the driver. Fields are
     * optional because they land as they are first computed (a session
     * that only serves "prefix" never trains PQ codebooks).
@@ -40,11 +38,13 @@ private[graft] object QuantizerStore {
     * every measured corpus showed the √K heuristic over-probing 5-40×
     * past the depth where out-of-sample recall saturates, so the
     * engine default reads the measured depth and falls back to √K
-    * only when no calibration has run. */
+    * only when no calibration has run. The on-disk layout keeps a
+    * coarse-anchor slot (sidecars through round 18 stored the prefix
+    * quantizer's coarse anchors there): written empty (−1), skipped on
+    * read. */
   final case class Artifacts(
       sig: String,
       n: Long,
-      coarse: Option[Array[Anchor]] = None,
       km: Option[Array[(Int, Array[Double])]] = None,
       pq: Option[Seq[(Int, Int, Array[Double])]] = None,
       servedNprobe: Option[Int] = None)
@@ -92,11 +92,8 @@ private[graft] object QuantizerStore {
           val dim = in.readInt(); val a = new Array[Double](dim)
           var i = 0; while (i < dim) { a(i) = in.readDouble(); i += 1 }; a
         }
-        val coarse = {
-          val c = in.readInt()
-          if (c < 0) None
-          else Some(Array.fill(c)(Anchor(in.readLong(), darr(), in.readDouble())))
-        }
+        // the retired coarse-anchor slot: (id, vector, norm) records
+        (0 until in.readInt()).foreach { _ => in.readLong(); darr(); in.readDouble() }
         val km = {
           val c = in.readInt()
           if (c < 0) None else Some(Array.fill(c)((in.readInt(), darr())))
@@ -110,7 +107,7 @@ private[graft] object QuantizerStore {
         val servedNprobe =
           try { val v = in.readInt(); if (v < 0) None else Some(v) }
           catch { case _: java.io.EOFException => None }
-        Some(Artifacts(sig, n, coarse, km, pq, servedNprobe))
+        Some(Artifacts(sig, n, km, pq, servedNprobe))
       } finally in.close()
     } catch { case _: Exception => None }
   }
@@ -133,12 +130,7 @@ private[graft] object QuantizerStore {
       def warr(v: Array[Double]): Unit = {
         os.writeInt(v.length); var i = 0; while (i < v.length) { os.writeDouble(v(i)); i += 1 }
       }
-      a.coarse match {
-        case None => os.writeInt(-1)
-        case Some(cs) =>
-          os.writeInt(cs.length)
-          cs.foreach { c => os.writeLong(c.id); warr(c.v); os.writeDouble(c.nrm) }
-      }
+      os.writeInt(-1) // the retired coarse-anchor slot
       a.km match {
         case None => os.writeInt(-1)
         case Some(ks) =>

@@ -60,7 +60,10 @@ object Similarity {
     indexTable(s, d, kindOf(kind)); ()
   }
 
-  private def withNorm(df: DataFrame): DataFrame =
+  /** (vec_id, v, nrm) of raw (vec_id, embedding) rows: the one cast and
+    * norm expression of the corpus, its index versions and the dd7
+    * stream twin's arriving vectors. */
+  private[graft] def withNorm(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(VectorExprs.dot(col("v"), col("v"))))
 
@@ -322,12 +325,12 @@ object Similarity {
     Kinds.filter(k => Lakehouse.isLanded(s, tableOf(k, d))).map(k => k.name -> indexTable(s, d, k))
 
   /** Drop every ANN landing of `d`'s corpus — each kind's table, the
-    * fine and flat-PQ tables, their sidecars and the quantizer sidecar,
+    * flat-PQ table, their sidecars and the quantizer sidecar,
     * all named by the dir's hash — and forget what `s` memoized for `d`:
     * the cleanup of a caller that deletes the corpus it landed. */
   private[graft] def dropLandings(s: SparkSession, d: String): Unit = {
     val sfx = dirSuffix(d)
-    val tables = Kinds.map(tableOf(_, d)) ++ Seq("graft_ann_fine_", "graft_ann_pq_codes_").map(_ + sfx)
+    val tables = Kinds.map(tableOf(_, d)) :+ s"graft_ann_pq_codes_$sfx"
     tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
     val wh = new java.io.File(s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
     Option(wh.listFiles()).toSeq.flatten
@@ -406,7 +409,7 @@ object Similarity {
     * and distributed ranking see bit-identical doubles. */
   private[graft] final case class Anchor(id: Long, v: Array[Double], nrm: Double)
 
-  private def anchorOf(r: org.apache.spark.sql.Row) =
+  private[graft] def anchorOf(r: org.apache.spark.sql.Row) =
     Anchor(r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))
 
   /** The NumQueries query vectors, driver-resident (memoized — 10 rows;
@@ -422,127 +425,46 @@ object Similarity {
 
   /** Embedding dimension, driver-resident (off the memoized query
     * vectors — a 10-row pushed-filter read at worst, no corpus job):
-    * sizes the level-1 broadcast-vs-shuffle byte bound
-    * ([[Dedup.BroadcastFineMaxBytes]]) without probing a possibly
+    * sizes the index landings and checks the quantizer's broadcast
+    * bound ([[Dedup.BroadcastFineMaxBytes]]) without probing a possibly
     * un-materialized frame with a Spark job (ADVICE r16). */
   private[graft] def corpusDim(s: SparkSession, d: String): Int =
     queryVecs(s, d).headOption.map(_.v.length).getOrElse(0)
 
-  /** The prefix index's √K coarse anchors, driver-resident (memoized —
-    * the same ∝√n bound EmbedDedupStream.collectCoarse holds to).
-    * Sidecar-persisted: a cold session loads the collected anchors
-    * instead of scanning the corpus prefix (VERDICT r12 #3). */
-  private val coarseLocalCache = Memo.newCache[Array[Anchor]]()
-  private def coarsePrefixLocal(s: SparkSession, d: String): Array[Anchor] =
-    coarseOr(s, d)(Dedup.prefixCoarse(normedLazy(s, d), prefixCoarseCount(s, d))
-      .select(col("cid"), col("cv"), col("cn")).collect().map(anchorOf))
-
-  private def prefixCoarseCount(s: SparkSession, d: String): Long =
-    Dedup.dd7CoarseCount(Dedup.dd7AnchorCount(corpusN(s, d)))
-
-  /** The memoized coarse anchors: from the sidecar when it holds them,
-    * else `collected` — persisted to the sidecar for the next session. */
-  private def coarseOr(s: SparkSession, d: String)(collected: => Array[Anchor]): Array[Anchor] =
-    Memo.get(coarseLocalCache, s, d) {
-      QuantizerStore.load(s, d).flatMap(_.coarse).getOrElse {
-        val arr = collected
-        QuantizerStore.update(s, d, corpusN(s, d))(_.copy(coarse = Some(arr)))
-        arr
-      }
-    }
-
   /** The prefix quantizer as one driver-resident [[QuantizerKernel]]
-    * (memoized): the K = first-vec_id fine anchors, read with the
-    * `vec_id < K` filter pushed into the corpus scan (no corpus cache)
-    * and tagged on the driver (K·K1 cosines) under the √K coarse
-    * anchors. The coarse anchors are the first K1 ≤ K vec_ids, so one
-    * collect serves both levels: the coarse ones are the fine rows with
-    * id < K1, in scan order, with the same doubles a coarse-only collect
-    * reads. FROZEN at first use — maintenance assigns appended vectors
-    * under exactly the anchors the landing used. */
+    * ([[QuantizerKernel.prefix]] over the lazy corpus: no corpus cache),
+    * memoized. FROZEN at first use — maintenance assigns appended
+    * vectors under exactly the anchors the landing used. */
   private val kernelCache = Memo.newCache[QuantizerKernel]()
   private[graft] def prefixKernel(s: SparkSession, d: String): QuantizerKernel =
-    Memo.get(kernelCache, s, d) {
-      val fine = Dedup.prefixFine(normedLazy(s, d), Dedup.dd7AnchorCount(corpusN(s, d)))
-        .select(col("aid"), col("av"), col("an")).collect().map(anchorOf)
-      val k1 = prefixCoarseCount(s, d)
-      QuantizerKernel(coarseOr(s, d)(fine.filter(_.id < k1)), fine)
-    }
+    Memo.get(kernelCache, s, d)(QuantizerKernel.prefix(normedLazy(s, d), corpusN(s, d), corpusDim(s, d)))
 
   private val kernelBcCache =
     Memo.newCache[org.apache.spark.broadcast.Broadcast[QuantizerKernel]]()
-
-  /** Whether the whole prefix quantizer fits one broadcast
-    * ([[Dedup.BroadcastFineMaxBytes]] over K fine-anchor rows). */
-  private def kernelBroadcastable(s: SparkSession, d: String): Boolean =
-    Dedup.dd7AnchorCount(corpusN(s, d)) * Dedup.fineAnchorRowBytes(corpusDim(s, d)) <=
-      Dedup.BroadcastFineMaxBytes
 
   /** The prefix assignment of `e` (vec_id, v, nrm[, seq]): (cell,
     * vec_id, v, nrm[, seq], r) at Dd7Probes depth — the one placement
     * primitive behind the prefix and IVF-PQ row rules (landing,
     * maintenance batches, sim2's inline rows) and dd7/dd9's pair mining
-    * ([[Dedup.ivfPairs]]). While the kernel fits a broadcast it is ONE
-    * narrow per-partition map (no join, no exchange). Past the bound (K
-    * beyond ~2^20 anchors at d = 64) no node holds the fine set: the
-    * vectors route to their probed coarse cells through
-    * [[graft.streaming.EmbedDedupStream]]'s cid join (the dd7 stream
-    * twin's placement, same ranking) and the vectors join back on the
-    * narrow (vec_id, cell, r) side. */
-  private[graft] def prefixCells(s: SparkSession, d: String, e: DataFrame): DataFrame =
-    if (kernelBroadcastable(s, d)) {
-      val bc = Memo.get(kernelBcCache, s, d)(s.sparkContext.broadcast(prefixKernel(s, d)))
-      QuantizerKernel.cells(e, bc, Dedup.Dd7Probes)
-    } else {
-      graft.streaming.EmbedDedupStream.routedCells(
-          e.select(col("vec_id"), col("v").as("embedding")), routedIndex(s, d), routedFine(s, d))
-        .hint("shuffle_hash")
-        .join(e, Seq("vec_id"))
-        .select(col("cell") +: e.columns.toSeq.map(col) :+ col("r"): _*)
-    }
-
-  /** The routed placement's coarse level, off the memo/sidecar. */
-  private def routedIndex(s: SparkSession, d: String): graft.streaming.EmbedDedupStream.CoarseIndex = {
-    val k = Dedup.dd7AnchorCount(corpusN(s, d))
-    graft.streaming.EmbedDedupStream.CoarseIndex(k, Dedup.dd7CoarseCount(k),
-      coarsePrefixLocal(s, d).map(a => (a.id, a.v, a.nrm)))
+    * ([[Dedup.ivfPairs]]): ONE narrow per-partition map under the
+    * broadcast kernel (no join, no exchange). */
+  private[graft] def prefixCells(s: SparkSession, d: String, e: DataFrame): DataFrame = {
+    val bc = Memo.get(kernelBcCache, s, d)(s.sparkContext.broadcast(prefixKernel(s, d)))
+    QuantizerKernel.cells(e, bc, Dedup.Dd7Probes)
   }
-
-  /** The routed placement's cid-grouped fine table
-    * ([[graft.streaming.EmbedDedupStream.fineCells]]), cached once per
-    * (session, dir). */
-  private val routedFineCache = Memo.newCache[DataFrame]()
-  private def routedFine(s: SparkSession, d: String): DataFrame =
-    Memo.get(routedFineCache, s, d) {
-      Memo.mat(graft.streaming.EmbedDedupStream.fineCells(normedLazy(s, d), routedIndex(s, d)))
-    }
 
   /** (qid, cell) probe pairs: each query's `nprobe` best cells under
     * `kernel`, best first. */
   private def probesOf(kernel: QuantizerKernel, nprobe: Int, qs: Array[Anchor]): Array[(Long, Long)] =
     qs.flatMap(q => kernel.rank(q.v, q.nrm, nprobe).map(c => (q.id, c)))
 
-  /** Driver-local probe ranking against the prefix quantizer — the
-    * serving-node path (FAISS keeps its quantizer resident; so do we)
-    * and sim2's query ranking: ZERO distributed jobs. While K ≤
-    * [[FineResidentMax]] the whole kernel is resident. Past it, the
-    * queries rank the resident coarse level, one pruned read of the
-    * landed fine table fetches only the probed cells' anchors
-    * (≤ |qs|·Dd7CoarseProbes·K/K1 rows), and a kernel over those cells
-    * ranks them — exact, since every probed cell is present. */
+  /** Driver-local probe ranking against the resident prefix quantizer
+    * — the serving-node path (FAISS keeps its quantizer resident; so do
+    * we) and sim2's query ranking: ZERO distributed jobs once the kernel
+    * is held. */
   private def prefixProbes(
       s: SparkSession, d: String, nprobe: Int, qs: Array[Anchor]): Array[(Long, Long)] =
-    if (Dedup.dd7AnchorCount(corpusN(s, d)) <= FineResidentMax)
-      probesOf(prefixKernel(s, d), nprobe, qs)
-    else {
-      val coarse = coarsePrefixLocal(s, d)
-      val level2 = QuantizerKernel.tagged(coarse, Array.empty)
-      val cids = qs.flatMap(q => level2.coarseCells(q.v, q.nrm)).distinct.toSeq
-      val fine = fineServedTable(s, d).filter(col("cid").isin(cids: _*))
-        .select(col("cid"), col("aid"), col("av"), col("an")).collect()
-        .map(r => (r.getLong(0), Anchor(r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3))))
-      probesOf(QuantizerKernel.tagged(coarse, fine), nprobe, qs)
-    }
+    probesOf(prefixKernel(s, d), nprobe, qs)
 
   /** The raw-vector scorer's top-k over cell-sorted index rows `idx` —
     * a landed cell-bucketed index or the same rows computed inline —
@@ -583,30 +505,6 @@ object Similarity {
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("qid")), distinctIds = true)
   }
-
-  /** The coarse-tagged fine anchors LANDED as a cid-bucketed table —
-    * read only past [[FineResidentMax]], where serving fetches the
-    * probed cells' anchors per call instead of holding all K. Landed
-    * from the routed placement's cid-grouped fine table, so no node ever
-    * holds the whole fine set; a cold session re-registers it (marker
-    * read only). */
-  private def fineServedTable(s: SparkSession, d: String): DataFrame = {
-    val n = corpusN(s, d)
-    val k = Dedup.dd7AnchorCount(n)
-    Lakehouse.landBucketed(
-      s, s"graft_ann_fine_${dirSuffix(d)}", Seq("cid"), 16,
-      s"annfine|v1|$d|n=$n|k=$k")(
-      routedFine(s, d).select(col("cid"), explode(col("anchors")).as("a"))
-        .select(col("cid"), col("a.aid").as("aid"), col("a.av").as("av"), col("a.an").as("an")))
-  }
-
-  /** Largest fine-anchor count serving keeps driver-resident: 128Ki
-    * anchors × 64 dims × 8 B ≈ 64 MB — comfortably inside any driver,
-    * covering corpora to ~8M vectors (K = n/64). Up to it the prefix
-    * kernel itself is the serving quantizer and no fine table is
-    * landed; past it, serves fetch the probed cells per call
-    * ([[prefixProbes]]). */
-  private[graft] val FineResidentMax = 131072L
 
   /** sim2b — sim2 SERVED from the persisted index: the same search at
     * the same depth, so an identical result (same DuckDB oracle), but the
@@ -755,7 +653,7 @@ object Similarity {
     * sample points; past n ≈ 64·TrainSample the untrained prefix
     * quantizer (sim2/dd7) is the designated path), Lloyd runs on the
     * driver over the bounded sample (deterministic init = the first k
-    * sample vectors), and the trained set is routed two-level like the
+    * sample vectors), and the trained set is ranked two-level like the
     * prefix one ([[kmLocal]]). sim3 is sim3b over inline rows: the
     * k-means kind's row rule over the corpus ([[kmRows]], the kernel's
     * narrow map at Dd7Probes depth) is searched as sim2's rows are — the

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.operators.{Dedup, QuantizerKernel, Similarity}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,185 +14,32 @@ import org.apache.spark.sql.functions._
   *
   * Per arriving vector:
   *  1. cast to double + norm with the batch's exact expressions
-  *     (sequential dot, sqrt — Similarity.withNorm's arithmetic);
-  *  2. LEVEL 1 per-row: rank the K1 = ⌈√K⌉ coarse cells against the
-  *     broadcast [[CoarseIndex]] and keep Dd7CoarseProbes of them;
-  *  3. LEVEL 2 via a cid-keyed STREAM-STATIC JOIN against
-  *     [[fineCells]] (the topology of the DataFrame reference's cid
-  *     join, `graft.QuantizerReference.twoLevelRankedTagged` under
-  *     src/test): each joined row carries ONE probed
-  *     coarse cell's fine anchors, scores them locally, and keeps that
-  *     cell's Dd7Probes best — the global best-Dd7Probes fine cells
-  *     are a subset of the per-cell bests, merged per vector by a
-  *     repartition(vec_id) + partition-local fold (stateless: a
-  *     vector's rows all live in its own micro-batch). Every ranking
-  *     is (cos DESC, id ASC), replicating the batch TopKAgg /
-  *     row_number ordering bit-exactly;
-  *  4. cell membership lives in the [[LshBucketProcessor]] MapState
+  *     (`Similarity.withNorm`);
+  *  2. its Dd7Probes best fine cells under the corpus's prefix
+  *     [[QuantizerKernel]] — the same broadcast kernel and the same
+  *     narrow per-partition map ([[QuantizerKernel.cells]]) batch dd7
+  *     places its corpus with, so the stream's cells are the batch's
+  *     by construction;
+  *  3. cell membership lives in the [[LshBucketProcessor]] MapState
   *     (band = 0, bucket = fine cell id) and emits candidate pairs on
   *     arrival;
-  *  5. exact cosine verification against the static normalized corpus
+  *  4. exact cosine verification against the static normalized corpus
   *     (stream-static join), dd7's threshold and rounding verbatim.
   *
-  * Scale: ONLY the K1 = √K coarse array is driver-collected and
-  * broadcast — resident index bytes grow as √K ≈ √(n/64) forever
-  * (round 8 collected all K fine anchors to the driver: linear in n,
-  * ~8 GB at 10⁹ vectors — VERDICT r8). The K-row fine side stays a
-  * distributed table joined by cid: Spark broadcasts it while it fits
-  * and cid-shuffles the stream rows beyond that, so no single node
-  * ever needs the whole fine index resident. Per-vector assignment
-  * work is unchanged: (K1 + Dd7CoarseProbes·K/K1)·d ≈ √K·d
-  * multiply-adds. Vectors cross one extra narrow shuffle (the
-  * vec_id repartition of 3·Dd7CoarseProbes candidate rows per vector)
-  * plus the candidate-verification shuffle.
+  * Scale: the kernel is (K1 + K)·(d + 2) doubles, one broadcast
+  * bounded by [[Dedup.BroadcastFineMaxBytes]]; per-vector assignment
+  * work is (K1 + Dd7CoarseProbes·K/K1)·d ≈ √K·d multiply-adds, with no
+  * shuffle before the candidate-verification one.
   */
 object EmbedDedupStream {
 
-  /** Driver-resident part of the index: ONLY the K1 = ⌈√K⌉ coarse
-    * anchors (cid ascending) plus the corpus-derived sizes. √-growth
-    * keeps this collect sublinear in n forever; the fine side never
-    * comes to the driver. */
-  final case class CoarseIndex(k: Long, k1: Long,
-      coarse: Array[(Long, Array[Double], Double)])
-
-  /** One fine anchor of a coarse cell, as carried by [[fineCells]]. */
-  final case class FineAnchor(aid: Long, av: Array[Double], an: Double)
-
-  private def dot(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  /** Collect the coarse level of the two-level index: K1 = ⌈√K⌉ rows,
-    * ~√(n/64)·(d+2) doubles — the ONLY driver/broadcast-resident part
-    * of the index at any corpus size. */
-  def collectCoarse(embeddings: DataFrame): CoarseIndex = {
-    val e = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val k = graft.operators.Dedup.dd7AnchorCount(e.count())
-    val k1 = graft.operators.Dedup.dd7CoarseCount(k)
-    val coarse = e.filter(col("vec_id") < k1)
-      .collect()
-      .map { r =>
-        val v = r.getSeq[Double](1).toArray
-        (r.getLong(0), v, math.sqrt(dot(v, v)))
-      }
-      .sortBy(_._1)
-    CoarseIndex(k, k1, coarse)
-  }
-
-  /** The STATIC cid-grouped fine-anchor table (cid, anchors sorted by
-    * aid) — the stream twin of the batch a2c + fineTagged tables,
-    * computed distributed and NEVER collected: each fine anchor routes
-    * to its single nearest coarse cell with the identical
-    * (cos DESC, cid ASC) ranking, then cells collapse to one row each
-    * (K1 rows; ~(K/K1)·d doubles per row). */
-  def fineCells(normedStore: DataFrame, ci: CoarseIndex): DataFrame = {
-    val s = normedStore.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(ci.coarse)
-    normedStore.filter(col("vec_id") < ci.k)
-      .select(col("vec_id"), col("v"), col("nrm")).as[(Long, Array[Double], Double)]
-      .map { case (aid, av, an) =>
-        val cid = bc.value.iterator
-          .map { case (cid, cv, cn) => (dot(av, cv) / (an * cn), cid) }
-          .minBy { case (cos, cid) => (-cos, cid) }._2
-        (cid, aid, av, an)
-      }
-      .toDF("cid", "aid", "av", "an")
-      .groupBy(col("cid"))
-      .agg(sort_array(collect_list(struct(col("aid"), col("av"), col("an")))).as("anchors"))
-  }
-
   /** (band=0, bv=fine cell, doc_id=vec_id) assignments for an embedding
-    * stream — reuses [[LshBucketProcessor]]'s input shape so the same
-    * bucket state machine serves both modalities. `cells` is
-    * [[fineCells]] for the same corpus the coarse index was built
-    * from. */
-  def assignments(vecs: DataFrame, ci: CoarseIndex, cells: DataFrame): DataFrame =
-    routedCells(vecs, ci, cells)
+    * stream (vec_id, embedding) under the broadcast prefix `kernel` —
+    * reuses [[LshBucketProcessor]]'s input shape so the same bucket
+    * state machine serves both modalities. */
+  def assignments(vecs: DataFrame, kernel: Broadcast[QuantizerKernel]): DataFrame =
+    QuantizerKernel.cells(Similarity.withNorm(vecs), kernel, Dedup.Dd7Probes)
       .select(lit(0).as("band"), col("cell").as("bv"), col("vec_id").as("doc_id"))
-
-  /** The routed two-level placement: (vec_id, cell, r) — each vector's
-    * Dd7Probes best fine cells, r = 1 for the best. Vectors travel to
-    * their probed coarse cells' anchors, so no node holds the whole fine
-    * index: the placement [[assignments]] runs for the dd7 stream twin,
-    * and the prefix index's placement past its broadcast bound
-    * (`Similarity.prefixCells`). */
-  def routedCells(vecs: DataFrame, ci: CoarseIndex, cells: DataFrame): DataFrame = {
-    val s = vecs.sparkSession
-    import s.implicits._
-    val probes = graft.operators.Dedup.Dd7Probes
-    val coarseProbes = graft.operators.Dedup.Dd7CoarseProbes
-    val bc = s.sparkContext.broadcast(ci.coarse)
-    // level 1 (per row, broadcast √K array): top coarseProbes coarse
-    // cells by (cos DESC, cid ASC) → one routed row per probed cell
-    val routed = vecs.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (id, v) =>
-        val nrm = math.sqrt(dot(v, v))
-        bc.value
-          .map { case (cid, cv, cn) => (dot(v, cv) / (nrm * cn), cid) }
-          .sortBy { case (cos, cid) => (-cos, cid) }
-          .take(coarseProbes)
-          .map { case (_, cid) => (id, v, nrm, cid) }
-      }
-      .toDF("vec_id", "v", "nrm", "cid")
-    // level 2: the probed cells' anchors travel TO the stream rows via
-    // the cid join (broadcast while small, cid-shuffle beyond — no node
-    // holds the whole fine index); each joined row keeps its own cell's
-    // top `probes` fine anchors. The vector's GLOBAL top `probes` is a
-    // subset of these per-cell bests (a global winner beats everything
-    // in its own cell a fortiori), so the per-vector merge only ever
-    // sees probes·coarseProbes candidate rows.
-    //
-    // The broadcast decision is made HERE from ci.k, not left to the
-    // planner: a groupBy output has no reliable size estimate, and at
-    // 2M vectors the 16 MB fine frame sat just past the 10 MB
-    // auto-broadcast threshold — the planner exchanged the ROUTED side
-    // (coarseProbes rows per vector, each carrying the full vector:
-    // ~1.6 GB per micro-batch, re-spilled every batch until the probe
-    // disk filled). Explicit size gate: whole fine index ≈ k·(8d+24) B,
-    // broadcast while under 256 MB (≈ 500M vectors at d=64), cid-shuffle
-    // beyond — same asymptotics the doc above promises, now actually
-    // planned that way in the window where it matters.
-    val dim = ci.coarse.headOption.map(_._2.length).getOrElse(64)
-    val cellsSide =
-      if (ci.k * (8L * dim + 24) < (256L << 20)) broadcast(cells) else cells
-    val perCell = routed.join(cellsSide, Seq("cid"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("anchors"))
-      .as[(Long, Array[Double], Double, Array[FineAnchor])]
-      .flatMap { case (id, v, nrm, anchors) =>
-        anchors
-          .map(a => (dot(v, a.av) / (nrm * a.an), a.aid))
-          .sortBy { case (cos, aid) => (-cos, aid) }
-          .take(probes)
-          .map { case (cos, aid) => (id, cos, aid) }
-      }
-      .toDF("vec_id", "cos", "aid")
-    // merge: all of a vector's candidate rows live in THIS micro-batch
-    // (one arrival = one vector), so a repartition by vec_id plus a
-    // partition-local fold is a correct, stateless group-by; memory is
-    // one (cos, aid) pair per candidate row of the partition's slice of
-    // the batch, bounded by probes·coarseProbes per vector.
-    perCell.repartition(col("vec_id"))
-      .as[(Long, Double, Long)]
-      .mapPartitions { it =>
-        val byVec = scala.collection.mutable.HashMap
-          .empty[Long, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
-        it.foreach { case (id, cos, aid) =>
-          byVec.getOrElseUpdate(id, scala.collection.mutable.ArrayBuffer.empty) += ((cos, aid))
-        }
-        byVec.iterator.flatMap { case (id, cands) =>
-          cands.toArray
-            .sortBy { case (cos, aid) => (-cos, aid) }
-            .take(probes)
-            .zipWithIndex.map { case ((_, aid), i) => (id, aid, i + 1) }
-        }
-      }
-      .toDF("vec_id", "cell", "r")
-  }
 
   /** Verified near-dup pairs stream — the full dd7 twin. `normedStore`
     * is the static normalized corpus: (vec_id, v, nrm), i.e. the same
@@ -214,9 +63,12 @@ object EmbedDedupStream {
       ttl: Option[StateTtl] = None): DataFrame = {
     val s = vecs.sparkSession
     import s.implicits._
-    val ci = collectCoarse(normedStore.select(col("vec_id"), col("v").as("embedding")))
-    val cells = fineCells(normedStore, ci)
-    assignments(vecs, ci, cells).as[BandDoc]
+    // corpus size and dimension in one job, checked against the
+    // broadcast bound before any anchor is collected
+    val sized = normedStore.agg(count(lit(1)), max(size(col("v")))).head()
+    val dim = if (sized.isNullAt(1)) 0 else sized.getInt(1)
+    val kernel = s.sparkContext.broadcast(QuantizerKernel.prefix(normedStore, sized.getLong(0), dim))
+    assignments(vecs, kernel).as[BandDoc]
       .groupByKey(b => (b.band, b.bv))
       .transformWithState(new LshBucketProcessor(maxBucket, ttl),
         org.apache.spark.sql.streaming.TimeMode.None(),

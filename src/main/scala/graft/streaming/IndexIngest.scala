@@ -36,20 +36,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * masks tombstoned rows at read
   * ([[graft.sources.Lakehouse.maskTombstones]]);
   * [[graft.sources.Lakehouse.compactMaintained]] drops them physically
-  * and clears the sidecar. Because an upsert must supersede the old
-  * rows, EVERY incoming id is tombstoned — callers with insert-only
-  * streams who want a tombstone-free sidecar can pass
-  * `upserts = false`.
+  * and clears the sidecar. Only ids already in the table get a
+  * tombstone: a first-time insert has no older version to mask.
   *
   * Scale shape:
   *  - per arriving vector: (K1 + probes·K/K1)·d ≈ √K·d multiply-adds in
   *    the prefix quantizer kernel ([[graft.operators.QuantizerKernel]])
   *    — the SAME narrow per-partition map the corpus landing ran, with
-  *    the frozen kernel broadcast once per stream while K fits
-  *    [[graft.operators.Dedup.BroadcastFineMaxBytes]] (~67M-vector
+  *    the frozen kernel broadcast once per stream (bounded by
+  *    [[graft.operators.Dedup.BroadcastFineMaxBytes]], ~70M-vector
   *    corpora at d = 64): the batch's assignment adds no exchange, no
-  *    join and no cached fine table. Past that bound the batch routes
-  *    to its coarse cells through [[EmbedDedupStream]]'s cid join;
+  *    join and no cached fine table;
   *  - per micro-batch: the existence probe on the driver — the
   *    batch's ids collected, then ONE scan of the table's `vec_id`
   *    column with those ids pushed in as an IN filter, collecting the
@@ -133,7 +130,6 @@ object IndexIngest {
   def maintainPrefixIndex(
       vecs: DataFrame, corpusDir: String,
       checkpointDir: Option[String] = None,
-      upserts: Boolean = true,
       compactEvery: Option[Int] = None,
       compactSliverRatio: Double = 0.0,
       compactMaxTombstones: Long = 0L): StreamingQuery = {
@@ -176,8 +172,7 @@ object IndexIngest {
           // collects the ones already present (an IN filter pushed into
           // the scan), and their tombstones are written from a local
           // relation.
-          val batchIds = (if (upserts) batch else batch.filter(col("embedding").isNull))
-            .select(col("vec_id")).filter(col("vec_id").isNotNull)
+          val batchIds = batch.select(col("vec_id")).filter(col("vec_id").isNotNull)
             .collect().map(_.getLong(0)).distinct
           val existing =
             if (batchIds.isEmpty) Array.empty[Long]

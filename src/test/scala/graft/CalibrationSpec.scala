@@ -70,7 +70,7 @@ class CalibrationSpec extends SparkSpecBase {
       val a = QuantizerStore.load(spark, calDir)
       assert(a.nonEmpty, "truncated-at-old-boundary sidecar must still load")
       assert(a.get.servedNprobe.isEmpty)
-      assert(a.get.coarse.nonEmpty, "pre-depth fields must parse unchanged")
+      assert(a.get.pq.nonEmpty, "pre-depth fields must parse unchanged")
       assert(Similarity.defaultNprobe(spark, calDir) == Similarity.sqrtKNprobe(spark, calDir))
     } finally java.nio.file.Files.write(f.toPath, bytes) // restore
   }

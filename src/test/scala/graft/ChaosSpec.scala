@@ -33,7 +33,7 @@ class ChaosSpec extends SparkSpecBase {
     ChaosProbe.reset()
     ChaosProbe.failAtBatch = 1L
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chaos").toString
+    val ckpt = tempDir("graft-chaos").toString
     val ms = MemoryStream[Event]
 
     def agg(df: DataFrame): DataFrame =
@@ -86,7 +86,7 @@ class ChaosSpec extends SparkSpecBase {
     ChaosProbe.reset()
     ChaosProbe.failAtBatch = 1L
     implicit val sq = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chaos-cms").toString
+    val ckpt = tempDir("graft-chaos-cms").toString
     val ms = MemoryStream[Event]
 
     def start() = Relational.cmsRows(ms.toDF().select(col("user_id")), col("user_id"))

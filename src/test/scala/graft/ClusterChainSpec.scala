@@ -12,7 +12,7 @@ class ClusterChainSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("a 100-doc near-dup chain collapses to one cluster (pointer doubling)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    val dir = tempDir("graft-chain").toString
     // step 10 over 61-word windows: adjacent docs share 51 words → 49 of
     // 59 grams → J = 49/69 ≈ 0.71 (a near-dup pair, LSH candidate with
     // P ≈ 0.9999); two apart share 41 words → 39 grams → J = 39/79 ≈

@@ -2,21 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.scalatest.BeforeAndAfterAll
-
 /** `Tables` reads a fixture's schema from a parquet footer on the
   * driver; it must be the schema Spark's own inference gives the same
   * path: the same file chosen (`_common_metadata`, else `_metadata`,
   * else the first data file), converted under the same settings. */
-class FixtureSchemaSpec extends SparkSpecBase with BeforeAndAfterAll {
+class FixtureSchemaSpec extends SparkSpecBase {
 
-  private val root = Files.createTempDirectory("graft-schema")
-
-  override protected def afterAll(): Unit =
-    try {
-      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
-      rm(root.toFile)
-    } finally super.afterAll()
+  private val root = tempDir("graft-schema")
 
   private val Names =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings")

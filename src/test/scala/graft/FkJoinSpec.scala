@@ -149,7 +149,7 @@ class FkJoinSpec extends SparkSpecBase {
     // pre-stop subscriptions
     implicit val sq = spark.sqlContext
     FkRestartProbe.rows.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fk-ckpt").toString
+    val ckpt = tempDir("graft-fk-ckpt").toString
     val lms = MemoryStream[LeftRow]
     val rms = MemoryStream[RightRow]
     def start() = FkJoin.fkJoinStream(lms.toDS(), rms.toDS())

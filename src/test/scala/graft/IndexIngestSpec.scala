@@ -15,18 +15,11 @@ import org.scalatest.BeforeAndAfterAll
   * fixtures' landings. */
 class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
 
-  private val corpusRoot = Files.createTempDirectory("graft-idx-corpus")
+  private val corpusRoot = tempDir("graft-idx-corpus")
   private val corpusDir = corpusRoot.toString
 
   override protected def afterAll(): Unit =
-    try {
-      Similarity.dropLandings(spark, corpusDir)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete()
-      }
-      rm(corpusRoot.toFile)
-    } finally super.afterAll()
+    try Similarity.dropLandings(spark, corpusDir) finally super.afterAll()
 
   private def indexFiles(table: String): Seq[java.io.File] = {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -237,9 +230,9 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     val q = graft.streaming.IndexIngest.maintainPrefixIndex(
       src.toDF().toDF("vec_id", "embedding"), corpusDir)
     try {
-      // brand-new ids with upserts=true (the default): none exist in the
-      // table, so no version needs masking and no tombstone may be
-      // written — the sidecar must not grow with insert volume
+      // brand-new ids: none exist in the table, so no version needs
+      // masking and no tombstone may be written — the sidecar must not
+      // grow with insert volume
       src.addData(Seq((930000L, emb2), (930001L, emb2)))
       q.processAllAvailable()
       assert(graft.sources.Lakehouse.tombstones(spark, tbl).isEmpty,
@@ -424,9 +417,14 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     val batch = Seq((910000L, Array.fill(64)(0.5f)), (910001L, Array.fill(64)(-0.25f)))
       .toDF("vec_id", "embedding")
     // every kind's append places through the same kernel map; the
-    // IVF-PQ rows project the prefix rows
-    for (kind <- Seq("prefix", "kmeans", "ivfpq")) {
-      val assigned = Similarity.indexRows(spark, sfDir, kind, Similarity.versionsOf(batch, 5L))
+    // IVF-PQ rows project the prefix rows; the dd7 stream twin places
+    // its arriving vectors through the prefix kernel too
+    val twin = graft.streaming.EmbedDedupStream.assignments(batch,
+      spark.sparkContext.broadcast(Similarity.prefixKernel(spark, sfDir)))
+    val assignments = Seq("prefix", "kmeans", "ivfpq").map(kind =>
+      kind -> Similarity.indexRows(spark, sfDir, kind, Similarity.versionsOf(batch, 5L))) :+
+      ("dd7 stream twin" -> twin)
+    for ((kind, assigned) <- assignments) {
       assert(assigned.count() == 2 * Dedup.Dd7Probes)
       val plan = assigned.queryExecution.executedPlan
       val wide = plan.collect {
@@ -440,7 +438,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
   test("each kind writes its row rule: IVF-PQ rows are the prefix rows projected, k-means places the live versions") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = Files.createTempDirectory("graft-idx-rows")
+    val root = tempDir("graft-idx-rows")
     val d = root.toString
     spark.read.parquet(s"$sfDir/embeddings.parquet").write.parquet(s"$d/embeddings.parquet")
     val corpus = spark.read.parquet(s"$d/embeddings.parquet")
@@ -501,11 +499,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
       assert(Lakehouse.tombstones(spark, km).isEmpty, "a catch-up landing holds no tombstones")
       assertSameRows(spark.table(km), Similarity.indexRows(spark, d, "kmeans", liveVersions),
         "k-means catch-up vs the live versions placed from scratch")
-    } finally {
-      Similarity.dropLandings(spark, d)
-      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
-      rm(root.toFile)
-    }
+    } finally Similarity.dropLandings(spark, d)
   }
 
   test("replay twins answer from a local relation and leave no temp root or landing") {
@@ -538,7 +532,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
   test("a landing re-registered under a different bucket count keeps its recorded count and maintained rows") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = Files.createTempDirectory("graft-idx-relayout")
+    val root = tempDir("graft-idx-relayout")
     val d = root.toString
     spark.read.parquet(s"$sfDir/embeddings.parquet").write.parquet(s"$d/embeddings.parquet")
     val sfx = java.security.MessageDigest.getInstance("MD5")
@@ -546,7 +540,6 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     val tbl = s"graft_ann_index_$sfx"
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val loc = new java.io.File(wh, tbl)
-    def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
     def bucketsOf(t: String): Int = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(t)).bucketSpec.get.numBuckets
     try {
@@ -585,9 +578,6 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
         .select(col("embedding").cast("array<double>")).as[Array[Double]].head()
       assert(!Similarity.searchTopk(spark, d, "prefix", Seq((-2L, deleted)))
         .select(col("neighbor_id")).collect().map(_.getLong(0)).contains(7L), "the delete is not masked")
-    } finally {
-      Similarity.dropLandings(spark, d)
-      rm(root.toFile)
-    }
+    } finally Similarity.dropLandings(spark, d)
   }
 }

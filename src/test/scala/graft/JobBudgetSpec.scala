@@ -32,7 +32,7 @@ import org.scalatest.BeforeAndAfterAll
   * change. */
 class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
 
-  private val root = Files.createTempDirectory("graft-jobs")
+  private val root = tempDir("graft-jobs")
   private val dir = root.toString
   private val N = 20000
   private val Dim = 64
@@ -61,23 +61,17 @@ class JobBudgetSpec extends SparkSpecBase with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete()
-    ()
-  }
-
   /** Drops the tables and warehouse files landed for fixture dir `d`:
     * their names carry its hash. */
   private def dropLandings(d: String): Unit = {
     spark.catalog.listTables().collect().map(_.name).filter(_.contains(sfx(d)))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    Option(wh.listFiles).getOrElse(Array.empty).filter(_.getName.contains(sfx(d))).foreach(rm)
+    Option(wh.listFiles).getOrElse(Array.empty).filter(_.getName.contains(sfx(d))).foreach(Lakehouse.rmTree)
   }
 
   override protected def afterAll(): Unit =
-    try { dropLandings(dir); rm(root.toFile) } finally super.afterAll()
+    try dropLandings(dir) finally super.afterAll()
 
   /** A job as the listener saw it: the call site and task count of the
     * stage it runs (its last; AQE runs each shuffle map stage as a job

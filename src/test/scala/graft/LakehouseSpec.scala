@@ -7,27 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The batch sink surface: partition pruning, file-size bounds,
   * bucketed no-shuffle joins, small-file compaction. */
-class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
+class LakehouseSpec extends SparkSpecBase {
 
-  private val tmpRoots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-
-  private def tmp(name: String): String = {
-    val p = Files.createTempDirectory(s"graft-lh-$name")
-    tmpRoots.synchronized(tmpRoots += p)
-    p.resolve("t").toString
-  }
-
-  // deleteOnExit cannot remove non-empty dirs — reap the written
-  // parquet trees so repeated suite runs don't accumulate in /tmp
-  override protected def afterAll(): Unit =
-    try tmpRoots.synchronized {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete()
-      }
-      tmpRoots.foreach(p => rm(p.toFile))
-      tmpRoots.clear()
-    } finally super.afterAll()
+  private def tmp(name: String): String = tempDir(s"graft-lh-$name").resolve("t").toString
 
   private def parquetFiles(dir: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -61,8 +43,7 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
   }
 
   test("bucketed tables join with zero exchange") {
-    val wh = Files.createTempDirectory("graft-lh-wh")
-    wh.toFile.deleteOnExit()
+    val wh = tempDir("graft-lh-wh")
     val s = spark
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
     try {
@@ -310,8 +291,7 @@ class LakehouseSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
       // a managed table deletes its files, so stash them first.
       val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
       val loc = Paths.get(wh, t)
-      val stash = Files.createTempDirectory("graft-lh-stash")
-      tmpRoots.synchronized(tmpRoots += stash)
+      val stash = tempDir("graft-lh-stash")
       def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
         Files.walk(from).forEach { p =>
           val q = to.resolve(from.relativize(p).toString)

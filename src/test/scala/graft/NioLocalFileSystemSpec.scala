@@ -7,19 +7,12 @@ import java.nio.file.attribute.PosixFilePermissions
 import graft.sources.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.scalatest.BeforeAndAfterAll
 
 /** The session's `file:` FileSystem and FileContext are the java.nio
   * ones, and they create and stat files as Hadoop's own do. */
-class NioLocalFileSystemSpec extends SparkSpecBase with BeforeAndAfterAll {
+class NioLocalFileSystemSpec extends SparkSpecBase {
 
-  private val root = Files.createTempDirectory("graft-niofs")
-
-  override protected def afterAll(): Unit =
-    try {
-      def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); () }
-      rm(root.toFile)
-    } finally super.afterAll()
+  private val root = tempDir("graft-niofs")
 
   private def conf = spark.sessionState.newHadoopConf()
 

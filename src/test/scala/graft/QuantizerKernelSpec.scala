@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.SplittableRandom
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, QuantizerKernel, Similarity}
 import graft.sources.Lakehouse
 import graft.streaming.EmbedDedupStream
 import org.apache.spark.sql.DataFrame
@@ -19,13 +19,12 @@ import org.scalatest.BeforeAndAfterAll
   * coarse restriction decides which fine anchors a vector even sees.
   * Every placement the indexes use must reproduce the reference
   * exactly: the prefix landing rows, a maintenance batch's rows, the
-  * ranked placement of the corpus (`prefixCells`, dd7/dd9's), the
-  * routed placement used past the broadcast bound, and the same two
-  * surfaces under the trained k-means quantizer. */
+  * ranked placement of the corpus (`prefixCells`, dd7/dd9's), the dd7
+  * stream twin's assignment, and the same two surfaces under the
+  * trained k-means quantizer. */
 class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
 
-  private val root = Files.createTempDirectory("graft-kernel")
-  private val dir = root.toString
+  private val dir = tempDir("graft-kernel").toString
   private val N = 20000
   private val Dim = 64
 
@@ -59,11 +58,6 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
       spark.sql(s"DROP TABLE IF EXISTS `graft_ann_index_$sfx`")
       val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
       new java.io.File(wh, s"graft_ann_quantizer_$sfx.bin").delete()
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete()
-      }
-      rm(root.toFile)
     } finally super.afterAll()
 
   private def normed(raw: DataFrame): DataFrame =
@@ -78,9 +72,9 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
   /** The reference ranking of `e`: (vec_id, cell, r). */
   private def reference(e: DataFrame): DataFrame = {
     val c = corpus
-    val coarse = Dedup.prefixCoarse(c, k1)
+    val coarse = QuantizerReference.prefixCoarse(c, k1)
     QuantizerReference.twoLevelRankedTagged(e,
-      QuantizerReference.tagFine(Dedup.prefixFine(c, k), coarse), coarse, Dedup.Dd7Probes)
+      QuantizerReference.tagFine(QuantizerReference.prefixFine(c, k), coarse), coarse, Dedup.Dd7Probes)
   }
 
   /** The trained k-means centroids and their coarse count K1 = ⌈√k⌉. */
@@ -154,14 +148,29 @@ class QuantizerKernelSpec extends SparkSpecBase with BeforeAndAfterAll {
       indexRows(kmReference(e), e, 9L), "k-means maintenance batch")
   }
 
-  test("the routed placement past the broadcast bound equals the reference ranking") {
+  test("the dd7 stream twin's assignment equals the reference ranking") {
+    // the kernel the twin builds over its normalized corpus; the twin's
+    // (band, bucket, doc) rows carry a vector's cells, not their ranks
     val c = corpus
-    val coarse = Dedup.prefixCoarse(c, k1).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))).sortBy(_._1)
-    val ci = EmbedDedupStream.CoarseIndex(k, k1, coarse)
-    val routed = EmbedDedupStream.routedCells(
-      c.select(col("vec_id"), col("v").as("embedding")), ci, EmbedDedupStream.fineCells(c, ci))
-    assertSameRows(routed.select(col("vec_id"), col("cell"), col("r")), reference(c), "routed")
+    val kernel = spark.sparkContext.broadcast(QuantizerKernel.prefix(c, N, Dim))
+    val assigned = EmbedDedupStream.assignments(c.select(col("vec_id"), col("v").as("embedding")), kernel)
+    assert(assigned.filter(col("band") =!= 0).isEmpty)
+    assertSameRows(assigned.select(col("doc_id").as("vec_id"), col("bv").as("cell")),
+      reference(c).select(col("vec_id"), col("cell")), "stream twin")
+  }
+
+  test("the prefix quantizer refuses K anchors past the broadcast bound at d = 64") {
+    // 608 B per 64-dim anchor row: 1,103,764 anchors fill 671,088,512 of
+    // the 671,088,640 bytes, and K = ⌈n/64⌉
+    assert(Dedup.BroadcastFineMaxBytes == 671088640L && Dedup.fineAnchorRowBytes(Dim) == 608L)
+    assert(QuantizerKernel.anchorCount(70640896L, Dim) == 1103764L)
+    val refused = intercept[IllegalArgumentException](QuantizerKernel.anchorCount(70640897L, Dim))
+    Seq("K = 1103765", "dimension 64", "671089120 bytes", "671088640-byte").foreach { part =>
+      assert(refused.getMessage.contains(part), s"'$part' missing from: ${refused.getMessage}")
+    }
+    // the constructor checks before it touches the frame: a frame without
+    // a vec_id column would fail analysis at its first use
+    intercept[IllegalArgumentException](QuantizerKernel.prefix(spark.emptyDataFrame, 70640897L, Dim))
   }
 
   test("the landed DDL and fingerprint are unchanged; a small landing stages one split per bucket") {

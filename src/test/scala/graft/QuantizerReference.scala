@@ -7,10 +7,21 @@ import org.apache.spark.sql.functions._
 
 /** The two-level IVF quantizer as DataFrames: the reference every
   * placement of [[graft.operators.QuantizerKernel]] (prefix and k-means
-  * landings, maintenance batches, `prefixCells`, the routed placement)
+  * landings, maintenance batches, `prefixCells`, the dd7 stream twin)
   * is held to row for row. The Spark twin of
   * [[graft.operators.Dedup.twoLevelRankedSql]], the DuckDB replay. */
 object QuantizerReference {
+
+  /** The prefix quantizer's fine anchors (aid, av, an): the first K
+    * vec_ids of a normed corpus `e` (vec_id, v, nrm). */
+  def prefixFine(e: DataFrame, k: Long): DataFrame =
+    e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("aid"), col("v").as("av"), col("nrm").as("an"))
+
+  /** Its coarse anchors (cid, cv, cn): the first K1 vec_ids. */
+  def prefixCoarse(e: DataFrame, k1: Long): DataFrame =
+    e.filter(col("vec_id") < k1)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
 
   /** Level 1 of the two-level quantizer as DataFrames: each FINE anchor
     * of `fine` (aid, av, an) tagged with its single nearest coarse cell

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.Similarity
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -17,7 +16,7 @@ class ServeStreamSpec extends SparkSpecBase {
     // nothing landed ⇒ searchTopk throws the typed refusal in ms; the
     // EXPLICIT build API lands the index and the same call then serves.
     import org.apache.spark.sql.functions.col
-    val d = Files.createTempDirectory("graft-failfast").toString
+    val d = tempDir("graft-failfast").toString
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .write.parquet(s"$d/embeddings.parquet")
     val v = spark.read.parquet(s"$d/embeddings.parquet")
@@ -35,7 +34,7 @@ class ServeStreamSpec extends SparkSpecBase {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val src0 = MemoryStream[(Long, Array[Double])]
-    val sink0 = Files.createTempDirectory("graft-failfast-sink").toString + "/out"
+    val sink0 = tempDir("graft-failfast-sink").toString + "/out"
     val q0 = graft.streaming.ServeStream.serveTopk(
       src0.toDF().toDF("qid", "embedding"), d, "ivfpq", sink0)
     val streamEx = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -65,7 +64,7 @@ class ServeStreamSpec extends SparkSpecBase {
         .collect().map(r => (-(r.getLong(0) + 1), r.getSeq[Double](1).toArray)).toSeq
     val (b1, b2) = (qsOf(3 to 5), qsOf(6 to 8))
 
-    val sink = Files.createTempDirectory("graft-serve-sink").toString + "/out"
+    val sink = tempDir("graft-serve-sink").toString + "/out"
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, Array[Double])]
     val q = graft.streaming.ServeStream.serveTopk(
@@ -96,7 +95,7 @@ class ServeStreamSpec extends SparkSpecBase {
         .collect().map(r => (-(r.getLong(0) + 1), r.getSeq[Double](1).toArray)).toSeq
     val (b1, b2) = (qsOf(3 to 5), qsOf(6 to 8))
 
-    val root = Files.createTempDirectory("graft-serve-restart").toString
+    val root = tempDir("graft-serve-restart").toString
     val (sink, ckpt) = (s"$root/out", s"$root/ckpt")
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = MemoryStream[(Long, Array[Double])]

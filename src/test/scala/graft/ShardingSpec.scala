@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class ShardingSpec extends SparkSpecBase {
 
   test("sorted shards: every file internally sorted, ranges disjoint, nothing lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString + "/docs"
+    val dir = tempDir("graft-shards").toString + "/docs"
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val n = Sharding.writeSorted(docs, "doc_id", numShards = 8, path = dir)
     assert(n == docs.count())

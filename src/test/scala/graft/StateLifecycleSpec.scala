@@ -19,7 +19,7 @@ class StateLifecycleSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    tempDir(s"graft-$tag").toString
 
   lazy val sortedEvents: Vector[Event] =
     Tables.events(spark, sfDir).as[Event].collect()

@@ -42,7 +42,7 @@ class StreamConfsSpec extends SparkSpecBase {
     val ms = MemoryStream[Event]
     ms.addData(Event(1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
       7L, "view", 1.0, "{}"))
-    val ckpt = java.nio.file.Files.createTempDirectory("confspec").toString
+    val ckpt = tempDir("confspec").toString
     val q = ms.toDF().dropDuplicates("user_id")
       .writeStream.format("memory").queryName("confspec_sink")
       .option("checkpointLocation", ckpt).outputMode("append").start()
@@ -85,7 +85,7 @@ class StreamConfsSpec extends SparkSpecBase {
         ms.addData(Event(i, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
           i, "view", 1.0, "{}"))
       }
-      val ckpt = java.nio.file.Files.createTempDirectory("confspec").toString
+      val ckpt = tempDir("confspec").toString
       val q = ms.toDF().dropDuplicates("user_id")
         .writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", ckpt).outputMode("append").start()

@@ -120,7 +120,7 @@ class StreamingParitySpec extends SparkSpecBase {
     // production-shaped source: chunks land as parquet files in a
     // directory, readStream picks each up as a microbatch (the replayable
     // topic / changelog analog — SURVEY §2.1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-filesrc").toString
+    val dir = tempDir("graft-filesrc").toString
     val stream = spark.readStream
       .schema(Tables.events(spark, sfDir).schema)
       .parquet(dir)
@@ -538,7 +538,7 @@ class StreamingParitySpec extends SparkSpecBase {
     import graft.operators.Relational
     implicit val sq = spark.sqlContext
     CmsRestartProbe.cells.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cms-ckpt").toString
+    val ckpt = tempDir("graft-cms-ckpt").toString
     val ms = MemoryStream[Event]
     def start() = {
       Relational.cmsRows(ms.toDF().select(col("user_id")), col("user_id"))
@@ -737,7 +737,7 @@ class StreamingParitySpec extends SparkSpecBase {
     import graft.operators.Dedup
     implicit val sq = spark.sqlContext
     DedupRestartProbe.pairs.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dedup-ckpt").toString
+    val ckpt = tempDir("graft-dedup-ckpt").toString
     val ms = MemoryStream[DocRow]
     val contentStore = Dedup.gramSets(spark, sfDir)
     def start() =
@@ -847,7 +847,7 @@ class StreamingParitySpec extends SparkSpecBase {
     import graft.operators.Relational
     implicit val sq = spark.sqlContext
     WinCmsRestartProbe.cells.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-wincms-ckpt").toString
+    val ckpt = tempDir("graft-wincms-ckpt").toString
     val ms = MemoryStream[Event]
     def start() = {
       val ev = ms.toDF().withWatermark("ts", "10 minutes")

@@ -27,7 +27,7 @@ class TopicsSpec extends SparkSpecBase {
   }
 
   test("file topic: write stream through .to(topic), read back, equals batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-topic").toString
+    val dir = tempDir("graft-topic").toString
     val out = Topic("agg-out", "file", Map("path" -> s"$dir/out"))
     val in = Topic("events-in", "file", Map("path" -> s"$dir/in"))
 
@@ -63,7 +63,7 @@ class TopicsSpec extends SparkSpecBase {
     // pending data + checkpoint restart re-emits nothing twice
     implicit val sq = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = java.nio.file.Files.createTempDirectory("graft-eos").toString
+    val dir = tempDir("graft-eos").toString
     val out = Topic("agg-eos", "file",
       Map("path" -> s"$dir/out", "checkpointLocation" -> s"$dir/chk"))
     val events = Tables.events(spark, sfDir).as[graft.streaming.Event].collect()
