@@ -39,6 +39,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * and clears the sidecar. Only ids already in the table get a
   * tombstone: a first-time insert has no older version to mask.
   *
+  * Every landed kind (prefix, kmeans, ivfpq and flat pq) is maintained
+  * this way: each writes its own row rule's rows of the batch's versions
+  * and receives the same tombstones.
+  *
   * Scale shape:
   *  - per arriving vector: (K1 + probes·K/K1)·d ≈ √K·d multiply-adds in
   *    the prefix quantizer kernel ([[graft.operators.QuantizerKernel]])
@@ -66,8 +70,8 @@ object IndexIngest {
     * (vec_id, embedding); embedding NULL ⇒ delete) → frozen-quantizer
     * assignment → bucketed append into `corpusDir`'s landed prefix
     * index (landed first if absent). Every index kind ALREADY LANDED
-    * (kmeans cells, composed IVF+PQ codes) receives the same tombstones
-    * and its own row rule's rows of the batch's versions
+    * (kmeans cells, composed IVF+PQ codes, flat PQ codes) receives the
+    * same tombstones and its own row rule's rows of the batch's versions
     * ([[graft.operators.Similarity.indexRows]]), so every serving kind
     * stays fresh (ADVICE r12); a kind landed later catches up at
     * landing time instead. Returns the running query; each committed

@@ -34,10 +34,11 @@ object ServeStream {
 
   /** Serve `queries` — streaming (qid: bigint, embedding: numeric
     * array) — from `corpusDir`'s landed index of `kind` ("prefix" |
-    * "kmeans" | "ivfpq"), appending (qid, rank, neighbor_id, batch_id)
-    * parquet to `sink`. `nprobe` 0 = the kind's default (≈ √K);
-    * `rerankPerProbe` sets the ivfpq exact-re-rank shortlist per
-    * probed cell (the recall-vs-latency serving knob — see
+    * "kmeans" | "ivfpq" | "pq"), appending (qid, rank, neighbor_id,
+    * batch_id) parquet to `sink`. `nprobe` 0 = the kind's default (≈ √K;
+    * flat "pq" probes every row and ignores it); `rerankPerProbe` sets
+    * the ivfpq exact-re-rank shortlist per probed cell (the
+    * recall-vs-latency serving knob — see
     * [[graft.operators.Similarity.DefaultRerankPerProbe]] and the
     * RECALL_r14 frontier; ignored by the other kinds). */
   def serveTopk(

@@ -8,7 +8,7 @@ object DiffQueries {
   def main(args: Array[String]): Unit = {
     val Seq(a, b) = args.take(2).toSeq
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
-    val spark = graft.Graft.session(master = "local[32]", shufflePartitions = 32)
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     val da = graft.SparkEntry.queries(a)(spark, sfDir)
     val db = graft.SparkEntry.queries(b)(spark, sfDir).select(da.columns.map(org.apache.spark.sql.functions.col): _*)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * measurement. This drives a mixed insert/upsert/delete feed through
   * [[graft.streaming.IndexIngest.maintainPrefixIndex]] against a COPY
   * of a probe corpus (the index tables are dir-hash-keyed, so the
-  * graded landings are untouched) with all three index kinds landed,
+  * graded landings are untouched) with the prefix, kmeans and ivfpq kinds landed,
   * and records per micro-batch: wall time, tombstone-sidecar rows
   * (the read-side broadcast bound), and index file count (the sliver
   * bound the compaction cadence exists to hold). Post-run it verifies
@@ -95,7 +95,7 @@ object MaintenanceProbe {
         .write.parquet(s"$corpusDir/embeddings.parquet")
       val corpusN = spark.read.parquet(s"$corpusDir/embeddings.parquet").count()
 
-      // land all three kinds (timed separately — this is the one-time
+      // land prefix, kmeans, ivfpq (timed separately — this is the one-time
       // index build, not the maintenance cost)
       val probeVec = spark.read.parquet(s"$corpusDir/embeddings.parquet")
         .filter(col("vec_id") === 0L)

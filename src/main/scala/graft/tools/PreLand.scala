@@ -2,11 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** One-time index builder: land all three ANN index kinds (+ the
-  * QuantizerStore sidecar) for each corpus dir given, via a single
-  * 1-query searchTopk per kind — the same adopt-or-build path every
-  * serve call uses. Landings are dir-hash-keyed in spark-warehouse and
-  * the sidecar makes a later session's cold serve ≈ warm
+/** One-time index builder: land the ANN index kinds (default prefix,
+  * kmeans, ivfpq) + the QuantizerStore sidecar for each corpus dir
+  * given, via a single 1-query searchTopk per kind — the same
+  * adopt-or-build path every serve call uses. Landings are
+  * dir-hash-keyed in spark-warehouse and the sidecar makes a later
+  * session's cold serve ≈ warm
   * (PROBE_r13_*_sims_cold), so running this ahead of a measurement
   * session moves the one-time build cost off the measured path.
   * Run: sbt "runMain graft.tools.PreLand <corpusDir> [corpusDir...]".

@@ -250,8 +250,8 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
   test("kmeans/ivfpq landings catch up with prior maintenance; new appends and deletes reach every kind") {
     import spark.implicits._
     val np = Similarity.defaultNprobe(spark, corpusDir)
-    // buildIfMissing: this test IS the catch-up landing — km/ivfpq are
-    // deliberately unlanded until served here
+    // buildIfMissing: this test IS the catch-up landing — km/ivfpq/pq
+    // are deliberately unlanded until served here
     def servedIds(kind: String, q: Array[Float]): Set[Long] =
       Similarity.searchTopk(spark, corpusDir, kind,
           Seq((-42L, q.map(_.toDouble))), np, buildIfMissing = true)
@@ -261,7 +261,7 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
         .filter(col("vec_id") === id)
         .select(col("embedding").cast("array<float>")).as[Array[Float]].head()
 
-    // the suite so far maintained ONLY the prefix index (km/ivfpq were
+    // the suite so far maintained ONLY the prefix index (km/ivfpq/pq were
     // never landed for this corpus): serving them NOW must land with
     // the catch-up body — live-at-seq-0 corpus rows + appended
     // versions. Exact copies of vec 2's embedding appended across the
@@ -271,12 +271,12 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     // an out-of-sample emb2 query.
     val emb2 = emb(2L)
     val wantTop = Set(2L, 900002L, 920000L, 930000L, 930001L)
-    for (kind <- Seq("kmeans", "ivfpq"))
+    for (kind <- Seq("kmeans", "ivfpq", "pq"))
       assert(servedIds(kind, emb2) == wantTop,
         s"$kind catch-up landing must include prior maintenance (got ${servedIds(kind, emb2)})")
 
-    // NEW maintenance with all three kinds landed: an append and then a
-    // delete must be visible in kmeans and ivfpq serving, not just prefix
+    // NEW maintenance with every kind landed: an append and then a
+    // delete must be visible in kmeans, ivfpq and pq serving, not just prefix
     val emb7 = emb(7L)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
@@ -285,12 +285,12 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     try {
       src.addData(Seq((940000L, emb7)))
       q.processAllAvailable()
-      for (kind <- Seq("prefix", "kmeans", "ivfpq"))
+      for (kind <- Seq("prefix", "kmeans", "ivfpq", "pq"))
         assert(servedIds(kind, emb7).contains(940000L),
           s"$kind must serve the freshly appended vector")
       src.addData(Seq((940000L, null: Array[Float])))
       q.processAllAvailable()
-      for (kind <- Seq("prefix", "kmeans", "ivfpq")) {
+      for (kind <- Seq("prefix", "kmeans", "ivfpq", "pq")) {
         val got = servedIds(kind, emb7)
         assert(!got.contains(940000L), s"$kind must stop serving the deleted vector")
         assert(got.contains(7L), s"$kind must still serve the original corpus vector")
@@ -417,15 +417,16 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     val batch = Seq((910000L, Array.fill(64)(0.5f)), (910001L, Array.fill(64)(-0.25f)))
       .toDF("vec_id", "embedding")
     // every kind's append places through the same kernel map; the
-    // IVF-PQ rows project the prefix rows; the dd7 stream twin places
-    // its arriving vectors through the prefix kernel too
+    // IVF-PQ rows project the prefix rows; the flat-PQ rows are one per
+    // version (no coarse axis); the dd7 stream twin places its arriving
+    // vectors through the prefix kernel too
     val twin = graft.streaming.EmbedDedupStream.assignments(batch,
       spark.sparkContext.broadcast(Similarity.prefixKernel(spark, sfDir)))
-    val assignments = Seq("prefix", "kmeans", "ivfpq").map(kind =>
+    val assignments = Seq("prefix", "kmeans", "ivfpq", "pq").map(kind =>
       kind -> Similarity.indexRows(spark, sfDir, kind, Similarity.versionsOf(batch, 5L))) :+
       ("dd7 stream twin" -> twin)
     for ((kind, assigned) <- assignments) {
-      assert(assigned.count() == 2 * Dedup.Dd7Probes)
+      assert(assigned.count() == 2 * (if (kind == "pq") 1 else Dedup.Dd7Probes))
       val plan = assigned.queryExecution.executedPlan
       val wide = plan.collect {
         case x: org.apache.spark.sql.execution.exchange.Exchange => x.nodeName
@@ -457,10 +458,10 @@ class IndexIngestSpec extends SparkSpecBase with BeforeAndAfterAll {
     }
     // one to one: every live IVF-PQ row (cell, vec_id, seq) is a live
     // prefix row, and its codes are the encode of that row's vector
-    // (pqCodeArrays keyed by the row's (cell, vec_id, seq))
+    // (the flat PQ row rule keyed by the row's (cell, vec_id, seq))
     def assertIvfPqProjectsPrefix(what: String): Unit = {
-      val want = Similarity.pqCodeArrays(spark, d, masked("prefix")
-          .select(struct(col("cell"), col("vec_id"), col("seq")).as("vec_id"), col("v"), col("nrm")))
+      val want = Similarity.indexRows(spark, d, "pq", masked("prefix")
+          .select(struct(col("cell"), col("vec_id"), col("seq")).as("vec_id"), col("v"), col("nrm"), col("seq")))
         .select(col("vec_id.cell"), col("vec_id.vec_id"), col("vec_id.seq"), col("codes"))
       assertSameRows(masked("ivfpq").select(col("cell"), col("vec_id"), col("seq"), col("codes")),
         want, s"$what: IVF-PQ rows vs projected prefix rows")

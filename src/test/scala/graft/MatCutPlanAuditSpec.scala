@@ -58,10 +58,11 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
     // scan, so the only shuffle of a landing is the bucketed write's own
     // bucket repartition — for the prefix and the k-means index alike;
     // the IVF-PQ landing projects the prefix rows (the landed prefix
-    // table or the prefix landing frame) to code arrays
+    // table or the prefix landing frame) to code arrays, and the flat-PQ
+    // landing encodes the corpus rows
     val vectorDDL = "cell BIGINT,vec_id BIGINT,v ARRAY<DOUBLE>,nrm DOUBLE,seq BIGINT NOT NULL"
     for ((kind, columns) <- Seq("prefix" -> vectorDDL, "kmeans" -> vectorDDL,
-        "ivfpq" -> "cell,vec_id,codes,seq")) {
+        "ivfpq" -> "cell,vec_id,codes,seq", "pq" -> "cell,vec_id,codes,seq")) {
       val df = Similarity.landingFrame(spark, sfDir, kind)
       df.count()
       val wide = nodes(df.queryExecution.executedPlan).collect {
@@ -70,9 +71,10 @@ class MatCutPlanAuditSpec extends SparkSpecBase {
       }
       assert(wide.isEmpty,
         s"the $kind landing plans ${wide.mkString(", ")}:\n${df.queryExecution.executedPlan}")
-      // the IVF-PQ columns' nullability follows its source: the landed
-      // prefix table reads back nullable
-      val got = if (kind == "ivfpq") df.columns.mkString(",") else df.schema.toDDL
+      // the PQ kinds' columns are compared by name: the IVF-PQ columns'
+      // nullability follows its source (the landed prefix table reads
+      // back nullable)
+      val got = if (kind.endsWith("pq")) df.columns.mkString(",") else df.schema.toDDL
       assert(got == columns, s"the $kind landing's columns changed: $got")
     }
   }

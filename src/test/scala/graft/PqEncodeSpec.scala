@@ -49,7 +49,9 @@ class PqEncodeSpec extends SparkSpecBase {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(graft.functions.VectorExprs.dot(col("v"), col("v"))))
-    val arrays = Similarity.pqCodeArrays(spark, sfDir, e)
+    // the flat PQ kind's row rule: one (vec_id, codes) row per vector
+    val arrays = Similarity.indexRows(spark, sfDir, "pq", e.withColumn("seq", lit(0L)))
+      .select(col("vec_id"), col("codes"))
     val got = arrays.collect().map(r => (r.getLong(0), r.getSeq[Int](1).toList)).toMap
     val want = PqReference.pqEncodeOfShuffled(spark, sfDir, e)
       .groupBy(col("vec_id"))

@@ -64,13 +64,13 @@ class SimilaritySpec extends SparkSpecBase {
     assert(rows("sim4b_ann_pq_served") == rows("sim4_ann_pq_topk"))
     assert(rows("sim3b_ann_kmeans_served").forall(_._2 == 1))
     assert(rows("sim4b_ann_pq_served").forall(_._2 == 1))
-    // before the gate: for the raw-vector kinds, the search over the
-    // kind's rows computed inline and over its landed rows return the
-    // same (qid, rank, neighbor_id) rows
+    // before the gate: the search over the kind's rows computed inline
+    // and over its landed rows return the same (qid, rank, neighbor_id)
+    // rows (flat PQ has no coarse axis: the depth is unused)
     val np = Similarity.sqrtKNprobe(spark, sfDir)
     def topk(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    for (kind <- Seq("prefix", "kmeans")) {
+    for (kind <- Seq("prefix", "kmeans", "pq")) {
       val inline = topk(Similarity.inlineTopkAt(spark, sfDir, kind, np))
       assert(inline.size == Similarity.NumQueries * Similarity.TopK, s"$kind: ${inline.size} inline rows")
       assert(inline == topk(Similarity.servedTopkAt(spark, sfDir, kind, np, buildIfMissing = true)),
